@@ -1,7 +1,7 @@
 package graft.ext
 
 import org.apache.spark.sql.SparkSession
-import org.apache.spark.sql.catalyst.InternalRow
+import org.apache.spark.sql.catalyst.{FunctionIdentifier, InternalRow}
 import org.apache.spark.sql.catalyst.expressions._
 import org.apache.spark.sql.catalyst.expressions.aggregate.TypedImperativeAggregate
 import org.apache.spark.sql.catalyst.expressions.codegen.CodegenFallback
@@ -1070,50 +1070,43 @@ object CatalystExt {
   val CmsA: Array[Long] = Array(1103515245L, 1299709L, 15485863L, 32452843L)
   val CmsB: Array[Long] = Array(12345L, 7919L, 104729L, 1299721L)
 
-  /** Register every extension into the session (idempotent). */
+  /** Register every extension the session's function registry is missing
+    * (idempotent, and cheap to repeat: query builders call this on every
+    * invocation, so a name already present is left alone instead of being
+    * replaced — the Pathling `SqlStrategy.setup` guard). The check is per
+    * session, so a `newSession()` (which starts from the built-ins) still
+    * gets every function on its first call. */
   def register(s: SparkSession): Unit = {
     val reg = s.sessionState.functionRegistry
-    reg.createOrReplaceTempFunction("graft_cosine",
-      exprs => CosineSimilarity(exprs(0), exprs(1)), "scala_udf")
-    reg.createOrReplaceTempFunction("graft_hll",
-      exprs => GraftHLL(exprs.head), "scala_udf")
-    reg.createOrReplaceTempFunction("graft_heavy_hitters",
-      exprs => MisraGries(exprs(0),
-        exprs(1).eval(null).asInstanceOf[Number].intValue()), "scala_udf")
-    reg.createOrReplaceTempFunction("graft_kll_quantile",
-      exprs => KllQuantile(exprs(0), exprs(1),
-        exprs(2).eval(null).asInstanceOf[Number].intValue()), "scala_udf")
-    reg.createOrReplaceTempFunction("graft_bigrams",
-      exprs => Bigrams(exprs.head), "scala_udf")
-    reg.createOrReplaceTempFunction("graft_topk_min",
-      exprs => TopKMin(exprs(0), exprs(1),
-        exprs(2).eval(null).asInstanceOf[Number].intValue()), "scala_udf")
-    reg.createOrReplaceTempFunction("graft_bitmap_distinct",
-      exprs => GraftBitmap(exprs(0),
-        exprs(1).eval(null).asInstanceOf[Number].intValue()), "scala_udf")
-    reg.createOrReplaceTempFunction("graft_cms",
-      exprs => CountMin(exprs.head), "scala_udf")
-    reg.createOrReplaceTempFunction("graft_min_k_set",
-      exprs => MinKSet(exprs(0),
-        exprs(1).eval(null).asInstanceOf[Number].intValue()), "scala_udf")
-    def fieldNo(e: Expression): Int =
+    def fn(name: String)(builder: Seq[Expression] => Expression): Unit =
+      if (!reg.functionExists(FunctionIdentifier(name)))
+        reg.createOrReplaceTempFunction(name, builder, "scala_udf")
+    fn("graft_cosine")(exprs => CosineSimilarity(exprs(0), exprs(1)))
+    fn("graft_hll")(exprs => GraftHLL(exprs.head))
+    def intArg(e: Expression): Int =
       e.eval(null).asInstanceOf[Number].intValue()
-    reg.createOrReplaceTempFunction("graft_proto_long",
-      exprs => ProtoGet(exprs(0), fieldNo(exprs(1)), LongType), "scala_udf")
-    reg.createOrReplaceTempFunction("graft_proto_double",
-      exprs => ProtoGet(exprs(0), fieldNo(exprs(1)), DoubleType), "scala_udf")
-    reg.createOrReplaceTempFunction("graft_proto_string",
-      exprs => ProtoGet(exprs(0), fieldNo(exprs(1)), StringType), "scala_udf")
-    reg.createOrReplaceTempFunction("graft_proto_longs",
-      exprs => ProtoGetRepeated(exprs(0), fieldNo(exprs(1))), "scala_udf")
-    reg.createOrReplaceTempFunction("graft_proto_nested_long",
-      exprs => ProtoGetNested(exprs(0), fieldNo(exprs(1)), fieldNo(exprs(2)),
-        LongType), "scala_udf")
-    reg.createOrReplaceTempFunction("graft_proto_nested_double",
-      exprs => ProtoGetNested(exprs(0), fieldNo(exprs(1)), fieldNo(exprs(2)),
-        DoubleType), "scala_udf")
-    reg.createOrReplaceTempFunction("graft_proto_nested_string",
-      exprs => ProtoGetNested(exprs(0), fieldNo(exprs(1)), fieldNo(exprs(2)),
-        StringType), "scala_udf")
+    fn("graft_heavy_hitters")(exprs => MisraGries(exprs(0), intArg(exprs(1))))
+    fn("graft_kll_quantile")(exprs =>
+      KllQuantile(exprs(0), exprs(1), intArg(exprs(2))))
+    fn("graft_bigrams")(exprs => Bigrams(exprs.head))
+    fn("graft_topk_min")(exprs => TopKMin(exprs(0), exprs(1), intArg(exprs(2))))
+    fn("graft_bitmap_distinct")(exprs =>
+      GraftBitmap(exprs(0), intArg(exprs(1))))
+    fn("graft_cms")(exprs => CountMin(exprs.head))
+    fn("graft_min_k_set")(exprs => MinKSet(exprs(0), intArg(exprs(1))))
+    fn("graft_proto_long")(exprs =>
+      ProtoGet(exprs(0), intArg(exprs(1)), LongType))
+    fn("graft_proto_double")(exprs =>
+      ProtoGet(exprs(0), intArg(exprs(1)), DoubleType))
+    fn("graft_proto_string")(exprs =>
+      ProtoGet(exprs(0), intArg(exprs(1)), StringType))
+    fn("graft_proto_longs")(exprs =>
+      ProtoGetRepeated(exprs(0), intArg(exprs(1))))
+    fn("graft_proto_nested_long")(exprs =>
+      ProtoGetNested(exprs(0), intArg(exprs(1)), intArg(exprs(2)), LongType))
+    fn("graft_proto_nested_double")(exprs =>
+      ProtoGetNested(exprs(0), intArg(exprs(1)), intArg(exprs(2)), DoubleType))
+    fn("graft_proto_nested_string")(exprs =>
+      ProtoGetNested(exprs(0), intArg(exprs(1)), intArg(exprs(2)), StringType))
   }
 }

@@ -25,11 +25,16 @@ import org.apache.spark.sql.functions._
   * any partitioning, any executor count. No float ever enters the loop;
   * DuckDB replays all 5 unrolled iterations bit-for-bit.
   *
-  * Scale shapes: PageRank is the Pregel pattern as DataFrame joins — the
-  * static adjacency (src, dst, deg) is checkpointed once and each of the
-  * T=5 rounds is one equi-join + one partial-aggregated groupBy on the
-  * node key (at 100 TB: shuffle ∝ edges per round, T bounded; GraphX's
-  * Pregel materializes the same joins). Triangles use the compact-forward
+  * Scale shapes: PageRank materializes its directed edge frame once
+  * ([[materializeEdges]]); a graph of at most [[LocalSolveCap]] edges runs
+  * the same integer recurrence on the driver: three Spark jobs for the
+  * whole solve (checkpoint, count, collect) instead of a job chain per
+  * round. Only above the cap does the
+  * Pregel pattern run as DataFrame joins — the static adjacency (src, dst,
+  * deg) is checkpointed once and each of the T=5 rounds is one equi-join +
+  * one partial-aggregated groupBy on the node key (at 100 TB: shuffle ∝
+  * edges per round, T bounded; GraphX's Pregel materializes the same
+  * joins). Triangles use the compact-forward
   * orientation by (degree, id): each triangle is counted exactly once
   * under any total vertex order, and degree order bounds every node's
   * out-degree by O(√m), so a power-law hub cannot quadratically blow up
@@ -56,19 +61,96 @@ object Graph {
         (col("o_custkey").cast("long") * 2 + 1).as("b"))
       .distinct()
 
+  /** Directed-edge budget of the bounded driver-local graph solves
+    * (PageRank here, min-label propagation in [[TextDedup]]): 2^19 (src,
+    * dst) long pairs ≈ 8 MB collected — a bounded, documented driver
+    * payload like the ANN codebook collects. */
+  private[graft] val LocalSolveCap: Long = 1L << 19
+
+  /** A (src, dst) edge frame materialized once: `frame` is the checkpoint
+    * the distributed loops read, `count` its exact row count, and `local`
+    * the collected endpoints when the graph fits the driver. */
+  private[graft] final case class MaterializedEdges(frame: DataFrame,
+      count: Long, local: Option[(Array[Long], Array[Long])])
+
+  /** The bounded-local-solve pattern shared by the iterative graph cores
+    * (the AQE move, applied to iteration): checkpoint the edge frame ONCE
+    * and count it exactly; when 0 < count ≤ `cap`, collect the endpoints so
+    * a driver solve replaces rounds whose fixed per-round job cost dominates
+    * small graphs. An edge with a NULL endpoint keeps the graph on the
+    * distributed loop — SQL's null-join semantics stay the contract there,
+    * with no second copy of them on the driver. */
+  private[graft] def materializeEdges(edges: DataFrame,
+      cap: Long): MaterializedEdges = {
+    val frame = edges.localCheckpoint(true)
+    val n = frame.count()
+    val local = if (n > 0 && n <= cap) {
+      val rows = frame.select(col("src").cast("long"), col("dst").cast("long"))
+        .collect()
+      if (rows.exists(r => r.isNullAt(0) || r.isNullAt(1))) None
+      else Some((rows.map(_.getLong(0)), rows.map(_.getLong(1))))
+    } else None
+    MaterializedEdges(frame, n, local)
+  }
+
   /** Exact-integer PageRank core over a DIRECTED edge frame (src, dst) —
     * see the object doc for the arithmetic contract. Returns (node,
     * pr_scaled); nodes are everything appearing as a source (callers pass
     * the symmetric closure for undirected graphs, which also guarantees
-    * every node has out-degree ≥ 1 — no dangling-mass term needed). */
-  private[graft] def pagerankCore(dirEdges: DataFrame,
-      iters: Int = 5): DataFrame = {
-    val dir = dirEdges.select(col("src").cast("long").as("src"),
-      col("dst").cast("long").as("dst"))
+    * every node has out-degree ≥ 1 — no dangling-mass term needed).
+    * Graphs of at most `localSolveCap` edges take the driver recurrence
+    * ([[pagerankLocal]]), bit-identical to the loop. */
+  private[graft] def pagerankCore(dirEdges: DataFrame, iters: Int = 5,
+      localSolveCap: Long = LocalSolveCap): DataFrame = {
+    val m = materializeEdges(dirEdges.select(col("src").cast("long").as("src"),
+      col("dst").cast("long").as("dst")), localSolveCap)
+    m.local match {
+      case Some((src, dst)) =>
+        pagerankLocal(dirEdges.sparkSession, src, dst, iters)
+      case None => pagerankLoop(m.frame, iters)
+    }
+  }
+
+  /** The loop's recurrence on the driver, over the collected edge list
+    * (duplicate edges count once per row, as in the loop's join). Nodes
+    * are the distinct sources; a destination that is not a source is
+    * dropped with its incoming mass, as the loop's left join from `deg`
+    * drops it. Long arithmetic with `Math.*Exact`, so an overflow fails
+    * loudly as ANSI SQL does; JVM Long division ≡ SQL `div` on these
+    * non-negative operands. */
+  private def pagerankLocal(s: SparkSession, src: Array[Long],
+      dst: Array[Long], iters: Int): DataFrame = {
+    val index = scala.collection.mutable.LongMap.empty[Int]
+    val nodes = scala.collection.mutable.ArrayBuffer.empty[Long]
+    val si = src.map { v =>
+      index.getOrElseUpdate(v, { nodes += v; nodes.length - 1 })
+    }
+    val di = dst.map(v => index.getOrElse(v, -1))
+    val n = nodes.length
+    val deg = new Array[Long](n)
+    si.foreach(i => deg(i) += 1)
+    val base = 1000000000000L / n
+    val tele = Math.multiplyExact(15L, base) / 100L
+    var pr = Array.fill(n)(base)
+    for (_ <- 1 to iters) {
+      val sums = new Array[Long](n)
+      var e = 0
+      while (e < si.length) {
+        val d = di(e)
+        if (d >= 0) sums(d) = Math.addExact(sums(d), pr(si(e)) / deg(si(e)))
+        e += 1
+      }
+      pr = sums.map(c => Math.addExact(tele, Math.multiplyExact(85L, c) / 100L))
+    }
+    import s.implicits._
+    nodes.toSeq.zip(pr).toDF("node", "pr")
+  }
+
+  /** The distributed PageRank loop over a checkpointed (src, dst) frame —
+    * the arm above [[LocalSolveCap]]. */
+  private def pagerankLoop(dir: DataFrame, iters: Int): DataFrame = {
     // deg is the node frame every round re-joins — checkpoint it (and the
-    // adjacency) ONCE so no iteration re-derives the upstream scans; the
-    // first pagerank cut recomputed lineitem⋈orders 5× through this
-    // lineage (7.6 s → ~2 s at sf0.1)
+    // adjacency) ONCE so no iteration re-derives them
     val deg = dir.groupBy(col("src")).agg(count(lit(1)).as("deg"))
       .localCheckpoint(true)
     val adj = dir.join(deg, "src").localCheckpoint(true)
@@ -93,7 +175,9 @@ object Graph {
     // 3.16→3.74 s, LPA 1.69→2.66 s medians: each iteration's broadcast
     // then executes its whole unrolled subtree as one nested broadcast
     // job chain, losing to a cheap in-memory scan of the materialized
-    // previous round. The checkpoints stay.
+    // previous round. The checkpoints stay; this loop now runs only for
+    // graphs above LocalSolveCap, so at bench and fixture scale the
+    // whole solve is the driver recurrence instead.
     var pr = deg.select(col("src").as("node"), lit(base).as("pr"))
       .localCheckpoint(true)
     for (_ <- 1 to iters) {
@@ -116,11 +200,11 @@ object Graph {
     * integers (see object doc). Output: node kind + original key, the
     * EXACT scaled mass (pr_scaled, the oracle-compared value), ranked. */
   private val graphPagerank: Q = (s, d) => {
-    // checkpoint the undirected edge set ONCE: pagerankCore references its
-    // `dir` argument twice (deg rollup + adjacency join), which re-evaluated
-    // the full lineitem⋈orders+distinct build per reference — QProf r17
-    // showed the bizEdges map stages twice at ~1 s each
-    val e = bizEdges(s, d).localCheckpoint(true)
+    // no checkpoint of its own: pagerankCore materializes `dir` once, and
+    // the union's two bizEdges branches share their exchanges in that one
+    // plan (ten paired graph-bench runs: a separate checkpoint here did not
+    // pay — pagerank median 1.19 s with it, 1.12 s without)
+    val e = bizEdges(s, d)
     val dir = e.select(col("a").as("src"), col("b").as("dst"))
       .unionAll(e.select(col("b").as("src"), col("a").as("dst")))
     pagerankCore(dir)
@@ -499,7 +583,7 @@ object Graph {
       .localCheckpoint(true)
     val byVotes = Window.partitionBy("node").orderBy(desc("c"), asc("lbl"))
     // (r18: removing the per-round checkpoint was measured and DECLINED —
-    // see pagerankCore; the unrolled single-job form benched 1.69→2.66 s.)
+    // see pagerankLoop; the unrolled single-job form benched 1.69→2.66 s.)
     var lab = nbr.select(col("node")).distinct()
       .select(col("node"), col("node").as("lbl"))
     for (_ <- 1 to rounds) {

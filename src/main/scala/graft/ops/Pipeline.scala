@@ -436,15 +436,25 @@ object Pipeline {
       size(filter(tk, x => x.isInCollection(stop))).cast("long").as("n_stop"))
   }
   /** The conjunctive keep flag over a [[gopherMeasures]] struct — exactly
-    * the four cross-multiplied integer rules of the audit query. */
-  private[graft] def gopherKeep(m: Column): Column =
+    * the four cross-multiplied integer rules of the audit query.
+    *
+    * Null text (hence a null token array, hence null measures) is REJECTED:
+    * the flag is false, never null, so a release manifest counts such a
+    * document in its corpus (stage-1 rows_in) and drops it at the gopher
+    * stage — what the release oracle's `docs` / `s1` CTEs do. */
+  private[graft] def gopherKeep(m: Column): Column = coalesce(
     (m.getField("n_words") >= 20 && m.getField("n_words") <= 1000) &&
       (m.getField("len_sum") >= m.getField("n_words") * 2 &&
         m.getField("len_sum") <= m.getField("n_words") * 5) &&
       (m.getField("n_stop") >= 2) &&
-      (m.getField("max_c") * 10 <= m.getField("n_words"))
+      (m.getField("max_c") * 10 <= m.getField("n_words")),
+    lit(false))
+  /** Per-document rule audit. A document with null text has no words to
+    * audit and gets no row — the oracle's `unnest` drops it the same way. */
   private[graft] def gopherRulesCore(docs: DataFrame): DataFrame =
-    docs.select(col("doc_id"), gopherMeasures(split(normText, " ")).as("gm"))
+    docs.select(col("doc_id"), split(normText, " ").as("tk"))
+      .where(col("tk").isNotNull)
+      .select(col("doc_id"), gopherMeasures(col("tk")).as("gm"))
       .select(col("doc_id"),
         col("gm.n_words").as("n_words"),
         r4(col("gm.len_sum").cast("double") / col("gm.n_words").cast("double"))

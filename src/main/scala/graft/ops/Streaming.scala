@@ -163,22 +163,9 @@ object Streaming {
     * anyway (transformWithState already REQUIRED it). The pin respects a
     * caller-set provider (conf already present is left alone), which is
     * how RocksAB still forces the HDFS baseline arm. */
-  private val lastSinkTable = new java.util.concurrent.atomic.AtomicReference[String]()
   private def runToTable(s: SparkSession, df: DataFrame, mode: String,
       maxFilesPerTrigger: Option[Int] = None): DataFrame = {
     val name = s"graft_stream_${ctr.incrementAndGet()}"
-    // EXPERIMENT (r18, conf-gated, default OFF): drop the PREVIOUS
-    // invocation's memory-sink table before starting a new one — a suite
-    // run registers hundreds of sink tables (one per rep per stream id),
-    // and the in-suite stream-stream join elevation (isolated 3.5 s vs
-    // in-family 8-12 s) needed an accumulation-vs-stall bisect. Off by
-    // default because a caller may still hold the previous lazy frame.
-    if (s.conf.getOption("graft.stream.dropPrevSink")
-        .orElse(sys.env.get("GRAFT_DROP_PREV_SINK")).exists(
-          v => v == "true" || v == "1")) {
-      val prev = lastSinkTable.getAndSet(name)
-      if (prev != null) s.sql(s"DROP TABLE IF EXISTS `$prev`")
-    }
     val ckpt = ckptDir(name)
     dropCkpt(ckpt) // ADVICE r5: a stale dir from a crashed run would replay
     // the input as already-processed (empty complete-mode result) or abort

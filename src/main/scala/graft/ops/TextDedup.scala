@@ -23,6 +23,41 @@ object TextDedup {
   private[ops] val normText = regexp_replace(lower(trim(col("text"))), "\\s+", " ")
   private[ops] def toks(c: Column): Column = split(c, " ")
 
+  /** Run independent driver-side branches (builders with eager actions,
+    * checkpoint materializations) concurrently on a `threads`-wide pool and
+    * return their results in branch order — the overlap the audits use so
+    * single-task stage chains of independent subtrees stop serializing.
+    * Each branch's Spark jobs carry a job TAG of their own, so a caller's
+    * job group (per-id attribution in Bench/QProf) still applies. When a
+    * branch fails, every branch's tag is cancelled and the first failure
+    * is rethrown; the pool is shut down with `shutdownNow()` on every path,
+    * so no thread or orphaned job outlives the call. */
+  private[graft] def overlap[A](s: SparkSession, threads: Int)(
+      branches: Seq[() => A]): Seq[A] = {
+    import java.util.concurrent.{ExecutionException, ExecutorCompletionService, Executors}
+    val sc = s.sparkContext
+    val id = java.util.UUID.randomUUID()
+    val tags = branches.indices.map(i => s"graft-overlap-$id-$i")
+    val pool = Executors.newFixedThreadPool(threads)
+    try {
+      val done = new ExecutorCompletionService[(Int, A)](pool)
+      for ((b, i) <- branches.zipWithIndex) done.submit { () =>
+        sc.addJobTag(tags(i))
+        try (i, b()) finally sc.removeJobTag(tags(i))
+      }
+      val out = new Array[Any](branches.length)
+      try for (_ <- branches.indices) {
+        val (i, a) = done.take().get()
+        out(i) = a
+      } catch {
+        case e: ExecutionException =>
+          tags.foreach(t => sc.cancelJobsWithTag(t))
+          throw e.getCause
+      }
+      out.toSeq.asInstanceOf[Seq[A]]
+    } finally pool.shutdownNow()
+  }
+
   /** Sequential-fold cosine similarity in doubles — bit-identical to the
     * DuckDB `list_sum(list_transform(list_zip(a,b), …))` formulation.
     * (DuckDB's native list_cosine_similarity accumulates in float32 and does
@@ -265,41 +300,29 @@ object TextDedup {
     // branches adds NO exchange and no tasks — the three 1-row aggregates
     // materialize concurrently and the assembly crossJoin is unchanged
     // (values order-insensitive, schema identical, oracle hash unchanged).
-    import scala.concurrent.{Await, Future}
-    import scala.concurrent.duration.Duration
-    val pool = java.util.concurrent.Executors.newFixedThreadPool(3)
-    implicit val ec: scala.concurrent.ExecutionContext =
-      scala.concurrent.ExecutionContext.fromExecutorService(pool)
-    try {
-      def sets = tbl(s, d, "documents")
-        .select(col("doc_id"), sort_array(array_distinct(toks(normText))).as("st"))
-      val baseF = Future {
-        sets.agg(count(lit(1)).as("n_docs")).localCheckpoint(true) }
-      val ntF = Future {
-        jaccardTruthDups(s, d).agg(count(lit(1)).as("n_truth"))
-          .localCheckpoint(true) }
-      // found side: the production banded-LSH verified pairs, each
-      // re-verified against the exact STRING sets
-      val fInter = size(array_intersect(col("sta"), col("stb")))
-      val fjac = fInter.cast("double") /
-        (size(col("sta")) + size(col("stb")) - fInter).cast("double")
-      val chkF = Future {
-        minhashVerifiedPairs(s, d)
-          .join(sets.select(col("doc_id").as("da"), col("st").as("sta")), "da")
-          .join(sets.select(col("doc_id").as("db"), col("st").as("stb")), "db")
-          .agg(coalesce(min(when(fjac >= 0.8, 1L).otherwise(0L)), lit(1L))
-              .as("prec"),
-            countDistinct(col("db")).as("n_found"))
-          .localCheckpoint(true) }
-      val base = Await.result(baseF, Duration.Inf)
-      val nt = Await.result(ntF, Duration.Inf)
-      val chk = Await.result(chkF, Duration.Inf)
-      base.crossJoin(broadcast(nt)).crossJoin(broadcast(chk))
-        .select(col("n_docs").cast("long").as("n_docs"),
-          col("n_truth").cast("long").as("n_truth_dups"),
-          (col("prec") === 1L).as("precision_ok"),
-          (col("n_found") * 100L >= col("n_truth") * 90L).as("recall_ok"))
-    } finally pool.shutdown()
+    def sets = tbl(s, d, "documents")
+      .select(col("doc_id"), sort_array(array_distinct(toks(normText))).as("st"))
+    // found side: the production banded-LSH verified pairs, each
+    // re-verified against the exact STRING sets
+    val fInter = size(array_intersect(col("sta"), col("stb")))
+    val fjac = fInter.cast("double") /
+      (size(col("sta")) + size(col("stb")) - fInter).cast("double")
+    val Seq(base, nt, chk) = overlap(s, threads = 3)(Seq(
+      () => sets.agg(count(lit(1)).as("n_docs")).localCheckpoint(true),
+      () => jaccardTruthDups(s, d).agg(count(lit(1)).as("n_truth"))
+        .localCheckpoint(true),
+      () => minhashVerifiedPairs(s, d)
+        .join(sets.select(col("doc_id").as("da"), col("st").as("sta")), "da")
+        .join(sets.select(col("doc_id").as("db"), col("st").as("stb")), "db")
+        .agg(coalesce(min(when(fjac >= 0.8, 1L).otherwise(0L)), lit(1L))
+            .as("prec"),
+          countDistinct(col("db")).as("n_found"))
+        .localCheckpoint(true)))
+    base.crossJoin(broadcast(nt)).crossJoin(broadcast(chk))
+      .select(col("n_docs").cast("long").as("n_docs"),
+        col("n_truth").cast("long").as("n_truth_dups"),
+        (col("prec") === 1L).as("precision_ok"),
+        (col("n_found") * 100L >= col("n_truth") * 90L).as("recall_ok"))
   }
 
   /** ORACLE-GATED audit for dedup_simhash against the SAME exact-Jaccard
@@ -317,18 +340,10 @@ object TextDedup {
     // r18 (guide §2.6, same rationale as dedupMinhashAudit): the truth and
     // found sides are independent eager checkpoints that used to serialize
     // their single-task stage chains; overlap them on a 2-thread pool.
-    import scala.concurrent.{Await, Future}
-    import scala.concurrent.duration.Duration
-    val pool = java.util.concurrent.Executors.newFixedThreadPool(2)
-    implicit val ec: scala.concurrent.ExecutionContext =
-      scala.concurrent.ExecutionContext.fromExecutorService(pool)
-    val (truth, found) = try {
-      val truthF = Future { jaccardTruthDups(s, d).localCheckpoint(true) }
-      val foundF = Future {
-        dedupSimhash(s, d).where(col("is_dup")).select(col("doc_id"))
-          .localCheckpoint(true) }
-      (Await.result(truthF, Duration.Inf), Await.result(foundF, Duration.Inf))
-    } finally pool.shutdown()
+    val Seq(truth, found) = overlap(s, threads = 2)(Seq(
+      () => jaccardTruthDups(s, d).localCheckpoint(true),
+      () => dedupSimhash(s, d).where(col("is_dup")).select(col("doc_id"))
+        .localCheckpoint(true)))
     val base = tbl(s, d, "documents").agg(count(lit(1)).as("n_docs"))
     val nt = truth.agg(count(lit(1)).as("n_truth"))
     val nf = found.agg(count(lit(1)).as("n_found"))
@@ -1162,20 +1177,20 @@ object TextDedup {
     * `localSolveCap` skip the loop for a driver union-find — see the
     * inline rationale; rounds = 0 signals that path. */
   private[graft] def propagateMinLabels(edges: DataFrame, init: DataFrame,
-      maxRounds: Int, localSolveCap: Long = 1L << 19): (DataFrame, Int) = {
-    val edgesC = edges.localCheckpoint(true)
-    // ADAPTIVE bounded-graph solve (the AQE move, applied to iteration): the
-    // edge frame is materialized and exactly counted by the checkpoint;
-    // when it fits the cap (default 2^19 directed edges ≈ 8 MB of longs — a bounded,
-    // documented driver payload like the ANN codebook collects), driver
-    // union-find with path compression replaces log(diameter) Spark rounds
-    // whose fixed per-round job cost dominates small graphs. Above the cap —
-    // the 100 TB regime — the distributed loop below runs unchanged.
+      maxRounds: Int, localSolveCap: Long = Graph.LocalSolveCap)
+      : (DataFrame, Int) = {
+    // ADAPTIVE bounded-graph solve (Graph.materializeEdges): when the
+    // materialized edge frame fits the cap, driver union-find with path
+    // compression replaces log(diameter) Spark rounds whose fixed per-round
+    // job cost dominates small graphs. Above the cap — the 100 TB regime —
+    // the distributed loop below runs unchanged over the same checkpoint.
     // Preconditions (hold at every call site): every edge endpoint appears
     // in `init`, and untouched rows of `init` carry label == node (touched
     // labels are recomputed from scratch as component minima here).
-    val nEdges = edgesC.count()
-    if (nEdges > 0 && nEdges <= localSolveCap) {
+    val Graph.MaterializedEdges(edgesC, nEdges, local) =
+      Graph.materializeEdges(edges, localSolveCap)
+    if (local.isDefined) {
+      val (src, dst) = local.get
       val parent = scala.collection.mutable.LongMap.empty[Long]
       def find(x: Long): Long = {
         var r = x
@@ -1185,8 +1200,8 @@ object TextDedup {
         r
       }
       val seen = scala.collection.mutable.LongMap.empty[Unit]
-      edgesC.select(col("src"), col("dst")).collect().foreach { e =>
-        val (a, b) = (e.getLong(0), e.getLong(1))
+      for (i <- src.indices) {
+        val (a, b) = (src(i), dst(i))
         seen(a) = (); seen(b) = ()
         val (ra, rb) = (find(a), find(b))
         // larger root attaches under smaller ⇒ every root IS its
@@ -2137,38 +2152,38 @@ object TextDedup {
     // the sequential form (every member is deterministic, and a count is
     // order-insensitive).
     graft.ext.CatalystExt.register(s) // once, before threads share it
-    import scala.concurrent.{Await, Future}
+    import scala.concurrent.{Await, Promise}
     import scala.concurrent.duration.Duration
-    val pool = java.util.concurrent.Executors.newFixedThreadPool(4)
-    implicit val ec: scala.concurrent.ExecutionContext =
-      scala.concurrent.ExecutionContext.fromExecutorService(pool)
-    try {
-      val exF = Future {
-        simCosineTopk(s, d).select(col("qid"), col("vec_id"))
-          .localCheckpoint(true)
-      }
-      def hitsF(q: Q): Future[Long] = Future { // builder (training actions)
-        q(s, d).select(col("qid"), col("vec_id"))
-      }.zip(exF).map { case (ap, ex) =>       // then the hit count vs exact
-        ap.join(ex, Seq("qid", "vec_id")).count()
-      }
-      val hfs = Seq("lsh" -> simLshAnn, "ivf" -> simIvfAnn,
-        "ivfs" -> simIvfScaled,
-        "mllib" -> simMllibLsh, "pq" -> simPqAnn, "ivfpq" -> simIvfPqAnn)
-        .map { case (n, q) => n -> hitsF(q) }
-      val ex = Await.result(exF, Duration.Inf)
-      val hits = hfs.map { case (n, f) =>
-        n -> Await.result(f, Duration.Inf) }.toMap
-      def ok(name: String, pct: Int): Column =
-        (lit(hits(name)) * 100L >= col("n_exact") * pct.toLong)
-          .as(s"${name}_recall_ok")
-      ex.agg(count(lit(1)).as("n_exact"),
-          sum(col("vec_id")).as("sum_exact_ids"))
-        .select(col("n_exact").cast("long").as("n_exact"),
-          col("sum_exact_ids").cast("long").as("sum_exact_ids"),
-          ok("lsh", 85), ok("ivf", 80), ok("ivfs", 75), ok("mllib", 85),
-          ok("pq", 85), ok("ivfpq", 80))
-    } finally pool.shutdown()
+    // the exact reference is branch 0 (first on the FIFO pool, so it always
+    // gets a thread): members build concurrently, then wait for it to count
+    // their hits. A failed reference fails its branch, and overlap's
+    // shutdownNow interrupts the members still waiting on it.
+    val exP = Promise[DataFrame]()
+    val members = Seq("lsh" -> simLshAnn, "ivf" -> simIvfAnn,
+      "ivfs" -> simIvfScaled,
+      "mllib" -> simMllibLsh, "pq" -> simPqAnn, "ivfpq" -> simIvfPqAnn)
+    val counts = overlap(s, threads = 4)(
+      (() => {
+        exP.success(simCosineTopk(s, d).select(col("qid"), col("vec_id"))
+          .localCheckpoint(true))
+        0L
+      }) +: members.map { case (_, q) => () => {
+        val ap = q(s, d).select(col("qid"), col("vec_id")) // builder
+        // (training actions), then the hit count vs exact
+        ap.join(Await.result(exP.future, Duration.Inf), Seq("qid", "vec_id"))
+          .count()
+      }})
+    val ex = exP.future.value.get.get
+    val hits = members.map(_._1).zip(counts.tail).toMap
+    def ok(name: String, pct: Int): Column =
+      (lit(hits(name)) * 100L >= col("n_exact") * pct.toLong)
+        .as(s"${name}_recall_ok")
+    ex.agg(count(lit(1)).as("n_exact"),
+        sum(col("vec_id")).as("sum_exact_ids"))
+      .select(col("n_exact").cast("long").as("n_exact"),
+        col("sum_exact_ids").cast("long").as("sum_exact_ids"),
+        ok("lsh", 85), ok("ivf", 80), ok("ivfs", 75), ok("mllib", 85),
+        ok("pq", 85), ok("ivfpq", 80))
   }
 
   // ------------------------------------------------------------ text analysis

@@ -1265,6 +1265,115 @@ class LabelPropSpec extends AnyFunSuite {
   }
 }
 
+/** PageRank's bounded driver-local arm (Graph.pagerankCore under
+  * LocalSolveCap) must reproduce the distributed loop (cap 0) row for row,
+  * on the graph-wide shapes the oracle contract covers. */
+class PagerankArmsSpec extends AnyFunSuite {
+  import TestSession._
+  import spark.implicits._
+
+  private def rows(df: org.apache.spark.sql.DataFrame) =
+    df.collect().map(r =>
+      (Option(r.get(0)).map(_.asInstanceOf[Long]), r.getLong(1))).toSet
+  private def bothArms(edges: org.apache.spark.sql.DataFrame) =
+    (rows(ops.Graph.pagerankCore(edges)), // default cap: local arm
+      rows(ops.Graph.pagerankCore(edges, localSolveCap = 0L)))
+
+  test("local arm equals the loop: duplicate edges and a dst-only node") {
+    val rng = new scala.util.Random(11)
+    val und = (1 to 300).map { _ =>
+      (rng.nextInt(120).toLong, rng.nextInt(120).toLong)
+    }.filter(p => p._1 != p._2)
+    // symmetric closure, some edges repeated (counted once per row in the
+    // degree and the contribution sum), node 999 only ever a destination
+    val dir = und.flatMap(p => Seq(p, p.swap)) ++ und.take(40) ++
+      Seq((3L, 999L), (5L, 999L))
+    val edges = dir.toDF("src", "dst")
+    assert(ops.Graph.materializeEdges(edges, ops.Graph.LocalSolveCap)
+      .local.isDefined, "the graph must fit the local arm")
+    val (local, looped) = bothArms(edges)
+    val diff = local.diff(looped) ++ looped.diff(local)
+    assert(diff.isEmpty, s"local recurrence diverged from the loop on " +
+      s"${diff.size} rows, e.g. ${diff.take(4)}")
+    assert(!local.exists(_._1.contains(999L)), "dst-only node must be dropped")
+    assert(local.size == dir.map(_._1).distinct.size)
+  }
+
+  test("empty edge frame: both arms return no rows") {
+    val (local, looped) = bothArms(Seq.empty[(Long, Long)].toDF("src", "dst"))
+    assert(local.isEmpty && looped.isEmpty)
+  }
+
+  test("a null endpoint keeps the graph on the loop") {
+    // the chosen behaviour: any NULL endpoint falls back to the distributed
+    // loop, whose SQL join semantics are the contract (the null source is a
+    // node that receives nothing; a null destination absorbs its share)
+    val edges = Seq[(java.lang.Long, java.lang.Long)](
+      (1L, 2L), (2L, 1L), (2L, 3L), (3L, 2L), (null, 1L), (3L, null))
+      .toDF("src", "dst")
+    assert(ops.Graph.materializeEdges(edges, ops.Graph.LocalSolveCap)
+      .local.isEmpty, "a null endpoint must not take the local arm")
+    val (local, looped) = bothArms(edges)
+    assert(local == looped)
+    val base = 1000000000000L / 4 // nodes 1, 2, 3 and the null source
+    assert(local.contains((None, 15L * base / 100)))
+  }
+}
+
+/** Extension registration is a per-session, add-only-what-is-missing step. */
+class RegisterSpec extends AnyFunSuite {
+  import TestSession._
+  import org.apache.spark.sql.catalyst.FunctionIdentifier
+
+  test("a second register replaces nothing; a newSession still resolves") {
+    val reg = spark.sessionState.functionRegistry
+    graft.ext.CatalystExt.register(spark)
+    val names = Seq("graft_cosine", "graft_min_k_set", "graft_proto_longs")
+    val before = names.map(n => reg.lookupFunctionBuilder(FunctionIdentifier(n)))
+    graft.ext.CatalystExt.register(spark)
+    val after = names.map(n => reg.lookupFunctionBuilder(FunctionIdentifier(n)))
+    assert(before.forall(_.isDefined))
+    before.zip(after).foreach { case (b, a) =>
+      assert(b.get eq a.get, "register replaced an existing builder")
+    }
+    val s2 = spark.newSession()
+    graft.ext.CatalystExt.register(s2)
+    val got = s2.sql(
+      "SELECT graft_min_k_set(x, 2) FROM VALUES (3L), (1L), (2L) AS t(x)")
+      .head().getSeq[Long](0)
+    assert(got == Seq(1L, 2L))
+  }
+}
+
+/** The driver-side overlap helper's failure path. */
+class OverlapSpec extends AnyFunSuite {
+  import TestSession._
+
+  test("a failing branch rethrows its cause and cancels the sibling's job") {
+    val sc = spark.sparkContext
+    val t0 = System.nanoTime()
+    val ex = intercept[IllegalStateException] {
+      ops.TextDedup.overlap(spark, threads = 2)(Seq(
+        () => sc.parallelize(0 until 2, 2).mapPartitions { it =>
+          // runs until killed (or 60 s): only a cancellation ends it early
+          val tc = org.apache.spark.TaskContext.get()
+          val end = System.nanoTime() + 60000000000L
+          while (!tc.isInterrupted() && System.nanoTime() < end)
+            Thread.sleep(50)
+          it
+        }.count(),
+        () => { Thread.sleep(1500); throw new IllegalStateException("boom") }))
+    }
+    assert(ex.getMessage == "boom")
+    val deadline = System.nanoTime() + 20000000000L
+    while (sc.statusTracker.getActiveJobIds().nonEmpty &&
+      System.nanoTime() < deadline) Thread.sleep(100)
+    assert(sc.statusTracker.getActiveJobIds().isEmpty,
+      "the sibling's job was left running")
+    assert((System.nanoTime() - t0) / 1e9 < 40)
+  }
+}
+
 /** Streaming semantics (SURVEY §2.10): watermark drop + stateful ≡ batch. */
 class StreamingSpec extends AnyFunSuite {
   import TestSession._

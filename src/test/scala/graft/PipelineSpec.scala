@@ -430,4 +430,25 @@ class PipelineSpec extends AnyFunSuite {
     assert(graft.ops.Forecast.skillCheck(1L, series(bound)).isEmpty,
       "series whose cut lands below the bound must be excluded")
   }
+
+  test("gopher: a null-text doc gets no rule row and is rejected in manifests") {
+    import spark.implicits._
+    // fixture built here: one null-text doc beside a doc that passes every
+    // rule (24 words, 2+ stopwords, no word above 10%)
+    val good = ("the cat and a dog of " +
+      (1 to 18).map(i => s"word$i").mkString(" "))
+    val docs = Seq[(Long, String)]((1L, good), (2L, null))
+      .toDF("doc_id", "text")
+    val rules = Pipeline.gopherRulesCore(docs).collect()
+    assert(rules.map(_.getLong(0)).toSeq == Seq(1L),
+      "a null-text doc must not emit a null-measure rule row")
+    assert(rules.head.getAs[Boolean]("keep"))
+    // the manifest verdict is false (never null) for the null-text doc, so
+    // a release audit counts it in rows_in and drops it at stage 1
+    val k1 = docs.select(col("doc_id"),
+        Pipeline.gopherKeep(Pipeline.gopherMeasures(split(col("text"), " ")))
+          .as("k1"))
+      .collect().map(r => r.getLong(0) -> r.get(1)).toMap
+    assert(k1 == Map(1L -> true, 2L -> false))
+  }
 }
