@@ -28,6 +28,13 @@ object Graft {
     s
   }
 
+  /** The caller's (key, time, value) columns as the (user_id, bucket, v)
+    * frame the per-series fits read. */
+  private def seriesPoints(df: DataFrame, key: String, time: String,
+      value: String): DataFrame =
+    df.select(col(key).cast("long").as("user_id"), col(time).as("bucket"),
+      col(value).cast("double").as("v"))
+
   /** Distributed Prophet-style forecast: one model per key, fit in-task
     * (per-series-fits-in-memory contract — 100 TB means more series, not
     * bigger ones). Input columns are (key: integral, time: timestamp,
@@ -38,15 +45,8 @@ object Graft {
   def forecast(df: DataFrame, key: String, time: String, value: String,
       horizon: Int,
       cfg: graft.ops.Forecast.Config = graft.ops.Forecast.DefaultConfig): DataFrame = {
-    val s = df.sparkSession
-    import s.implicits._
-    df.select(col(key).cast("long").as("user_id"), col(time).as("bucket"),
-        col(value).cast("double").as("v"))
-      .as[graft.ops.Forecast.Point]
-      .groupByKey(_.user_id)
-      .flatMapGroups((k: Long, it: Iterator[graft.ops.Forecast.Point]) =>
-        graft.ops.Forecast.fitPredict(k, it.toArray, horizon, cfg))
-      .toDF()
+    graft.ops.Forecast.fitEach(seriesPoints(df, key, time, value))(
+      graft.ops.Forecast.fitPredict(_, _, horizon, cfg))
       .withColumnRenamed("user_id", key)
       .withColumnRenamed("bucket", time)
   }
@@ -59,15 +59,8 @@ object Graft {
   def forecastLogistic(df: DataFrame, key: String, time: String,
       value: String, horizon: Int,
       cfg: graft.ops.Forecast.Config = graft.ops.Forecast.DefaultConfig): DataFrame = {
-    val s = df.sparkSession
-    import s.implicits._
-    df.select(col(key).cast("long").as("user_id"), col(time).as("bucket"),
-        col(value).cast("double").as("v"))
-      .as[graft.ops.Forecast.Point]
-      .groupByKey(_.user_id)
-      .flatMapGroups((k: Long, it: Iterator[graft.ops.Forecast.Point]) =>
-        graft.ops.Forecast.fitPredictLogistic(k, it.toArray, horizon, cfg))
-      .toDF()
+    graft.ops.Forecast.fitEach(seriesPoints(df, key, time, value))(
+      graft.ops.Forecast.fitPredictLogistic(_, _, horizon, cfg))
       .withColumnRenamed("user_id", key)
       .withColumnRenamed("bucket", time)
   }
@@ -79,15 +72,8 @@ object Graft {
   def forecastMultiplicative(df: DataFrame, key: String, time: String,
       value: String, horizon: Int,
       cfg: graft.ops.Forecast.Config = graft.ops.Forecast.DefaultConfig): DataFrame = {
-    val s = df.sparkSession
-    import s.implicits._
-    df.select(col(key).cast("long").as("user_id"), col(time).as("bucket"),
-        col(value).cast("double").as("v"))
-      .as[graft.ops.Forecast.Point]
-      .groupByKey(_.user_id)
-      .flatMapGroups((k: Long, it: Iterator[graft.ops.Forecast.Point]) =>
-        graft.ops.Forecast.fitPredictMultiplicative(k, it.toArray, horizon, cfg))
-      .toDF()
+    graft.ops.Forecast.fitEach(seriesPoints(df, key, time, value))(
+      graft.ops.Forecast.fitPredictMultiplicative(_, _, horizon, cfg))
       .withColumnRenamed("user_id", key)
       .withColumnRenamed("bucket", time)
   }
@@ -288,15 +274,8 @@ object Graft {
     * noise_ratio4_ok) — see forecast_skill_audit for the gating use. */
   def forecastSkillCheck(df: DataFrame, key: String, time: String,
       value: String): DataFrame = {
-    val s = df.sparkSession
-    import s.implicits._
-    df.select(col(key).cast("long").as("user_id"), col(time).as("bucket"),
-        col(value).cast("double").as("v"))
-      .as[graft.ops.Forecast.Point]
-      .groupByKey(_.user_id)
-      .flatMapGroups((k: Long, it: Iterator[graft.ops.Forecast.Point]) =>
-        graft.ops.Forecast.skillCheck(k, it.toArray))
-      .toDF()
+    graft.ops.Forecast.fitEach(seriesPoints(df, key, time, value))(
+      graft.ops.Forecast.skillCheck)
       .withColumnRenamed("user_id", key)
   }
 

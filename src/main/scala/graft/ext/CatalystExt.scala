@@ -1070,6 +1070,12 @@ object CatalystExt {
   val CmsA: Array[Long] = Array(1103515245L, 1299709L, 15485863L, 32452843L)
   val CmsB: Array[Long] = Array(12345L, 7919L, 104729L, 1299721L)
 
+  /** True when the session's function registry has no `name` yet: the
+    * guard every graft_* registration runs behind, so a repeated call
+    * leaves the registered builder in place. */
+  def missing(s: SparkSession, name: String): Boolean =
+    !s.sessionState.functionRegistry.functionExists(FunctionIdentifier(name))
+
   /** Register every extension the session's function registry is missing
     * (idempotent, and cheap to repeat: query builders call this on every
     * invocation, so a name already present is left alone instead of being
@@ -1077,10 +1083,10 @@ object CatalystExt {
     * session, so a `newSession()` (which starts from the built-ins) still
     * gets every function on its first call. */
   def register(s: SparkSession): Unit = {
-    val reg = s.sessionState.functionRegistry
     def fn(name: String)(builder: Seq[Expression] => Expression): Unit =
-      if (!reg.functionExists(FunctionIdentifier(name)))
-        reg.createOrReplaceTempFunction(name, builder, "scala_udf")
+      if (missing(s, name))
+        s.sessionState.functionRegistry
+          .createOrReplaceTempFunction(name, builder, "scala_udf")
     fn("graft_cosine")(exprs => CosineSimilarity(exprs(0), exprs(1)))
     fn("graft_hll")(exprs => GraftHLL(exprs.head))
     def intArg(e: Expression): Int =

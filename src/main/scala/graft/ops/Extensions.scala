@@ -26,19 +26,20 @@ object Extensions {
     override def outputEncoder: Encoder[Double] = Encoders.scalaDouble
   }
 
-  /** Registered Scala UDF usable from both DSL and SQL (§2.11 udf_scalar). */
-  private def registerHaversine(s: SparkSession): Unit = {
-    val hav = udf((lat1: Double, lon1: Double, lat2: Double, lon2: Double) => {
-      val r = 6371.0
-      val dLat = math.toRadians(lat2 - lat1)
-      val dLon = math.toRadians(lon2 - lon1)
-      val a = math.sin(dLat / 2) * math.sin(dLat / 2) +
-        math.cos(math.toRadians(lat1)) * math.cos(math.toRadians(lat2)) *
-          math.sin(dLon / 2) * math.sin(dLon / 2)
-      2.0 * r * math.asin(math.sqrt(a))
-    })
-    s.udf.register("graft_haversine", hav)
-  }
+  /** Registered Scala UDF usable from both DSL and SQL (§2.11 udf_scalar);
+    * registered once per session, like every graft_* function. */
+  private def registerHaversine(s: SparkSession): Unit =
+    if (CatalystExt.missing(s, "graft_haversine"))
+      s.udf.register("graft_haversine",
+        udf((lat1: Double, lon1: Double, lat2: Double, lon2: Double) => {
+          val r = 6371.0
+          val dLat = math.toRadians(lat2 - lat1)
+          val dLon = math.toRadians(lon2 - lon1)
+          val a = math.sin(dLat / 2) * math.sin(dLat / 2) +
+            math.cos(math.toRadians(lat1)) * math.cos(math.toRadians(lat2)) *
+              math.sin(dLon / 2) * math.sin(dLon / 2)
+          2.0 * r * math.asin(math.sqrt(a))
+        }))
 
   private val udfScalar: Q = (s, d) => {
     registerHaversine(s)
@@ -53,7 +54,8 @@ object Extensions {
   }
 
   private val udafAggregator: Q = (s, d) => {
-    s.udf.register("graft_geomean", udaf(GeoMean))
+    if (CatalystExt.missing(s, "graft_geomean"))
+      s.udf.register("graft_geomean", udaf(GeoMean))
     tbl(s, d, "orders")
       .groupBy(col("o_orderstatus"))
       .agg(r4(expr("graft_geomean(o_totalprice)")).as("geomean_price"))

@@ -1,13 +1,14 @@
 package graft.ops
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{DataFrame, Encoders, SparkSession}
 import org.apache.spark.sql.functions.col
+import scala.reflect.runtime.universe.TypeTag
 
 /** The reference's flagship capability [B]: per-key additive time-series
   * forecasting, distributed with the same pattern the reference uses
   * (`groupBy(keys).applyInPandas(fit_predict)` — SURVEY.md §2.9
-  * forecast_prophet_like) but JVM-native: `groupByKey.flatMapGroups`, no
-  * Arrow/Python process hop.
+  * forecast_prophet_like) but JVM-native: `groupBy.as.flatMapGroups`
+  * ([[fitEach]]), no Arrow/Python process hop.
   *
   * Model (deterministic, no MCMC): y = piecewise-linear trend (3 changepoints
   * at t-quantiles 0.25/0.5/0.75) + Fourier weekly seasonality (K=3) + Fourier
@@ -18,6 +19,12 @@ import org.apache.spark.sql.functions.col
   * Scale posture: one shuffle (hash by series key); each group fits in one
   * task (~720 hourly slots/series — same per-series-fits-in-memory assumption
   * the reference's pandas UDF makes). 100 TB = more series, not bigger ones.
+  * The registry queries fit on [[TimeSeries.hourly]], whose grid is already
+  * hash-partitioned by `user_id` into `spark.sql.shuffle.partitions` parts,
+  * so the fit reuses that one exchange instead of adding its own. A
+  * fixed-count repartition is one AQE never coalesces: the shuffle is small
+  * in bytes, but a fit's cost scales with the number of keys, not bytes, so
+  * coalescing by size would put every fit in one task.
   *
   * Self-verified (§5.4): synthetic trend+seasonality recovery, determinism
   * across runs/partitionings — not SQL-expressible, so no DuckDB oracle.
@@ -511,28 +518,32 @@ object Forecast {
 
   private def round4(x: Double): Double = math.floor(x * 10000 + 0.5) / 10000.0
 
-  private val forecastProphetLike: Q = (s, d) => {
-    import s.implicits._
-    TimeSeries.hourly(s, d)
-      .select(col("user_id"), col("bucket"), col("v"))
-      .as[Point]
-      .groupByKey(_.user_id)
-      .flatMapGroups((k: Long, it: Iterator[Point]) =>
-        fitPredict(k, it.toArray, horizon = 48))
+  /** One model per series: `f` gets each `user_id` group of a
+    * (user_id, bucket, v) frame as one array. Grouping on the column (not
+    * `groupByKey(_.user_id)`) adds no key projection, so a frame already
+    * hash-partitioned by `user_id` (the hourly grid) needs no second
+    * exchange.
+    *
+    * With `sortBy`, the fit output is materialized once and then sorted:
+    * the global sort's range partitioner samples its child in a job of its
+    * own, which would otherwise run every fit a second time. */
+  private[graft] def fitEach[U <: Product : TypeTag](points: DataFrame,
+      sortBy: String*)(f: (Long, Array[Point]) => Iterator[U]): DataFrame = {
+    val fits = points.groupBy(col("user_id"))
+      .as[Long, Point](Encoders.scalaLong, Encoders.product[Point])
+      .flatMapGroups((k: Long, it: Iterator[Point]) => f(k, it.toArray))(
+        Encoders.product[U])
       .toDF()
-      .orderBy("user_id", "bucket")
+    if (sortBy.isEmpty) fits
+    else fits.localCheckpoint(true).orderBy(sortBy.map(col): _*)
   }
 
-  private val forecastProphetBacktest: Q = (s, d) => {
-    import s.implicits._
-    TimeSeries.hourly(s, d)
-      .select(col("user_id"), col("bucket"), col("v"))
-      .as[Point]
-      .groupByKey(_.user_id)
-      .flatMapGroups((k: Long, it: Iterator[Point]) => backtest(k, it.toArray))
-      .toDF()
-      .orderBy("user_id")
-  }
+  private val forecastProphetLike: Q = (s, d) =>
+    fitEach(TimeSeries.hourly(s, d), "user_id", "bucket")(
+      fitPredict(_, _, horizon = 48))
+
+  private val forecastProphetBacktest: Q = (s, d) =>
+    fitEach(TimeSeries.hourly(s, d), "user_id")(backtest)
 
   /** A deliberately non-default configuration, run end to end through the
     * same distributed path as the contract query: four changepoints, a
@@ -544,17 +555,9 @@ object Forecast {
     weeklyK = 2, dailyK = 3, ridge = 0.5,
     intervalZ = 1.959963984540054 /* 95% normal half-width */)
 
-  private val forecastProphetConfigured: Q = (s, d) => {
-    import s.implicits._
-    TimeSeries.hourly(s, d)
-      .select(col("user_id"), col("bucket"), col("v"))
-      .as[Point]
-      .groupByKey(_.user_id)
-      .flatMapGroups((k: Long, it: Iterator[Point]) =>
-        fitPredict(k, it.toArray, horizon = 48, WideConfig))
-      .toDF()
-      .orderBy("user_id", "bucket")
-  }
+  private val forecastProphetConfigured: Q = (s, d) =>
+    fitEach(TimeSeries.hourly(s, d), "user_id", "bucket")(
+      fitPredict(_, _, horizon = 48, WideConfig))
 
   /** Holiday-effects variant (Prophet's holiday model, round-5): one named
     * holiday whose occurrence list spans BOTH the training window (2nd day
@@ -565,7 +568,6 @@ object Forecast {
     * whose span misses the in-sample occurrence get a 0 coefficient from
     * the ridge — deterministic, not an error. */
   private val forecastProphetHolidays: Q = (s, d) => {
-    import s.implicits._
     val h = TimeSeries.hourly(s, d)
     val span = h.agg(
       org.apache.spark.sql.functions.min(col("bucket")),
@@ -573,38 +575,16 @@ object Forecast {
     val d0 = span.getTimestamp(0).getTime / 86400000L
     val dN = span.getTimestamp(1).getTime / 86400000L
     val cfg = DefaultConfig.copy(holidays = Array(Array(d0 + 1, dN + 1)))
-    h.select(col("user_id"), col("bucket"), col("v"))
-      .as[Point]
-      .groupByKey(_.user_id)
-      .flatMapGroups((k: Long, it: Iterator[Point]) =>
-        fitPredictHolidays(k, it.toArray, horizon = 48, cfg))
-      .toDF()
-      .orderBy("user_id", "bucket")
+    fitEach(h, "user_id", "bucket")(fitPredictHolidays(_, _, horizon = 48, cfg))
   }
 
-  private val forecastProphetLogistic: Q = (s, d) => {
-    import s.implicits._
-    TimeSeries.hourly(s, d)
-      .select(col("user_id"), col("bucket"), col("v"))
-      .as[Point]
-      .groupByKey(_.user_id)
-      .flatMapGroups((k: Long, it: Iterator[Point]) =>
-        fitPredictLogistic(k, it.toArray, horizon = 48))
-      .toDF()
-      .orderBy("user_id", "bucket")
-  }
+  private val forecastProphetLogistic: Q = (s, d) =>
+    fitEach(TimeSeries.hourly(s, d), "user_id", "bucket")(
+      fitPredictLogistic(_, _, horizon = 48))
 
-  private val forecastProphetMultiplicative: Q = (s, d) => {
-    import s.implicits._
-    TimeSeries.hourly(s, d)
-      .select(col("user_id"), col("bucket"), col("v"))
-      .as[Point]
-      .groupByKey(_.user_id)
-      .flatMapGroups((k: Long, it: Iterator[Point]) =>
-        fitPredictMultiplicative(k, it.toArray, horizon = 48))
-      .toDF()
-      .orderBy("user_id", "bucket")
-  }
+  private val forecastProphetMultiplicative: Q = (s, d) =>
+    fitEach(TimeSeries.hourly(s, d), "user_id", "bucket")(
+      fitPredictMultiplicative(_, _, horizon = 48))
 
   val queries: Map[String, Q] = Map(
     "forecast_prophet_like" -> forecastProphetLike,

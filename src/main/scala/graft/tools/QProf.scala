@@ -65,8 +65,15 @@ object QProf {
         times += (System.nanoTime() - t0) / 1e9
         // ADVICE r17: the listener bus delivers asynchronously — drain it
         // before removing the listener or tail onStageCompleted events of
-        // the reported rep can be silently missed
-        org.apache.spark.sql.GraftDatasetFactory.waitListenerBusEmpty(spark, 10000)
+        // the reported rep can be silently missed. A bus that does not
+        // drain in time (a loaded box) costs this rep's tail stages, not
+        // the run: warn and go on.
+        try org.apache.spark.sql.GraftDatasetFactory.waitListenerBusEmpty(spark, 10000)
+        catch {
+          case _: java.util.concurrent.TimeoutException =>
+            System.err.println(s"[qprof] WARN: $id rep $r: listener bus not " +
+              "drained in 10 s; its stage table may miss tail stages")
+        }
         spark.sparkContext.removeSparkListener(l)
         lastL = l
       }

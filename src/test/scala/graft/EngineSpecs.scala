@@ -1343,6 +1343,22 @@ class RegisterSpec extends AnyFunSuite {
       .head().getSeq[Long](0)
     assert(got == Seq(1L, 2L))
   }
+
+  test("udf_scalar and udaf_aggregator register their UDFs once") {
+    val reg = spark.sessionState.functionRegistry
+    val names = Seq("graft_haversine", "graft_geomean")
+    def build() = {
+      SparkEntry.queries("udf_scalar")(spark, sf)
+      SparkEntry.queries("udaf_aggregator")(spark, sf)
+      names.map(n => reg.lookupFunctionBuilder(FunctionIdentifier(n)))
+    }
+    val before = build()
+    val after = build()
+    assert(before.forall(_.isDefined))
+    before.zip(after).foreach { case (b, a) =>
+      assert(b.get eq a.get, "a query builder replaced a registered UDF")
+    }
+  }
 }
 
 /** The driver-side overlap helper's failure path. */

@@ -13,7 +13,8 @@ class PartitionInvarianceSpec extends AnyFunSuite {
 
   private val sensitive = Seq(
     "agg_stats", "agg_pricing_summary", "ts_interp_linear",
-    "forecast_linear_trend", "forecast_prophet_like", "text_tfidf_terms",
+    "forecast_linear_trend", "forecast_prophet_like",
+    "forecast_seasonal_naive", "text_tfidf_terms",
     // round 6: new accumulation-order-sensitive shapes
     "ts_seasonal_strength", "tpch_q9", "tpch_q22", "text_ngram_coverage",
     "pipeline_curriculum", "agg_bitmap_distinct",
