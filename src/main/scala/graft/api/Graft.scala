@@ -358,10 +358,7 @@ object Graft {
       col(b).cast("long").as("b")).localCheckpoint(true)
     val dir = e.select(col("a").as("src"), col("b").as("dst"))
       .unionAll(e.select(col("b").as("src"), col("a").as("dst")))
-    val nodes = e.select(col("a").as("node"))
-      .unionAll(e.select(col("b").as("node"))).distinct()
-      .withColumn("label", col("node"))
-    graft.ops.TextDedup.propagateMinLabels(dir, nodes, maxRounds = 20)._1
+    graft.ops.TextDedup.componentLabels(dir, maxRounds = 20)._1
       .select(col("node"), col("label").as("component")).orderBy("node")
   }
 

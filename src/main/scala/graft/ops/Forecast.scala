@@ -526,24 +526,29 @@ object Forecast {
     *
     * With `sortBy`, the fit output is materialized once and then sorted:
     * the global sort's range partitioner samples its child in a job of its
-    * own, which would otherwise run every fit a second time. */
+    * own, which would otherwise run every fit a second time. `reused`
+    * materializes it for a caller that reads it more than once (a scalar
+    * aggregate joined back onto the rows), which would otherwise run every
+    * fit once per read. */
   private[graft] def fitEach[U <: Product : TypeTag](points: DataFrame,
-      sortBy: String*)(f: (Long, Array[Point]) => Iterator[U]): DataFrame = {
+      sortBy: Seq[String] = Nil, reused: Boolean = false)(
+      f: (Long, Array[Point]) => Iterator[U]): DataFrame = {
     val fits = points.groupBy(col("user_id"))
       .as[Long, Point](Encoders.scalaLong, Encoders.product[Point])
       .flatMapGroups((k: Long, it: Iterator[Point]) => f(k, it.toArray))(
         Encoders.product[U])
       .toDF()
-    if (sortBy.isEmpty) fits
+    if (sortBy.isEmpty && !reused) fits
+    else if (sortBy.isEmpty) fits.localCheckpoint(true)
     else fits.localCheckpoint(true).orderBy(sortBy.map(col): _*)
   }
 
   private val forecastProphetLike: Q = (s, d) =>
-    fitEach(TimeSeries.hourly(s, d), "user_id", "bucket")(
+    fitEach(TimeSeries.hourly(s, d), Seq("user_id", "bucket"))(
       fitPredict(_, _, horizon = 48))
 
   private val forecastProphetBacktest: Q = (s, d) =>
-    fitEach(TimeSeries.hourly(s, d), "user_id")(backtest)
+    fitEach(TimeSeries.hourly(s, d), Seq("user_id"))(backtest)
 
   /** A deliberately non-default configuration, run end to end through the
     * same distributed path as the contract query: four changepoints, a
@@ -556,7 +561,7 @@ object Forecast {
     intervalZ = 1.959963984540054 /* 95% normal half-width */)
 
   private val forecastProphetConfigured: Q = (s, d) =>
-    fitEach(TimeSeries.hourly(s, d), "user_id", "bucket")(
+    fitEach(TimeSeries.hourly(s, d), Seq("user_id", "bucket"))(
       fitPredict(_, _, horizon = 48, WideConfig))
 
   /** Holiday-effects variant (Prophet's holiday model, round-5): one named
@@ -575,15 +580,15 @@ object Forecast {
     val d0 = span.getTimestamp(0).getTime / 86400000L
     val dN = span.getTimestamp(1).getTime / 86400000L
     val cfg = DefaultConfig.copy(holidays = Array(Array(d0 + 1, dN + 1)))
-    fitEach(h, "user_id", "bucket")(fitPredictHolidays(_, _, horizon = 48, cfg))
+    fitEach(h, Seq("user_id", "bucket"))(fitPredictHolidays(_, _, horizon = 48, cfg))
   }
 
   private val forecastProphetLogistic: Q = (s, d) =>
-    fitEach(TimeSeries.hourly(s, d), "user_id", "bucket")(
+    fitEach(TimeSeries.hourly(s, d), Seq("user_id", "bucket"))(
       fitPredictLogistic(_, _, horizon = 48))
 
   private val forecastProphetMultiplicative: Q = (s, d) =>
-    fitEach(TimeSeries.hourly(s, d), "user_id", "bucket")(
+    fitEach(TimeSeries.hourly(s, d), Seq("user_id", "bucket"))(
       fitPredictMultiplicative(_, _, horizon = 48))
 
   val queries: Map[String, Q] = Map(

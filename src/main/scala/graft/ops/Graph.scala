@@ -2,6 +2,7 @@ package graft.ops
 
 import graft.util.Canon._
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
@@ -27,9 +28,11 @@ import org.apache.spark.sql.functions._
   *
   * Scale shapes: PageRank materializes its directed edge frame once
   * ([[materializeEdges]]); a graph of at most [[LocalSolveCap]] edges runs
-  * the same integer recurrence on the driver: three Spark jobs for the
-  * whole solve (checkpoint, count, collect) instead of a job chain per
-  * round. Only above the cap does the
+  * the same integer recurrence on the driver: one Spark job past the edge
+  * plan's shuffle stages materializes the checkpoint and brings the edges
+  * back, instead of a job chain per round, and the ranks come back as one
+  * partition, so the caller's sort runs in one task with no exchange.
+  * Only above the cap does the
   * Pregel pattern run as DataFrame joins — the static adjacency (src, dst,
   * deg) is checkpointed once and each of the T=5 rounds is one equi-join +
   * one partial-aggregated groupBy on the node key (at 100 TB: shuffle ∝
@@ -74,23 +77,58 @@ object Graph {
       count: Long, local: Option[(Array[Long], Array[Long])])
 
   /** The bounded-local-solve pattern shared by the iterative graph cores
-    * (the AQE move, applied to iteration): checkpoint the edge frame ONCE
-    * and count it exactly; when 0 < count ≤ `cap`, collect the endpoints so
-    * a driver solve replaces rounds whose fixed per-round job cost dominates
-    * small graphs. An edge with a NULL endpoint keeps the graph on the
-    * distributed loop — SQL's null-join semantics stay the contract there,
-    * with no second copy of them on the driver. */
+    * (the AQE move, applied to iteration): checkpoint the edge frame ONCE,
+    * and in the job that materializes it count every partition and bring
+    * back its endpoints; when count ≤ `cap` a driver solve replaces
+    * rounds whose fixed per-round job cost dominates small graphs (an
+    * empty graph included: it has nothing to iterate).
+    * A partition ships its rows only when it holds at most its share of
+    * `cap + 1`, so the driver never receives more than `cap + 1` edges; a
+    * graph under the cap whose rows sit unevenly fetches the partitions
+    * over their share in a second job. An edge with a NULL endpoint keeps
+    * the graph on the distributed loop — SQL's null-join semantics stay
+    * the contract there, with no second copy of them on the driver. */
   private[graft] def materializeEdges(edges: DataFrame,
       cap: Long): MaterializedEdges = {
-    val frame = edges.localCheckpoint(true)
-    val n = frame.count()
-    val local = if (n > 0 && n <= cap) {
-      val rows = frame.select(col("src").cast("long"), col("dst").cast("long"))
-        .collect()
-      if (rows.exists(r => r.isNullAt(0) || r.isNullAt(1))) None
-      else Some((rows.map(_.getLong(0)), rows.map(_.getLong(1))))
-    } else None
+    // not eager: the scan below is the job that fills the checkpoint, and
+    // SparkContext.runJob truncates the lineage when it returns
+    val frame = edges.localCheckpoint(false)
+    val rows = frame.select(col("src").cast("long"), col("dst").cast("long"))
+      .queryExecution.toRdd
+    val sc = frame.sparkSession.sparkContext
+    val share = (cap + 1) / math.max(1, rows.getNumPartitions)
+    val parts = sc.runJob(rows, (it: Iterator[InternalRow]) => scanEdges(it, share))
+    val n = parts.map(_.n).sum
+    val local = if (n > cap || parts.exists(_.nulls)) None else {
+      val edgesOf = parts.map(_.edges)
+      val over = parts.indices.filter(edgesOf(_).isEmpty)
+      if (over.nonEmpty) over.zip(sc.runJob(rows,
+          (it: Iterator[InternalRow]) => scanEdges(it, cap), over))
+        .foreach { case (i, p) => edgesOf(i) = p.edges }
+      Some((edgesOf.flatMap(_.get._1), edgesOf.flatMap(_.get._2)))
+    }
     MaterializedEdges(frame, n, local)
+  }
+
+  /** One partition of an edge scan: its row count, whether any endpoint
+    * is NULL, and its endpoints when it has no NULL and at most `budget`
+    * rows. */
+  private final case class EdgePart(n: Long, nulls: Boolean,
+      edges: Option[(Array[Long], Array[Long])])
+
+  private def scanEdges(it: Iterator[InternalRow], budget: Long): EdgePart = {
+    val src = Array.newBuilder[Long]
+    val dst = Array.newBuilder[Long]
+    var n = 0L
+    var nulls = false
+    while (it.hasNext) {
+      val r = it.next()
+      n += 1
+      nulls ||= r.isNullAt(0) || r.isNullAt(1)
+      if (!nulls && n <= budget) { src += r.getLong(0); dst += r.getLong(1) }
+    }
+    EdgePart(n, nulls,
+      if (nulls || n > budget) None else Some((src.result(), dst.result())))
   }
 
   /** Exact-integer PageRank core over a DIRECTED edge frame (src, dst) —
@@ -99,7 +137,7 @@ object Graph {
     * the symmetric closure for undirected graphs, which also guarantees
     * every node has out-degree ≥ 1 — no dangling-mass term needed).
     * Graphs of at most `localSolveCap` edges take the driver recurrence
-    * ([[pagerankLocal]]), bit-identical to the loop. */
+    * ([[pagerankLocal]]), bit-identical to the loop, as one partition. */
   private[graft] def pagerankCore(dirEdges: DataFrame, iters: Int = 5,
       localSolveCap: Long = LocalSolveCap): DataFrame = {
     val m = materializeEdges(dirEdges.select(col("src").cast("long").as("src"),
@@ -117,7 +155,8 @@ object Graph {
     * dropped with its incoming mass, as the loop's left join from `deg`
     * drops it. Long arithmetic with `Math.*Exact`, so an overflow fails
     * loudly as ANSI SQL does; JVM Long division ≡ SQL `div` on these
-    * non-negative operands. */
+    * non-negative operands. One output partition: a global sort over it
+    * needs no range exchange. */
   private def pagerankLocal(s: SparkSession, src: Array[Long],
       dst: Array[Long], iters: Int): DataFrame = {
     val index = scala.collection.mutable.LongMap.empty[Int]
@@ -129,7 +168,7 @@ object Graph {
     val n = nodes.length
     val deg = new Array[Long](n)
     si.foreach(i => deg(i) += 1)
-    val base = 1000000000000L / n
+    val base = 1000000000000L / math.max(n, 1) // no nodes: no rows out
     val tele = Math.multiplyExact(15L, base) / 100L
     var pr = Array.fill(n)(base)
     for (_ <- 1 to iters) {
@@ -143,7 +182,7 @@ object Graph {
       pr = sums.map(c => Math.addExact(tele, Math.multiplyExact(85L, c) / 100L))
     }
     import s.implicits._
-    nodes.toSeq.zip(pr).toDF("node", "pr")
+    nodes.toSeq.zip(pr).toDF("node", "pr").coalesce(1)
   }
 
   /** The distributed PageRank loop over a checkpointed (src, dst) frame —
@@ -544,20 +583,19 @@ object Graph {
     * graph audit ("how many disjoint user populations are there?") and
     * the graph_* namespace face of the machinery the dedup stack already
     * runs: label = component minimum user id via the shared adaptive
-    * min-label core ([[TextDedup.propagateMinLabels]] — driver union-find
+    * min-label core ([[TextDedup.componentLabels]] — driver union-find
     * under the documented `localSolveCap` edge budget, the distributed
     * min-label loop with per-round localCheckpoint above it, exactly the
     * pipeline_neardup_full posture). Isolated users (no co-occurrence
     * edge) are not graph nodes and don't appear — mirrored by the
-    * oracle's edge-endpoint node set. */
+    * oracle's edge-endpoint node set. No checkpoint of its own: the two
+    * directions read one reused exchange (coocEdges ends in a `distinct`)
+    * inside the core's one edge checkpoint. */
   private val graphConnectedComponents: Q = (s, d) => {
-    val e0 = coocEdges(s, d).localCheckpoint(true)
-    val edges = e0.select(col("a").as("src"), col("b").as("dst"))
-      .unionAll(e0.select(col("b").as("src"), col("a").as("dst")))
-    val nodes = e0.select(col("a").as("node"))
-      .unionAll(e0.select(col("b").as("node"))).distinct()
-      .withColumn("label", col("node"))
-    TextDedup.propagateMinLabels(edges, nodes, maxRounds = 20)._1
+    val e = coocEdges(s, d)
+    val edges = e.select(col("a").as("src"), col("b").as("dst"))
+      .unionAll(e.select(col("b").as("src"), col("a").as("dst")))
+    TextDedup.componentLabels(edges, maxRounds = 20)._1
       .select(col("node").as("user_id"), col("label").as("component"))
       .orderBy("user_id")
   }

@@ -1046,10 +1046,8 @@ object TextDedup {
     val edges = contracted.select(col("sa").as("src"), col("sbn").as("dst"))
       .unionByName(contracted.select(col("sbn").as("src"), col("sa").as("dst")))
     // propagate over TOUCHED super-nodes only — untouched nodes keep
-    // label = node by definition, so the init is the edge endpoints
-    val nodes = edges.select(col("src").as("node")).distinct()
-      .select(col("node"), col("node").as("label"))
-    val (superLabels, rounds) = propagateMinLabels(edges, nodes, maxRounds = 20)
+    // label = node by definition, so the nodes are the edge endpoints
+    val (superLabels, rounds) = componentLabels(edges, maxRounds = 20)
     // relabel DELTA: only super-nodes whose label actually moved — bounded
     // by the batch-incident component count, never corpus-sized
     val delta = broadcast(superLabels
@@ -1173,19 +1171,32 @@ object TextDedup {
     * pathological long-thin component from exhausting ANY fixed cap at
     * corpus scale. localCheckpoint truncates lineage each round — the
     * self-referencing iterative plan otherwise doubles per iteration.
-    * Graphs whose (already-materialized, exactly-counted) edge frame fits
-    * `localSolveCap` skip the loop for a driver union-find — see the
-    * inline rationale; rounds = 0 signals that path. */
+    * Graphs whose edge frame fits `localSolveCap` skip the loop for a
+    * driver union-find (see [[minLabels]]); rounds = 0 signals that path,
+    * whose labels come back as one partition. */
   private[graft] def propagateMinLabels(edges: DataFrame, init: DataFrame,
       maxRounds: Int, localSolveCap: Long = Graph.LocalSolveCap)
-      : (DataFrame, Int) = {
+      : (DataFrame, Int) =
+    minLabels(edges, Some(init), maxRounds, localSolveCap)
+
+  /** [[propagateMinLabels]] over the graph's own nodes: every edge endpoint,
+    * each starting as its own label, and no other node. The union-find arm
+    * returns its labels as they are, with no join back onto a node frame;
+    * above the cap the loop is seeded from the checkpointed edges. */
+  private[graft] def componentLabels(edges: DataFrame, maxRounds: Int,
+      localSolveCap: Long = Graph.LocalSolveCap): (DataFrame, Int) =
+    minLabels(edges, None, maxRounds, localSolveCap)
+
+  /** The min-label core; `init` None means the edge endpoints. */
+  private def minLabels(edges: DataFrame, init: Option[DataFrame],
+      maxRounds: Int, localSolveCap: Long): (DataFrame, Int) = {
     // ADAPTIVE bounded-graph solve (Graph.materializeEdges): when the
     // materialized edge frame fits the cap, driver union-find with path
     // compression replaces log(diameter) Spark rounds whose fixed per-round
     // job cost dominates small graphs. Above the cap — the 100 TB regime —
     // the distributed loop below runs unchanged over the same checkpoint.
-    // Preconditions (hold at every call site): every edge endpoint appears
-    // in `init`, and untouched rows of `init` carry label == node (touched
+    // Preconditions on a given `init` (hold at every call site): every edge
+    // endpoint appears in it, and its untouched rows carry label == node (touched
     // labels are recomputed from scratch as component minima here).
     val Graph.MaterializedEdges(edgesC, nEdges, local) =
       Graph.materializeEdges(edges, localSolveCap)
@@ -1211,12 +1222,24 @@ object TextDedup {
       val touched = seen.keys.toArray.map(n => n -> find(n))
       val spark = edges.sparkSession
       import spark.implicits._
-      val touchedDf = broadcast(touched.toSeq.toDF("tn", "tl"))
-      val out = init.join(touchedDf, col("node") === col("tn"), "left")
-        .select(col("node"), coalesce(col("tl"), col("label")).as("label"))
-      return (out, 0)
+      // one partition either way: a caller's global sort then needs no
+      // range exchange (the node frames callers pass are bounded slices,
+      // or set tables whose labels they broadcast anyway)
+      val out = init match {
+        case None => touched.toSeq.toDF("node", "label")
+        case Some(nodes) => nodes
+          .join(broadcast(touched.toSeq.toDF("tn", "tl")),
+            col("node") === col("tn"), "left")
+          .select(col("node"), coalesce(col("tl"), col("label")).as("label"))
+      }
+      return (out.coalesce(1), 0)
     }
-    var labels = init.localCheckpoint(true)
+    val seed = init.getOrElse {
+      val ends = edgesC.select(col("src").as("node"))
+        .unionAll(edgesC.select(col("dst").as("node"))).distinct()
+      ends.select(col("node"), col("node").as("label"))
+    }
+    var labels = seed.localCheckpoint(true)
     var rounds = 0
     var converged = false
     while (!converged && rounds < maxRounds) {

@@ -299,7 +299,8 @@ object TimeSeries {
     * oracle asserts TRUE. Core + verdict rationale:
     * [[Forecast.backtestAudit]]. */
   private val forecastProphetBacktestAudit: Q = (s, d) => {
-    val rows = Forecast.fitEach(hourly(s, d))(Forecast.backtestAudit)
+    val rows = Forecast.fitEach(hourly(s, d), reused = true)(
+      Forecast.backtestAudit)
     // corpus-level interval-calibration verdict (see backtestAudit's
     // rationale for why coverage is not per-key): exact integer
     // cross-multiplication, broadcast scalar-rejoin shape
@@ -329,7 +330,8 @@ object TimeSeries {
     val dN = span.getTimestamp(1).getTime / 86400000L
     val holCfg = Forecast.DefaultConfig.copy(
       holidays = Array(Array(d0 + 1, dN + 1)))
-    val rows = Forecast.fitEach(h)(Forecast.backtestVariants(_, _, holCfg))
+    val rows = Forecast.fitEach(h, reused = true)(
+      Forecast.backtestVariants(_, _, holCfg))
     // corpus 95%-interval coverage measured 93.4/91.3/91.1% at
     // sf0.001/0.01/0.1 → two-sided [80%, 99%] band (the upper bound
     // catches degenerate always-inside intervals)
@@ -577,11 +579,18 @@ object TimeSeries {
     * period (168 h) earlier; the standard baseline every forecaster must
     * beat. Pure joins → DuckDB-oracle-checkable. */
   private val forecastSeasonalNaive: Q = (s, d) => {
-    // the grid feeds both the per-user max-bucket agg and the source join —
+    // the grid feeds both the per-user last bucket and the source join —
     // localCheckpoint materializes it once (and, unlike an unpaired cache,
-    // releases the blocks when the RDD is GC'd instead of pinning them)
-    val h = hourly(s, d).localCheckpoint(true)
-    val fut = h.groupBy(col("user_id")).agg(max(col("bucket")).as("bmax"))
+    // releases the blocks when the RDD is GC'd instead of pinning them).
+    // bmax is a window over the grid's own user_id partitioning, taken
+    // before the checkpoint: the checkpoint scan forgets that partitioning,
+    // so a per-user aggregate after it would shuffle the grid again.
+    val h = hourly(s, d)
+      .withColumn("bmax", max(col("bucket")).over(Window.partitionBy("user_id")))
+      .localCheckpoint(true)
+    // one row per user: (user_id, bucket) is the grid's key, and `<=>`
+    // keeps the user whose only bucket is NULL, as the aggregate did
+    val fut = h.where(col("bucket") <=> col("bmax"))
       .select(col("user_id"), col("bmax"),
         explode(sequence(lit(1), lit(24))).as("h"))
       .withColumn("bucket", expr("bmax + make_interval(0, 0, 0, 0, h, 0, 0)"))

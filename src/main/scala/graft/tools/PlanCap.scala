@@ -1,10 +1,13 @@
 package graft.tools
 
-import org.apache.spark.sql.SparkSession
+import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
+import org.apache.spark.sql.{GraftDatasetFactory, SparkSession}
 
 /** Plan-capture helper for PLANS.md: prints the executed plan of one
   * registered query id (FormattedMode-equivalent toString), optionally
-  * filtered to lines matching a substring.
+  * filtered to lines matching a substring, and the Spark jobs it ran,
+  * split into build (the eager actions inside the query function) and
+  * action (the final collect), counted by a listener.
   *
   * Usage: runMain graft.tools.PlanCap <id> [sfDir] [filterSubstring]
   */
@@ -18,14 +21,29 @@ object PlanCap {
       .config("spark.sql.session.timeZone", "UTC")
       .config("spark.ui.enabled", "false").getOrCreate()
     s.sparkContext.setLogLevel("ERROR")
+    val jobs = new java.util.concurrent.atomic.AtomicInteger()
+    s.sparkContext.addSparkListener(new SparkListener {
+      override def onJobStart(e: SparkListenerJobStart): Unit =
+        jobs.incrementAndGet()
+    })
+    // job-start events arrive on the async listener bus: drain it before
+    // each read so a job is counted in the phase that ran it
+    def jobsSoFar(): Int = {
+      GraftDatasetFactory.waitListenerBusEmpty(s, 30000)
+      jobs.get()
+    }
     val df = graft.SparkEntry.queries(id)(s, sf)
+    val buildJobs = jobsSoFar()
     df.collect() // AQE finalizes the plan only after execution
+    val actionJobs = jobsSoFar() - buildJobs
     val plan = df.queryExecution.executedPlan.toString
     println(s"=== PLAN $id ===")
     filt match {
       case Some(f) => println(plan.linesIterator.filter(_.contains(f)).mkString("\n"))
       case None => println(plan)
     }
+    println(s"=== JOBS $id build=$buildJobs action=$actionJobs " +
+      s"total=${buildJobs + actionJobs} ===")
     s.stop()
   }
 }

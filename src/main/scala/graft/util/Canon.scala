@@ -2,7 +2,7 @@ package graft.util
 
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.types.DecimalType
+import org.apache.spark.sql.types.{DecimalType, StructType}
 
 /** Canonicalization combinators (SURVEY.md §5.3) so every oracle-checked
   * query hash-matches DuckDB bit-exactly:
@@ -260,20 +260,74 @@ object Canon {
     * reusing /tmp/graft_io after the source data changed re-stages into a
     * fresh dir instead of silently reading the stale layout (round-5 verdict
     * item 5: the staged-dir cache used to key on the path alone). */
-  def srcStamp(dir: String, name: String): String = {
+  def srcStamp(dir: String, name: String): String =
+    fileStamp(new java.io.File(s"$dir/$name.parquet"))
+
+  private def fileStamp(root: java.io.File): String = {
     def walk(f: java.io.File): Seq[java.io.File] = {
       val kids = f.listFiles()
       if (kids == null) Seq(f) else kids.toSeq.flatMap(walk)
     }
-    val sig = walk(new java.io.File(s"$dir/$name.parquet")).filter(_.isFile)
+    val sig = walk(root).filter(_.isFile)
       .sortBy(_.getPath)
       .map(f => s"${f.getName}:${f.length}:${f.lastModified}").mkString("|")
     Integer.toHexString(scala.util.hashing.MurmurHash3.stringHash(sig))
   }
 
-  /** Load a testdata table (TESTDATA.md: one parquet per table). */
+  /** The confs parquet schema inference reads: a schema inferred under one
+    * setting of these is not the schema of the same file under another. */
+  private val ParquetInferenceConfs = Seq(
+    "spark.sql.legacy.parquet.nanosAsLong",
+    "spark.sql.parquet.binaryAsString",
+    "spark.sql.parquet.int96AsTimestamp",
+    "spark.sql.parquet.inferTimestampNTZ.enabled",
+    "spark.sql.parquet.mergeSchema",
+    "spark.sql.parquet.respectSummaryFiles",
+    "spark.sql.caseSensitive")
+
+  /** What a parquet path's inferred schema depends on: its content stamp
+    * and the inference confs. None when [[fileStamp]] cannot see the path
+    * (a filesystem other than the local one, or no files there). */
+  private[graft] def schemaKey(s: SparkSession,
+      path: String): Option[Seq[String]] = {
+    val p = new org.apache.hadoop.fs.Path(path)
+    val uri = p.toUri
+    val scheme = Option(uri.getScheme).getOrElse(
+      org.apache.hadoop.fs.FileSystem.getDefaultUri(
+        s.sparkContext.hadoopConfiguration).getScheme)
+    if (scheme != "file") None else {
+      val root = new java.io.File(uri.getPath)
+      if (!root.exists()) None
+      else Some(fileStamp(root) +:
+        ParquetInferenceConfs.map(c => s.conf.getOption(c).orNull))
+    }
+  }
+
+  /** Inferred parquet schemas, one entry per path: the [[schemaKey]] the
+    * schema was inferred under, and the schema. */
+  private val schemas =
+    new java.util.concurrent.ConcurrentHashMap[String, (Seq[String], StructType)]()
+
+  /** `s.read.parquet(path)` that infers the schema once per (path, content,
+    * inference confs): inference reads the footers in a Spark job of its
+    * own, so a query that opens its tables again would otherwise pay one
+    * job per table. Later reads pass the remembered schema. */
+  private[graft] def readParquet(s: SparkSession, path: String): DataFrame =
+    schemaKey(s, path) match {
+      case None => s.read.parquet(path)
+      case Some(key) => Option(schemas.get(path)) match {
+        case Some((k, schema)) if k == key => s.read.schema(schema).parquet(path)
+        case _ =>
+          val df = s.read.parquet(path)
+          schemas.put(path, (key, df.schema))
+          df
+      }
+    }
+
+  /** Load a testdata table (TESTDATA.md: one parquet per table), inferring
+    * its schema once ([[readParquet]]). */
   def tbl(s: SparkSession, dir: String, name: String): DataFrame =
-    if (name == "events") events(s, dir) else s.read.parquet(s"$dir/$name.parquet")
+    if (name == "events") events(s, dir) else readParquet(s, s"$dir/$name.parquet")
 
   /** events.ts has shipped in two physical shapes across driver testdata
     * generations: parquet TIMESTAMP(NANOS) (which Spark rejects outright —
@@ -286,7 +340,7 @@ object Canon {
     * DuckDB, whose TIMESTAMP is naive and compares wall-clock. */
   def events(s: SparkSession, dir: String): DataFrame = {
     s.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-    val raw = s.read.parquet(s"$dir/events.parquet")
+    val raw = readParquet(s, s"$dir/events.parquet")
     raw.schema("ts").dataType match {
       case org.apache.spark.sql.types.LongType =>
         raw.withColumn("ts", timestamp_micros(expr("ts div 1000")))

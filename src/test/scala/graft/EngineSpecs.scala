@@ -20,6 +20,28 @@ object TestSession {
   val sf = "/root/testdata/sf0.001"
 }
 
+/** Spark jobs started while a block runs, counted by a listener; the
+  * listener bus is drained before and after, so every job the block
+  * started is counted and no earlier one is. */
+object Jobs {
+  def count[T](body: => T): (T, Int) = {
+    val s = TestSession.spark
+    org.apache.spark.sql.GraftDatasetFactory.waitListenerBusEmpty(s, 30000)
+    val n = new java.util.concurrent.atomic.AtomicInteger()
+    val l = new org.apache.spark.scheduler.SparkListener {
+      override def onJobStart(
+          e: org.apache.spark.scheduler.SparkListenerJobStart): Unit =
+        n.incrementAndGet()
+    }
+    s.sparkContext.addSparkListener(l)
+    try {
+      val r = body
+      org.apache.spark.sql.GraftDatasetFactory.waitListenerBusEmpty(s, 30000)
+      (r, n.get())
+    } finally s.sparkContext.removeSparkListener(l)
+  }
+}
+
 /** Every registered query must execute on sf0.001 (t1-style smoke, wide). */
 class SmokeSpec extends AnyFunSuite {
   import TestSession._
@@ -1263,6 +1285,51 @@ class LabelPropSpec extends AnyFunSuite {
       maxRounds = 20, localSolveCap = 0L)._1)
     assert(local == looped, "local union-find diverged from the loop")
   }
+
+  private def labelsOf(df: org.apache.spark.sql.DataFrame) =
+    df.collect().map(r => (r.getLong(0), r.getLong(1))).toSet
+
+  test("arm boundary: cap edges take the union-find, cap + 1 the loop, same labels") {
+    val cap = 6L
+    // three undirected edges = 6 directed; a self-loop makes the 7th
+    val sym = Seq((1L, 2L), (2L, 3L), (7L, 8L)).flatMap(p => Seq(p, p.swap))
+    val init = Seq(1L, 2L, 3L, 7L, 8L, 9L).map(i => (i, i)).toDF("node", "label")
+    for ((dir, local) <- Seq(sym -> true, (sym :+ ((2L, 2L))) -> false)) {
+      val edges = dir.toDF("src", "dst").repartition(3)
+      val (at, rounds) = ops.TextDedup.propagateMinLabels(edges, init,
+        maxRounds = 20, localSolveCap = cap)
+      assert((rounds == 0) == local,
+        s"${dir.size} edges under cap $cap ran $rounds rounds")
+      val looped = ops.TextDedup.propagateMinLabels(edges, init,
+        maxRounds = 20, localSolveCap = 0L)._1
+      assert(labelsOf(at) == labelsOf(looped))
+      assert(labelsOf(at) == Set((1L, 1L), (2L, 1L), (3L, 1L), (7L, 7L),
+        (8L, 7L), (9L, 9L)))
+    }
+  }
+
+  test("componentLabels: union-find ≡ loop on a connected-components graph") {
+    // the graph_connected_components shape: symmetric closure of a random
+    // undirected graph, nodes = edge endpoints only
+    val rng = new scala.util.Random(29)
+    val und = (1 to 250).map { _ =>
+      (rng.nextInt(400).toLong, rng.nextInt(400).toLong)
+    }.filter(p => p._1 != p._2).distinct
+    val edges = und.flatMap(p => Seq(p, p.swap)).toDF("src", "dst")
+      .repartition(5)
+    val (local, r0) = ops.TextDedup.componentLabels(edges, maxRounds = 20)
+    val (looped, r1) = ops.TextDedup.componentLabels(edges, maxRounds = 20,
+      localSolveCap = 0L)
+    assert(r0 == 0 && r1 > 0)
+    assert(local.rdd.getNumPartitions == 1)
+    val l = labelsOf(local)
+    assert(l == labelsOf(looped), "union-find diverged from the loop")
+    assert(l.map(_._1) == und.flatMap(p => Seq(p._1, p._2)).toSet)
+    // the same labels as the init-seeded core over those endpoints
+    val init = l.toSeq.map(p => (p._1, p._1)).toDF("node", "label")
+    assert(l == labelsOf(ops.TextDedup.propagateMinLabels(edges, init,
+      maxRounds = 20)._1))
+  }
 }
 
 /** PageRank's bounded driver-local arm (Graph.pagerankCore under
@@ -1318,6 +1385,59 @@ class PagerankArmsSpec extends AnyFunSuite {
     val base = 1000000000000L / 4 // nodes 1, 2, 3 and the null source
     assert(local.contains((None, 15L * base / 100)))
   }
+
+  test("arm boundary: cap edges take the local arm, cap + 1 the loop, same rows") {
+    val cap = 8L
+    val rng = new scala.util.Random(3)
+    val dir = (1 to 9).map(_ => (rng.nextInt(5).toLong, rng.nextInt(5).toLong))
+    for ((n, local) <- Seq(cap -> true, (cap + 1) -> false)) {
+      val edges = dir.take(n.toInt).toDF("src", "dst").repartition(3)
+      assert(ops.Graph.materializeEdges(edges, cap).local.isDefined == local,
+        s"$n edges under cap $cap")
+      val at = rows(ops.Graph.pagerankCore(edges, localSolveCap = cap))
+      assert(at.nonEmpty)
+      assert(at == rows(ops.Graph.pagerankCore(edges, localSolveCap = 0L)))
+    }
+  }
+
+  test("a partition over its share of the cap is fetched, not dropped") {
+    // every row hashes to one of four partitions: its 8 rows exceed the
+    // per-partition share (9 / 4 = 2) yet the graph fits the cap of 8
+    val dir = (1L to 8L).map(i => (i, i % 3))
+    val edges = dir.toDF("src", "dst")
+      .repartition(4, org.apache.spark.sql.functions.lit(1))
+    val m = ops.Graph.materializeEdges(edges, 8L)
+    assert(m.count == 8L)
+    val (src, dst) = m.local.getOrElse(fail("8 edges must fit a cap of 8"))
+    assert(src.zip(dst).sorted.toSeq == dir.sorted)
+  }
+
+  test("the local arm returns one partition: the caller's sort adds no exchange") {
+    val edges = Seq((1L, 2L), (2L, 1L), (2L, 3L), (3L, 2L)).toDF("src", "dst")
+    val pr = ops.Graph.pagerankCore(edges)
+    assert(pr.rdd.getNumPartitions == 1)
+    val sorted = pr.orderBy(org.apache.spark.sql.functions.desc("pr"))
+    sorted.collect()
+    val plan = sorted.queryExecution.executedPlan.toString
+    assert(!plan.contains("Exchange"), plan)
+  }
+}
+
+/** The graph ids' job budget: with the edge checkpoint, the arm choice and
+  * the collect in one job and the driver-local results in one partition,
+  * a warm build + action of each runs at most this many Spark jobs at
+  * sf0.001 (the first run fills the parquet schema memo). */
+class GraphJobBudgetSpec extends AnyFunSuite {
+  import TestSession._
+
+  for ((id, budget) <- Seq("graph_pagerank" -> 4, "graph_connected_components" -> 4))
+    test(s"$id runs at most $budget Spark jobs") {
+      def run(): Unit = SparkEntry.queries(id)(spark, sf)
+        .write.format("noop").mode("overwrite").save()
+      run()
+      val (_, jobs) = Jobs.count(run())
+      assert(jobs <= budget, s"$id ran $jobs jobs")
+    }
 }
 
 /** Extension registration is a per-session, add-only-what-is-missing step. */

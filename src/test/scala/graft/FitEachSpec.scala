@@ -19,9 +19,10 @@ import org.scalatest.funsuite.AnyFunSuite
 class FitEachSpec extends AnyFunSuite with AdaptiveSparkPlanHelper {
   import TestSession._
 
-  /** Run forecast_prophet_like and return every executed plan it produced:
-    * the eager fit job inside the query function, then the final action. */
-  private def prophetPlans(): Seq[SparkPlan] = {
+  /** Run a query id and return every executed plan it produced: the eager
+    * jobs inside the query function (a fit checkpoint), then the final
+    * action. */
+  private def plansOf(id: String): Seq[SparkPlan] = {
     val seen = new java.util.concurrent.ConcurrentLinkedQueue[QueryExecution]()
     val l = new QueryExecutionListener {
       def onSuccess(f: String, qe: QueryExecution, ns: Long): Unit = seen.add(qe)
@@ -29,19 +30,20 @@ class FitEachSpec extends AnyFunSuite with AdaptiveSparkPlanHelper {
     }
     spark.listenerManager.register(l)
     try {
-      val df = SparkEntry.queries("forecast_prophet_like")(spark, sf)
+      val df = SparkEntry.queries(id)(spark, sf)
       df.collect()
       org.apache.spark.sql.GraftDatasetFactory.waitListenerBusEmpty(spark, 30000)
       val it = seen.iterator()
       val plans = Seq.newBuilder[SparkPlan]
       while (it.hasNext) plans += it.next().executedPlan
-      plans += df.queryExecution.executedPlan
+      // the collect's own plan, unless the listener already reported it
+      if (!seen.contains(df.queryExecution)) plans += df.queryExecution.executedPlan
       plans.result()
     } finally spark.listenerManager.unregister(l)
   }
 
   test("forecast_prophet_like: one user_id hash exchange below the fit, no key projection") {
-    val plans = prophetPlans()
+    val plans = plansOf("forecast_prophet_like")
     val fits = plans.flatMap(p => collect(p) { case m: MapGroupsExec => m })
     assert(fits.length == 1, s"expected one per-series fit, got ${fits.length}")
     val exchanges = collect(fits.head) { case e: ShuffleExchangeExec => e }
@@ -58,6 +60,23 @@ class FitEachSpec extends AnyFunSuite with AdaptiveSparkPlanHelper {
       case a: AppendColumnsWithObjectExec => a: SparkPlan
     })
     assert(appends.isEmpty, s"key projection in the plan: ${appends.mkString}")
+  }
+
+  for (id <- Seq("forecast_prophet_backtest_audit", "forecast_variants_backtest_audit"))
+    test(s"$id: each series is fitted once per action") {
+      // the fit rows feed both the calibration aggregate and the join back
+      val fits = plansOf(id).flatMap(p => collect(p) { case m: MapGroupsExec => m })
+      assert(fits.length == 1, s"the series were fitted ${fits.length} times")
+    }
+
+  test("forecast_seasonal_naive: no hash exchange above the grid checkpoint") {
+    val df = SparkEntry.queries("forecast_seasonal_naive")(spark, sf)
+    assert(df.collect().nonEmpty)
+    val plan = df.queryExecution.executedPlan
+    val hashed = collect(plan) {
+      case e: ShuffleExchangeExec if e.outputPartitioning.isInstanceOf[HashPartitioning] => e
+    }
+    assert(hashed.isEmpty, s"the checkpointed grid is shuffled again:\n$plan")
   }
 
   test("forecast_prophet_like: same rows at 1 shuffle partition as at 8") {
