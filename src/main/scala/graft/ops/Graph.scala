@@ -266,7 +266,8 @@ object Graph {
     * 3 at sf0.01 — measured), so the cap NEVER binds on test data and
     * every cooc-fed oracle hash is unchanged; `graph_cooc_cap_audit`
     * cross-checks max-cell-size < cap in BOTH engines every run, and
-    * CoocSkewProbe measures the hot-cell bound live (SCALING.md r15). */
+    * GraphSpec pins the C(cap,2) hot-cell bound on a synthetic cell
+    * (the 10⁵-user measurement is in SCALING.md r15). */
   private[graft] val CoocCellCap = 64
 
   /** Distinct undirected user co-occurrence edges (a < b) from shared
@@ -275,7 +276,7 @@ object Graph {
     * [[CoocCellCap]].
     *
     * Round-16 revision (verdict item 4): the r15 rank-always shape was
-    * measured NOT free — CoocCapAB's same-JVM paired A/B over the sf0.1
+    * measured NOT free — a same-JVM paired A/B over the sf0.1
     * kcore path read capped 1.623 s vs uncapped 1.307 s medians (n=7,
     * sentinels quiet ~0.15 s): the per-side window sort above the reused
     * exchange costs ~24%, which is exactly the r15 graph-family drift.
@@ -286,7 +287,7 @@ object Graph {
     * cell ONCE (collect_set → sort_array → slice) and explodes pairs from
     * the bounded array — two shuffles vs the uncapped builder's three, no
     * window, no self-join, measured STRICTLY CHEAPER than uncapped
-    * (CoocCapAB; SCALING.md r16). Truncation semantics are unchanged
+    * (SCALING.md r16). Truncation semantics are unchanged
     * (capPerCell smallest user ids, deterministic), emission stays
     * hard-bounded at C(cap,2) per cell, and every cooc-fed oracle hash is
     * unchanged. */
@@ -295,7 +296,7 @@ object Graph {
     coocEdgesCore(tbl(s, d, "events"), capPerCell)
 
   /** The builder core over any (user_id, event_type, ts) frame —
-    * CoocSkewProbe feeds it a synthetic 10⁵-user hot cell directly. */
+    * GraphSpec and ScaleCurve feed it synthetic hot cells directly. */
   private[graft] def coocEdgesCore(events: DataFrame,
       capPerCell: Int = CoocCellCap): DataFrame = {
     val base = events
@@ -306,8 +307,8 @@ object Graph {
         date_trunc("minute", col("ts")).as("w"))
     if (capPerCell == Int.MaxValue) {
       // the uncapped r14 builder (distinct → self-join on the cell key →
-      // distinct): kept verbatim as the honest baseline arm for
-      // CoocCapAB's paired A/B
+      // distinct): kept verbatim as GraphSpec's reference for the capped
+      // path and as ScaleCurve's hot-cell self-join
       val b = base.distinct()
       val b2 = b.select(col("u").as("v"), col("event_type"), col("w"))
       b.join(b2, Seq("event_type", "w"))
@@ -326,8 +327,8 @@ object Graph {
       // user bound, VERDICT r16 item 3; map-side partials are capped too,
       // so the pre-shuffle combine ships ≤cap ids per cell per mapper).
       // Two shuffles total (cells, final cross-cell distinct), no window
-      // sort, no self-join; capped stays cheaper-than-uncapped (CoocCapAB
-      // r17 arms) and every cooc-fed oracle hash is unchanged. Emission
+      // sort, no self-join; capped stays cheaper-than-uncapped (SCALING.md
+      // r17) and every cooc-fed oracle hash is unchanged. Emission
       // stays hard-bounded at C(cap,2) per cell.
       graft.ext.CatalystExt.register(base.sparkSession)
       base.groupBy(col("event_type"), col("w"))

@@ -1014,21 +1014,19 @@ object Relational {
     * Note Spark's governance guardrail `spark.sql.cteRecursionRowLimit`
     * (default 1e6 rows over the WHOLE recursion): the fixture expands to
     * 210 k rows and fits, but production sizing must raise it —
-    * RecursiveCteProbe runs 10 M keys → 2.23e8 rows under a raised limit
-    * with the closed form verified exactly (SCALING.md r15). */
+    * a scale probe ran 10 M keys → 2.23e8 rows under a raised limit with
+    * the closed form verified exactly (SCALING.md r15). */
   private val subRecursiveCte: Q = (s, d) => {
     tbl(s, d, "customer").createOrReplaceTempView("sub_rec_cust")
     // raise Spark's recursion-row guardrail (default 1e6 TOTAL rows):
     // this walk expands to ~n·(log2 n − 1) rows, which crosses 1e6 around
     // 65k keys — a regenerated/larger fixture must not abort the op
-    // (review r15; RecursiveCteProbe ran 2.2e8 rows under the same knob).
-    // Pin/restore like Streaming.ProviderKey: the raised limit must not
-    // outlive this query and weaken the guardrail session-wide (ADVICE r15);
-    // recursive-CTE row counting happens at execution, so the limit is
-    // forced eagerly with a localCheckpoint inside the pinned scope.
-    val limitKey = "spark.sql.cteRecursionRowLimit"
-    val prior = s.conf.getOption(limitKey)
-    s.conf.set(limitKey, "400000000")
+    // (review r15; a scale probe ran 2.2e8 rows under the same knob,
+    // SCALING.md r15).
+    // Scoped with withConfs: the raised limit must not outlive this query
+    // and weaken the guardrail session-wide (ADVICE r15); recursive-CTE row
+    // counting happens at execution, so the limit is forced eagerly with a
+    // localCheckpoint inside the scope.
     // the PREVIOUS invocation's eager checkpoint has been consumed by now
     // (hashed/collected) — release its RDD blocks so bench loops and the
     // shared test session don't accumulate executor storage (ADVICE r16
@@ -1037,7 +1035,7 @@ object Relational {
     lastRecursiveCheckpoint.foreach { df =>
       try df.unpersist(blocking = false) catch { case _: Exception => () }
     }
-    try {
+    withConfs(s, Seq("spark.sql.cteRecursionRowLimit" -> "400000000")) {
       val raw = s.sql("""
         WITH RECURSIVE anc(c_custkey, node, depth) AS (
           SELECT c_custkey, CAST(c_custkey AS BIGINT), 0 FROM sub_rec_cust
@@ -1053,9 +1051,6 @@ object Relational {
       val ck = raw.localCheckpoint(eager = true)
       lastRecursiveCheckpoint = Some(ck)
       ck
-    } finally prior match {
-      case Some(v) => s.conf.set(limitKey, v)
-      case None    => s.conf.unset(limitKey)
     }
   }
 

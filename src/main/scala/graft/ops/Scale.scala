@@ -58,8 +58,7 @@ object Scale {
 
   /** q9-class 5-way star join for the CBO demonstration, written in a
     * DELIBERATELY bad syntactic order (orders ⋈ lineitem first, the
-    * filtered part table last). Shared by `join_cbo_star` and
-    * `graft.tools.CboProbe` / CboSpec. */
+    * filtered part table last). Shared by `join_cbo_star` and CboSpec. */
   private[graft] val cboStarQuery: String =
     """SELECT n_name,
               sum(CAST(floor(l_extendedprice*100 + 0.5) AS BIGINT)) AS rev_cents,
@@ -71,6 +70,10 @@ object Scale {
        JOIN cbo_part p ON l.l_partkey = p.p_partkey
        WHERE p.p_size = 1
        GROUP BY n_name"""
+
+  /** The two confs that turn on cost-based join reordering. */
+  private[graft] val cboConfs: Seq[String] =
+    Seq("spark.sql.cbo.enabled", "spark.sql.cbo.joinReorder.enabled")
 
   /** Stage catalog-managed cbo_* copies of the star tables and ANALYZE
     * column stats (idempotent per source content stamp; survives leftover
@@ -112,13 +115,8 @@ object Scale {
     * tables: the reorder must be a pure cost move. */
   private val joinCboStar: Q = (s, d) => {
     cboStageTables(s, d)
-    val keys = Seq("spark.sql.cbo.enabled", "spark.sql.cbo.joinReorder.enabled")
-    val saved = keys.map(k => k -> s.conf.getOption(k)).toMap
-    try {
-      keys.foreach(k => s.conf.set(k, "true"))
+    withConfs(s, cboConfs.map(_ -> "true")) {
       s.sql(cboStarQuery).localCheckpoint(true).orderBy("n_name")
-    } finally saved.foreach { case (k, v) =>
-      v.fold(s.conf.unset(k))(s.conf.set(k, _))
     }
   }
 

@@ -82,9 +82,13 @@ object Streaming {
   private[graft] val ProviderKey = "spark.sql.streaming.stateStore.providerClass"
   private[graft] val RocksProvider =
     "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider"
+  /** The RocksDB provider pin, empty when the caller set a provider. */
+  private def providerPin(s: SparkSession): Seq[(String, String)] =
+    Seq(ProviderKey -> RocksProvider).filter(_ => s.conf.getOption(ProviderKey).isEmpty)
 
-  /** Round-17 streaming fixed-cost trims (optimization guide §1 measured,
-    * graft.tools.StreamConfAB: arms alternated per rep, all row-identical):
+  /** Round-17 streaming fixed-cost trims (measured as same-JVM conf arms
+    * alternated per rep, all row-identical; the `graft.tools.ConfAB` lines
+    * that rerun them are in SCALING.md r17):
     *
     *  - State-store partition count: every stateful operator instantiates
     *    one state store PER shuffle partition PER micro-batch — under the
@@ -113,13 +117,14 @@ object Streaming {
     *
     * Scoping (corrected r18, ADVICE r17): the partition cap and changelog
     * flag scope to the streaming query (set before start, restored after
-    * termination; caller-set values respected). The maintenance interval
-    * is JVM-STICKY — the StateStore maintenance task reads it once when it
-    * first starts, so the first streaming query pins 5 s for the session
-    * lifetime and the finally-restore cannot revert it (harmless here:
-    * every graft streaming query wants the same value, and the suite runs
-    * streaming queries one at a time — the restore-based mutation is not
-    * reentrant under concurrent streaming).
+    * termination by [[graft.util.Canon.withConfs]]); caller-set values are
+    * left alone, which is what lets a ConfAB arm override them. The
+    * maintenance-interval pin asks `getOption`, which answers the key's
+    * registered 60 s default, so it never fires: queries run at the
+    * session's interval (SCALING.md, Streaming). Were it set, it would be
+    * JVM-STICKY — the StateStore maintenance task reads it once when it
+    * first starts — and the restore is not reentrant under concurrent
+    * streaming queries on one session.
     *
     * r18 (VERDICT r17 item 7): the cap DEFAULT derives from the session —
     * max(8, defaultParallelism/4) — instead of the bare constant 8, which
@@ -137,32 +142,24 @@ object Streaming {
     val maxParts = s.conf.getOption("graft.stream.maxStateParts")
       .map(_.toInt)
       .getOrElse(math.max(8, s.sparkContext.defaultParallelism / 4))
-    val cur = s.conf.getOption(parts).map(_.toInt)
-    val pinParts = cur.forall(_ > maxParts)
-    val pinChangelog = s.conf.getOption(changelog).isEmpty
-    val pinMaint = s.conf.getOption(maint).isEmpty
-    if (pinParts) s.conf.set(parts, maxParts)
-    if (pinChangelog) s.conf.set(changelog, "true")
-    if (pinMaint) s.conf.set(maint, "5s")
-    try body
-    finally {
-      if (pinParts) cur match {
-        case Some(v) => s.conf.set(parts, v); case None => s.conf.unset(parts)
-      }
-      if (pinChangelog) s.conf.unset(changelog)
-      if (pinMaint) s.conf.unset(maint)
-    }
+    val capParts = s.conf.getOption(parts).forall(_.toInt > maxParts)
+    val pins = Seq(parts -> maxParts.toString).filter(_ => capParts) ++
+      Seq(changelog -> "true", maint -> "5s")
+        .filter { case (k, _) => s.conf.getOption(k).isEmpty }
+    withConfs(s, pins)(body)
   }
 
   /** Run a streaming DataFrame to completion into a memory sink, return the
-    * finished table. State store: RocksDB, adopted round 15 after the
-    * `graft.tools.RocksAB` A/B proved all 14 stateful ids hash-identical
-    * under both providers at parity-or-better walls — at 100 TB state the
-    * off-heap/SSD-spilling store bounds per-executor state by disk instead
-    * of JVM heap, which is the provider a production stateful job runs
-    * anyway (transformWithState already REQUIRED it). The pin respects a
-    * caller-set provider (conf already present is left alone), which is
-    * how RocksAB still forces the HDFS baseline arm. */
+    * finished table. State store: RocksDB, adopted round 15 after a paired
+    * provider A/B proved all 14 stateful ids hash-identical under both
+    * providers at parity-or-better walls (SCALING.md r15) — at 100 TB state
+    * the off-heap/SSD-spilling store bounds per-executor state by disk
+    * instead of JVM heap, which is the provider a production stateful job
+    * runs anyway (transformWithState already REQUIRED it). The pin is meant
+    * to leave a caller-set provider alone, but [[providerPin]] asks
+    * `getOption`, which answers the key's registered default (the
+    * HDFS-backed provider): the pin never fires, and these queries run on
+    * whatever provider the session holds (SCALING.md, Streaming). */
   private def runToTable(s: SparkSession, df: DataFrame, mode: String,
       maxFilesPerTrigger: Option[Int] = None): DataFrame = {
     val name = s"graft_stream_${ctr.incrementAndGet()}"
@@ -170,14 +167,14 @@ object Streaming {
     dropCkpt(ckpt) // ADVICE r5: a stale dir from a crashed run would replay
     // the input as already-processed (empty complete-mode result) or abort
     // append mode — clear BEFORE start, not only after success
-    val pin = s.conf.getOption(ProviderKey).isEmpty
-    if (pin) s.conf.set(ProviderKey, RocksProvider)
-    try withStreamConfs(s) {
-      val q = df.writeStream.format("memory").queryName(name)
-        .option("checkpointLocation", ckpt)
-        .outputMode(mode).trigger(Trigger.AvailableNow()).start()
-      q.awaitTermination()
-    } finally if (pin) s.conf.unset(ProviderKey)
+    withConfs(s, providerPin(s)) {
+      withStreamConfs(s) {
+        val q = df.writeStream.format("memory").queryName(name)
+          .option("checkpointLocation", ckpt)
+          .outputMode(mode).trigger(Trigger.AvailableNow()).start()
+        q.awaitTermination()
+      }
+    }
     dropCkpt(ckpt) // completed; reclaim the tmpfs space before the next rep
     s.table(name)
   }
@@ -584,11 +581,7 @@ object Streaming {
     * equal the batch aggregate, which is the DuckDB oracle. */
   private val streamTransformWithState: Q = (s, d) => {
     import s.implicits._
-    val key = "spark.sql.streaming.stateStore.providerClass"
-    val prev = s.conf.getOption(key)
-    s.conf.set(key,
-      "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
-    try {
+    withConfs(s, Seq(ProviderKey -> RocksProvider)) {
       val stream = eventsStream(s, d)
         .where(col("event_type") === "purchase")
         .select(col("user_id"), col("value"))
@@ -603,8 +596,6 @@ object Streaming {
         .select(col("user_id"), col("fin.n_purchases").as("n_purchases"),
           col("fin.purchase_total").as("purchase_total"))
         .orderBy("user_id")
-    } finally {
-      prev match { case Some(v) => s.conf.set(key, v); case None => s.conf.unset(key) }
     }
   }
 
@@ -749,10 +740,9 @@ object Streaming {
     // volume 32 partitions are pure fixed cost (store init + commit per
     // batch), so pin a small stream parallelism for the query and restore.
     // At scale the same knob is sized to state volume, not CPU count.
-    val prev = s.conf.get("spark.sql.shuffle.partitions")
-    s.conf.set("spark.sql.shuffle.partitions", "4")
-    val out = try runToTable(s, joined, "append") finally
-      s.conf.set("spark.sql.shuffle.partitions", prev)
+    val out = withConfs(s, Seq("spark.sql.shuffle.partitions" -> "4")) {
+      runToTable(s, joined, "append")
+    }
     out
       .groupBy(col("pu").as("user_id"))
       .agg(count(lit(1)).as("n_pairs"))
@@ -780,10 +770,9 @@ object Streaming {
     val joined = p.join(c, col("pu") === col("cu") &&
       col("cts") >= col("pts") - expr("INTERVAL 15 MINUTES") &&
       col("cts") <= col("pts"), "left_outer")
-    val prev = s.conf.get("spark.sql.shuffle.partitions")
-    s.conf.set("spark.sql.shuffle.partitions", "4")
-    val out = try runToTable(s, joined, "append") finally
-      s.conf.set("spark.sql.shuffle.partitions", prev)
+    val out = withConfs(s, Seq("spark.sql.shuffle.partitions" -> "4")) {
+      runToTable(s, joined, "append")
+    }
     val cutRow = tbl(s, d, "events").agg(least(
       max(when(col("event_type") === "purchase", tsMs(col("ts")))),
       max(when(col("event_type") === "click", tsMs(col("ts")))))).collect()(0)
@@ -891,20 +880,19 @@ object Streaming {
       .coalesce(1).write.mode("overwrite").parquet(dir)
     val schema = s.read.parquet(dir).schema
     def runOnce(qn: String): (DataFrame, Long) = {
-      val pin = s.conf.getOption(ProviderKey).isEmpty
-      if (pin) s.conf.set(ProviderKey, RocksProvider)
-      var read = 0L
-      try withStreamConfs(s) {
-        val q = s.readStream.schema(schema).parquet(dir)
-          .groupBy(col("event_type"))
-          .agg(count(lit(1)).as("n"),
-            sum(cents(col("value"))).as("value_cents"))
-          .writeStream.format("memory").queryName(qn)
-          .option("checkpointLocation", ckpt)
-          .outputMode("complete").trigger(Trigger.AvailableNow()).start()
-        q.awaitTermination()
-        read = q.recentProgress.map(_.numInputRows).sum
-      } finally if (pin) s.conf.unset(ProviderKey)
+      val read = withConfs(s, providerPin(s)) {
+        withStreamConfs(s) {
+          val q = s.readStream.schema(schema).parquet(dir)
+            .groupBy(col("event_type"))
+            .agg(count(lit(1)).as("n"),
+              sum(cents(col("value"))).as("value_cents"))
+            .writeStream.format("memory").queryName(qn)
+            .option("checkpointLocation", ckpt)
+            .outputMode("complete").trigger(Trigger.AvailableNow()).start()
+          q.awaitTermination()
+          q.recentProgress.map(_.numInputRows).sum
+        }
+      }
       (s.table(qn), read)
     }
     val (first, _) = runOnce(s"graft_resume_a_$tag")

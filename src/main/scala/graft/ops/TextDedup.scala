@@ -28,7 +28,7 @@ object TextDedup {
     * return their results in branch order — the overlap the audits use so
     * single-task stage chains of independent subtrees stop serializing.
     * Each branch's Spark jobs carry a job TAG of their own, so a caller's
-    * job group (per-id attribution in Bench/QProf) still applies. When a
+    * job group (per-id attribution in Bench) still applies. When a
     * branch fails, every branch's tag is cancelled and the first failure
     * is rethrown; the pool is shut down with `shutdownNow()` on every path,
     * so no thread or orphaned job outlives the call. */
@@ -292,8 +292,8 @@ object TextDedup {
     // r18 (VERDICT r17 item 5, guide §2.6): the three audit inputs — doc
     // count, exact-Jaccard truth count, LSH-verified precision/recall — are
     // independent subtrees whose builders/evaluations used to serialize
-    // (jaccardTruthDups runs eager interior actions, and QProf showed the
-    // whole audit as a chain of SINGLE-task stages on the one-row-group
+    // (jaccardTruthDups runs eager interior actions, and a per-stage
+    // profile showed the whole audit as a chain of SINGLE-task stages on the one-row-group
     // fixture — 31 cores idle). r17 measured-and-declined repartition
     // fan-out of those stages (paired FanAB LOST: per-task fixed costs
     // dominate KB-scale stages on this box); overlapping the independent
@@ -2160,7 +2160,7 @@ object TextDedup {
     * top-Cand) — lifting codebook resolution (256 codewords needs the
     * larger training sample) and Cand recovered flat-PQ recall to 100% at
     * every SF, and the residual IVFADC gap is the coarse stage alone
-    * (ivfpq == ivf at every probe count measured, r14 RecallProbe). */
+    * (ivfpq == ivf at every probe count measured, SCALING.md r14). */
   private val simAnnRecallAudit: Q = (s, d) => {
     // r18 (VERDICT r17 item 2, guide §2.6 "overlap independent jobs"): the
     // six approximate pipelines are INDEPENDENT of each other, but each

@@ -340,16 +340,7 @@ object TimeSeries {
         sum(col("n_test").cast("long")) * 80L &&
        sum(col("cov_cfg").cast("long")) * 100L <=
         sum(col("n_test").cast("long")) * 99L).as("coverage95_cal_ok"))
-    if (sys.env.contains("SPARK_GRAFT_VARIANTS_DIAG"))
-      // margin-measurement mode (round-13 calibration; not a contract shape)
-      rows.agg(count(lit(1)).as("n_series"),
-        max(col("sae_cfg") / col("naive_num").cast("double")).as("r_cfg"),
-        max(col("sae_hol") / col("naive_num").cast("double")).as("r_hol"),
-        max(col("sae_log") / col("naive_num").cast("double")).as("r_log"),
-        max(col("sae_mul") / col("naive_num").cast("double")).as("r_mul"),
-        (sum(col("cov_cfg").cast("long")) * 10000L /
-          sum(col("n_test").cast("long"))).as("cov_bp"))
-    else rows.crossJoin(broadcast(cal))
+    rows.crossJoin(broadcast(cal))
       .select(col("user_id"), col("n_train").cast("long").as("n_train"),
         col("n_test").cast("long").as("n_test"), col("naive_num"),
         // per-variant ratio verdicts; margins from the measured max ratio

@@ -63,11 +63,10 @@ import org.apache.spark.unsafe.types.UTF8String
   *  - **Filter pushdown (r17)**: `SupportsPushDownFilters`. ALL filters are
   *    returned as residual (Spark re-applies them — a pushdown bug can cost
   *    time, never rows). Partition-column filters prune the listing
-  *    exactly (always on); data-filter row-skip at the decoded record
-  *    exists behind `graft.avro.filter.pushdown` but was measured-then-
-  *    DECLINED as the default (AvroPushdownAB: loses 2–18% at every
-  *    selectivity — Avro pays full row decode either way and the residual
-  *    Filter is codegen'd; SCALING.md r17).
+  *    exactly. Data filters are not evaluated in the reader: a row skip
+  *    on the decoded record measured 2–18% slower at every selectivity
+  *    (Avro pays full row decode either way and the residual Filter is
+  *    codegen'd; SCALING.md r17).
   *  - **Admission-controlled streaming (r17)**: the micro-batch tailer
   *    implements `SupportsAdmissionControl` + `SupportsTriggerAvailableNow`
   *    with `graft.avro.maxFilesPerTrigger`, and offsets are a single batch
@@ -113,7 +112,6 @@ class AvroDataSource extends TableProvider with DataSourceRegister {
       Option(opts.get(AvroDataSource.ReaderSchemaKey)),
       Option(opts.get(AvroDataSource.SplitBytesKey)).map(_.toLong),
       Option(opts.get(AvroDataSource.MaxFilesKey)).map(_.toInt),
-      opts.getBoolean(AvroDataSource.FilterPushdownKey, false),
       Option(opts.get(AvroDataSource.PartitionByKey)).toSeq
         .flatMap(_.split(",").map(_.trim).filter(_.nonEmpty)) ++
         partitioning.toSeq.flatMap(t => t.references().headOption
@@ -140,22 +138,13 @@ object AvroDataSource {
     * `ReadLimit.allAvailable` (the r16 behavior — fine for bounded replay,
     * required-bounded for a restart against a deep backlog). */
   val MaxFilesKey = "graft.avro.maxFilesPerTrigger"
-  /** Scan option: evaluate pushed data filters on the decoded record
-    * before materializing the row. OFF by default — measured-then-declined
-    * (AvroPushdownAB r17: on/off medians 1.05×/1.18×/1.02× at 0.1%/25%/
-    * 100% selectivity on lineitem sf0.1; the interpreted row-skip loses to
-    * the codegen'd residual Filter it saves, and Avro's row decode is paid
-    * either way). Partition-column LISTING pruning is always on — exact,
-    * driver-side, skips whole files. */
-  val FilterPushdownKey = "graft.avro.filter.pushdown"
   /** Hive's directory name for a null partition value. */
   val NullPartition = "__HIVE_DEFAULT_PARTITION__"
 }
 
 private[avro] class AvroTable(structSchema: StructType, paths: Seq[String],
     readerSchemaJson: Option[String], splitBytes: Option[Long],
-    maxFilesPerTrigger: Option[Int], filterPushdown: Boolean,
-    writePartitionBy: Seq[String])
+    maxFilesPerTrigger: Option[Int], writePartitionBy: Seq[String])
     extends Table with SupportsRead with SupportsWrite {
   override def name(): String = s"graft-avro:${paths.mkString(",")}"
   override def schema(): StructType = structSchema
@@ -173,7 +162,7 @@ private[avro] class AvroTable(structSchema: StructType, paths: Seq[String],
       // partition columns exist only where files do — discovered at scan
       // time (a write-side getTable must not list a not-yet-created dir)
       AvroUtil.discoverPartitionCols(paths),
-      maxFilesPerTrigger, filterPushdown)
+      maxFilesPerTrigger)
   override def newWriteBuilder(info: LogicalWriteInfo): WriteBuilder = {
     require(paths.size == 1,
       s"graft-avro: write needs exactly one target path, got $paths")
@@ -344,13 +333,11 @@ private[avro] class AvroDataWriter(stage: String, avroJson: String,
 
 private[avro] class AvroScanBuilder(fullSchema: StructType, paths: Seq[String],
     readerSchemaJson: Option[String], splitBytes: Long,
-    partCols: Seq[String], maxFilesPerTrigger: Option[Int],
-    filterPushdown: Boolean)
+    partCols: Seq[String], maxFilesPerTrigger: Option[Int])
     extends ScanBuilder with SupportsPushDownRequiredColumns
     with SupportsPushDownFilters {
   private var required: StructType = fullSchema
   private var partFilters: Array[Filter] = Array.empty
-  private var dataFilters: Array[Filter] = Array.empty
 
   // top-level pruning only: a nested pruned struct is answered with the
   // full column (correct, just unpruned) — same fallback spark-avro uses
@@ -361,84 +348,61 @@ private[avro] class AvroScanBuilder(fullSchema: StructType, paths: Seq[String],
   /** ALL filters are returned as residual: Spark re-applies every one of
     * them above the scan, so a pushdown bug can cost time but never rows.
     * Partition-column filters additionally prune the LISTING (exact — a
-    * partition directory carries one value per column); supported data
-    * filters are evaluated on the decoded record to skip rows early. */
+    * partition directory carries one value per column). */
   override def pushFilters(filters: Array[Filter]): Array[Filter] = {
-    val (part, rest) = filters.partition(f =>
+    partFilters = filters.filter(f =>
       f.references.nonEmpty && f.references.forall(partCols.contains) &&
         AvroFilterEval.supportedOnPartitions(f))
-    partFilters = part
-    dataFilters =
-      if (filterPushdown)
-        rest.filter(f => f.references.forall(required.fieldNames.contains) &&
-          AvroFilterEval.supported(f, required))
-      else Array.empty
     filters
   }
-  override def pushedFilters(): Array[Filter] = partFilters ++ dataFilters
+  override def pushedFilters(): Array[Filter] = partFilters
 
   override def build(): Scan =
     new AvroScan(required, paths, readerSchemaJson, splitBytes, partCols,
-      partFilters, dataFilters, maxFilesPerTrigger)
+      partFilters, maxFilesPerTrigger)
 }
 
 /** Best-effort evaluator for `org.apache.spark.sql.sources.Filter` trees
-  * over (a) partition-value vectors (strings, null = the Hive default
-  * partition) and (b) decoded Catalyst row values.
+  * over partition-value vectors (strings, null = the Hive default
+  * partition).
   *
-  * Semantics contract: for LISTING pruning the result must be an
-  * OVER-approximation of "some row in this directory could satisfy the
-  * filter" — keeping too much is safe (the residual drops rows), dropping
-  * wrongly would lose data, so null comparisons return false at the leaf
-  * (SQL null-propagation) and `Not` keeps the directory unless the inner
-  * filter definitely matches. String ordering is UTF8String binary order —
-  * Spark's own — NOT java.lang.String UTF-16 order. For ROW skipping the
-  * same helpers run on decoded values; rows wrongly kept are re-filtered
-  * by the residual, and only filter shapes this evaluator fully understands
-  * are ever pushed. */
+  * Semantics contract: the result must be an OVER-approximation of "some
+  * row in this directory could satisfy the filter" — keeping too much is
+  * safe (the residual drops rows), dropping wrongly would lose data, so
+  * null comparisons return false at the leaf (SQL null-propagation) and
+  * `Not` keeps the directory unless the inner filter definitely matches.
+  * String ordering is UTF8String binary order — Spark's own — NOT
+  * java.lang.String UTF-16 order. */
 private[avro] object AvroFilterEval {
-  private def cmp(dt: DataType, a: Any, b: Any): Option[Int] = (dt, a) match {
-    case (_, null) => None
-    case (StringType, u: UTF8String) =>
+  private def cmp(a: Any, b: Any): Option[Int] = a match {
+    case u: UTF8String =>
       Some(u.binaryCompare(UTF8String.fromString(String.valueOf(b))))
-    case (IntegerType, x: java.lang.Integer) =>
-      Some(java.lang.Long.compare(x.longValue(), b.asInstanceOf[Number].longValue()))
-    case (LongType, x: java.lang.Long) =>
-      Some(java.lang.Long.compare(x.longValue(), b.asInstanceOf[Number].longValue()))
-    case (ShortType, x: java.lang.Short) =>
-      Some(java.lang.Long.compare(x.longValue(), b.asInstanceOf[Number].longValue()))
-    case (FloatType, x: java.lang.Float) =>
-      Some(java.lang.Double.compare(x.doubleValue(), b.asInstanceOf[Number].doubleValue()))
-    case (DoubleType, x: java.lang.Double) =>
-      Some(java.lang.Double.compare(x.doubleValue(), b.asInstanceOf[Number].doubleValue()))
-    case (BooleanType, x: java.lang.Boolean) =>
-      Some(x.compareTo(b.asInstanceOf[java.lang.Boolean]))
     case _ => None
   }
 
-  /** Evaluate `f` against `get(name) → (value, dataType)`; None = shape or
-    * type this evaluator does not understand (caller must not prune/push). */
-  private def eval(f: Filter, get: String => Option[(Any, DataType)]): Option[Boolean] = {
+  /** Evaluate `f` against `get(name) → value`; None = shape this evaluator
+    * does not understand (caller must not prune). */
+  private def eval(f: Filter, get: String => Option[Any]): Option[Boolean] = {
     def leafCmp(attr: String, v: Any)(ok: Int => Boolean): Option[Boolean] =
-      get(attr).map { case (a, dt) => cmp(dt, a, v).exists(ok) }
+      get(attr).map(a => cmp(a, v).exists(ok))
     f match {
       case sources.EqualTo(a, v) => leafCmp(a, v)(_ == 0)
-      case sources.EqualNullSafe(a, v) => get(a).map { case (x, dt) =>
-        if (x == null) v == null else v != null && cmp(dt, x, v).contains(0) }
+      case sources.EqualNullSafe(a, v) => get(a).map { x =>
+        if (x == null) v == null else v != null && cmp(x, v).contains(0) }
       case sources.GreaterThan(a, v) => leafCmp(a, v)(_ > 0)
       case sources.GreaterThanOrEqual(a, v) => leafCmp(a, v)(_ >= 0)
       case sources.LessThan(a, v) => leafCmp(a, v)(_ < 0)
       case sources.LessThanOrEqual(a, v) => leafCmp(a, v)(_ <= 0)
-      case sources.In(a, vs) => get(a).map { case (x, dt) =>
-        x != null && vs.exists(v => cmp(dt, x, v).contains(0)) }
-      case sources.IsNull(a) => get(a).map(_._1 == null)
-      case sources.IsNotNull(a) => get(a).map(_._1 != null)
+      case sources.In(a, vs) => get(a).map { x =>
+        x != null && vs.exists(v => cmp(x, v).contains(0)) }
+      case sources.IsNull(a) => get(a).map(_ == null)
+      case sources.IsNotNull(a) => get(a).map(_ != null)
       case sources.StringStartsWith(a, p) => get(a).collect {
-        case (u: UTF8String, StringType) => u.toString.startsWith(p) }
+        case u: UTF8String => u.toString.startsWith(p) }
       case sources.StringEndsWith(a, p) => get(a).collect {
-        case (u: UTF8String, StringType) => u.toString.endsWith(p) }
+        case u: UTF8String => u.toString.endsWith(p) }
       case sources.StringContains(a, p) => get(a).collect {
-        case (u: UTF8String, StringType) => u.toString.contains(p) }
+        case u: UTF8String => u.toString.contains(p) }
       case sources.And(l, r) =>
         for (x <- eval(l, get); y <- eval(r, get)) yield x && y
       case sources.Or(l, r) =>
@@ -448,63 +412,32 @@ private[avro] object AvroFilterEval {
     }
   }
 
-  def supported(f: Filter, schema: StructType): Boolean = {
-    val probe: String => Option[(Any, DataType)] = n =>
-      schema.fields.find(_.name == n).flatMap { fd =>
-        fd.dataType match {
-          case StringType => Some((UTF8String.fromString(""), StringType))
-          case IntegerType => Some((java.lang.Integer.valueOf(0), IntegerType))
-          case LongType => Some((java.lang.Long.valueOf(0L), LongType))
-          case ShortType => Some((java.lang.Short.valueOf(0.toShort), ShortType))
-          case FloatType => Some((java.lang.Float.valueOf(0f), FloatType))
-          case DoubleType => Some((java.lang.Double.valueOf(0d), DoubleType))
-          case BooleanType => Some((java.lang.Boolean.FALSE, BooleanType))
-          case _ => None
-        }
-      }
+  /** Can `f` be evaluated over partition values (every column a string)? */
+  def supportedOnPartitions(f: Filter): Boolean = {
+    val probe: String => Option[Any] = _ => Some(UTF8String.fromString(""))
     try eval(f, probe).isDefined catch { case _: Exception => false }
   }
-
-  def supportedOnPartitions(f: Filter): Boolean =
-    supported(f, StructType(f.references.toSeq.map(n =>
-      StructField(n, StringType))))
 
   /** Could any row under this partition-value vector satisfy `f`?
     * Over-approximates on anything uncertain. */
   def partitionMatches(f: Filter, partCols: Seq[String],
       values: Array[String]): Boolean = {
-    val get: String => Option[(Any, DataType)] = n => {
+    val get: String => Option[Any] = n => {
       val i = partCols.indexOf(n)
       if (i < 0) None
-      else Some(((if (values(i) == null) null
-                  else UTF8String.fromString(values(i))), StringType))
+      else Some(if (values(i) == null) null else UTF8String.fromString(values(i)))
     }
     // Not(inner): prune only when inner DEFINITELY holds for this single
     // partition value; a null-valued leaf makes inner false → keep → the
     // residual drops the rows (never the listing dropping the files)
     try eval(f, get).getOrElse(true) catch { case _: Exception => true }
   }
-
-  /** Row predicate over decoded Catalyst values laid out as `requiredSchema`;
-    * only called for filters `supported` accepted. */
-  def rowPredicate(filters: Array[Filter], requiredSchema: StructType)
-      : Array[Any] => Boolean = {
-    if (filters.isEmpty) return _ => true
-    val idx = requiredSchema.fieldNames.zipWithIndex.toMap
-    val dts = requiredSchema.fields.map(_.dataType)
-    vals => {
-      val get: String => Option[(Any, DataType)] = n =>
-        idx.get(n).map(i => (vals(i), dts(i)))
-      filters.forall(f =>
-        try eval(f, get).getOrElse(true) catch { case _: Exception => true })
-    }
-  }
 }
 
 private[avro] class AvroScan(requiredSchema: StructType, paths: Seq[String],
     readerSchemaJson: Option[String], splitBytes: Long,
     partCols: Seq[String], partFilters: Array[Filter],
-    dataFilters: Array[Filter], maxFilesPerTrigger: Option[Int])
+    maxFilesPerTrigger: Option[Int])
     extends Scan with Batch {
   override def readSchema(): StructType = requiredSchema
   override def toBatch: Batch = this
@@ -512,9 +445,7 @@ private[avro] class AvroScan(requiredSchema: StructType, paths: Seq[String],
     s"graft-avro ${paths.mkString(",")} " +
       s"ReadSchema: ${requiredSchema.catalogString}" +
       (if (partFilters.nonEmpty)
-        s", PrunedPartitionFilters: [${partFilters.mkString(", ")}]" else "") +
-      (if (dataFilters.nonEmpty)
-        s", PushedFilters: [${dataFilters.mkString(", ")}]" else "")
+        s", PrunedPartitionFilters: [${partFilters.mkString(", ")}]" else "")
 
   override def planInputPartitions(): Array[InputPartition] = {
     val conf = SparkSession.active.sessionState.newHadoopConf()
@@ -545,12 +476,12 @@ private[avro] class AvroScan(requiredSchema: StructType, paths: Seq[String],
       requiredSchema.filterNot(f => partCols.contains(f.name)))
     val pruned = AvroUtil.pruneSchema(base, dataRequired)
     new AvroPartitionReaderFactory(pruned.toString, requiredSchema,
-      partCols.toArray, dataFilters, AvroUtil.confEntries(conf))
+      partCols.toArray, AvroUtil.confEntries(conf))
   }
 
   override def toMicroBatchStream(checkpointLocation: String): MicroBatchStream =
     new AvroMicroBatchStream(paths, readerSchemaJson, requiredSchema,
-      partCols, partFilters, dataFilters, splitBytes, maxFilesPerTrigger,
+      partCols, partFilters, splitBytes, maxFilesPerTrigger,
       checkpointLocation)
 }
 
@@ -559,19 +490,18 @@ private[graft] case class AvroInputPartition(path: String, start: Long,
 
 private[avro] class AvroPartitionReaderFactory(readerSchemaJson: String,
     requiredSchema: StructType, partCols: Array[String],
-    dataFilters: Array[Filter], confEntries: Array[(String, String)])
+    confEntries: Array[(String, String)])
     extends PartitionReaderFactory {
   override def createReader(partition: InputPartition): PartitionReader[InternalRow] = {
     val p = partition.asInstanceOf[AvroInputPartition]
     new AvroPartitionReader(p, readerSchemaJson, requiredSchema, partCols,
-      dataFilters, confEntries)
+      confEntries)
   }
 }
 
 private[avro] class AvroPartitionReader(p: AvroInputPartition,
     readerSchemaJson: String, requiredSchema: StructType,
-    partCols: Array[String], dataFilters: Array[Filter],
-    confEntries: Array[(String, String)])
+    partCols: Array[String], confEntries: Array[(String, String)])
     extends PartitionReader[InternalRow] {
   private val readerSchema = new Schema.Parser().parse(readerSchemaJson)
   private val in = new FsInput(new Path(p.path), AvroUtil.confFrom(confEntries))
@@ -604,22 +534,17 @@ private[avro] class AvroPartitionReader(p: AvroInputPartition,
       }
     }
   }
-  private val pred = AvroFilterEval.rowPredicate(dataFilters, requiredSchema)
   private var current: InternalRow = _
 
-  override def next(): Boolean = {
-    while (reader.hasNext && !reader.pastSync(p.end)) {
+  override def next(): Boolean =
+    if (reader.hasNext && !reader.pastSync(p.end)) {
       val rec = reader.next()
       val vals = new Array[Any](extractors.length)
       var i = 0
       while (i < extractors.length) { vals(i) = extractors(i)(rec); i += 1 }
-      if (pred(vals)) { // pushed-filter row skip (residual re-checks)
-        current = new GenericInternalRow(vals)
-        return true
-      }
-    }
-    false
-  }
+      current = new GenericInternalRow(vals)
+      true
+    } else false
 
   override def get(): InternalRow = current
   override def close(): Unit = { reader.close() }
@@ -654,8 +579,7 @@ private[avro] class AvroPartitionReader(p: AvroInputPartition,
   *    so the live log is one snapshot + ≤interval small entries, not one
   *    file per batch forever.
   *  - Batches reuse the SAME byte-range sync-split partitions, pruned
-  *    reader schema, partition-column decoding, and pushed-filter row skip
-  *    as the batch scan; partition-column LISTING pruning applies before
+  *    reader schema and partition-column decoding as the batch scan; partition-column LISTING pruning applies before
   *    admission, so a pruned directory never consumes trigger budget.
   *
   * Driver memory: the `seen` set holds every live file path (the same
@@ -665,8 +589,7 @@ private[avro] class AvroPartitionReader(p: AvroInputPartition,
   * O(live files), the floor any directory tailer pays. */
 private[graft] class AvroMicroBatchStream(paths: Seq[String],
     readerSchemaJson: Option[String], requiredSchema: StructType,
-    partCols: Seq[String], partFilters: Array[Filter],
-    dataFilters: Array[Filter], splitBytes: Long,
+    partCols: Seq[String], partFilters: Array[Filter], splitBytes: Long,
     maxFilesPerTrigger: Option[Int], checkpointLocation: String)
     extends MicroBatchStream with SupportsAdmissionControl
     with SupportsTriggerAvailableNow {
@@ -813,7 +736,7 @@ private[graft] class AvroMicroBatchStream(paths: Seq[String],
       requiredSchema.filterNot(f => partCols.contains(f.name)))
     val pruned = AvroUtil.pruneSchema(base, dataRequired)
     new AvroPartitionReaderFactory(pruned.toString, requiredSchema,
-      partCols.toArray, dataFilters, AvroUtil.confEntries(conf))
+      partCols.toArray, AvroUtil.confEntries(conf))
   }
 
   /** After the engine commits `end`, entries ≤ end are never replanned —

@@ -33,9 +33,7 @@ object ConfAB {
       val times = mutable.Map[String, mutable.ArrayBuffer[Double]]()
       val rows = mutable.Map[String, Set[String]]()
       for (_ <- 1 to reps; (arm, confs) <- arms) {
-        val prev = confs.keys.map(k => k -> spark.conf.getOption(k)).toMap
-        confs.foreach { case (k, v) => spark.conf.set(k, v) }
-        try {
+        graft.util.Canon.withConfs(spark, confs.toSeq) {
           System.gc()
           val t0 = System.nanoTime()
           val r = fn(spark, sf).collect()
@@ -46,9 +44,6 @@ object ConfAB {
             case Some(r0) => require(r0 == rs, s"$id/$arm row drift")
             case None => rows(arm) = rs
           }
-        } finally prev.foreach {
-          case (k, Some(v)) => spark.conf.set(k, v)
-          case (k, None) => spark.conf.unset(k)
         }
       }
       def med(a: Seq[Double]) = a.sorted.apply(a.length / 2)

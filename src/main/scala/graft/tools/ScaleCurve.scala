@@ -16,8 +16,9 @@ import org.apache.spark.sql.functions._
   *
   *  - pagerank: 5 exact-integer rounds on the 2M-node / 8M-directed-edge
   *    ring+skip graph (the r10c probe graph; closed-form uniform rank).
-  *  - cooc join: the UNCAPPED k=10⁴ hot-cell self-join from CoocSkewProbe
-  *    (50.2M emitted pairs through distinct).
+  *  - cooc join: the UNCAPPED k=10⁴ hot-cell self-join
+  *    (`Graph.coocEdgesCore` at `Int.MaxValue`; 50.2M emitted pairs
+  *    through distinct).
   *
   * Run once per cpu count; SCALING.md r15 tabulates the curve.
   *

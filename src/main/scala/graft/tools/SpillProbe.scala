@@ -84,10 +84,8 @@ object SpillProbe {
       }
     })
 
-    def runArm(id: String, conf: Seq[(String, String)]): (Vector[String], Long) = {
-      val prev = conf.map { case (k, _) => k -> s.conf.getOption(k) }
-      conf.foreach { case (k, v) => s.conf.set(k, v) }
-      try {
+    def runArm(id: String, conf: Seq[(String, String)]): (Vector[String], Long) =
+      graft.util.Canon.withConfs(s, conf) {
         memSpilled.set(0); diskSpilled.set(0)
         val rows = graft.SparkEntry.queries(id)(s, sf).collect()
           .map(_.toSeq.map(String.valueOf).mkString("|")).toVector
@@ -98,11 +96,7 @@ object SpillProbe {
         while (cur != last) { last = cur; Thread.sleep(200)
           cur = memSpilled.get + diskSpilled.get }
         (rows, cur)
-      } finally prev.foreach {
-        case (k, Some(v)) => s.conf.set(k, v)
-        case (k, None) => s.conf.unset(k)
       }
-    }
 
     var allIdentical = true; var totalSpilled = 0L
     println(f"${"id"}%-24s ${"rows"}%7s ${"ref_spill"}%10s ${"starved_spill"}%14s  identical")

@@ -324,6 +324,25 @@ object Canon {
       }
     }
 
+  /** Run `body` with each session conf in `confs` set, then put every key
+    * back exactly as it was: the old value, or unset if it was not set.
+    * "Set" means listed by `conf.getAll`, not `getOption`, which also
+    * answers a registered conf's default: restoring that would leave the
+    * default set explicitly. The restore runs when the body throws too. A
+    * caller that must leave a caller-set value alone filters it out of
+    * `confs` first. Not reentrant across threads sharing one session: the
+    * confs are session-wide. */
+  def withConfs[T](s: SparkSession, confs: Seq[(String, String)])(body: => T): T = {
+    val set = s.conf.getAll
+    val prior = confs.map { case (k, _) => k -> set.get(k) }
+    confs.foreach { case (k, v) => s.conf.set(k, v) }
+    try body
+    finally prior.reverse.foreach {
+      case (k, Some(v)) => s.conf.set(k, v)
+      case (k, None) => s.conf.unset(k)
+    }
+  }
+
   /** Load a testdata table (TESTDATA.md: one parquet per table), inferring
     * its schema once ([[readParquet]]). */
   def tbl(s: SparkSession, dir: String, name: String): DataFrame =

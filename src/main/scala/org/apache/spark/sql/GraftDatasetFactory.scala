@@ -10,9 +10,10 @@ object GraftDatasetFactory {
   def ofRows(s: SparkSession, plan: LogicalPlan): DataFrame =
     classic.Dataset.ofRows(s.asInstanceOf[classic.SparkSession], plan)
 
-  /** Drain the async listener bus (private[spark]) — QProf must flush
-    * pending onStageCompleted events before detaching its listener or the
-    * reported rep can silently miss tail stages (ADVICE r17). */
+  /** Drain the async listener bus (private[spark]): a listener read before
+    * the bus is empty can miss the last job-start and stage-completed
+    * events (PlanCap's job counts and stage table, the tests' `Jobs.count`;
+    * ADVICE r17). */
   def waitListenerBusEmpty(s: SparkSession, timeoutMs: Long): Unit =
     s.sparkContext.listenerBus.waitUntilEmpty(timeoutMs)
 }

@@ -178,7 +178,7 @@ class AvroSourceSpec extends AnyFunSuite {
     AvroUtil.write(df.repartition(2), d2)
     val schema = spark.read.format("graft-avro").load(d2).schema
     def mkStream() = new graft.sources.avro.AvroMicroBatchStream(
-      Seq(d2), None, schema, Nil, Array.empty, Array.empty, 1L << 20,
+      Seq(d2), None, schema, Nil, Array.empty, 1L << 20,
       None, ckpt)
     val stream = mkStream()
     val start = stream.initialOffset()
@@ -225,7 +225,7 @@ class AvroSourceSpec extends AnyFunSuite {
     AvroUtil.write(df.repartition(4), d3) // 4-file backlog before the query
     val schema = spark.read.format("graft-avro").load(d3).schema
     val stream = new graft.sources.avro.AvroMicroBatchStream(
-      Seq(d3), None, schema, Nil, Array.empty, Array.empty, 1L << 20,
+      Seq(d3), None, schema, Nil, Array.empty, 1L << 20,
       Some(1), ckpt)
     assert(stream.getDefaultReadLimit.isInstanceOf[
       org.apache.spark.sql.connector.read.streaming.ReadMaxFiles])
@@ -373,7 +373,7 @@ class AvroSourceSpec extends AnyFunSuite {
     System.setProperty("graft.avro.compactInterval", "2")
     try {
       def mkStream() = new graft.sources.avro.AvroMicroBatchStream(
-        Seq(d), None, schema, Nil, Array.empty, Array.empty, 1L << 20,
+        Seq(d), None, schema, Nil, Array.empty, 1L << 20,
         None, ckpt)
       val stream = mkStream()
       var cur = stream.initialOffset()

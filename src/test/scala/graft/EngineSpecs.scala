@@ -20,6 +20,18 @@ object TestSession {
   val sf = "/root/testdata/sf0.001"
 }
 
+/** Every node of an executed plan, including the final adaptive plan and
+  * the subtrees QueryStageExec wrappers hide from a plain `foreach`. */
+object PlanNodes {
+  import org.apache.spark.sql.execution.SparkPlan
+  import org.apache.spark.sql.execution.adaptive.{AdaptiveSparkPlanExec, QueryStageExec}
+  def all(p: SparkPlan): Seq[SparkPlan] = p match {
+    case a: AdaptiveSparkPlanExec => p +: all(a.executedPlan)
+    case qs: QueryStageExec => p +: all(qs.plan)
+    case other => other +: other.children.flatMap(all)
+  }
+}
+
 /** Spark jobs started while a block runs, counted by a listener; the
   * listener bus is drained before and after, so every job the block
   * started is counted and no earlier one is. */
@@ -432,7 +444,7 @@ class BucketedJoinSpec extends AnyFunSuite {
     val (liT, _) = ops.Scale.ensureBucketedTables(spark, sf)
     val q = ops.Scale.bucketedAggPlan(spark.table(liT))
     q.collect()
-    val shuffles = graft.tools.MetricsProbe.allNodes(q.queryExecution.executedPlan)
+    val shuffles = PlanNodes.all(q.queryExecution.executedPlan)
       .count(_.getClass.getSimpleName.contains("ShuffleExchange"))
     // only the tiny n_lines histogram (+ its ordering) may shuffle — the
     // order-grain rollup must run on the bucket layout exchange-free
@@ -441,7 +453,7 @@ class BucketedJoinSpec extends AnyFunSuite {
       graft.util.Canon.tbl(spark, sf, "lineitem")
         .select("l_orderkey", "l_extendedprice", "l_discount"))
     plain.collect()
-    val plainShuffles = graft.tools.MetricsProbe.allNodes(plain.queryExecution.executedPlan)
+    val plainShuffles = PlanNodes.all(plain.queryExecution.executedPlan)
       .count(_.getClass.getSimpleName.contains("ShuffleExchange"))
     assert(plainShuffles > shuffles,
       s"plain-table form should shuffle more ($plainShuffles vs $shuffles)")
@@ -458,7 +470,7 @@ class BucketedJoinSpec extends AnyFunSuite {
     try {
       val q = spark.table(liT).where(col("l_orderkey") === anyKey)
       q.collect()
-      val scan = graft.tools.MetricsProbe.allNodes(q.queryExecution.executedPlan)
+      val scan = PlanNodes.all(q.queryExecution.executedPlan)
         .map(_.toString()).find(_.contains("SelectedBucketsCount")).get
       assert(scan.contains("SelectedBucketsCount: 1 out of 8"),
         s"bucket pruning missing from scan:\n$scan")
@@ -485,7 +497,7 @@ class PartitionPruneSpec extends AnyFunSuite {
     q.collect()
     // descend through AQE QueryStageExec wrappers — plain collectLeaves
     // never sees materialized-stage scans
-    val scan = graft.tools.MetricsProbe.allNodes(q.queryExecution.executedPlan)
+    val scan = PlanNodes.all(q.queryExecution.executedPlan)
       .collectFirst {
         case f: org.apache.spark.sql.execution.FileSourceScanExec
           if f.relation.location.rootPaths.mkString.contains("events_by_date") => f
@@ -1731,9 +1743,29 @@ class AqeSkewSpec extends AnyFunSuite {
 class CboSpec extends AnyFunSuite {
   import TestSession._
 
+  /** Join order as the left-to-right sequence of cbo_* leaves in the
+    * optimized plan (tree order = join order for a left-deep tree). */
+  private def joinOrder(df: org.apache.spark.sql.DataFrame): Seq[String] =
+    "cbo_[a-z]+".r.findAllIn(df.queryExecution.optimizedPlan.toString).toSeq
+      .distinct
+
+  /** The star query with cbo off, then on, over the ANALYZE'd catalog
+    * copies: (orderOff, orderOn, rowsEqual, orderChanged). */
+  private def runScenario(): (Seq[String], Seq[String], Boolean, Boolean) = {
+    ops.Scale.cboStageTables(spark, sf)
+    def run(on: Boolean): (Seq[String], Set[Seq[Any]]) =
+      graft.util.Canon.withConfs(spark, ops.Scale.cboConfs.map(_ -> on.toString)) {
+        val df = spark.sql(ops.Scale.cboStarQuery)
+        (joinOrder(df), df.collect().map(_.toSeq).toSet)
+      }
+    val (offOrder, offRows) = run(false)
+    val (onOrder, onRows) = run(true)
+    (offOrder, onOrder, offRows == onRows && offRows.nonEmpty,
+      offOrder != onOrder)
+  }
+
   test("stats + CBO reorder the q9-class star join; results unchanged") {
-    val (off, on, rowsEqual, orderChanged) =
-      graft.tools.CboProbe.runScenario(spark, sf)
+    val (off, on, rowsEqual, orderChanged) = runScenario()
     assert(rowsEqual, "CBO reorder changed the query result")
     assert(orderChanged, s"no reorder: off=$off on=$on")
     // syntactic order starts at orders ⋈ lineitem (the biggest join);
@@ -1990,7 +2022,7 @@ class DppSpec extends AnyFunSuite {
     import org.apache.spark.sql.functions._
     val q = SparkEntry.queries("join_dpp_date")(spark, sf)
     q.collect()
-    val scan = graft.tools.MetricsProbe.allNodes(q.queryExecution.executedPlan)
+    val scan = PlanNodes.all(q.queryExecution.executedPlan)
       .collectFirst {
         case f: org.apache.spark.sql.execution.FileSourceScanExec
           if f.relation.location.rootPaths.mkString.contains("li_by_month") => f
