@@ -61,7 +61,7 @@ object Bench {
       // explicit checkpoint via the same tmpfs root as the timed queries —
       // an implicit location would leak a /tmp dir per bench run (ADVICE r5)
       val ckpt = graft.ops.Streaming.ckptDir("bench_warmup")
-      graft.ops.Streaming.dropCkpt(ckpt)
+      graft.util.Canon.deleteTree(ckpt)
       val q = spark.readStream.format("rate").option("numPartitions", "1")
         .option("rowsPerSecond", "1").load()
         .groupBy(org.apache.spark.sql.functions.window(
@@ -74,7 +74,7 @@ object Bench {
         .start()
       q.awaitTermination(30000); if (q.isActive) q.stop()
       spark.sql("DROP TABLE IF EXISTS graft_warmup")
-      graft.ops.Streaming.dropCkpt(ckpt)
+      graft.util.Canon.deleteTree(ckpt)
     }
     // Round-6: failures must be VISIBLE in the artifact (round-5 verdict
     // item 3) — a query that throws used to record a healthy-looking wall

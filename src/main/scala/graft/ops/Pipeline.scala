@@ -952,36 +952,12 @@ object Pipeline {
     * and the near-dedup state (labels + hashed sets + band table) over the
     * corpus's GOPHER SURVIVORS — everything a production release pipeline
     * persists between crawl increments. Returns (dir, split). */
-  private val stagedRelease = new java.util.concurrent.ConcurrentHashMap[
-    String, java.util.concurrent.CompletableFuture[java.lang.Boolean]]()
   private[graft] def stagedReleaseState(s: SparkSession, d: String)
       : (String, Long) = {
     val docs = tbl(s, d, "documents")
     val split = (docs.agg(max(col("doc_id"))).head().getLong(0) + 1) * 3 / 4
-    val dir = s"/tmp/graft_io/release_state_${d.hashCode.toHexString}_" +
-      srcStamp(d, "documents")
-    // Same-key callers must block until the write completes, but the
-    // multi-second Spark write may NOT run inside a ConcurrentHashMap
-    // mapping function (it would lock the hash bin against unrelated keys
-    // — r12 ADVICE). So the map stores a future: the map operation itself
-    // is a cheap putIfAbsent, the winning caller performs the write and
-    // completes the future, everyone joins it outside the map. A failed
-    // write removes its future so a later caller can retry (the property
-    // the old computeIfAbsent gave for free).
-    val fresh = new java.util.concurrent.CompletableFuture[java.lang.Boolean]()
-    val prev = stagedRelease.putIfAbsent(dir, fresh)
-    val fut = if (prev == null) {
-      try {
-        releaseStateWrite(docs.where(col("doc_id") < split), dir)
-        fresh.complete(java.lang.Boolean.TRUE)
-      } catch { case e: Throwable =>
-        fresh.completeExceptionally(e)
-        stagedRelease.remove(dir, fresh)
-        throw e
-      }
-      fresh
-    } else prev
-    fut.join()
+    val dir = staged(d, "documents", "release_state")(
+      releaseStateWrite(docs.where(col("doc_id") < split), _))
     (dir, split)
   }
 

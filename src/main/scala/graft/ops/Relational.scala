@@ -60,23 +60,17 @@ object Relational {
     * parallel with no shuffle — the query's only sort is the bounded
     * output orderBy. */
   private val scanBinaryFile: Q = (s, d) => {
-    // dir is keyed by the SOURCE table's content stamp and recreated from
-    // empty: files are written individually (no mode("overwrite") sweep),
-    // so a regenerated documents table must not leave stale doc_*.bin
-    // files behind to be read back (ADVICE r14)
-    val out = s"$ioTmp/bin_docs_${d.hashCode.toHexString}_${srcStamp(d, "documents")}"
-    val dir = java.nio.file.Paths.get(out)
-    if (java.nio.file.Files.exists(dir)) {
-      java.nio.file.Files.walk(dir).sorted(java.util.Comparator.reverseOrder())
-        .forEach(p => java.nio.file.Files.delete(p))
+    // files are written individually (no mode("overwrite") sweep); the
+    // staged dir starts empty, so no stale doc_*.bin is read back
+    val out = staged(d, "documents", "bin_docs") { dir =>
+      tbl(s, d, "documents").where(col("doc_id") < 20)
+        .select(col("doc_id"), col("text")).collect()  // 20 bounded rows
+        .foreach { r =>
+          java.nio.file.Files.write(
+            java.nio.file.Paths.get(dir, f"doc_${r.getLong(0)}%03d.bin"),
+            r.getString(1).getBytes(java.nio.charset.StandardCharsets.UTF_8))
+        }
     }
-    java.nio.file.Files.createDirectories(dir)
-    tbl(s, d, "documents").where(col("doc_id") < 20)
-      .select(col("doc_id"), col("text")).collect()  // 20 bounded rows
-      .foreach { r =>
-        java.nio.file.Files.write(dir.resolve(f"doc_${r.getLong(0)}%03d.bin"),
-          r.getString(1).getBytes(java.nio.charset.StandardCharsets.UTF_8))
-      }
     s.read.format("binaryFile").load(out)
       .select(
         regexp_extract(col("path"), "doc_(\\d+)\\.bin$", 1).cast("long")

@@ -93,11 +93,7 @@ object Scale {
         s.sql(s"DROP TABLE IF EXISTS $tag")
         val loc = new java.io.File(new java.net.URI(
           s.conf.get("spark.sql.warehouse.dir")).getPath, tag)
-        def rec(f: java.io.File): Unit = {
-          val kids = f.listFiles(); if (kids != null) kids.foreach(rec)
-          f.delete()
-        }
-        if (loc.exists) rec(loc)
+        deleteTree(loc.getPath)
         tbl(s, d, t).write.mode("overwrite").saveAsTable(tag)
         s.sql(s"ALTER TABLE $tag SET TBLPROPERTIES ('graft.stamp' = '$stamp')")
         s.sql(s"ANALYZE TABLE $tag COMPUTE STATISTICS FOR ALL COLUMNS")
@@ -255,9 +251,8 @@ object Scale {
       .orderBy("p_partkey")
   }
 
-  private[graft] def zorderDir(s: SparkSession, d: String): String = {
-    val dir = s"/tmp/graft_io/part_zorder_${d.hashCode.toHexString}_${srcStamp(d, "part")}"
-    if (stagedDirs.add(dir)) {
+  private[graft] def zorderDir(s: SparkSession, d: String): String =
+    staged(d, "part", "part_zorder") { dir =>
       tbl(s, d, "part")
         .selectExpr("p_partkey", s"$zX AS x", s"$zY AS y",
           s"${zSpark("(" + zX + ")", "(" + zY + ")", ZBits)} AS z")
@@ -265,10 +260,6 @@ object Scale {
         .sortWithinPartitions("z")
         .write.mode("overwrite").parquet(dir)
     }
-    dir
-  }
-
-  private val stagedDirs = java.util.concurrent.ConcurrentHashMap.newKeySet[String]()
 
   /** Hive-style partitioned layout: documents written partitionBy(lang),
     * read back with a partition predicate — the scan must list only the
@@ -282,12 +273,9 @@ object Scale {
       .orderBy("doc_id")
   }
 
-  private[graft] def partitionedDocsDir(s: SparkSession, d: String): String = {
-    val dir = s"/tmp/graft_io/docs_by_lang_${d.hashCode.toHexString}_${srcStamp(d, "documents")}"
-    if (stagedDirs.add(dir))
-      tbl(s, d, "documents").write.partitionBy("lang").mode("overwrite").parquet(dir)
-    dir
-  }
+  private[graft] def partitionedDocsDir(s: SparkSession, d: String): String =
+    staged(d, "documents", "docs_by_lang")(
+      tbl(s, d, "documents").write.partitionBy("lang").mode("overwrite").parquet(_))
   private[graft] def partitionedDocs(s: SparkSession, d: String): DataFrame =
     s.read.parquet(partitionedDocsDir(s, d))
 
@@ -299,10 +287,9 @@ object Scale {
     * deterministic, oracle-checkable 1 (and the layout writes N files for
     * N langs instead of tasks×langs small files — the 100 TB sink shape). */
   private val scanMetadata: Q = (s, d) => {
-    val dir = s"/tmp/graft_io/docs_meta_${d.hashCode.toHexString}_${srcStamp(d, "documents")}"
-    if (stagedDirs.add(dir))
+    val dir = staged(d, "documents", "docs_meta")(
       tbl(s, d, "documents").repartition(col("lang"))
-        .write.partitionBy("lang").mode("overwrite").parquet(dir)
+        .write.partitionBy("lang").mode("overwrite").parquet(_))
     s.read.parquet(dir)
       .select(col("_metadata.file_path").as("fp"))
       .select(regexp_extract(col("fp"), "lang=([^/]+)", 1).as("lang"), col("fp"))
@@ -323,16 +310,13 @@ object Scale {
     * rollover — the audited invariant (files = contiguous sorted ranges of
     * bounded size) is what matters, not the task count. */
   private val sinkCompact: Q = (s, d) => {
-    val frag =
-      s"/tmp/graft_io/docs_frag_${d.hashCode.toHexString}_${srcStamp(d, "documents")}"
-    if (stagedDirs.add(frag))
-      tbl(s, d, "documents").repartition(32).write.mode("overwrite").parquet(frag)
-    val out = s"${frag}_compact"
-    if (stagedDirs.add(out))
+    val frag = staged(d, "documents", "docs_frag")(
+      tbl(s, d, "documents").repartition(32).write.mode("overwrite").parquet(_))
+    val out = staged(d, "documents", "docs_compact")(
       s.read.parquet(frag)
         .coalesce(1).sortWithinPartitions("doc_id")
         .write.mode("overwrite").option("maxRecordsPerFile", 200)
-        .parquet(out)
+        .parquet(_))
     val w = Window.orderBy(col("min_doc"))
     s.read.parquet(out)
       .groupBy(col("_metadata.file_path").as("fp"))
@@ -356,15 +340,13 @@ object Scale {
     * n_chars) from the source table; NewOpsSpec pins the mechanics
     * (3-field merged schema, NULL backfill only in gen 1). */
   private val scanSchemaEvolution: Q = (s, d) => {
-    val base =
-      s"/tmp/graft_io/docs_evo_${d.hashCode.toHexString}_${srcStamp(d, "documents")}"
-    if (stagedDirs.add(base)) {
+    val base = staged(d, "documents", "docs_evo") { dir =>
       val docs = tbl(s, d, "documents")
       docs.where(col("doc_id") % 2 === 0).select(col("doc_id"), col("lang"))
-        .coalesce(1).write.mode("overwrite").parquet(s"$base/gen=1")
+        .coalesce(1).write.mode("overwrite").parquet(s"$dir/gen=1")
       docs.where(col("doc_id") % 2 === 1)
         .select(col("doc_id"), col("lang"), col("n_chars"))
-        .coalesce(1).write.mode("overwrite").parquet(s"$base/gen=2")
+        .coalesce(1).write.mode("overwrite").parquet(s"$dir/gen=2")
     }
     s.read.option("mergeSchema", "true")
       .parquet(s"$base/gen=1", s"$base/gen=2")
@@ -387,15 +369,12 @@ object Scale {
     * PartitionPruneSpec pins the pruned-partition count so a regression
     * fails the suite). At 100 TB this is the difference between reading a
     * week and reading the lake. */
-  private[graft] def partitionedEventsDir(s: SparkSession, d: String): String = {
-    val dir = s"/tmp/graft_io/events_by_date_${d.hashCode.toHexString}_${srcStamp(d, "events")}"
-    if (stagedDirs.add(dir))
+  private[graft] def partitionedEventsDir(s: SparkSession, d: String): String =
+    staged(d, "events", "events_by_date")(
       tbl(s, d, "events")
         .withColumn("event_date", date_format(col("ts"), "yyyy-MM-dd"))
         .repartition(col("event_date"))
-        .write.partitionBy("event_date").mode("overwrite").parquet(dir)
-    dir
-  }
+        .write.partitionBy("event_date").mode("overwrite").parquet(_))
 
   private val scanParquetPartitioned: Q = (s, d) =>
     s.read.parquet(partitionedEventsDir(s, d))
@@ -417,16 +396,13 @@ object Scale {
     * directories are listed/read (DppSpec pins `dynamicpruning` +
     * pruned-partition count). The 100 TB read: one month of the fact, not
     * 83. */
-  private[graft] def monthPartitionedLineitemDir(s: SparkSession, d: String): String = {
-    val dir = s"/tmp/graft_io/li_by_month_${d.hashCode.toHexString}_${srcStamp(d, "lineitem")}"
-    if (stagedDirs.add(dir))
+  private[graft] def monthPartitionedLineitemDir(s: SparkSession, d: String): String =
+    staged(d, "lineitem", "li_by_month")(
       tbl(s, d, "lineitem")
         .withColumn("ship_month", date_format(col("l_shipdate"), "yyyy-MM"))
         .select("l_orderkey", "l_extendedprice", "l_discount", "ship_month")
         .repartition(col("ship_month"))
-        .write.partitionBy("ship_month").mode("overwrite").parquet(dir)
-    dir
-  }
+        .write.partitionBy("ship_month").mode("overwrite").parquet(_))
 
   private val joinDppDate: Q = (s, d) => {
     val fact = s.read.parquet(monthPartitionedLineitemDir(s, d))
@@ -455,11 +431,10 @@ object Scale {
     * `dynamicpruning` into the executed plan so a regression that silently
     * reverts to a full scan fails the suite, not a benchmark. */
   private val joinDpp: Q = (s, d) => {
-    val dimDir = s"/tmp/graft_io/lang_dim_${d.hashCode.toHexString}_${srcStamp(d, "documents")}"
-    if (stagedDirs.add(dimDir))
+    val dimDir = staged(d, "documents", "lang_dim")(
       tbl(s, d, "documents").groupBy("lang")
         .agg(count(lit(1)).as("n_docs"))
-        .coalesce(1).write.mode("overwrite").parquet(dimDir)
+        .coalesce(1).write.mode("overwrite").parquet(_))
     val dim = s.read.parquet(dimDir)
     val top = dim.agg(max(col("n_docs"))).head().getLong(0)
     partitionedDocs(s, d)
@@ -490,15 +465,13 @@ object Scale {
     * rotten values is the case a loader must catch, because no cheap
     * token-count check screens it out. */
   private val scanCsvMalformed: Q = (s, d) => {
-    val base =
-      s"/tmp/graft_io/csv_bad_${d.hashCode.toHexString}_${srcStamp(d, "orders")}"
-    if (stagedDirs.add(base))
+    val base = staged(d, "orders", "csv_bad")(
       tbl(s, d, "orders")
         .select(when(col("o_orderkey") % 7 === 0,
             concat(lit("junk|junk|junk_"), col("o_orderkey")))
           .otherwise(concat_ws("|", col("o_orderkey"), col("o_custkey"),
             col("o_totalprice"))).as("value"))
-        .write.mode("overwrite").text(base)
+        .write.mode("overwrite").text(_))
     val schema = StructType(Seq(
       StructField("ok", LongType), StructField("ck", LongType),
       StructField("price", DoubleType), StructField("_bad", StringType)))
@@ -522,9 +495,7 @@ object Scale {
     * here is a truncated object, the shape a half-written upload or a
     * mid-record split actually produces in a raw lake. */
   private val scanJsonMalformed: Q = (s, d) => {
-    val base =
-      s"/tmp/graft_io/json_bad_${d.hashCode.toHexString}_${srcStamp(d, "orders")}"
-    if (stagedDirs.add(base))
+    val base = staged(d, "orders", "json_bad")(
       tbl(s, d, "orders")
         .select(when(col("o_orderkey") % 7 === 0,
             concat(lit("{\"ok\":"), col("o_orderkey"), lit(",\"ck\":")))
@@ -532,7 +503,7 @@ object Scale {
             lit("{\"ok\":"), col("o_orderkey"),
             lit(",\"ck\":"), col("o_custkey"),
             lit(",\"price\":"), col("o_totalprice"), lit("}"))).as("value"))
-        .write.mode("overwrite").text(base)
+        .write.mode("overwrite").text(_))
     val schema = StructType(Seq(
       StructField("ok", LongType), StructField("ck", LongType),
       StructField("price", DoubleType), StructField("_bad", StringType)))

@@ -26,33 +26,28 @@ object Streaming {
   private val ioTmp = "/tmp/graft_io"
 
   /** The file stream source needs a directory — stage events (ts already
-    * rebuilt to µs + ms-truncated tsm, mirroring Canon.events) into one,
-    * once per (JVM, sfDir). */
-  private val staged = java.util.concurrent.ConcurrentHashMap.newKeySet[String]()
-  private def stagedEventsDir(s: SparkSession, d: String): String = {
-    val dir = s"$ioTmp/stream_events_${d.hashCode.toHexString}_${srcStamp(d, "events")}"
-    if (staged.add(dir))
-      tbl(s, d, "events").withColumn("tsm", tsMs(col("ts")))
-        .coalesce(1).write.mode("overwrite").parquet(dir)
-    dir
-  }
+    * rebuilt to µs + ms-truncated tsm, mirroring Canon.events) into one
+    * parquet file, or into four for a 4-batch replay. */
+  private def tsmEvents(s: SparkSession, d: String): DataFrame =
+    tbl(s, d, "events").withColumn("tsm", tsMs(col("ts")))
+  private def stagedEventsDir(s: SparkSession, d: String): String =
+    staged(d, "events", "stream_events")(
+      tsmEvents(s, d).coalesce(1).write.mode("overwrite").parquet(_))
+  private def stagedEvents4Dir(s: SparkSession, d: String): String =
+    staged(d, "events", "stream_events4")(
+      tsmEvents(s, d).repartition(4).write.mode("overwrite").parquet(_))
 
-  /** Schema of a STAGED (immutable per (JVM, sfDir)) parquet dir, derived
-    * once — VERDICT r17 item 4: every streaming invocation used to re-list
-    * the dir and re-read footers just to rebuild the identical schema (an
-    * extra driver-side job per rep, ~20 streaming ids × reps). Input
-    * metadata of the staged fixture, not a query result — same lifetime
-    * and key as the `staged` write-once set itself. */
-  private val stagedSchemas = new java.util.concurrent.ConcurrentHashMap[
-    String, org.apache.spark.sql.types.StructType]()
-  private def stagedSchema(s: SparkSession, dir: String)
-      : org.apache.spark.sql.types.StructType =
-    stagedSchemas.computeIfAbsent(dir, dd => s.read.parquet(dd).schema)
+  /** A file stream over a staged dir. Its schema comes from
+    * [[readParquet]], so repeated calls infer it once, not in a footer
+    * job per call. */
+  private def stagedStream(s: SparkSession, dir: String)
+      : org.apache.spark.sql.streaming.DataStreamReader =
+    s.readStream.schema(readParquet(s, dir).schema)
 
   /** events as a bounded stream from a staged directory. */
   private def eventsStream(s: SparkSession, d: String): DataFrame = {
     val dir = stagedEventsDir(s, d)
-    s.readStream.schema(stagedSchema(s, dir)).parquet(dir)
+    stagedStream(s, dir).parquet(dir)
   }
 
   /** Checkpoint root: tmpfs when available. Without an explicit location
@@ -72,12 +67,6 @@ object Streaming {
     s"$base/p${ProcessHandle.current().pid()}"
   }
   private[graft] def ckptDir(name: String): String = s"$ckptRoot/$name"
-  private[graft] def dropCkpt(path: String): Unit = {
-    def rec(f: java.io.File): Unit = {
-      val kids = f.listFiles(); if (kids != null) kids.foreach(rec); f.delete()
-    }
-    rec(new java.io.File(path))
-  }
 
   private[graft] val ProviderKey = "spark.sql.streaming.stateStore.providerClass"
   private[graft] val RocksProvider =
@@ -164,7 +153,7 @@ object Streaming {
       maxFilesPerTrigger: Option[Int] = None): DataFrame = {
     val name = s"graft_stream_${ctr.incrementAndGet()}"
     val ckpt = ckptDir(name)
-    dropCkpt(ckpt) // ADVICE r5: a stale dir from a crashed run would replay
+    deleteTree(ckpt) // ADVICE r5: a stale dir from a crashed run would replay
     // the input as already-processed (empty complete-mode result) or abort
     // append mode — clear BEFORE start, not only after success
     withConfs(s, providerPin(s)) {
@@ -175,7 +164,7 @@ object Streaming {
         q.awaitTermination()
       }
     }
-    dropCkpt(ckpt) // completed; reclaim the tmpfs space before the next rep
+    deleteTree(ckpt) // completed; reclaim the tmpfs space before the next rep
     s.table(name)
   }
 
@@ -277,11 +266,8 @@ object Streaming {
     * trigger emits one) contributes all-zero counters and cannot skew
     * totals, which is why `n_batches` is deliberately NOT an output. */
   private val streamObserveMetrics: Q = (s, d) => {
-    val dir = s"$ioTmp/stream_events4_${d.hashCode.toHexString}_${srcStamp(d, "events")}"
-    if (staged.add(dir))
-      tbl(s, d, "events").withColumn("tsm", tsMs(col("ts")))
-        .repartition(4).write.mode("overwrite").parquet(dir)
-    val src = s.readStream.schema(s.read.parquet(dir).schema)
+    val dir = stagedEvents4Dir(s, d)
+    val src = stagedStream(s, dir)
       .option("maxFilesPerTrigger", "1").parquet(dir)
       .observe("ingest_gate",
         count(lit(1)).as("n_rows"),
@@ -294,7 +280,7 @@ object Streaming {
       .select(col("event_id"))
     val name = s"graft_stream_obs_${ctr.incrementAndGet()}"
     val ckpt = ckptDir(name)
-    dropCkpt(ckpt)
+    deleteTree(ckpt)
     val q = withStreamConfs(s) {
       val q0 = src.writeStream.format("memory").queryName(name)
         .option("checkpointLocation", ckpt)
@@ -303,7 +289,7 @@ object Streaming {
     }
     val mets = q.recentProgress.toSeq
       .flatMap(p => Option(p.observedMetrics.get("ingest_gate")))
-    dropCkpt(ckpt)
+    deleteTree(ckpt)
     def tot(fld: String): Long = mets.map(_.getAs[Long](fld)).sum
     val nKept = s.table(name).count()
     import s.implicits._
@@ -441,8 +427,7 @@ object Streaming {
     * the latest event, then the straggler, which is then dropped as late.
     * Self-verified (StreamingSpec asserts the exclusion). */
   private val streamWatermarkLate: Q = (s, d) => {
-    val dir = s"$ioTmp/stream_late_${d.hashCode.toHexString}"
-    if (staged.add(dir)) {
+    val dir = staged(d, "events", "stream_late") { dir =>
       val ev = tbl(s, d, "events")
       // One aggregation finds the straggler (globally earliest event) and
       // the tail (latest) — replaces round 1's two global sorts + anti-join
@@ -473,7 +458,7 @@ object Streaming {
       ev.where(col("event_id") === loId).coalesce(1).write.mode("append").parquet(dir)
       mtime(20)
     }
-    val stream = s.readStream.schema(s.read.parquet(dir).schema)
+    val stream = stagedStream(s, dir)
       .option("maxFilesPerTrigger", 1).parquet(dir)
       .withWatermark("ts", "10 minutes")
       .groupBy(window(col("ts"), "1 day"))
@@ -486,13 +471,12 @@ object Streaming {
   /** Streaming dedup on event_id over a doubled input (events written twice);
     * the deduped stream must aggregate identically to the single batch. */
   private val streamDedup: Q = (s, d) => {
-    val dir = s"$ioTmp/stream_dup_${d.hashCode.toHexString}"
-    if (staged.add(dir)) {
+    val dir = staged(d, "events", "stream_dup") { dir =>
       val ev = tbl(s, d, "events")
       ev.coalesce(1).write.mode("overwrite").parquet(dir)
       ev.coalesce(1).write.mode("append").parquet(dir)
     }
-    val stream = s.readStream.schema(s.read.parquet(dir).schema).parquet(dir)
+    val stream = stagedStream(s, dir).parquet(dir)
     val deduped = runToTable(s,
       stream.dropDuplicates("event_id")
         .select(col("event_id"), col("event_type"), col("value")),
@@ -606,7 +590,7 @@ object Streaming {
     val tag = ctr.incrementAndGet()
     val out = s"$ioTmp/foreach_out_${d.hashCode.toHexString}_$tag"
     val ckpt = ckptDir(s"foreach_$tag")
-    dropCkpt(ckpt) // clear-before-start, same contract as runToTable
+    deleteTree(ckpt) // clear-before-start, same contract as runToTable
     withStreamConfs(s) {
       val q = eventsStream(s, d)
         .where(col("event_type") === "purchase")
@@ -621,7 +605,7 @@ object Streaming {
         .trigger(Trigger.AvailableNow()).start()
       q.awaitTermination()
     }
-    dropCkpt(ckpt)
+    deleteTree(ckpt)
     s.read.parquet(out)
       .groupBy(col("user_id"))
       .agg(count(lit(1)).as("n_purchases"),
@@ -648,7 +632,7 @@ object Streaming {
         col("m.last_cents").as("last_cents"), col("m.last_ms").as("last_ms"))
     val staging = s"${sink}_staging"
     merged.write.mode("overwrite").parquet(staging)
-    dropCkpt(sink)
+    deleteTree(sink)
     if (!new java.io.File(staging).renameTo(new java.io.File(sink)))
       throw new java.io.IOException(s"staging swap failed for $sink")
   }
@@ -664,15 +648,11 @@ object Streaming {
     * idempotent sink must not hold outside the transaction). */
   private[graft] def idempotentUpsertReplay(s: SparkSession, d: String,
       sink: String): DataFrame = {
-    val src = s"$ioTmp/stream_events4_${d.hashCode.toHexString}_" +
-      srcStamp(d, "events")
-    if (staged.add(src))
-      tbl(s, d, "events").withColumn("tsm", tsMs(col("ts")))
-        .repartition(4).write.mode("overwrite").parquet(src)
+    val src = stagedEvents4Dir(s, d)
     val ckpt = ckptDir(s"idem_${ctr.incrementAndGet()}")
-    dropCkpt(ckpt)
+    deleteTree(ckpt)
     withStreamConfs(s) {
-      val q = s.readStream.schema(stagedSchema(s, src))
+      val q = stagedStream(s, src)
         .option("maxFilesPerTrigger", "1").parquet(src)
         .where(col("event_type") === "purchase")
         .select(col("user_id"), col("event_id").as("last_event_id"),
@@ -684,7 +664,7 @@ object Streaming {
         .trigger(Trigger.AvailableNow()).start()
       q.awaitTermination()
     }
-    dropCkpt(ckpt)
+    deleteTree(ckpt)
     s.read.parquet(sink).orderBy("user_id")
   }
 
@@ -699,9 +679,9 @@ object Streaming {
     * sensitivity (double-counting, resurrection of older versions) breaks
     * the hash. StreamingSpec additionally asserts pass-1 ≡ pass-2 row sets. */
   private val streamIdempotentSink: Q = (s, d) => {
-    val sink = s"$ioTmp/idem_sink_${d.hashCode.toHexString}_" +
-      s"${srcStamp(d, "events")}_${ctr.incrementAndGet()}"
-    dropCkpt(sink) // fresh sink per invocation
+    val sink =
+      s"$ioTmp/idem_sink_${d.hashCode.toHexString}_${ctr.incrementAndGet()}"
+    deleteTree(sink) // fresh sink per invocation
     idempotentUpsertReplay(s, d, sink) // pass 1: normal run
     val out = idempotentUpsertReplay(s, d, sink) // pass 2: full REDELIVERY
     out
@@ -810,14 +790,13 @@ object Streaming {
     * standing side stays on disk, bands equi-join. */
   private val streamNeardup: Q = (s, d) => {
     val (st, split) = TextDedup.stagedNeardupState(s, d)
-    val srcDir = s"$ioTmp/stream_nd_${d.hashCode.toHexString}_${srcStamp(d, "documents")}"
-    if (staged.add(srcDir))
+    val srcDir = staged(d, "documents", "stream_nd")(
       tbl(s, d, "documents").where(col("doc_id") >= split)
-        .repartition(4).write.mode("overwrite").parquet(srcDir)
+        .repartition(4).write.mode("overwrite").parquet(_))
     val tag = ctr.incrementAndGet()
     val out = s"$ioTmp/stream_nd_out_${d.hashCode.toHexString}_$tag"
     val ckpt = ckptDir(s"neardup_$tag")
-    dropCkpt(ckpt) // clear-before-start, same contract as runToTable
+    deleteTree(ckpt) // clear-before-start, same contract as runToTable
     // union vocabulary probed ONCE over standing ∪ the full increment —
     // every micro-batch's vocabulary is a subset, so routing and mask bits
     // match the batch path exactly without a per-trigger driver action
@@ -829,7 +808,7 @@ object Streaming {
     val maskOk = TextDedup.neardupMaskRouteOk(st, vocab,
       s.read.parquet(srcDir).count()) // row count ≥ set count: conservative
     withStreamConfs(s) {
-      val q = s.readStream.schema(stagedSchema(s, srcDir))
+      val q = stagedStream(s, srcDir)
         .option("maxFilesPerTrigger", "1").parquet(srcDir)
         .writeStream.option("checkpointLocation", ckpt)
         .foreachBatch { (batch: org.apache.spark.sql.Dataset[org.apache.spark.sql.Row],
@@ -847,7 +826,7 @@ object Streaming {
         .trigger(Trigger.AvailableNow()).start()
       q.awaitTermination()
     }
-    dropCkpt(ckpt)
+    deleteTree(ckpt)
     s.read.parquet(out)
       .groupBy(col("doc_id"))
       .agg(count(lit(1)).as("n_matches"), min(col("sid")).as("min_sid"),
@@ -873,7 +852,7 @@ object Streaming {
     val tag = ctr.incrementAndGet()
     val dir = s"$ioTmp/stream_resume_${d.hashCode.toHexString}_$tag"
     val ckpt = ckptDir(s"resume_$tag")
-    dropCkpt(ckpt); dropCkpt(dir)
+    deleteTree(ckpt); deleteTree(dir)
     val ev = tbl(s, d, "events")
       .select(col("event_id"), col("event_type"), col("value"))
     ev.where(col("event_id") % 2 === 0)
@@ -908,7 +887,7 @@ object Streaming {
     // checkpoint can all be reclaimed before returning
     val out = s.createDataFrame(
       java.util.Arrays.asList(second.collect(): _*), second.schema)
-    dropCkpt(ckpt); dropCkpt(dir)
+    deleteTree(ckpt); deleteTree(dir)
     s.catalog.dropTempView(s"graft_resume_b_$tag")
     (firstRows, out, read2)
   }

@@ -520,7 +520,7 @@ object TextDedup {
     // item 8): the bounded slice runs the identical collapse → pair →
     // propagate → expand composition, so the sliced and full-corpus paths
     // cannot drift apart; the DuckDB recursive-CTE oracle stays independent.
-    // MEMOIZED per dataset (path + file stamp, the Scale.stagedDirs pattern —
+    // MEMOIZED per dataset (path + file stamp, the Canon.staged key —
     // round-6 verdict item 1): three queries consume these labels and the
     // iterative propagation is many fixed-overhead Spark jobs, so recomputing
     // it per invocation tripled the trio's bench cost. The collect is bounded
@@ -832,16 +832,15 @@ object TextDedup {
         sort_array(array_distinct(expr("transform(tk, t -> xxhash64(t))"))).as("sh"))
 
   /** Stage-or-load the standing near-dedup state for the canonical
-    * corpus/batch split (first three quarters of doc ids = corpus) — the
-    * Scale.stagedDirs pattern shared by pipeline_neardup_incremental and
-    * stream_neardup. Returns the state plus the split id. */
+    * corpus/batch split (first three quarters of doc ids = corpus), shared
+    * by pipeline_neardup_incremental and stream_neardup. Returns the state
+    * plus the split id. */
   private[graft] def stagedNeardupState(s: SparkSession, d: String)
       : (NeardupState, Long) = {
     val docs = tbl(s, d, "documents")
     val split = (docs.agg(max(col("doc_id"))).head().getLong(0) + 1) * 3 / 4
-    val dir = s"/tmp/graft_io/neardup_state_${d.hashCode.toHexString}_" +
-      srcStamp(d, "documents")
-    if (stagedState.add(dir)) neardupStateWrite(docs.where(col("doc_id") < split), dir)
+    val dir = staged(d, "documents", "neardup_state")(
+      neardupStateWrite(docs.where(col("doc_id") < split), _))
     (neardupStateRead(s, dir), split)
   }
 
@@ -1080,7 +1079,6 @@ object TextDedup {
     neardupIncrementalLabels(docs.where(col("doc_id") < split),
       docs.where(col("doc_id") >= split), Some(st))._1.orderBy("node")
   }
-  private val stagedState = java.util.concurrent.ConcurrentHashMap.newKeySet[String]()
 
   /** The refreshed SET TABLE a state fold produces (read-only twin of
     * [[neardupStateRefresh]] so bench reps stay idempotent): standing
@@ -2012,9 +2010,8 @@ object TextDedup {
   private val simIvfPqServed: Q = (s, d) => {
     val e = tbl(s, d, "embeddings").select(col("vec_id"), col("embedding"))
       .localCheckpoint(true)
-    val dir = s"/tmp/graft_io/ann_index_${d.hashCode.toHexString}_" +
-      srcStamp(d, "embeddings")
-    if (stagedState.add(dir)) ivfPqTrain(e).foreach(saveAnnIndex(s, _, dir))
+    val dir = staged(d, "embeddings", "ann_index")(dir =>
+      ivfPqTrain(e).foreach(saveAnnIndex(s, _, dir)))
     loadAnnIndex(s, dir) match {
       case Some(model) => ivfPqQuery(s, e, model)
       case None =>
@@ -2998,7 +2995,8 @@ object TextDedup {
     *     PNG file — dims (8 + id%16) × (8 + 7·id%16), grayscale pixel
     *     v(x,y) = (id·31 + len·17 + 7x + 13y) mod 256 where len is the
     *     doc's UTF-8 byte length — written with ImageIO.write into a
-    *     srcStamp-keyed staging dir (recreated from empty; ADVICE r14).
+    *     staged dir ([[stagedImages]], shared with the resize and histogram
+    *     ids).
     *  2. INGEST: Spark's `binaryFile` source lists and reads the files in
     *     parallel (one file = one row, no shuffle).
     *  3. DECODE: ImageIO.read inside mapPartitions — a REAL PNG codec
@@ -3013,40 +3011,8 @@ object TextDedup {
     * (`multimodal_decode`) stays as the no-libs fallback twin. */
   private val multimodalDecodeReal: Q = (s, d) => {
     import javax.imageio.ImageIO
-    val out = s"/tmp/graft_io/png_docs_${d.hashCode.toHexString}_" +
-      srcStamp(d, "documents")
-    val dir = java.nio.file.Paths.get(out)
-    if (java.nio.file.Files.exists(dir)) {
-      java.nio.file.Files.walk(dir).sorted(java.util.Comparator.reverseOrder())
-        .forEach(p => java.nio.file.Files.delete(p))
-    }
-    java.nio.file.Files.createDirectories(dir)
-    tbl(s, d, "documents").where(col("doc_id") < 20)
-      .select(col("doc_id"), octet_length(col("text")).as("len"))
-      .collect() // 20 bounded fixture rows
-      .foreach { r =>
-        val id = r.getLong(0); val len = r.getInt(1).toLong
-        val w = (8 + id % 16).toInt; val h = (8 + (id * 7) % 16).toInt
-        val img = new java.awt.image.BufferedImage(w, h,
-          java.awt.image.BufferedImage.TYPE_INT_RGB)
-        var x = 0
-        while (x < w) {
-          var y = 0
-          while (y < h) {
-            val v = ((id * 31 + len * 17 + 7L * x + 13L * y) % 256).toInt
-            img.setRGB(x, y, (v << 16) | (v << 8) | v)
-            y += 1
-          }
-          x += 1
-        }
-        ImageIO.write(img, "png", new java.io.File(f"$out/doc_$id%03d.png"))
-      }
     import s.implicits._
-    s.read.format("binaryFile").load(out)
-      .select(regexp_extract(col("path"), "doc_(\\d+)\\.png$", 1).cast("long")
-        .as("doc_id"), col("content"))
-      .repartition(8, col("doc_id"))
-      .as[(Long, Array[Byte])]
+    binaryDocs(s, stagedImages(s, d, "png", pngPx), "png")
       .mapPartitions(_.map { case (id, bytes) =>
         val iis = ImageIO.createImageInputStream(
           new java.io.ByteArrayInputStream(bytes))
@@ -3073,28 +3039,89 @@ object TextDedup {
       .orderBy("doc_id")
   }
 
-  /** Recreate-from-empty staging dir keyed by the documents stamp. */
-  private def freshStaging(d: String, tag: String): String = {
-    val out = s"/tmp/graft_io/${tag}_${d.hashCode.toHexString}_" +
-      srcStamp(d, "documents")
-    val dir = java.nio.file.Paths.get(out)
-    if (java.nio.file.Files.exists(dir)) {
-      java.nio.file.Files.walk(dir).sorted(java.util.Comparator.reverseOrder())
-        .forEach(p => java.nio.file.Files.delete(p))
-    }
-    java.nio.file.Files.createDirectories(dir)
-    out
-  }
-
   /** The 20 bounded (doc_id, utf8-byte-length) fixture rows. */
   private def docMetas(s: SparkSession, d: String): Array[(Long, Long)] =
     tbl(s, d, "documents").where(col("doc_id") < 20)
       .select(col("doc_id"), octet_length(col("text")).as("len"))
       .collect().map(r => (r.getLong(0), r.getInt(1).toLong))
 
+  /** Width and height of fixture image `id`. */
+  private def imgDims(id: Long): (Int, Int) =
+    ((8 + id % 16).toInt, (8 + (id * 7) % 16).toInt)
+
+  /** Grayscale pixel of the lossless (PNG) image fixture. */
+  private def pngPx(id: Long, len: Long, x: Int, y: Int): Int =
+    ((id * 31 + len * 17 + 7L * x + 13L * y) % 256).toInt
+
+  /** Grayscale pixel of the JPEG fixture: a smooth gradient with no
+    * mod-256 wrap, ≤ 99+44+66 = 209. */
+  private def jpgPx(id: Long, len: Long, x: Int, y: Int): Int =
+    (((id * 5 + len) % 100) + 2 * x + 3 * y).toInt
+
+  /** One grayscale `fmt` image `doc_NNN.<fmt>` per fixture doc, pixel
+    * `px(id, len, x, y)`, staged once per documents stamp. */
+  private def stagedImages(s: SparkSession, d: String, fmt: String,
+      px: (Long, Long, Int, Int) => Int): String =
+    staged(d, "documents", s"${fmt}_docs") { dir =>
+      docMetas(s, d).foreach { case (id, len) =>
+        val (w, h) = imgDims(id)
+        val img = new java.awt.image.BufferedImage(w, h,
+          java.awt.image.BufferedImage.TYPE_INT_RGB)
+        var x = 0
+        while (x < w) {
+          var y = 0
+          while (y < h) {
+            val v = px(id, len, x, y)
+            img.setRGB(x, y, (v << 16) | (v << 8) | v)
+            y += 1
+          }
+          x += 1
+        }
+        javax.imageio.ImageIO.write(img, fmt,
+          new java.io.File(f"$dir/doc_$id%03d.$fmt"))
+      }
+    }
+
+  /** One 8 kHz mono 16-bit PCM WAV `doc_NNN.wav` per fixture doc, staged
+    * once per documents stamp: n = 64 + id mod 64 frames, sample
+    * i = ((id·131 + i·17) mod 2003) − 1001. */
+  private def stagedWavs(s: SparkSession, d: String): String =
+    staged(d, "documents", "wav_docs") { dir =>
+      import javax.sound.sampled.{AudioFormat, AudioInputStream, AudioSystem, AudioFileFormat}
+      docMetas(s, d).foreach { case (id, _) =>
+        val n = (64 + id % 64).toInt
+        val buf = new Array[Byte](n * 2)
+        var i = 0
+        while (i < n) {
+          val v = (((id * 131 + i * 17) % 2003) - 1001).toShort
+          buf(2 * i) = (v & 0xFF).toByte
+          buf(2 * i + 1) = ((v >> 8) & 0xFF).toByte
+          i += 1
+        }
+        val fmt = new AudioFormat(8000f, 16, 1, true, false)
+        val ais = new AudioInputStream(
+          new java.io.ByteArrayInputStream(buf), fmt, n.toLong)
+        AudioSystem.write(ais, AudioFileFormat.Type.WAVE,
+          new java.io.File(f"$dir/doc_$id%03d.wav"))
+      }
+    }
+
+  /** The `doc_NNN.<ext>` files under `dir` as (doc_id, bytes) rows, read
+    * through the binaryFile source and spread over 8 partitions for the
+    * decode. */
+  private def binaryDocs(s: SparkSession, dir: String, ext: String)
+      : org.apache.spark.sql.Dataset[(Long, Array[Byte])] = {
+    import s.implicits._
+    s.read.format("binaryFile").load(dir)
+      .select(regexp_extract(col("path"), s"doc_(\\d+)\\.$ext$$", 1)
+        .cast("long").as("doc_id"), col("content"))
+      .repartition(8, col("doc_id"))
+      .as[(Long, Array[Byte])]
+  }
+
   /** REAL nearest-neighbor resize over REAL decoded pixels: the PNG fixture
-    * from [[multimodalDecodeReal]]'s formula is re-staged, ingested via
-    * binaryFile, decoded with ImageIO, and subsampled to a fixed 8×8
+    * [[multimodalDecodeReal]] decodes is ingested via binaryFile, decoded
+    * with ImageIO, and subsampled to a fixed 8×8
     * thumbnail — out(x,y) = in(⌊x·w/8⌋, ⌊y·h/8⌋) — inside mapPartitions
     * (the thumbnail/feature-extract stage of an image pipeline, running a
     * real codec on executors). PNG is lossless and the subsample index
@@ -3102,29 +3129,8 @@ object TextDedup {
     * by DuckDB — full hash oracle for a decode→transform chain. */
   private val multimodalResizeReal: Q = (s, d) => {
     import javax.imageio.ImageIO
-    val out = freshStaging(d, "png_rs")
-    docMetas(s, d).foreach { case (id, len) =>
-      val w = (8 + id % 16).toInt; val h = (8 + (id * 7) % 16).toInt
-      val img = new java.awt.image.BufferedImage(w, h,
-        java.awt.image.BufferedImage.TYPE_INT_RGB)
-      var x = 0
-      while (x < w) {
-        var y = 0
-        while (y < h) {
-          val v = ((id * 31 + len * 17 + 7L * x + 13L * y) % 256).toInt
-          img.setRGB(x, y, (v << 16) | (v << 8) | v)
-          y += 1
-        }
-        x += 1
-      }
-      ImageIO.write(img, "png", new java.io.File(f"$out/doc_$id%03d.png"))
-    }
     import s.implicits._
-    s.read.format("binaryFile").load(out)
-      .select(regexp_extract(col("path"), "doc_(\\d+)\\.png$", 1).cast("long")
-        .as("doc_id"), col("content"))
-      .repartition(8, col("doc_id"))
-      .as[(Long, Array[Byte])]
+    binaryDocs(s, stagedImages(s, d, "png", pngPx), "png")
       .mapPartitions(_.map { case (id, bytes) =>
         val img = ImageIO.read(new java.io.ByteArrayInputStream(bytes))
         val (w, h) = (img.getWidth, img.getHeight)
@@ -3159,29 +3165,8 @@ object TextDedup {
     * parallel map work, no shuffle but the bounded output sort. */
   private val multimodalImageHistogram: Q = (s, d) => {
     import javax.imageio.ImageIO
-    val out = freshStaging(d, "png_hist")
-    docMetas(s, d).foreach { case (id, len) =>
-      val w = (8 + id % 16).toInt; val h = (8 + (id * 7) % 16).toInt
-      val img = new java.awt.image.BufferedImage(w, h,
-        java.awt.image.BufferedImage.TYPE_INT_RGB)
-      var x = 0
-      while (x < w) {
-        var y = 0
-        while (y < h) {
-          val v = ((id * 31 + len * 17 + 7L * x + 13L * y) % 256).toInt
-          img.setRGB(x, y, (v << 16) | (v << 8) | v)
-          y += 1
-        }
-        x += 1
-      }
-      ImageIO.write(img, "png", new java.io.File(f"$out/doc_$id%03d.png"))
-    }
     import s.implicits._
-    s.read.format("binaryFile").load(out)
-      .select(regexp_extract(col("path"), "doc_(\\d+)\\.png$", 1).cast("long")
-        .as("doc_id"), col("content"))
-      .repartition(8, col("doc_id"))
-      .as[(Long, Array[Byte])]
+    binaryDocs(s, stagedImages(s, d, "png", pngPx), "png")
       .mapPartitions(_.map { case (id, bytes) =>
         val img = ImageIO.read(new java.io.ByteArrayInputStream(bytes))
         val bins = new Array[Long](8)
@@ -3212,32 +3197,10 @@ object TextDedup {
     * over every pixel of every file must stay ≤ 16 luma levels. */
   private val multimodalDecodeJpegAudit: Q = (s, d) => {
     import javax.imageio.ImageIO
-    val out = freshStaging(d, "jpg_docs")
-    def px(id: Long, len: Long, x: Int, y: Int): Int =
-      (((id * 5 + len) % 100) + 2 * x + 3 * y).toInt // ≤ 99+44+66 = 209
-    docMetas(s, d).foreach { case (id, len) =>
-      val w = (8 + id % 16).toInt; val h = (8 + (id * 7) % 16).toInt
-      val img = new java.awt.image.BufferedImage(w, h,
-        java.awt.image.BufferedImage.TYPE_INT_RGB)
-      var x = 0
-      while (x < w) {
-        var y = 0
-        while (y < h) {
-          val v = px(id, len, x, y)
-          img.setRGB(x, y, (v << 16) | (v << 8) | v)
-          y += 1
-        }
-        x += 1
-      }
-      ImageIO.write(img, "jpg", new java.io.File(f"$out/doc_$id%03d.jpg"))
-    }
     import s.implicits._
+    val dir = stagedImages(s, d, "jpg", jpgPx)
     val lens = docMetas(s, d).toMap
-    s.read.format("binaryFile").load(out)
-      .select(regexp_extract(col("path"), "doc_(\\d+)\\.jpg$", 1).cast("long")
-        .as("doc_id"), col("content"))
-      .repartition(8, col("doc_id"))
-      .as[(Long, Array[Byte])]
+    binaryDocs(s, dir, "jpg")
       .mapPartitions(_.map { case (id, bytes) =>
         val iis = ImageIO.createImageInputStream(
           new java.io.ByteArrayInputStream(bytes))
@@ -3246,7 +3209,7 @@ object TextDedup {
         val fmt = reader.getFormatName.toUpperCase
         val img = reader.read(0)
         val len = lens(id)
-        val wExp = (8 + id % 16).toInt; val hExp = (8 + (id * 7) % 16).toInt
+        val (wExp, hExp) = imgDims(id)
         var maxErr = 0L; var x = 0
         while (x < img.getWidth) {
           var y = 0
@@ -3254,7 +3217,7 @@ object TextDedup {
             val rgb = img.getRGB(x, y)
             val luma = (((rgb >> 16) & 0xFF) + ((rgb >> 8) & 0xFF)
               + (rgb & 0xFF)) / 3
-            val err = math.abs(luma - px(id, len, x, y)).toLong
+            val err = math.abs(luma - jpgPx(id, len, x, y)).toLong
             if (err > maxErr) maxErr = err
             y += 1
           }
@@ -3281,30 +3244,9 @@ object TextDedup {
     * from the staging sample formula: full hash oracle over a real audio
     * codec + framing + feature pipeline. */
   private val multimodalAudioEnergy: Q = (s, d) => {
-    import javax.sound.sampled.{AudioFormat, AudioInputStream, AudioSystem, AudioFileFormat}
-    val out = freshStaging(d, "wav_energy")
-    docMetas(s, d).foreach { case (id, _) =>
-      val n = (64 + id % 64).toInt
-      val buf = new Array[Byte](n * 2)
-      var i = 0
-      while (i < n) {
-        val v = (((id * 131 + i * 17) % 2003) - 1001).toShort
-        buf(2 * i) = (v & 0xFF).toByte
-        buf(2 * i + 1) = ((v >> 8) & 0xFF).toByte
-        i += 1
-      }
-      val fmt = new AudioFormat(8000f, 16, 1, true, false)
-      val ais = new AudioInputStream(
-        new java.io.ByteArrayInputStream(buf), fmt, n.toLong)
-      AudioSystem.write(ais, AudioFileFormat.Type.WAVE,
-        new java.io.File(f"$out/doc_$id%03d.wav"))
-    }
+    import javax.sound.sampled.AudioSystem
     import s.implicits._
-    s.read.format("binaryFile").load(out)
-      .select(regexp_extract(col("path"), "doc_(\\d+)\\.wav$", 1).cast("long")
-        .as("doc_id"), col("content"))
-      .repartition(8, col("doc_id"))
-      .as[(Long, Array[Byte])]
+    binaryDocs(s, stagedWavs(s, d), "wav")
       .mapPartitions(_.flatMap { case (id, bytes) =>
         val ais = AudioSystem.getAudioInputStream(
           new java.io.ByteArrayInputStream(bytes))
@@ -3335,30 +3277,9 @@ object TextDedup {
     * frame count, sample sum/min/max) is recomputed closed-form by
     * DuckDB — a full hash oracle over a real audio codec round-trip. */
   private val multimodalDecodeWav: Q = (s, d) => {
-    import javax.sound.sampled.{AudioFormat, AudioInputStream, AudioSystem, AudioFileFormat}
-    val out = freshStaging(d, "wav_docs")
-    docMetas(s, d).foreach { case (id, _) =>
-      val n = (64 + id % 64).toInt
-      val buf = new Array[Byte](n * 2)
-      var i = 0
-      while (i < n) {
-        val v = (((id * 131 + i * 17) % 2003) - 1001).toShort
-        buf(2 * i) = (v & 0xFF).toByte
-        buf(2 * i + 1) = ((v >> 8) & 0xFF).toByte
-        i += 1
-      }
-      val fmt = new AudioFormat(8000f, 16, 1, true, false)
-      val ais = new AudioInputStream(
-        new java.io.ByteArrayInputStream(buf), fmt, n.toLong)
-      AudioSystem.write(ais, AudioFileFormat.Type.WAVE,
-        new java.io.File(f"$out/doc_$id%03d.wav"))
-    }
+    import javax.sound.sampled.AudioSystem
     import s.implicits._
-    s.read.format("binaryFile").load(out)
-      .select(regexp_extract(col("path"), "doc_(\\d+)\\.wav$", 1).cast("long")
-        .as("doc_id"), col("content"))
-      .repartition(8, col("doc_id"))
-      .as[(Long, Array[Byte])]
+    binaryDocs(s, stagedWavs(s, d), "wav")
       .mapPartitions(_.map { case (id, bytes) =>
         val ais = AudioSystem.getAudioInputStream(
           new java.io.ByteArrayInputStream(bytes))
