@@ -14,19 +14,15 @@ import org.apache.spark.sql.functions._
   *   import graft.api.functions._
   *   import graft.api.implicits._
   *
-  *   Graft.init(spark)                      // once per session
   *   df.agg(hllDistinct($"user_id"))        // sketch aggregates
   *   trades.asofJoin(quotes, "sym", "ts")   // native as-of join
   * }}}
+  *
+  * No set-up call: with graft on the classpath every session Spark builds
+  * already holds the graft_* functions and plans the as-of join
+  * ([[graft.ext.GraftExtensions]]).
   */
 object Graft {
-
-  /** One-call session setup: registers every graft_* SQL function
-    * (idempotent; the as-of strategy self-injects on first use). */
-  def init(s: SparkSession): SparkSession = {
-    graft.ext.CatalystExt.register(s)
-    s
-  }
 
   /** The caller's (key, time, value) columns as the (user_id, bucket, v)
     * frame the per-series fits read. */
@@ -911,7 +907,8 @@ final class AnnIndex private[api] (s: SparkSession,
 }
 
 /** Column functions over the custom Catalyst surface. All resolve through
-  * the session function registry — call [[Graft.init]] first. */
+  * the session function registry, which [[graft.ext.GraftExtensions]]
+  * fills in every session. */
 object functions {
 
   /** Cosine similarity of two float-array columns (whole-stage-codegen

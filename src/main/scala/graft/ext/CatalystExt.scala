@@ -10,11 +10,12 @@ import org.apache.spark.sql.catalyst.util.ArrayData
 import org.apache.spark.sql.types._
 import org.apache.spark.unsafe.types.UTF8String
 
-/** Catalyst extension points — SURVEY.md §2.11: a native scalar Expression,
-  * a from-scratch TypedImperativeAggregate (HLL), and a table-generating
-  * Generator, all registered into the session FunctionRegistry so both the
-  * DSL (via expr) and spark.sql can call them. These run inside Tungsten
-  * rows with no serialization hop — the preferred escape hatch before UDFs.
+/** Catalyst extension points — SURVEY.md §2.11: native scalar
+  * Expressions, from-scratch TypedImperativeAggregates (HLL and the other
+  * sketches) and a table-generating Generator. [[GraftExtensions]] puts
+  * them in the FunctionRegistry of every session, so both the DSL (via
+  * expr) and spark.sql can call them. These run inside Tungsten rows with
+  * no serialization hop — the preferred escape hatch before UDFs.
   */
 object CatalystExt {
 
@@ -1070,49 +1071,70 @@ object CatalystExt {
   val CmsA: Array[Long] = Array(1103515245L, 1299709L, 15485863L, 32452843L)
   val CmsB: Array[Long] = Array(12345L, 7919L, 104729L, 1299721L)
 
-  /** True when the session's function registry has no `name` yet: the
-    * guard every graft_* registration runs behind, so a repeated call
-    * leaves the registered builder in place. */
+  /** True when the session's function registry has no `name` yet. */
   def missing(s: SparkSession, name: String): Boolean =
     !s.sessionState.functionRegistry.functionExists(FunctionIdentifier(name))
 
-  /** Register every extension the session's function registry is missing
-    * (idempotent, and cheap to repeat: query builders call this on every
-    * invocation, so a name already present is left alone instead of being
-    * replaced — the Pathling `SqlStrategy.setup` guard). The check is per
-    * session, so a `newSession()` (which starts from the built-ins) still
-    * gets every function on its first call. */
-  def register(s: SparkSession): Unit = {
-    def fn(name: String)(builder: Seq[Expression] => Expression): Unit =
+  private def intArg(e: Expression): Int =
+    e.eval(null).asInstanceOf[Number].intValue()
+
+  /** Every graft_* SQL function, name → builder: the one table both
+    * [[GraftExtensions]] (which installs it in every session Spark builds)
+    * and [[register]] read. */
+  val functions: Seq[(String, Seq[Expression] => Expression)] = Seq(
+    "graft_cosine" -> (exprs => CosineSimilarity(exprs(0), exprs(1))),
+    "graft_hll" -> (exprs => GraftHLL(exprs.head)),
+    "graft_heavy_hitters" -> (exprs => MisraGries(exprs(0), intArg(exprs(1)))),
+    "graft_kll_quantile" -> (exprs =>
+      KllQuantile(exprs(0), exprs(1), intArg(exprs(2)))),
+    "graft_bigrams" -> (exprs => Bigrams(exprs.head)),
+    "graft_topk_min" -> (exprs => TopKMin(exprs(0), exprs(1), intArg(exprs(2)))),
+    "graft_bitmap_distinct" -> (exprs =>
+      GraftBitmap(exprs(0), intArg(exprs(1)))),
+    "graft_cms" -> (exprs => CountMin(exprs.head)),
+    "graft_min_k_set" -> (exprs => MinKSet(exprs(0), intArg(exprs(1)))),
+    "graft_proto_long" -> (exprs =>
+      ProtoGet(exprs(0), intArg(exprs(1)), LongType)),
+    "graft_proto_double" -> (exprs =>
+      ProtoGet(exprs(0), intArg(exprs(1)), DoubleType)),
+    "graft_proto_string" -> (exprs =>
+      ProtoGet(exprs(0), intArg(exprs(1)), StringType)),
+    "graft_proto_longs" -> (exprs =>
+      ProtoGetRepeated(exprs(0), intArg(exprs(1)))),
+    "graft_proto_nested_long" -> (exprs =>
+      ProtoGetNested(exprs(0), intArg(exprs(1)), intArg(exprs(2)), LongType)),
+    "graft_proto_nested_double" -> (exprs =>
+      ProtoGetNested(exprs(0), intArg(exprs(1)), intArg(exprs(2)), DoubleType)),
+    "graft_proto_nested_string" -> (exprs =>
+      ProtoGetNested(exprs(0), intArg(exprs(1)), intArg(exprs(2)), StringType)),
+  )
+
+  /** Register every function of [[functions]] the session's registry is
+    * missing; a name already present is left alone. Sessions Spark builds
+    * already hold them all ([[GraftExtensions]]), so on those this changes
+    * nothing. */
+  def register(s: SparkSession): Unit =
+    functions.foreach { case (name, builder) =>
       if (missing(s, name))
         s.sessionState.functionRegistry
           .createOrReplaceTempFunction(name, builder, "scala_udf")
-    fn("graft_cosine")(exprs => CosineSimilarity(exprs(0), exprs(1)))
-    fn("graft_hll")(exprs => GraftHLL(exprs.head))
-    def intArg(e: Expression): Int =
-      e.eval(null).asInstanceOf[Number].intValue()
-    fn("graft_heavy_hitters")(exprs => MisraGries(exprs(0), intArg(exprs(1))))
-    fn("graft_kll_quantile")(exprs =>
-      KllQuantile(exprs(0), exprs(1), intArg(exprs(2))))
-    fn("graft_bigrams")(exprs => Bigrams(exprs.head))
-    fn("graft_topk_min")(exprs => TopKMin(exprs(0), exprs(1), intArg(exprs(2))))
-    fn("graft_bitmap_distinct")(exprs =>
-      GraftBitmap(exprs(0), intArg(exprs(1))))
-    fn("graft_cms")(exprs => CountMin(exprs.head))
-    fn("graft_min_k_set")(exprs => MinKSet(exprs(0), intArg(exprs(1))))
-    fn("graft_proto_long")(exprs =>
-      ProtoGet(exprs(0), intArg(exprs(1)), LongType))
-    fn("graft_proto_double")(exprs =>
-      ProtoGet(exprs(0), intArg(exprs(1)), DoubleType))
-    fn("graft_proto_string")(exprs =>
-      ProtoGet(exprs(0), intArg(exprs(1)), StringType))
-    fn("graft_proto_longs")(exprs =>
-      ProtoGetRepeated(exprs(0), intArg(exprs(1))))
-    fn("graft_proto_nested_long")(exprs =>
-      ProtoGetNested(exprs(0), intArg(exprs(1)), intArg(exprs(2)), LongType))
-    fn("graft_proto_nested_double")(exprs =>
-      ProtoGetNested(exprs(0), intArg(exprs(1)), intArg(exprs(2)), DoubleType))
-    fn("graft_proto_nested_string")(exprs =>
-      ProtoGetNested(exprs(0), intArg(exprs(1)), intArg(exprs(2)), StringType))
+    }
+}
+
+/** The session extension Spark loads through `ServiceLoader` (listed in
+  * `META-INF/services/org.apache.spark.sql.SparkSessionExtensionsProvider`)
+  * for every session it builds, `newSession()` included: the graft_*
+  * functions, the as-of join's planner strategy and its probe-filter
+  * pushdown rule. Spark logs and swallows a provider's exception, so
+  * `ExtensionsSpec` checks that the functions resolve. */
+class GraftExtensions extends org.apache.spark.sql.SparkSessionExtensionsProvider {
+  override def apply(e: org.apache.spark.sql.SparkSessionExtensions): Unit = {
+    CatalystExt.functions.foreach { case (name, builder) =>
+      e.injectFunction((FunctionIdentifier(name), new ExpressionInfo(
+        classOf[GraftExtensions].getName, null, name, null, "", "", "", "", "",
+        "", "scala_udf"), builder))
+    }
+    e.injectPlannerStrategy(_ => graft.plans.AsOfStrategy)
+    e.injectOptimizerRule(_ => graft.plans.PushProbeFilterThroughAsOfJoin)
   }
 }

@@ -153,7 +153,7 @@ object Curation {
     val denseW = Window.orderBy(desc("cos_raw"), asc("vec_id"))
     val dense = e.where(col("vec_id") =!= 0L)
       .crossJoin(broadcast(q))
-      .withColumn("cos_raw", TextDedup.cosineGen(s)(col("embedding"), col("qe")))
+      .withColumn("cos_raw", TextDedup.cosineGen(col("embedding"), col("qe")))
       .orderBy(desc("cos_raw"), asc("vec_id")).limit(20)
       .withColumn("dense_rank", row_number().over(denseW).cast("long"))
       .select(col("vec_id").as("id"), col("dense_rank"))
@@ -792,7 +792,7 @@ object Curation {
     val w = Window.partitionBy("qid").orderBy(desc("cos_raw"), asc("vec_id"))
     e.crossJoin(broadcast(q))
       .where(col("vec_id") =!= col("qid"))
-      .withColumn("cos_raw", TextDedup.cosineGen(s)(col("embedding"), col("qe")))
+      .withColumn("cos_raw", TextDedup.cosineGen(col("embedding"), col("qe")))
       .withColumn("rank", row_number().over(w))
       .where(col("rank") <= 5)
       .groupBy(col("qid"), col("qlabel"))
@@ -891,7 +891,7 @@ object Curation {
     val w = Window.partitionBy("qid").orderBy(desc("cos_raw"), asc("vec_id"))
     val pool = corpus.crossJoin(broadcast(q))
       .where(col("vec_id") =!= col("qid"))
-      .withColumn("cos_raw", TextDedup.cosineGen(s)(col("embedding"), col("qe")))
+      .withColumn("cos_raw", TextDedup.cosineGen(col("embedding"), col("qe")))
       .withColumn("rank", row_number().over(w))
       .where(col("rank") <= poolK)
     val agg = pool.groupBy(col("qid"), col("qe"))

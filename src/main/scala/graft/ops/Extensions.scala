@@ -27,7 +27,8 @@ object Extensions {
   }
 
   /** Registered Scala UDF usable from both DSL and SQL (§2.11 udf_scalar);
-    * registered once per session, like every graft_* function. */
+    * registered once per session through the public `s.udf.register`,
+    * the API this id exercises. */
   private def registerHaversine(s: SparkSession): Unit =
     if (CatalystExt.missing(s, "graft_haversine"))
       s.udf.register("graft_haversine",
@@ -132,7 +133,6 @@ object Extensions {
 
   /** Custom Catalyst Generator path: graft_bigrams (CatalystExt.Bigrams). */
   private val udtfNgrams: Q = (s, d) => {
-    CatalystExt.register(s)
     tbl(s, d, "documents").where(col("doc_id") < 20)
       .withColumn("tk", split(lower(trim(col("text"))), " "))
       .select(col("doc_id"), expr("graft_bigrams(tk)").as(Seq("pos", "ngram")))
@@ -141,7 +141,6 @@ object Extensions {
 
   /** Custom native Expression path: graft_cosine ≡ the HOF cosine (§2.11). */
   private val exprCustomCosine: Q = (s, d) => {
-    CatalystExt.register(s)
     val e = tbl(s, d, "embeddings")
     val q0 = e.where(col("vec_id") === 0)
       .select(col("embedding").as("qe"))
@@ -155,7 +154,6 @@ object Extensions {
   /** From-scratch HLL (TypedImperativeAggregate) vs exact distinct — rel.
     * error ≤ 2% asserted in the test suite; sketches have no DuckDB twin. */
   private val aggHllCustom: Q = (s, d) => {
-    CatalystExt.register(s)
     tbl(s, d, "lineitem")
       .groupBy(col("l_returnflag"))
       .agg(expr("graft_hll(l_orderkey)").as("hll_orders"),
@@ -169,7 +167,6 @@ object Extensions {
     * is gated by the DuckDB oracle (within_bound must replay true), not
     * only by the in-suite assertion. */
   private val aggHllCustomAudit: Q = (s, d) => {
-    CatalystExt.register(s)
     tbl(s, d, "lineitem")
       .groupBy(col("l_returnflag"))
       .agg(expr("graft_hll(l_orderkey)").as("a"),
@@ -187,7 +184,6 @@ object Extensions {
     * rollup primitive, where re-aggregating bitmaps stays exact and a
     * sketch would not). Oracle: plain COUNT(DISTINCT). */
   private val aggBitmapDistinct: Q = (s, d) => {
-    CatalystExt.register(s)
     tbl(s, d, "events")
       .groupBy(col("event_type"))
       .agg(expr("graft_bitmap_distinct(user_id, 2097152)").as("n_users"),
@@ -203,7 +199,6 @@ object Extensions {
     * decrement/merge machinery and the n/(k+1) error bounds are exercised on
     * skewed synthetic data in HeavyHittersSpec. */
   private val aggHeavyHitters: Q = (s, d) => {
-    CatalystExt.register(s)
     val ev = tbl(s, d, "events")
       .withColumn("code", xxhash64(col("event_type")))
     val cand = ev
@@ -223,7 +218,6 @@ object Extensions {
     * the compaction/merge path and its ≤2% rank-error are exercised on 50k+
     * element synthetic streams in QuantileSketchSpec. */
   private val aggQuantileSketch: Q = (s, d) => {
-    CatalystExt.register(s)
     // s_suppkey <= 100 bounds every nation's group at 100 rows — the n ≤ k
     // exactness premise holds STRUCTURALLY at any scale factor (the same
     // first-100 suppliers exist at every SF), not just the tested ones
@@ -244,7 +238,6 @@ object Extensions {
     * O(k) state per map task and a k·partitions-row shuffle instead of a
     * window partition holding every row of the group. */
   private val aggTopkSketch: Q = (s, d) => {
-    CatalystExt.register(s)
     tbl(s, d, "events")
       .withColumn("c", cents(col("value")).cast("double"))
       .groupBy(col("event_type"))
@@ -308,7 +301,6 @@ object Extensions {
     * ~50-byte buffer inside whole-stage codegen: no UDF hop, no allocation
     * beyond the output string. */
   private lazy val fnProtobufDecode: Q = (s, d) => {
-    CatalystExt.register(s)
     val enc = udf(CatalystExt.protoEncodeEvent _)
     tbl(s, d, "events")
       .select(col("event_id"), col("event_type"), col("value"))
@@ -343,7 +335,6 @@ object Extensions {
     * non-empty decode both break it), and every row is now
     * checker-comparable. */
   private lazy val fnProtobufRepeated: Q = (s, d) => {
-    CatalystExt.register(s)
     val enc = udf(CatalystExt.protoEncodeEventEx _)
     tbl(s, d, "events")
       .select(col("event_id"), col("event_type"), col("value"))
@@ -364,7 +355,6 @@ object Extensions {
     * value halved (exact in IEEE — exponent decrement), so the fixed64
     * bit round-trip is oracle-replayable. */
   private lazy val fnProtobufNested: Q = (s, d) => {
-    CatalystExt.register(s)
     val enc = udf(CatalystExt.protoEncodeEventEx _)
     tbl(s, d, "events")
       .select(col("event_id"), col("event_type"), col("value"))
@@ -379,7 +369,6 @@ object Extensions {
   }
 
   private lazy val aggCmsFreq: Q = (s, d) => {
-    CatalystExt.register(s)
     import graft.ext.CatalystExt.{CmsA, CmsB, CmsD, CmsP, CmsW}
     val ev = tbl(s, d, "events")
     val sk = ev.agg(expr("graft_cms(user_id)").as("sk"))

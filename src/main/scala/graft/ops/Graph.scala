@@ -330,7 +330,6 @@ object Graph {
       // sort, no self-join; capped stays cheaper-than-uncapped (SCALING.md
       // r17) and every cooc-fed oracle hash is unchanged. Emission
       // stays hard-bounded at C(cap,2) per cell.
-      graft.ext.CatalystExt.register(base.sparkSession)
       base.groupBy(col("event_type"), col("w"))
         .agg(expr(s"graft_min_k_set(u, $capPerCell)").as("us"))
         .where(size(col("us")) >= 2)

@@ -71,9 +71,6 @@ object Streaming {
   private[graft] val ProviderKey = "spark.sql.streaming.stateStore.providerClass"
   private[graft] val RocksProvider =
     "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider"
-  /** The RocksDB provider pin, empty when the caller set a provider. */
-  private def providerPin(s: SparkSession): Seq[(String, String)] =
-    Seq(ProviderKey -> RocksProvider).filter(_ => s.conf.getOption(ProviderKey).isEmpty)
 
   /** Round-17 streaming fixed-cost trims (measured as same-JVM conf arms
     * alternated per rep, all row-identical; the `graft.tools.ConfAB` lines
@@ -98,22 +95,14 @@ object Streaming {
     *    session_window). Semantics-free (the changelog replays to the same
     *    versioned state), and the production-preferred mode for frequent
     *    commits.
-    *  - Maintenance interval 5 s (default 60 s): completed bounded-replay
-    *    queries' providers unload ~12x sooner, so zombie RocksDB instances
-    *    from query N don't stall query N+1's store loads (the measured
-    *    in-suite 20–50 s rep outliers; lockAcquireTimeoutMs is 60 s, which
-    *    is exactly the stall ceiling observed).
     *
     * Scoping (corrected r18, ADVICE r17): the partition cap and changelog
     * flag scope to the streaming query (set before start, restored after
     * termination by [[graft.util.Canon.withConfs]]); caller-set values are
-    * left alone, which is what lets a ConfAB arm override them. The
-    * maintenance-interval pin asks `getOption`, which answers the key's
-    * registered 60 s default, so it never fires: queries run at the
-    * session's interval (SCALING.md, Streaming). Were it set, it would be
-    * JVM-STICKY — the StateStore maintenance task reads it once when it
-    * first starts — and the restore is not reentrant under concurrent
-    * streaming queries on one session.
+    * left alone, which is what lets a ConfAB arm override them. The r17
+    * maintenance-interval pin (5 s) is gone: it asked `getOption`, which
+    * answers the key's registered 60 s default, so it never fired, and
+    * queries run at the session's interval (SCALING.md, Streaming).
     *
     * r18 (VERDICT r17 item 7): the cap DEFAULT derives from the session —
     * max(8, defaultParallelism/4) — instead of the bare constant 8, which
@@ -127,28 +116,22 @@ object Streaming {
     val parts = "spark.sql.shuffle.partitions"
     val changelog =
       "spark.sql.streaming.stateStore.rocksdb.changelogCheckpointing.enabled"
-    val maint = "spark.sql.streaming.stateStore.maintenanceInterval"
     val maxParts = s.conf.getOption("graft.stream.maxStateParts")
       .map(_.toInt)
       .getOrElse(math.max(8, s.sparkContext.defaultParallelism / 4))
     val capParts = s.conf.getOption(parts).forall(_.toInt > maxParts)
     val pins = Seq(parts -> maxParts.toString).filter(_ => capParts) ++
-      Seq(changelog -> "true", maint -> "5s")
-        .filter { case (k, _) => s.conf.getOption(k).isEmpty }
+      Seq(changelog -> "true").filter(_ => s.conf.getOption(changelog).isEmpty)
     withConfs(s, pins)(body)
   }
 
   /** Run a streaming DataFrame to completion into a memory sink, return the
-    * finished table. State store: RocksDB, adopted round 15 after a paired
-    * provider A/B proved all 14 stateful ids hash-identical under both
-    * providers at parity-or-better walls (SCALING.md r15) — at 100 TB state
-    * the off-heap/SSD-spilling store bounds per-executor state by disk
-    * instead of JVM heap, which is the provider a production stateful job
-    * runs anyway (transformWithState already REQUIRED it). The pin is meant
-    * to leave a caller-set provider alone, but [[providerPin]] asks
-    * `getOption`, which answers the key's registered default (the
-    * HDFS-backed provider): the pin never fires, and these queries run on
-    * whatever provider the session holds (SCALING.md, Streaming). */
+    * finished table. State store: the session's provider, HDFS-backed by
+    * default. The r15 RocksDB pin (SCALING.md r15: all 14 stateful ids
+    * hash-identical under both providers) is gone: it asked `getOption`,
+    * which answers the key's registered default, so it never fired
+    * (SCALING.md, Streaming). Only `stream_transform_with_state`, which
+    * requires RocksDB, sets the provider. */
   private def runToTable(s: SparkSession, df: DataFrame, mode: String,
       maxFilesPerTrigger: Option[Int] = None): DataFrame = {
     val name = s"graft_stream_${ctr.incrementAndGet()}"
@@ -156,13 +139,11 @@ object Streaming {
     deleteTree(ckpt) // ADVICE r5: a stale dir from a crashed run would replay
     // the input as already-processed (empty complete-mode result) or abort
     // append mode — clear BEFORE start, not only after success
-    withConfs(s, providerPin(s)) {
-      withStreamConfs(s) {
-        val q = df.writeStream.format("memory").queryName(name)
-          .option("checkpointLocation", ckpt)
-          .outputMode(mode).trigger(Trigger.AvailableNow()).start()
-        q.awaitTermination()
-      }
+    withStreamConfs(s) {
+      val q = df.writeStream.format("memory").queryName(name)
+        .option("checkpointLocation", ckpt)
+        .outputMode(mode).trigger(Trigger.AvailableNow()).start()
+      q.awaitTermination()
     }
     deleteTree(ckpt) // completed; reclaim the tmpfs space before the next rep
     s.table(name)
@@ -190,10 +171,10 @@ object Streaming {
     * must equal the same aggregate computed from the parquet base table
     * (the oracle) — any dropped/duplicated file or split breaks the hash. */
   private val streamAvroReplay: Q = (s, d) => {
-    val dir = s"$ioTmp/avro_stream_${d.hashCode.toHexString}"
-    val ev = tbl(s, d, "events")
-      .select(col("event_id"), col("event_type"), col("value"))
-    graft.sources.avro.AvroUtil.write(ev.repartition(4), dir)
+    val dir = staged(d, "events", "avro_stream")(
+      graft.sources.avro.AvroUtil.write(tbl(s, d, "events")
+        .select(col("event_id"), col("event_type"), col("value"))
+        .repartition(4), _))
     val schema = s.read.format("graft-avro").load(dir).schema
     runToTable(s,
       s.readStream.format("graft-avro").schema(schema).load(dir)
@@ -229,7 +210,6 @@ object Streaming {
     * DuckDB-replayable: a full-oracle streaming sketch row. Estimates can
     * never undercount (CMS min-of-rows), asserted per row on both engines. */
   private val streamCmsFreq: Q = (s, d) => {
-    graft.ext.CatalystExt.register(s)
     import graft.ext.CatalystExt.{CmsA, CmsB, CmsD, CmsP, CmsW}
     val sink = runToTable(s,
       eventsStream(s, d)
@@ -585,32 +565,36 @@ object Streaming {
 
   /** foreachBatch sink — the production pattern for arbitrary sinks: each
     * micro-batch lands as parquet via the batch writer, results read back
-    * after completion. Oracle: the plain batch aggregation. */
+    * after completion. Oracle: the plain batch aggregation. The bounded
+    * aggregate is snapshotted with `localCheckpoint`, so the sink dir and
+    * the checkpoint are reclaimed before returning, failures included. */
   private val streamForeachBatch: Q = (s, d) => {
     val tag = ctr.incrementAndGet()
     val out = s"$ioTmp/foreach_out_${d.hashCode.toHexString}_$tag"
     val ckpt = ckptDir(s"foreach_$tag")
     deleteTree(ckpt) // clear-before-start, same contract as runToTable
-    withStreamConfs(s) {
-      val q = eventsStream(s, d)
-        .where(col("event_type") === "purchase")
-        .select("event_id", "user_id", "value")
-        .writeStream
-        .option("checkpointLocation", ckpt)
-        .foreachBatch { (batch: org.apache.spark.sql.Dataset[org.apache.spark.sql.Row],
-            id: Long) =>
-          // batch 0 overwrites so a stale dir from a previous run can't leak in
-          batch.write.mode(if (id == 0) "overwrite" else "append").parquet(out)
-        }
-        .trigger(Trigger.AvailableNow()).start()
-      q.awaitTermination()
-    }
-    deleteTree(ckpt)
-    s.read.parquet(out)
-      .groupBy(col("user_id"))
-      .agg(count(lit(1)).as("n_purchases"),
-        (sum(cents(col("value"))) / 100.0).as("purchase_total"))
-      .orderBy("user_id")
+    try {
+      withStreamConfs(s) {
+        val q = eventsStream(s, d)
+          .where(col("event_type") === "purchase")
+          .select("event_id", "user_id", "value")
+          .writeStream
+          .option("checkpointLocation", ckpt)
+          .foreachBatch { (batch: org.apache.spark.sql.Dataset[org.apache.spark.sql.Row],
+              id: Long) =>
+            // batch 0 overwrites so a stale dir from a previous run can't leak in
+            batch.write.mode(if (id == 0) "overwrite" else "append").parquet(out)
+          }
+          .trigger(Trigger.AvailableNow()).start()
+        q.awaitTermination()
+      }
+      s.read.parquet(out)
+        .groupBy(col("user_id"))
+        .agg(count(lit(1)).as("n_purchases"),
+          (sum(cents(col("value"))) / 100.0).as("purchase_total"))
+        .orderBy("user_id")
+        .localCheckpoint(true)
+    } finally { deleteTree(ckpt); deleteTree(out) }
   }
 
   /** Latest-version-per-key MERGE of one micro-batch into a keyed parquet
@@ -677,14 +661,18 @@ object Streaming {
     * returns the post-second-pass table — the oracle compares it against
     * the plain batch latest-per-key aggregate, so any redelivery
     * sensitivity (double-counting, resurrection of older versions) breaks
-    * the hash. StreamingSpec additionally asserts pass-1 ≡ pass-2 row sets. */
+    * the hash. StreamingSpec additionally asserts pass-1 ≡ pass-2 row sets.
+    * The final table is snapshotted with `localCheckpoint` and the sink
+    * reclaimed before returning. */
   private val streamIdempotentSink: Q = (s, d) => {
     val sink =
       s"$ioTmp/idem_sink_${d.hashCode.toHexString}_${ctr.incrementAndGet()}"
     deleteTree(sink) // fresh sink per invocation
-    idempotentUpsertReplay(s, d, sink) // pass 1: normal run
-    val out = idempotentUpsertReplay(s, d, sink) // pass 2: full REDELIVERY
-    out
+    try {
+      idempotentUpsertReplay(s, d, sink) // pass 1: normal run
+      idempotentUpsertReplay(s, d, sink) // pass 2: full REDELIVERY
+        .localCheckpoint(true)
+    } finally deleteTree(sink)
   }
 
   /** Stream ⋈ static dimension enrichment (supported without watermark). */
@@ -787,7 +775,9 @@ object Streaming {
     * so the final per-doc aggregate equals the whole-batch answer and the
     * DuckDB oracle is the plain batch×collapsed-corpus J ≥ 0.8 SQL. At
     * 100 TB nothing changes shape: per-micro-batch work is ∝ batch, the
-    * standing side stays on disk, bands equi-join. */
+    * standing side stays on disk, bands equi-join. The per-doc aggregate is
+    * snapshotted with `localCheckpoint`, so the match sink and the
+    * checkpoint are reclaimed before returning, failures included. */
   private val streamNeardup: Q = (s, d) => {
     val (st, split) = TextDedup.stagedNeardupState(s, d)
     val srcDir = staged(d, "documents", "stream_nd")(
@@ -807,31 +797,33 @@ object Streaming {
     // for every trigger and no per-trigger driver action is added)
     val maskOk = TextDedup.neardupMaskRouteOk(st, vocab,
       s.read.parquet(srcDir).count()) // row count ≥ set count: conservative
-    withStreamConfs(s) {
-      val q = stagedStream(s, srcDir)
-        .option("maxFilesPerTrigger", "1").parquet(srcDir)
-        .writeStream.option("checkpointLocation", ckpt)
-        .foreachBatch { (batch: org.apache.spark.sql.Dataset[org.apache.spark.sql.Row],
-            id: Long) =>
-          // no hb checkpoint: the bitmask path reads it once (into its own
-          // checkpointed mask frame) and a micro-batch re-derivation is one
-          // map-only pass — a per-trigger checkpoint job costs more
-          val stage = TextDedup.neardupPairStage(
-            TextDedup.hashedDocSets(batch.toDF()), st, Some(vocab),
-            Some(maskOk))
-          val matches = stage.memberMap.join(stage.crossReps, "sa")
-            .select(col("id").as("doc_id"), col("sid"), col("jacc"))
-          matches.write.mode(if (id == 0) "overwrite" else "append").parquet(out)
-        }
-        .trigger(Trigger.AvailableNow()).start()
-      q.awaitTermination()
-    }
-    deleteTree(ckpt)
-    s.read.parquet(out)
-      .groupBy(col("doc_id"))
-      .agg(count(lit(1)).as("n_matches"), min(col("sid")).as("min_sid"),
-        r4(max(col("jacc"))).as("best_jacc"))
-      .orderBy("doc_id")
+    try {
+      withStreamConfs(s) {
+        val q = stagedStream(s, srcDir)
+          .option("maxFilesPerTrigger", "1").parquet(srcDir)
+          .writeStream.option("checkpointLocation", ckpt)
+          .foreachBatch { (batch: org.apache.spark.sql.Dataset[org.apache.spark.sql.Row],
+              id: Long) =>
+            // no hb checkpoint: the bitmask path reads it once (into its own
+            // checkpointed mask frame) and a micro-batch re-derivation is one
+            // map-only pass — a per-trigger checkpoint job costs more
+            val stage = TextDedup.neardupPairStage(
+              TextDedup.hashedDocSets(batch.toDF()), st, Some(vocab),
+              Some(maskOk))
+            val matches = stage.memberMap.join(stage.crossReps, "sa")
+              .select(col("id").as("doc_id"), col("sid"), col("jacc"))
+            matches.write.mode(if (id == 0) "overwrite" else "append").parquet(out)
+          }
+          .trigger(Trigger.AvailableNow()).start()
+        q.awaitTermination()
+      }
+      s.read.parquet(out)
+        .groupBy(col("doc_id"))
+        .agg(count(lit(1)).as("n_matches"), min(col("sid")).as("min_sid"),
+          r4(max(col("jacc"))).as("best_jacc"))
+        .orderBy("doc_id")
+        .localCheckpoint(true)
+    } finally { deleteTree(ckpt); deleteTree(out) }
   }
 
   /** Planned-restart recovery: the SAME checkpoint carries offsets AND
@@ -859,18 +851,16 @@ object Streaming {
       .coalesce(1).write.mode("overwrite").parquet(dir)
     val schema = s.read.parquet(dir).schema
     def runOnce(qn: String): (DataFrame, Long) = {
-      val read = withConfs(s, providerPin(s)) {
-        withStreamConfs(s) {
-          val q = s.readStream.schema(schema).parquet(dir)
-            .groupBy(col("event_type"))
-            .agg(count(lit(1)).as("n"),
-              sum(cents(col("value"))).as("value_cents"))
-            .writeStream.format("memory").queryName(qn)
-            .option("checkpointLocation", ckpt)
-            .outputMode("complete").trigger(Trigger.AvailableNow()).start()
-          q.awaitTermination()
-          q.recentProgress.map(_.numInputRows).sum
-        }
+      val read = withStreamConfs(s) {
+        val q = s.readStream.schema(schema).parquet(dir)
+          .groupBy(col("event_type"))
+          .agg(count(lit(1)).as("n"),
+            sum(cents(col("value"))).as("value_cents"))
+          .writeStream.format("memory").queryName(qn)
+          .option("checkpointLocation", ckpt)
+          .outputMode("complete").trigger(Trigger.AvailableNow()).start()
+        q.awaitTermination()
+        q.recentProgress.map(_.numInputRows).sum
       }
       (s.table(qn), read)
     }

@@ -72,10 +72,8 @@ object TextDedup {
     * element-order double accumulation to the HOF `cosine` above — verified
     * bit-equal (CosineSpec) — but fused into generated Java instead of
     * interpreted per element. Used in every similarity hot path (§4.3). */
-  private[ops] def cosineGen(s: SparkSession)(a: Column, b: Column): Column = {
-    graft.ext.CatalystExt.register(s)
+  private[ops] def cosineGen(a: Column, b: Column): Column =
     call_function("graft_cosine", a, b)
-  }
 
   private[ops] val cosSql =
     "list_sum(list_transform(list_zip(%s, %s), x -> CAST(x[1] AS DOUBLE)*CAST(x[2] AS DOUBLE)))"
@@ -1293,7 +1291,7 @@ object TextDedup {
     e.select(col("vec_id").as("va"), col("embedding").as("ea"))
       .join(e.select(col("vec_id").as("vb"), col("embedding").as("eb")),
         col("va") < col("vb"))
-      .withColumn("cos", cosineGen(s)(col("ea"), col("eb")))
+      .withColumn("cos", cosineGen(col("ea"), col("eb")))
       .where(col("cos") >= 0.4)
   }
 
@@ -1332,7 +1330,7 @@ object TextDedup {
     val ep = e.select(col("vec_id").as("pa"), col("embedding").as("ea"))
       .join(e.select(col("vec_id").as("pb"), col("embedding").as("eb")),
         col("pa") < col("pb"))
-      .where(cosineGen(s)(col("ea"), col("eb")) >= 0.2)
+      .where(cosineGen(col("ea"), col("eb")) >= 0.2)
       .select(col("pa"), col("pb"), lit(1L).as("e"))
     tp.join(ep, Seq("pa", "pb"), "full_outer")
       .agg(sum(coalesce(col("t"), lit(0L))).as("n_text_pairs"),
@@ -1382,7 +1380,7 @@ object TextDedup {
       .orderBy(desc("cos_raw"), asc("bench_id"))
     e.where(col("vec_id") >= 5)
       .crossJoin(broadcast(bench))
-      .withColumn("cos_raw", cosineGen(s)(col("embedding"), col("be")))
+      .withColumn("cos_raw", cosineGen(col("embedding"), col("be")))
       .withColumn("rk", row_number().over(w))
       .where(col("rk") === 1)
       .select(col("vec_id"), col("bench_id").as("best_bench"),
@@ -1402,7 +1400,7 @@ object TextDedup {
     val w = Window.partitionBy("qid").orderBy(desc("cos_raw"), asc("vec_id"))
     e.crossJoin(broadcast(q))
       .where(col("vec_id") =!= col("qid"))
-      .withColumn("cos_raw", cosineGen(s)(col("embedding"), col("qe")))
+      .withColumn("cos_raw", cosineGen(col("embedding"), col("qe")))
       .withColumn("rank", row_number().over(w))
       .where(col("rank") <= 5)
       .select(col("qid"), col("rank"), col("vec_id"), r4(col("cos_raw")).as("cos"))
@@ -1431,7 +1429,7 @@ object TextDedup {
     val w = Window.partitionBy("qid").orderBy(desc("cos_raw"), asc("vec_id"))
     corpus.join(broadcast(q),
         col("label") === col("qlabel") && col("vec_id") =!= col("qid"))
-      .withColumn("cos_raw", cosineGen(s)(col("embedding"), col("qe")))
+      .withColumn("cos_raw", cosineGen(col("embedding"), col("qe")))
       .withColumn("rank", row_number().over(w))
       .where(col("rank") <= k)
       .select(col("qid"), col("rank"), col("vec_id"), col("label"),
@@ -1464,7 +1462,7 @@ object TextDedup {
     val w = Window.partitionBy("qid").orderBy(desc("cos_raw"), asc("vec_id"))
     lists.join(q, Seq("cid"))
       .where(col("label") === col("qlabel") && col("vec_id") =!= col("qid"))
-      .withColumn("cos_raw", cosineGen(s)(col("embedding"), col("qe")))
+      .withColumn("cos_raw", cosineGen(col("embedding"), col("qe")))
       .withColumn("rank", row_number().over(w))
       .where(col("rank") <= 5)
       .select(col("qid"), col("rank"), col("vec_id"), col("label"),
@@ -1541,7 +1539,7 @@ object TextDedup {
     buck.join(q, Seq("table", "bucket"))
       .where(col("vec_id") =!= col("qid"))
       .select(col("qid"), col("qe"), col("vec_id"), col("embedding")).distinct()
-      .withColumn("cos_raw", cosineGen(s)(col("embedding"), col("qe")))
+      .withColumn("cos_raw", cosineGen(col("embedding"), col("qe")))
       .withColumn("rank", row_number().over(w))
       .where(col("rank") <= 5)
       .select(col("qid"), col("rank"), col("vec_id"), r4(col("cos_raw")).as("cos"))
@@ -1641,7 +1639,7 @@ object TextDedup {
     val w = Window.partitionBy("qid").orderBy(desc("cos_raw"), asc("vec_id"))
     lists.join(q, Seq("cid"))
       .where(col("vec_id") =!= col("qid"))
-      .withColumn("cos_raw", cosineGen(s)(col("embedding"), col("qe")))
+      .withColumn("cos_raw", cosineGen(col("embedding"), col("qe")))
       .withColumn("rank", row_number().over(w))
       .where(col("rank") <= 5)
       .select(col("qid"), col("rank"), col("vec_id"), r4(col("cos_raw")).as("cos"))
@@ -1774,7 +1772,6 @@ object TextDedup {
       .map(r => r.getLong(0) -> l2norm(r.getSeq[Float](1).map(_.toDouble).toArray))
     val luts = pqLuts(qRows, codebooks, K, M, Ds)
     val adcU = pqAdcU(luts, M)
-    graft.ext.CatalystExt.register(s)
     // Codes only in the scored scan: the flat-ADC pass reads O(n·M) bytes of
     // PQ codes and never the raw vectors, which are refetched below for the
     // ≤ Cand surviving candidates per query.
@@ -1796,7 +1793,7 @@ object TextDedup {
     val w = Window.partitionBy("qid").orderBy(desc("cos_raw"), asc("vec_id"))
     e.join(broadcast(cand), "vec_id") // candidate vector fetch: ≤ 10·Cand ids
       .join(broadcast(q), "qid")
-      .withColumn("cos_raw", cosineGen(s)(col("embedding"), col("qe")))
+      .withColumn("cos_raw", cosineGen(col("embedding"), col("qe")))
       .withColumn("rank", row_number().over(w)) // ≤ Cand rows per partition
       .where(col("rank") <= 5)
       .select(col("qid"), col("rank"), col("vec_id"), r4(col("cos_raw")).as("cos"))
@@ -1972,7 +1969,6 @@ object TextDedup {
       while (mI < M) { dist += lut(mI)(code(mI)); mI += 1 }
       dist
     }
-    graft.ext.CatalystExt.register(s)
     val probed = q
       .select(col("vec_id").as("qid"),
         explode(probeU(col("embedding"))).as("cid"))
@@ -1991,7 +1987,7 @@ object TextDedup {
     val w = Window.partitionBy("qid").orderBy(desc("cos_raw"), asc("vec_id"))
     e.join(broadcast(cand), "vec_id") // candidate vector fetch: ≤ |batch|·Cand
       .join(broadcast(qe), "qid")
-      .withColumn("cos_raw", cosineGen(s)(col("embedding"), col("qe")))
+      .withColumn("cos_raw", cosineGen(col("embedding"), col("qe")))
       .withColumn("rank", row_number().over(w)) // ≤ Cand rows per partition
       .where(col("rank") <= k)
       .select(col("qid"), col("rank"), col("vec_id"), r4(col("cos_raw")).as("cos"))
@@ -2050,7 +2046,7 @@ object TextDedup {
       .where(col("vec_id") =!= col("qid"))
     val w = Window.partitionBy("qid").orderBy(desc("cos_raw"), asc("vec_id"))
     joined
-      .withColumn("cos_raw", cosineGen(s)(col("embedding"), col("qe")))
+      .withColumn("cos_raw", cosineGen(col("embedding"), col("qe")))
       .withColumn("rank", row_number().over(w))
       .where(col("rank") <= 5)
       .select(col("qid"), col("rank"), col("vec_id"), r4(col("cos_raw")).as("cos"))
@@ -2120,7 +2116,7 @@ object TextDedup {
     val w = Window.partitionBy("qid").orderBy(desc("cos_raw"), asc("vec_id"))
     val exact = e.crossJoin(broadcast(q))
       .where(col("vec_id") =!= col("qid"))
-      .withColumn("cos_raw", cosineGen(e.sparkSession)(col("embedding"), col("qe")))
+      .withColumn("cos_raw", cosineGen(col("embedding"), col("qe")))
       .withColumn("rank", row_number().over(w))
       .where(col("rank") <= 5)
       .select(col("qid"), col("vec_id"))
@@ -2171,7 +2167,6 @@ object TextDedup {
     // reference; values, names, and output schema are byte-identical to
     // the sequential form (every member is deterministic, and a count is
     // order-insensitive).
-    graft.ext.CatalystExt.register(s) // once, before threads share it
     import scala.concurrent.{Await, Promise}
     import scala.concurrent.duration.Duration
     // the exact reference is branch 0 (first on the FIFO pool, so it always
@@ -2256,7 +2251,6 @@ object TextDedup {
   /** Top-5 bigram frequencies per language — drives the custom Catalyst
     * Generator (graft_bigrams) inside a real analytics aggregation. */
   private val textBigramFreq: Q = (s, d) => {
-    graft.ext.CatalystExt.register(s)
     // top-5 per lang over the bigram-vocab frame via Canon.chunkedTopK
     // (the (lang, ngram) frame scales with vocabulary², never one task
     // per language)
@@ -2281,7 +2275,6 @@ object TextDedup {
     * per-source LEFT join — no corpus-wide sort, same shape as
     * text_vocab_oov one n-gram order up. */
   private val textNgramCoverage: Q = (s, d) => {
-    graft.ext.CatalystExt.register(s)
     // ONE generator pass (round 9) — same shared-rollup shape as
     // text_vocab_oov: top-25 and per-source coverage both derive from the
     // (source, ngram) counts, reusing one exchange.
@@ -2809,7 +2802,6 @@ object TextDedup {
     * no full sort. The two unigram joins are equi-joins on the term key
     * (broadcast-able: the candidate side is already count-floored). */
   private val textPmiBigrams: Q = (s, d) => {
-    graft.ext.CatalystExt.register(s)
     val docs = tbl(s, d, "documents").withColumn("tk", toks(normText))
     val uni = docs.select(explode(col("tk")).as("t"))
       .groupBy(col("t")).agg(count(lit(1)).as("c"))

@@ -124,8 +124,9 @@ case class AsOfJoinExec(left: SparkPlan, right: SparkPlan,
     copy(left = newLeft, right = newRight)
 }
 
-/** Injected optimizer rule (the §4.1 custom-Rule extension point): Catalyst
-  * cannot push predicates through an unknown node, so probe-side filters
+/** Injected optimizer rule (the §4.1 custom-Rule extension point, run in
+  * Spark's operator-optimization batches): Catalyst cannot push
+  * predicates through an unknown node, so probe-side filters
   * sitting above an AsOfJoin would block parquet pushdown. This rule moves
   * any filter that references only probe-side attributes below the join,
   * where the built-in rules carry it down to the scan (PushedFilters —
@@ -155,15 +156,12 @@ object AsOfStrategy extends SparkStrategy {
 }
 
 object AsOfJoin {
-  /** Inject the strategy (idempotent) and build the joined DataFrame.
-    * Key/time columns are referenced by name in each side's output. */
+  /** Build the joined DataFrame; every session already plans it
+    * ([[graft.ext.GraftExtensions]] injects [[AsOfStrategy]] and
+    * [[PushProbeFilterThroughAsOfJoin]]). Key/time columns are referenced
+    * by name in each side's output. */
   def join(s: SparkSession, probe: DataFrame, ref: DataFrame,
       pKey: String, pTime: String, rKey: String, rTime: String): DataFrame = {
-    if (!s.experimental.extraStrategies.contains(AsOfStrategy))
-      s.experimental.extraStrategies = s.experimental.extraStrategies :+ AsOfStrategy
-    if (!s.experimental.extraOptimizations.contains(PushProbeFilterThroughAsOfJoin))
-      s.experimental.extraOptimizations =
-        s.experimental.extraOptimizations :+ PushProbeFilterThroughAsOfJoin
     val lPlan = probe.queryExecution.analyzed
     val rPlan0 = ref.queryExecution.analyzed
     // Self-join exprId dedup: if probe and ref derive from the same

@@ -9,8 +9,7 @@ class ApiSpec extends AnyFunSuite {
   import TestSession._
   import graft.api.implicits._
 
-  test("Graft.init + sketch column functions agree with exact aggregates") {
-    graft.api.Graft.init(spark)
+  test("sketch column functions agree with exact aggregates") {
     val ev = graft.util.Canon.events(spark, sf)
     val row = ev.agg(
       graft.api.functions.hllDistinct(col("user_id")).as("approx"),
@@ -22,7 +21,6 @@ class ApiSpec extends AnyFunSuite {
   }
 
   test("heavyHitters and kllQuantile column functions return sane values") {
-    graft.api.Graft.init(spark)
     val ev = graft.util.Canon.events(spark, sf)
     val row = ev.agg(
       graft.api.functions.heavyHitters(col("user_id"), 5).as("hh"),
@@ -104,7 +102,6 @@ class ApiSpec extends AnyFunSuite {
   }
 
   test("README usage example compiles and runs as documented") {
-    graft.api.Graft.init(spark)
     import graft.api.functions._
     val events = graft.util.Canon.events(spark, sf)
     val trades = events.select(col("user_id").as("sym"), col("ts"), col("value"))
@@ -604,7 +601,6 @@ class ApiSpec extends AnyFunSuite {
 
   test("functions.cmsSketch + cmsEstimate ≡ the registry CMS estimates") {
     import graft.api.functions.{cmsSketch, cmsEstimate}
-    graft.api.Graft.init(spark)
     val ev = spark.read.parquet(s"$sf/events.parquet")
     val sk = ev.agg(cmsSketch(col("user_id")).as("sk"))
     val got = ev.where(col("user_id") < 10).select("user_id").distinct()

@@ -383,7 +383,6 @@ class CmsSpec extends AnyFunSuite {
   }
 
   test("cms sketch is linear: sketch(A ++ B) == sketch(A) + sketch(B)") {
-    graft.ext.CatalystExt.register(spark)
     import org.apache.spark.sql.functions._
     val ev = spark.read.parquet(s"$sf/events.parquet").select("user_id", "event_id")
     def sk(df: org.apache.spark.sql.DataFrame): Array[Long] =
@@ -404,7 +403,6 @@ class CosineExprSpec extends AnyFunSuite {
   import org.apache.spark.sql.functions._
 
   test("graft_cosine equals aggregate(zip_with(...)) bit-for-bit") {
-    graft.ext.CatalystExt.register(spark)
     val e = graft.util.Canon.tbl(spark, sf, "embeddings").limit(100)
     val hof = aggregate(zip_with(col("embedding"), col("embedding"),
         (x, y) => x.cast("double") * y.cast("double")), lit(0.0), (a, x) => a + x) /
@@ -673,7 +671,6 @@ class QuantileSketchSpec extends AnyFunSuite {
 
   test("compacted sketch stays within 3% rank error on 50k elements") {
     import spark.implicits._
-    graft.ext.CatalystExt.register(spark)
     val rng = new scala.util.Random(7)
     // mixed distribution: uniform + heavy tail
     val values = Seq.fill(50000)(
@@ -689,7 +686,6 @@ class QuantileSketchSpec extends AnyFunSuite {
 
   test("sketch is exact (an order statistic) when n <= k") {
     import spark.implicits._
-    graft.ext.CatalystExt.register(spark)
     val values = (1 to 100).map(_.toDouble)
     val df = values.toDF("v").repartition(4)
     val est = df.agg(expr("graft_kll_quantile(v, 0.5, 128)")).head().getDouble(0)
@@ -738,7 +734,6 @@ class HeavyHittersSpec extends AnyFunSuite {
 
   test("MG bounds hold with k < distinct on skewed data") {
     import spark.implicits._
-    graft.ext.CatalystExt.register(spark)
     // zipf-ish: item i appears ~2000/i times → items 1..2 are heavy at k=8
     val rows = (1 to 50).flatMap(i => Seq.fill(2000 / i)(i.toLong))
     val res = rows.toDF("item").repartition(8)
@@ -1165,7 +1160,6 @@ class TopKSpec extends AnyFunSuite {
   import org.apache.spark.sql.functions._
 
   test("graft_topk_min equals the window-rank formulation across partitions") {
-    graft.ext.CatalystExt.register(spark)
     // many score ties (score = id % 37) so the (score, id) tie-break is
     // actually exercised; 13 partitions so partial heaps really merge
     val df = spark.range(0, 5000).toDF("id").repartition(13)
@@ -1209,7 +1203,6 @@ class BitmapSpec extends AnyFunSuite {
   import org.apache.spark.sql.functions._
 
   test("bitmap distinct equals exact countDistinct across partitions") {
-    graft.ext.CatalystExt.register(spark)
     // dup-heavy values over 17 partitions so partial bitmaps really merge
     val df = spark.range(0, 10000).toDF("id").repartition(17)
       .withColumn("g", col("id") % 3)
@@ -1223,7 +1216,6 @@ class BitmapSpec extends AnyFunSuite {
   }
 
   test("out-of-range value fails fast instead of undercounting") {
-    graft.ext.CatalystExt.register(spark)
     val ex = intercept[Throwable] {
       spark.range(0, 10).toDF("v")
         .agg(expr("graft_bitmap_distinct(v, 5)")).collect()

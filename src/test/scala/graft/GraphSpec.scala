@@ -267,7 +267,6 @@ class GraphSpec extends AnyFunSuite {
     // EXACTLY (same distinct-min-k ascending truncation) on every
     // (event_type, minute) cell of real events, at a k small enough that
     // truncation actually fires
-    graft.ext.CatalystExt.register(spark)
     val base = graft.util.Canon.events(spark, sf)
       .where(col("user_id").isNotNull)
       .select(col("user_id").as("u"), col("event_type"),

@@ -14,7 +14,6 @@ class SqlEntrySpec extends AnyFunSuite {
   import TestSession._
 
   private lazy val init: Unit = {
-    graft.ext.CatalystExt.register(spark)
     // the two session-UDF registrations that normally happen inside their
     // query closures (udf_scalar / udaf_aggregator) — forced here so the
     // matrix covers the full SQL surface regardless of suite order
