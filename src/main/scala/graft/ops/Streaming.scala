@@ -132,8 +132,8 @@ object Streaming {
     * which answers the key's registered default, so it never fired
     * (SCALING.md, Streaming). Only `stream_transform_with_state`, which
     * requires RocksDB, sets the provider. */
-  private def runToTable(s: SparkSession, df: DataFrame, mode: String,
-      maxFilesPerTrigger: Option[Int] = None): DataFrame = {
+  private def runToTable(s: SparkSession, df: DataFrame, mode: String)
+      : DataFrame = {
     val name = s"graft_stream_${ctr.incrementAndGet()}"
     val ckpt = ckptDir(name)
     deleteTree(ckpt) // ADVICE r5: a stale dir from a crashed run would replay
@@ -787,15 +787,11 @@ object Streaming {
     val out = s"$ioTmp/stream_nd_out_${d.hashCode.toHexString}_$tag"
     val ckpt = ckptDir(s"neardup_$tag")
     deleteTree(ckpt) // clear-before-start, same contract as runToTable
-    // union vocabulary probed ONCE over standing ∪ the full increment —
-    // every micro-batch's vocabulary is a subset, so routing and mask bits
-    // match the batch path exactly without a per-trigger driver action
-    val vocab = TextDedup.neardupUnionVocab(
-      TextDedup.hashedDocSets(s.read.parquet(srcDir)), st)
-    // routing verdict for the WHOLE increment, probed once with the vocab
-    // (micro-batch set counts are subsets, so the verdict is conservative
-    // for every trigger and no per-trigger driver action is added)
-    val maskOk = TextDedup.neardupMaskRouteOk(st, vocab,
+    // routed ONCE over standing ∪ the full increment — every micro-batch's
+    // vocabulary and set count are subsets, so routing and mask bits match
+    // the batch path exactly without a per-trigger driver action
+    val route = TextDedup.neardupRoute(
+      TextDedup.hashedDocSets(s.read.parquet(srcDir)), st,
       s.read.parquet(srcDir).count()) // row count ≥ set count: conservative
     try {
       withStreamConfs(s) {
@@ -808,8 +804,7 @@ object Streaming {
             // checkpointed mask frame) and a micro-batch re-derivation is one
             // map-only pass — a per-trigger checkpoint job costs more
             val stage = TextDedup.neardupPairStage(
-              TextDedup.hashedDocSets(batch.toDF()), st, Some(vocab),
-              Some(maskOk))
+              TextDedup.hashedDocSets(batch.toDF()), st, route)
             val matches = stage.memberMap.join(stage.crossReps, "sa")
               .select(col("id").as("doc_id"), col("sid"), col("jacc"))
             matches.write.mode(if (id == 0) "overwrite" else "append").parquet(out)

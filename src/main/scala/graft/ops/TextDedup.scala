@@ -80,6 +80,92 @@ object TextDedup {
   private[ops] def cosineSql(a: String, b: String): String =
     s"${cosSql.format(a, b)} / (sqrt(${cosSql.format(a, a)}) * sqrt(${cosSql.format(b, b)}))"
 
+  // ------------------------------------------------- set-similarity core
+  /** Exact Jaccard of two token-set arrays: |a ∩ b| / (|a| + |b| − |a ∩ b|). */
+  private def setJaccard(a: Column, b: Column): Column = {
+    val inter = size(array_intersect(a, b))
+    inter.cast("double") / (size(a) + size(b) - inter).cast("double")
+  }
+
+  /** Exact Jaccard of two bitmask-packed sets: masks `ma`/`mb`, sizes
+    * `na`/`nb` — codegen'd integer ops, no array work. */
+  private val maskJaccard: Column = {
+    val inter = bit_count(col("ma").bitwiseAND(col("mb")))
+    inter.cast("double") / (col("na") + col("nb") - inter).cast("double")
+  }
+
+  /** The ≤64-token vocabulary probe over a one-column token frame: ONE
+    * bounded action — limit(65) caps the driver payload at 65 tokens, and
+    * 65 back IS the open-vocabulary verdict; under the bound the result is
+    * the complete vocabulary, sorted on the driver (the order only fixes
+    * which bit a token gets — mask Jaccard does not depend on it). */
+  private def vocabProbe[T: Ordering: scala.reflect.ClassTag](tokens: DataFrame)
+      : Array[T] =
+    tokens.distinct().limit(65).collect().map(_.getAs[T](0)).sorted
+
+  /** UDF packing a token set into one BIGINT: bit i ⇔ `vocab(i)` ∈ set.
+    * Every token must be in `vocab` (a ≤64-token probe result). */
+  private def maskUdf[T: scala.reflect.runtime.universe.TypeTag](vocab: Array[T]) = {
+    val idx = vocab.zipWithIndex.toMap
+    udf { (st: Seq[T]) => var m = 0L; st.foreach(t => m |= 1L << idx(t)); m }
+  }
+
+  /** Collapse docs (doc_id, text) to distinct token SETS: returns the
+    * (doc_id, skey) map and the checkpointed (skey, sid = min doc_id, st)
+    * sets. Jaccard depends only on the set, so set-level results expand
+    * back to docs through the map. The canonical key joins the sorted
+    * tokens on a separator that cannot appear in a token (tokens come from
+    * a whitespace split) — an empty separator would make ("ab","c") and
+    * ("a","bc") collide. */
+  private def collapseSets(docsIn: DataFrame): (DataFrame, DataFrame) = {
+    val docs = docsIn
+      .select(col("doc_id"), sort_array(array_distinct(toks(normText))).as("st"))
+      .withColumn("skey", array_join(col("st"), "\u0001"))
+    val sets = docs.groupBy(col("skey"))
+      .agg(min(col("doc_id")).as("sid"), first(col("st")).as("st"))
+      .localCheckpoint(true)
+    (docs.select("doc_id", "skey"), sets)
+  }
+
+  /** Exact all-pairs over collapsed (sid, st) sets with a ≤64-token
+    * `vocab`: each set packs into one BIGINT and a broadcast theta join
+    * keeps (sa, sb), sa < sb, mask Jaccard ≥ 0.8. Quadratic by design —
+    * callers bound the set count first. */
+  private def maskPairs(sets: DataFrame, vocab: Array[String]): DataFrame = {
+    val mask = maskUdf(vocab)
+    val sm = sets.select(col("sid"), mask(col("st")).as("mk"), size(col("st")).as("n"))
+    sm.select(col("sid").as("sa"), col("mk").as("ma"), col("n").as("na"))
+      .join(broadcast(sm.select(col("sid").as("sb"), col("mk").as("mb"),
+        col("n").as("nb"))), col("sa") < col("sb") && maskJaccard >= 0.8)
+      .select(col("sa"), col("sb"))
+  }
+
+  /** Candidate (da, db) pairs, distinct, from bucketed `rows`: STAR edges
+    * (bucket-min ↔ member) plus W=3 NEIGHBOR edges (each member ↔ its
+    * predecessors in `id` order — the Manku et al. WWW'07 sliding-window
+    * emission). Star alone misses members whose nearest dup is not the
+    * bucket representative: measured ~0.70 banded recall for simhash
+    * (hamming balls are less transitive than Jaccard near-cliques), and
+    * 462/500 label agreement vs the exact closure for minhash components
+    * (MinhashCcSpec asserts ≥ 0.97 with the window). Emission stays
+    * ≤ (W+1)·bands·n — one window pass per bucket, never the per-bucket
+    * k²/2 blowup (200M+ rows at sf0.1 on this corpus). */
+  private def starWindowPairs(rows: DataFrame, id: String, bucket: String*)
+      : DataFrame = {
+    val W = 3
+    val wP = Window.partitionBy(bucket.map(col): _*)
+    val edged = rows
+      .withColumn("mn", min(col(id)).over(wP))
+      .withColumn("prevs", array((1 to W).map(i =>
+        lag(col(id), i).over(wP.orderBy(id))): _*))
+    edged.where(col(id) > col("mn"))
+      .select(col("mn").as("da"), col(id).as("db"))
+      .unionByName(edged
+        .select(explode(col("prevs")).as("da"), col(id).as("db"))
+        .where(col("da").isNotNull))
+      .distinct()
+  }
+
   // -------------------------------------------------------------------- dedup
   /** Exact dedup on normalized text → sha256 groups, deterministic keeper. */
   private val dedupExact: Q = (s, d) =>
@@ -114,16 +200,6 @@ object TextDedup {
       .orderBy("lang")
   }
 
-  /** MinHash + LSH near-dedup producing the dedup KEEP-LIST: distinct-token
-    * shingles → 64-perm signature (xxhash64 ⊕ salt minima) → 16×4 banding
-    * (candidate recall ≈ 0.9998 at J = 0.8) → STAR candidates per bucket
-    * (bucket-min ↔ member: k−1 pairs per bucket instead of k²/2 — on this
-    * corpus, where ~24% of all pairs are true near-dups, all-pairs emission
-    * is 200M+ rows; star emission is ≤ bands·n) → exact token-set Jaccard
-    * verification ≥ 0.8 on long-hashed token sets → per-doc keeper =
-    * min verified bucket representative (one union-find round; the standard
-    * single-pass LSH dedup). No cross join anywhere — the 100 TB path.
-    * Self-verified (detection recall vs exhaustive Jaccard truth). */
   /** Banded-LSH VERIFIED near-dup pairs (da < db, jacc): star candidates
     * from the 16×4 minhash bands, exact-Jaccard-verified ≥ 0.8 — the
     * recall-bounded candidate graph shared by dedup_minhash (which folds it
@@ -131,10 +207,7 @@ object TextDedup {
     * over it and measures agreement against the exact closure of
     * pipeline_neardup_full — the open-vocab composition path). */
   private[graft] def minhashVerifiedPairs(s: SparkSession, d: String): DataFrame =
-    bandedVerifiedPairs(tbl(s, d, "documents")
-      .select(col("doc_id").as("id"), toks(normText).as("tk"))
-      .select(col("id"),
-        sort_array(array_distinct(expr("transform(tk, t -> xxhash64(t))"))).as("sh")))
+    bandedVerifiedPairs(hashedDocSets(tbl(s, d, "documents")))
 
   /** MinHash BAND TABLE over an (id: long, sh: sorted distinct xxhash64
     * token set) frame: 64-perm signature (xxhash64 ⊕ salt minima) → 16 bands
@@ -162,44 +235,28 @@ object TextDedup {
     * distinct xxhash64 token set) frame — shared by dedup_minhash (documents)
     * and pipeline_neardup_full's open-vocabulary pair stage (collapsed
     * distinct sets). 64-perm signature → 16×4 bands → star + W=3
-    * neighbor-window candidates → exact hashed-set Jaccard ≥ `threshold`.
+    * neighbor-window candidates → exact hashed-set Jaccard ≥ 0.8.
     * Returns (da, db, jacc) with da < db. Work is ≤ (W+1)·bands·n candidate
     * rows plus two equi-joins for the verify: never all-pairs, no full-side
     * broadcast, nothing data-sized reaches the driver. */
-  private[graft] def bandedVerifiedPairs(sets: DataFrame,
-      threshold: Double = 0.8): DataFrame = {
-    val banded = bandTable(sets)
-    // STAR edges (bucket-min ↔ member) + W=3 NEIGHBOR edges (member ↔ its
-    // predecessors in id order — the same Manku WWW'07 sliding-window
-    // emission dedup_simhash uses): star alone keeps the KEEP-LIST recall
-    // high but, measured in MinhashCcSpec, loses component merges where
-    // neither endpoint is the bucket representative (462/500 label
-    // agreement vs the exact closure; ≥ 0.97 asserted with the window).
-    // Emission stays ≤ (W+1)·bands·n — never the per-bucket k²/2 blowup
-    // (200M+ rows at sf0.1 on this corpus, the round-1 lesson).
-    val W = 3
-    val wP = Window.partitionBy("band", "bh")
-    val wOrd = wP.orderBy("id")
-    val edged = banded
-      .withColumn("mn", min(col("id")).over(wP))
-      .withColumn("prevs", array((1 to W).map(i =>
-        lag(col("id"), i).over(wOrd)): _*))
-    val cands = edged.where(col("id") > col("mn"))
-      .select(col("mn").as("da"), col("id").as("db"))
-      .unionByName(edged
-        .select(explode(col("prevs")).as("da"), col("id").as("db"))
-        .where(col("da").isNotNull))
-      .distinct()
-    cands
+  private[graft] def bandedVerifiedPairs(sets: DataFrame): DataFrame =
+    starWindowPairs(bandTable(sets), "id", "band", "bh")
       .join(sets.select(col("id").as("da"), col("sh").as("sa")), "da")
       .join(sets.select(col("id").as("db"), col("sh").as("sb")), "db")
-      .withColumn("inter", size(array_intersect(col("sa"), col("sb"))))
-      .withColumn("jacc", col("inter").cast("double") /
-        (size(col("sa")) + size(col("sb")) - col("inter")).cast("double"))
-      .where(col("jacc") >= threshold)
+      .withColumn("jacc", setJaccard(col("sa"), col("sb")))
+      .where(col("jacc") >= 0.8)
       .select(col("da"), col("db"), col("jacc"))
-  }
 
+  /** MinHash + LSH near-dedup producing the dedup KEEP-LIST: distinct-token
+    * shingles → 64-perm signature (xxhash64 ⊕ salt minima) → 16×4 banding
+    * (candidate recall ≈ 0.9998 at J = 0.8) → star + window candidates per
+    * bucket ([[starWindowPairs]]; on this corpus, where ~24% of all pairs
+    * are true near-dups, all-pairs emission is 200M+ rows) → exact
+    * token-set Jaccard verification ≥ 0.8 on long-hashed token sets →
+    * per-doc keeper = min verified bucket representative (one union-find
+    * round; the standard single-pass LSH dedup). No cross join anywhere —
+    * the 100 TB path. Self-verified (detection recall vs exhaustive
+    * Jaccard truth). */
   private val dedupMinhash: Q = (s, d) => {
     val verified = minhashVerifiedPairs(s, d)
       .groupBy(col("db"))
@@ -210,6 +267,36 @@ object TextDedup {
         coalesce(col("keeper"), col("doc_id")).as("keeper"),
         col("keeper").isNotNull.as("is_dup"), col("best_jacc"))
       .orderBy("doc_id")
+  }
+
+  /** Doc ids having a SMALLER exact string-Jaccard(>= 0.8) near-dup among
+    * `docsIn` (doc_id, text) — the shared truth side of the dedup audit
+    * rows (minhash + simhash). Collapsed distinct-set groups first (non-min
+    * members are dups by identity), then an all-pairs distinct-set scan
+    * flags the group minima — the declared exact-truth brute force (like
+    * sim_cosine_topk), the reference by design, never the scale path. */
+  private[graft] def jaccardTruthDups(docsIn: DataFrame): DataFrame = {
+    val (docs, sets) = collapseSets(docsIn)
+    // The all-pairs scan is EXACT either way; what routing buys is the
+    // comparison cost. On a <=64-token corpus vocabulary (this fixture
+    // measures 31) each distinct set packs into one BIGINT and the
+    // 15.5M-pair scan is codegen'd bit_count(and) integer ops; the
+    // interpreted array_intersect variant measured 56 s at sf0.1, the
+    // bitmask one ~2 s. Open vocabulary falls back to the exact array
+    // path — the honest O(groups^2) truth reference either way, same
+    // bounded-probe routing rule as neardupLabelsFromDocs.
+    val vocab = vocabProbe[String](sets.select(explode(col("st"))))
+    val pairs =
+      if (vocab.length <= 64) maskPairs(sets, vocab)
+      else sets.select(col("sid").as("sa"), col("st").as("sta"))
+        .join(sets.select(col("sid").as("sb"), col("st").as("stb")),
+          col("sa") < col("sb") && setJaccard(col("sta"), col("stb")) >= 0.8)
+    val minDup = pairs.select(col("sb").as("sid")).distinct()
+      .withColumn("md", lit(true))
+    docs.join(sets.select(col("skey"), col("sid")), "skey")
+      .join(minDup, Seq("sid"), "left")
+      .where(col("doc_id") > col("sid") || coalesce(col("md"), lit(false)))
+      .select(col("doc_id"))
   }
 
   /** ORACLE-GATED audit for dedup_minhash (the round-10 sketch-audit
@@ -233,59 +320,6 @@ object TextDedup {
     *    sf0.1; the gap is the star+window emission finding components,
     *    not every pair — the documented connectivity-over-pair-
     *    completeness design. */
-  /** Doc ids having a SMALLER exact string-Jaccard(>= 0.8) near-dup — the
-    * shared truth side of the dedup audit rows (minhash + simhash).
-    * Collapsed distinct-set groups first (non-min members are dups by
-    * identity), then an all-pairs distinct-set scan flags the group minima —
-    * the declared exact-truth brute force (like sim_cosine_topk), the
-    * reference by design, never the scale path. */
-  private def jaccardTruthDups(s: SparkSession, d: String): DataFrame = {
-    val docs = tbl(s, d, "documents")
-      .select(col("doc_id"), sort_array(array_distinct(toks(normText))).as("st"))
-      .withColumn("skey", array_join(col("st"), "\u0001"))
-    val g = docs.groupBy(col("skey"))
-      .agg(min(col("doc_id")).as("m"), first(col("st")).as("st"))
-      .localCheckpoint(true)
-    // The all-pairs scan is EXACT either way; what routing buys is the
-    // comparison cost. On a <=64-token corpus vocabulary (this fixture
-    // measures 31) each distinct set packs into one BIGINT and the
-    // 15.5M-pair scan is codegen'd bit_count(and) integer ops; the
-    // interpreted array_intersect variant measured 56 s at sf0.1, the
-    // bitmask one ~2 s. Open vocabulary falls back to the exact array
-    // path — the honest O(groups^2) truth reference either way, same
-    // bounded-probe routing rule as neardupLabelsFromDocs.
-    val vocab = g.select(explode(col("st")).as("t")).distinct()
-      .orderBy("t").limit(65).collect().map(_.getString(0))
-    val minDup =
-      if (vocab.length <= 64) {
-        val idx = vocab.zipWithIndex.toMap
-        val maskU = udf { (st: Seq[String]) =>
-          var mk = 0L; st.foreach(t => mk |= 1L << idx(t)); mk
-        }
-        val gm = g.select(col("m"), maskU(col("st")).as("mk"),
-          size(col("st")).as("nt"))
-        val inter = bit_count(col("ma").bitwiseAND(col("mb")))
-        gm.select(col("m").as("am"), col("mk").as("ma"), col("nt").as("na"))
-          .join(broadcast(gm.select(col("m").as("bm"), col("mk").as("mb"),
-            col("nt").as("nb"))),
-            col("am") < col("bm") && inter.cast("double") /
-              (col("na") + col("nb") - inter).cast("double") >= 0.8)
-          .select(col("bm").as("m")).distinct().withColumn("md", lit(true))
-      } else {
-        val inter = size(array_intersect(col("sa"), col("sb")))
-        val jac = inter.cast("double") /
-          (size(col("sa")) + size(col("sb")) - inter).cast("double")
-        g.select(col("m").as("am"), col("st").as("sa"))
-          .join(g.select(col("m").as("bm"), col("st").as("sb")),
-            col("am") < col("bm") && jac >= 0.8)
-          .select(col("bm").as("m")).distinct().withColumn("md", lit(true))
-      }
-    docs.join(g.select(col("skey"), col("m")), "skey")
-      .join(minDup, Seq("m"), "left")
-      .where(col("doc_id") > col("m") || coalesce(col("md"), lit(false)))
-      .select(col("doc_id"))
-  }
-
   private val dedupMinhashAudit: Q = (s, d) => {
     // r18 (VERDICT r17 item 5, guide §2.6): the three audit inputs — doc
     // count, exact-Jaccard truth count, LSH-verified precision/recall — are
@@ -302,18 +336,15 @@ object TextDedup {
       .select(col("doc_id"), sort_array(array_distinct(toks(normText))).as("st"))
     // found side: the production banded-LSH verified pairs, each
     // re-verified against the exact STRING sets
-    val fInter = size(array_intersect(col("sta"), col("stb")))
-    val fjac = fInter.cast("double") /
-      (size(col("sta")) + size(col("stb")) - fInter).cast("double")
     val Seq(base, nt, chk) = overlap(s, threads = 3)(Seq(
       () => sets.agg(count(lit(1)).as("n_docs")).localCheckpoint(true),
-      () => jaccardTruthDups(s, d).agg(count(lit(1)).as("n_truth"))
-        .localCheckpoint(true),
+      () => jaccardTruthDups(tbl(s, d, "documents"))
+        .agg(count(lit(1)).as("n_truth")).localCheckpoint(true),
       () => minhashVerifiedPairs(s, d)
         .join(sets.select(col("doc_id").as("da"), col("st").as("sta")), "da")
         .join(sets.select(col("doc_id").as("db"), col("st").as("stb")), "db")
-        .agg(coalesce(min(when(fjac >= 0.8, 1L).otherwise(0L)), lit(1L))
-            .as("prec"),
+        .agg(coalesce(min(when(setJaccard(col("sta"), col("stb")) >= 0.8, 1L)
+            .otherwise(0L)), lit(1L)).as("prec"),
           countDistinct(col("db")).as("n_found"))
         .localCheckpoint(true)))
     base.crossJoin(broadcast(nt)).crossJoin(broadcast(chk))
@@ -339,7 +370,7 @@ object TextDedup {
     // found sides are independent eager checkpoints that used to serialize
     // their single-task stage chains; overlap them on a 2-thread pool.
     val Seq(truth, found) = overlap(s, threads = 2)(Seq(
-      () => jaccardTruthDups(s, d).localCheckpoint(true),
+      () => jaccardTruthDups(tbl(s, d, "documents")).localCheckpoint(true),
       () => dedupSimhash(s, d).where(col("is_dup")).select(col("doc_id"))
         .localCheckpoint(true)))
     val base = tbl(s, d, "documents").agg(count(lit(1)).as("n_docs"))
@@ -357,9 +388,9 @@ object TextDedup {
   }
 
   /** SimHash near-dedup KEEP-LIST: 64-bit signature from weighted token-hash
-    * bits, 4×16-bit banding for candidates, then STAR emission per bucket
-    * (bucket-min ↔ member, k−1 pairs instead of k²/2 — the identical pattern
-    * dedup_minhash uses; a hot 16-bit bucket at 100 TB would otherwise emit
+    * bits, 4×16-bit banding for candidates, then star + window emission per
+    * bucket ([[starWindowPairs]], the identical emission dedup_minhash
+    * uses; a hot 16-bit bucket at 100 TB would otherwise emit
     * quadratically), Hamming ≤ 8 verification via bit_count(xor), keeper =
     * min verified bucket representative. Self-verified (SimhashSpec:
     * precision exact vs independently recomputed signatures, detection
@@ -370,27 +401,7 @@ object TextDedup {
       posexplode(array((0 until 4).map(b =>
         shiftright(col("simhash"), b * 16).bitwiseAND(lit(0xFFFFL))): _*))
         .as(Seq("band", "bv")))
-    // STAR edges (bucket-min ↔ member) catch members close to the bucket
-    // representative; NEIGHBOR edges (each member ↔ its W=3 predecessors in
-    // doc_id order — the Manku et al. WWW'07 sliding-window pattern) catch
-    // members whose nearest dup is NOT the representative: hamming balls are
-    // less transitive than Jaccard near-cliques, so star alone measured only
-    // ~0.70 banded recall. Emission stays ≤ (W+1)·bands·n (one window pass
-    // per bucket), never the k²/2 all-pairs blowup.
-    val W = 3
-    val wP = Window.partitionBy("band", "bv")
-    val wOrd = wP.orderBy("doc_id")
-    val edged = banded
-      .withColumn("mn", min(col("doc_id")).over(wP))
-      .withColumn("prevs", array((1 to W).map(i =>
-        lag(col("doc_id"), i).over(wOrd)): _*))
-    val cands = edged.where(col("doc_id") > col("mn"))
-      .select(col("mn").as("da"), col("doc_id").as("db"))
-      .unionByName(edged
-        .select(explode(col("prevs")).as("da"), col("doc_id").as("db"))
-        .where(col("da").isNotNull))
-      .distinct()
-    val verified = cands
+    val verified = starWindowPairs(banded, "doc_id", "band", "bv")
       .join(sigs.select(col("doc_id").as("da"), col("simhash").as("ha")), "da")
       .join(sigs.select(col("doc_id").as("db"), col("simhash").as("hb")), "db")
       .withColumn("hamming", bit_count(col("ha").bitwiseXOR(col("hb"))))
@@ -422,9 +433,11 @@ object TextDedup {
     bitSums.select(col("doc_id"), sim.as("simhash"))
   }
 
-  /** Exact token-set Jaccard pairs on a bounded slice (doc_id < 60) — the
-    * DuckDB-checkable twin of dedup_minhash's verification arithmetic. */
-  private val dedupNgramJaccard: Q = (s, d) => {
+  /** (db, da, inter, na, nb) for every pair da < db of the bounded slice
+    * (doc_id < 60) that shares a token: exact integer intersections from a
+    * token self-join plus both set sizes — the shared core of the two
+    * DuckDB-replayable slice twins below. */
+  private def sliceOverlaps(s: SparkSession, d: String): DataFrame = {
     val t = tbl(s, d, "documents").where(col("doc_id") < 60)
       .select(col("doc_id"), array_distinct(toks(normText)).as("st"))
     val tok = t.select(col("doc_id"), explode(col("st")).as("tok"))
@@ -436,12 +449,17 @@ object TextDedup {
     inter
       .join(sizes.select(col("doc_id").as("da"), col("n").as("na")), "da")
       .join(sizes.select(col("doc_id").as("db"), col("n").as("nb")), "db")
+  }
+
+  /** Exact token-set Jaccard pairs on a bounded slice (doc_id < 60) — the
+    * DuckDB-checkable twin of dedup_minhash's verification arithmetic. */
+  private val dedupNgramJaccard: Q = (s, d) =>
+    sliceOverlaps(s, d)
       .withColumn("jacc", col("inter").cast("double") /
         (col("na") + col("nb") - col("inter")).cast("double"))
       .where(col("jacc") >= 0.8)
       .select(col("da"), col("db"), col("inter"), r4(col("jacc")).as("jacc"))
       .orderBy("da", "db")
-  }
 
   /** Pairwise SOURCE-level vocabulary Jaccard — the corpus-curation
     * readout above document granularity: "which crawls are the same
@@ -487,30 +505,15 @@ object TextDedup {
     * banded-LSH path (min-side containment LSH buckets exactly like
     * Jaccard bands since C ≥ J always — bands RECALL a superset of the
     * containment-qualifying pairs at the same threshold). */
-  private val dedupContainment: Q = (s, d) => {
-    val t = tbl(s, d, "documents").where(col("doc_id") < 60)
-      .select(col("doc_id"), array_distinct(toks(normText)).as("st"))
-    val tok = t.select(col("doc_id"), explode(col("st")).as("tok"))
-    val inter = tok.as("a").join(tok.as("b"),
-        col("a.tok") === col("b.tok") && col("a.doc_id") < col("b.doc_id"))
-      .groupBy(col("a.doc_id").as("da"), col("b.doc_id").as("db"))
-      .agg(count(lit(1)).as("inter"))
-    val sizes = t.select(col("doc_id"), size(col("st")).as("n"))
-    inter
-      .join(sizes.select(col("doc_id").as("da"), col("n").as("na")), "da")
-      .join(sizes.select(col("doc_id").as("db"), col("n").as("nb")), "db")
+  private val dedupContainment: Q = (s, d) =>
+    sliceOverlaps(s, d)
       .where(col("inter") * 10 >= least(col("na"), col("nb")) * 9)
       .select(col("da"), col("db"), col("inter"),
         least(col("na"), col("nb")).as("n_min"),
         r4(col("inter").cast("double") /
           least(col("na"), col("nb")).cast("double")).as("containment"))
       .orderBy("da", "db")
-  }
 
-  /** Connected components over the verified near-dup graph (bounded slice):
-    * iterative min-label propagation turns pairwise dup edges into dedup
-    * clusters; the DuckDB oracle computes the same labels by recursive
-    * transitive closure. */
   /** Unordered (node, label) component labels on the bounded slice — the
     * reusable core; consumers add their own presentation sort or re-agg. */
   private def componentLabels(s: SparkSession, d: String): DataFrame = {
@@ -535,6 +538,10 @@ object TextDedup {
   private val labelsMemo =
     new java.util.concurrent.ConcurrentHashMap[String, Array[(Long, Long)]]()
 
+  /** Connected components over the verified near-dup graph (bounded slice):
+    * iterative min-label propagation turns pairwise dup edges into dedup
+    * clusters; the DuckDB oracle computes the same labels by recursive
+    * transitive closure. */
   private val dedupConnectedComponents: Q = (s, d) =>
     componentLabels(s, d).orderBy("node")
 
@@ -617,8 +624,8 @@ object TextDedup {
     *     are exactly the set-level components expanded back through the
     *     collapse map; on near-dup corpora this is the big n-reducer (a
     *     production pipeline always exact-collapses before near-dedup).
-    *  2. PAIR the distinct sets, guarded by ONE cheap distributed
-    *     countDistinct over the exploded tokens — nothing data-sized ever
+    *  2. PAIR the distinct sets, guarded by ONE bounded vocabulary probe
+    *     ([[vocabProbe]]) plus a set count — nothing data-sized ever
     *     reaches the driver. Vocabulary ≤ 64 tokens (the fixture measures
     *     31) AND ≤ maskSetCap distinct sets (the r10 guard — small vocab
     *     does not bound |sets|, and the bitmask join broadcasts every set):
@@ -627,9 +634,8 @@ object TextDedup {
     *     join of pure codegen integer ops (bit_count(and)) — candidate
     *     df-based prefix filtering is vacuous at this vocabulary (every
     *     token's df is ~n/13). Open vocabulary (> 64) or past the cap: the
-    *     pair stage —
-    *     and only the pair stage — swaps for dedup_minhash's banded-LSH
-    *     candidate graph over the collapsed sets (bandedVerifiedPairs:
+    *     pair stage — and only the pair stage — swaps for dedup_minhash's
+    *     banded-LSH candidate graph over the collapsed sets (bandedVerifiedPairs:
     *     star + neighbor-window emission, exact-Jaccard verify, all
     *     equi-joins); every stage below consumes the edge set unchanged.
     *     NeardupBandedSpec forces this path on a 130-token-vocabulary
@@ -653,28 +659,24 @@ object TextDedup {
     * the parquet corpus can't produce, and the bounded-slice CC queries
     * share it so the sliced and full-corpus label paths cannot drift. */
   private[graft] def neardupLabelsFromDocs(docsIn: DataFrame,
-      maskSetCap: Long = 1L << 13): (DataFrame, Int) = {
-    val docs = docsIn
-      .select(col("doc_id"), sort_array(array_distinct(toks(normText))).as("st"))
-      // canonical set key: sorted tokens joined on a separator that cannot
-      // appear in a token (tokens come from a whitespace split) — an empty
-      // separator would make ("ab","c") and ("a","bc") collide
-      .withColumn("skey", array_join(col("st"), "\u0001"))
-    val sets = docs.groupBy(col("skey"))
-      .agg(min(col("doc_id")).as("sid"), first(col("st")).as("st"))
-      .localCheckpoint(true) // reused by pairing AND the expand stage
-    // Routing GUARD before anything reaches the driver: ONE distributed
-    // action over the checkpointed sets measures the vocabulary size AND
-    // the distinct-set count. The bitmask fast path needs BOTH small:
-    // ≤64 tokens makes a one-BIGINT mask possible, but nothing ties
-    // vocabulary size to |sets| — a degenerate corpus can have a tiny
-    // vocabulary yet millions of distinct subsets, and the fast path
-    // broadcasts every set AND compares all pairs, so past maskSetCap it
-    // would overflow the broadcast and go quadratic (r9 verdict: the one
-    // remaining unguarded quadratic). Above either bound the banded-LSH
-    // path takes over — the same adaptive routing pattern as
-    // propagateMinLabels' 2^19 local-solve cap. Only under the proven
-    // bounds does the (≤64-row) vocabulary collect.
+      maskSetCap: Long = MaskSetCap): (DataFrame, Int) = {
+    val (docs, sets) = collapseSets(docsIn)
+    neardupLabelsFromSets(docs, sets, maskSetCap)
+  }
+
+  /** Steps 2–4 of [[neardupFullLabels]] over an already collapsed corpus
+    * ([[collapseSets]]'s doc → skey map and checkpointed sets). */
+  private def neardupLabelsFromSets(docs: DataFrame, sets: DataFrame,
+      maskSetCap: Long): (DataFrame, Int) = {
+    // Routing GUARD before anything data-sized reaches the driver: the
+    // bitmask fast path needs BOTH a ≤64-token vocabulary (one-BIGINT
+    // masks) and ≤ maskSetCap distinct sets — nothing ties vocabulary size
+    // to |sets|, a degenerate corpus can have a tiny vocabulary yet
+    // millions of distinct subsets, and the fast path broadcasts every set
+    // AND compares all pairs, so past the cap it would overflow the
+    // broadcast and go quadratic (r9 verdict). Above either bound the
+    // banded-LSH path takes over — the same adaptive routing pattern as
+    // propagateMinLabels' 2^19 local-solve cap.
     // Cap SIZED BY MEASUREMENT (r10c, a 16×-multiplied sf0.1 corpus whose
     // near-clique spans 59,648 distinct sets): at 62k sets — under the
     // original 2^16 cap — the all-pairs route ran >600 s on 32 threads,
@@ -684,47 +686,24 @@ object TextDedup {
     // emission is O(n) and labeled the same corpus in ~21 s). 2^13 keeps
     // the worst case at ~33M comparisons / ~33M emitted edges — trivially
     // cheap — while the sf fixtures (≤3.9k sets) stay on the exact path.
-    // r18: ONE bounded probe replaces the old two-action guard (a
-    // double-countDistinct EXPAND pass for (v, k) plus a second full
-    // vocabulary collect on the fast path). limit(65) IS the ≤64 verdict
-    // — 65 distinct tokens back means open vocabulary — and the collected
-    // prefix is the complete vocabulary whenever the verdict passes; the
-    // set count is a partition scan of the already-materialized checkpoint.
-    // Driver payload stays bounded at 65 tokens either way.
-    val vocab65 = sets.select(explode(col("st")).as("tok")).distinct()
-      .orderBy("tok").limit(65).collect().map(_.getString(0))
-    val nSets = sets.count() // sid is distinct by construction (min per skey)
+    // The set count is a partition scan of the materialized checkpoint.
+    val vocab = vocabProbe[String](sets.select(explode(col("st"))))
     val pairs =
-      if (vocab65.length <= 64 && nSets <= maskSetCap) {
-        val vocab = vocab65
-        val idx = vocab.zipWithIndex.toMap
-        val maskU = udf { (st: Seq[String]) =>
-          var m = 0L; st.foreach(t => m |= 1L << idx(t)); m
-        }
-        val sm = sets.select(col("sid"), maskU(col("st")).as("mask"),
-          size(col("st")).as("n"))
-        val a = sm.select(col("sid").as("sa"), col("mask").as("ma"), col("n").as("na"))
-        val b = sm.select(col("sid").as("sb"), col("mask").as("mb"), col("n").as("nb"))
-        val inter = bit_count(col("ma").bitwiseAND(col("mb")))
-        a.join(broadcast(b), col("sa") < col("sb") &&
-            inter.cast("double") /
-              (col("na") + col("nb") - inter).cast("double") >= 0.8)
-          .select(col("sa"), col("sb"))
-      } else {
+      if (vocab.length <= 64 && sets.count() <= maskSetCap) maskPairs(sets, vocab)
+      else {
         // Open vocabulary: dedup_minhash's banded-LSH candidate graph over
         // the collapsed sets — equi-joins only, no full-side broadcast, no
         // all-pairs theta. Jaccard over xxhash64'd token sets ≡ Jaccard over
         // the string sets (the standard minhash no-collision assumption,
         // shared with dedup_minhash / dedup_ngram_jaccard).
-        bandedVerifiedPairs(sets.select(col("sid").as("id"),
-            sort_array(expr("transform(st, t -> xxhash64(t))")).as("sh")))
+        bandedVerifiedPairs(hashCollapsedSets(sets))
           .select(col("da").as("sa"), col("db").as("sb"))
       }
     val edges = pairs.select(col("sa").as("src"), col("sb").as("dst"))
       .unionByName(pairs.select(col("sb").as("src"), col("sa").as("dst")))
     val (setLabels, rounds) = propagateMinLabels(edges,
       sets.select(col("sid").as("node"), col("sid").as("label")), maxRounds = 20)
-    val docLabels = docs.select(col("doc_id"), col("skey"))
+    val docLabels = docs
       .join(sets.select(col("skey"), col("sid")), "skey")
       .join(broadcast(setLabels.withColumnRenamed("node", "sid")), "sid")
       .select(col("doc_id").as("node"), col("label"),
@@ -749,43 +728,6 @@ object TextDedup {
     neardupLabelsFromDocs(
       tbl(s, d, "documents").where(col("doc_id") < 500))._1.orderBy("node")
 
-  /** INCREMENTAL near-dedup — the operation a standing 100 TB corpus
-    * actually runs: each incoming crawl increment is deduped AGAINST the
-    * persisted corpus state instead of re-deduping the world. Standing state
-    * = [[NeardupState]]: the doc-level component labels, the corpus's
-    * collapsed HASHED token sets, and the minhash band table ([[bandTable]])
-    * over them; per increment the work is ∝ batch, never ∝ corpus
-    * re-pairing:
-    *
-    *  1. HASH the batch per-doc (map-only — no collapse shuffle; exact-dup
-    *     cliques are bounded by mask-group stars / banded stars in step 2).
-    *  2. PAIR only batch-incident edges, guarded by the full path's ≤64
-    *     vocabulary routing rule as ONE bounded action (limit(65) over the
-    *     hashed union vocabulary — hitting the cap IS the open verdict).
-    *     Union vocab ≤ 64: exact bitmask verification over hash-indexed
-    *     bits of mask-group representatives with the BATCH side broadcast
-    *     (one streaming pass over the standing hashed sets — no
-    *     corpus×corpus work), plus member→rep star edges. Open vocab: the
-    *     batch's band table equi-joins the STANDING corpus band table
-    *     (bipartite — candidates are co-bucketed batch×corpus pairs, then
-    *     exact-Jaccard verified), plus bandedVerifiedPairs within the batch.
-    *  3. CONTRACT each verified (batch, corpus) edge to the corpus side's
-    *     standing component label — corpus components become super-nodes, so
-    *     a batch doc bridging two standing clusters merges them exactly as a
-    *     full recompute would. Min-label propagation then runs over batch
-    *     sids ∪ touched labels only (O(batch) nodes, never O(corpus)).
-    *  4. EXPAND: corpus rows pass through with a broadcast LEFT join against
-    *     the relabel DELTA (super-nodes whose label changed — O(batch)-sized
-    *     by construction since untouched nodes keep label = node); batch
-    *     docs left-join the same delta directly on doc_id.
-    *
-    * Labels are EXACTLY the full-recompute labels (corpus labels are
-    * component minima; new edges are all batch-incident; contraction
-    * preserves connectivity and doc_id minima — corpus ids precede batch
-    * ids), so the DuckDB oracle is the identical whole-table recursive
-    * transitive closure as pipeline_neardup_full: the hash match PROVES
-    * incremental ≡ full at both SFs. IncrementalDedupSpec additionally
-    * forces the open-vocab band-table path on a 130-token fixture. */
   /** The persistable standing corpus state for incremental near-dedup:
     * component labels (node, label), collapsed HASHED token sets (id, sh),
     * and the minhash band table (id, band, bh) over those sets. A production
@@ -794,17 +736,8 @@ object TextDedup {
   private[graft] case class NeardupState(labels: DataFrame, sets: DataFrame,
       bands: DataFrame)
 
-  /** Collapse docs to (doc_id → skey map, distinct token sets keyed by min
-    * doc_id). Shared by the incremental path and its state-staging writer. */
-  private def collapseSets(docsIn: DataFrame): (DataFrame, DataFrame) = {
-      val docs = docsIn
-        .select(col("doc_id"), sort_array(array_distinct(toks(normText))).as("st"))
-        .withColumn("skey", array_join(col("st"), "\u0001"))
-      val sets = docs.groupBy(col("skey"))
-        .agg(min(col("doc_id")).as("sid"), first(col("st")).as("st"))
-        .localCheckpoint(true)
-      (docs.select("doc_id", "skey"), sets)
-  }
+  /** Collapsed (sid, st) sets → hashed (id, sh) sets, the standing-state
+    * and banded-pairing shape. */
   private def hashCollapsedSets(sets: DataFrame): DataFrame =
     sets.select(col("sid").as("id"),
       sort_array(expr("transform(st, t -> xxhash64(t))")).as("sh"))
@@ -813,9 +746,10 @@ object TextDedup {
     * subdirs) — the bootstrap a production pipeline runs ONCE; every later
     * increment's work is ∝ batch because it reads this instead. */
   private[graft] def neardupStateWrite(corpusDocs: DataFrame, dir: String): Unit = {
-    neardupLabelsFromDocs(corpusDocs)._1.select("node", "label")
+    val (docs, sets) = collapseSets(corpusDocs)
+    neardupLabelsFromSets(docs, sets, MaskSetCap)._1.select("node", "label")
       .write.mode("overwrite").parquet(s"$dir/labels")
-    val hc = hashCollapsedSets(collapseSets(corpusDocs)._2).localCheckpoint(true)
+    val hc = hashCollapsedSets(sets).localCheckpoint(true)
     hc.write.mode("overwrite").parquet(s"$dir/sets")
     bandTable(hc).write.mode("overwrite").parquet(s"$dir/bands")
   }
@@ -872,10 +806,8 @@ object TextDedup {
   }
 
   /** The guarded batch-incident PAIR stage shared by the incremental batch
-    * path and stream_neardup's micro-batches. Routing is the full path's
-    * ≤64-vocabulary rule over the HASHED union vocabulary, folded into ONE
-    * bounded action (limit(65) caps the driver payload at 65 longs; hitting
-    * the cap IS the open-vocabulary verdict).
+    * path and stream_neardup's micro-batches, routed by a [[NeardupRoute]]
+    * the caller computes once per increment.
     *
     *  - `crossReps` (sa = batch rep doc, sid = standing set id, jacc):
     *    batch×corpus matches with exact Jaccard. ≤64 vocab: bitmask
@@ -892,62 +824,54 @@ object TextDedup {
     *    back to docs. */
   private[graft] case class NeardupPairStage(crossReps: DataFrame,
       internal: DataFrame, memberMap: DataFrame)
-  /** ≤64-vocabulary probe over standing ∪ batch hashed tokens: ONE bounded
-    * action — limit(65) caps the driver payload at 65 longs, and hitting
-    * the cap is the open-vocabulary verdict. */
-  private[graft] def neardupUnionVocab(hb: DataFrame, st: NeardupState): Array[Long] =
-    st.sets.select(explode(col("sh")).as("h"))
-      .unionByName(hb.select(explode(col("sh")).as("h")))
-      .distinct().limit(65).collect().map(_.getLong(0)).sorted
-  /** Mask-branch routing verdict for [[neardupPairStage]]: vocabulary ≤ 64
-    * AND a set-count guard on BOTH sides, mirroring neardupLabelsFromDocs'
-    * maskSetCap (r10c, measured on a 16×-clique corpus): the mask branch's
-    * theta joins emit Θ(standing×batchReps) comparisons AND — on a true
-    * near-dup clique — Θ(batch×clique) verified matches before
-    * contraction (~660M rows at x16, ~38 s/increment). Past the cap the
-    * banded branch takes over; its per-bucket standing representatives
-    * keep candidates O(batch×bands). Computed ONCE per increment (two
-    * bounded count actions); the streaming path passes the verdict for
-    * the WHOLE increment so micro-batches (whose counts are subsets) add
-    * no per-trigger driver action. */
+
+  /** Routing of [[neardupPairStage]]: the sorted ≤64-token union
+    * vocabulary (the mask bit order; 65 entries = open vocabulary) and the
+    * mask-branch verdict. */
+  private[graft] case class NeardupRoute(vocab: Array[Long], maskOk: Boolean)
+
+  /** The mask-branch set-count guard shared by the full and incremental
+    * paths (r10c, measured on a 16×-clique corpus; see
+    * [[neardupLabelsFromSets]]). */
   private[graft] val MaskSetCap = 1L << 13
-  private[graft] def neardupMaskRouteOk(st: NeardupState,
-      vocab: Array[Long], nBatch: => Long): Boolean =
-    // short-circuit order: the open-vocab verdict costs nothing extra,
-    // and nBatch may be a cheap ROW count (an upper bound on batch sets —
-    // a conservative guard is still a guard)
-    vocab.length <= 64 && st.sets.count() <= MaskSetCap &&
-      nBatch <= MaskSetCap
+
+  /** Route an increment: ONE bounded [[vocabProbe]] over standing ∪ batch
+    * hashed tokens, then — only under 64 tokens — a set-count guard on
+    * BOTH sides: the mask branch's theta joins emit Θ(standing×batchReps)
+    * comparisons AND — on a true near-dup clique — Θ(batch×clique)
+    * verified matches before contraction (~660M rows at x16,
+    * ~38 s/increment). Past the cap the banded branch takes over; its
+    * per-bucket standing representatives keep candidates O(batch×bands).
+    * `nBatch` may be a cheap ROW count (an upper bound on batch sets — a
+    * conservative guard is still a guard). The streaming path routes the
+    * WHOLE increment once: each micro-batch's vocabulary and set count are
+    * subsets, so its mask bits and verdict match the batch path and no
+    * per-trigger driver action is added. */
+  private[graft] def neardupRoute(hb: DataFrame, st: NeardupState,
+      nBatch: => Long): NeardupRoute = {
+    val vocab = vocabProbe[Long](st.sets.select(explode(col("sh")))
+      .unionByName(hb.select(explode(col("sh")))))
+    NeardupRoute(vocab, vocab.length <= 64 && st.sets.count() <= MaskSetCap &&
+      nBatch <= MaskSetCap)
+  }
+
   private[graft] def neardupPairStage(hb: DataFrame, st: NeardupState,
-      precomputedVocab: Option[Array[Long]] = None,
-      precomputedMaskOk: Option[Boolean] = None): NeardupPairStage = {
-    // callers that pair MANY batches against one standing state (the
-    // streaming path) compute the union vocabulary ONCE over the full
-    // increment and pass it in: each micro-batch's vocabulary is a subset
-    // (a batch token outside it would break mask indexing), so the ≤64
-    // routing verdict and the mask bit assignment are identical
-    val vocab = precomputedVocab.getOrElse(neardupUnionVocab(hb, st))
-    if (precomputedMaskOk.getOrElse(
-        neardupMaskRouteOk(st, vocab, hb.count()))) {
-      val idx = vocab.zipWithIndex.toMap
-      val maskU = udf { (sh: Seq[Long]) =>
-        var m = 0L; sh.foreach(h => m |= 1L << idx(h)); m
-      }
-      val bMasks = hb.select(col("id"), maskU(col("sh")).as("ma"),
+      route: NeardupRoute): NeardupPairStage = {
+    if (route.maskOk) {
+      val mask = maskUdf(route.vocab)
+      val bMasks = hb.select(col("id"), mask(col("sh")).as("ma"),
         size(col("sh")).as("na")).localCheckpoint(true)
       val reps = bMasks.groupBy(col("ma"), col("na"))
         .agg(min(col("id")).as("sa"))
       val bm = reps.select(col("sa"), col("ma"), col("na"))
-      val inter = bit_count(col("ma").bitwiseAND(col("mb")))
-      val jc = inter.cast("double") /
-        (col("na") + col("nb") - inter).cast("double")
       val omC = st.sets.select(col("id").as("sb"),
-        maskU(col("sh")).as("mb"), size(col("sh")).as("nb"))
+        mask(col("sh")).as("mb"), size(col("sh")).as("nb"))
       val omB = bm.select(col("sa").as("sb"), col("ma").as("mb"),
         col("na").as("nb"))
-      val crossReps = omC.join(broadcast(bm), jc >= 0.8)
-        .select(col("sa"), col("sb").as("sid"), jc.as("jacc"))
-      val bbPairs = omB.join(broadcast(bm), col("sa") =!= col("sb") && jc >= 0.8)
+      val crossReps = omC.join(broadcast(bm), maskJaccard >= 0.8)
+        .select(col("sa"), col("sb").as("sid"), maskJaccard.as("jacc"))
+      val bbPairs = omB.join(broadcast(bm),
+          col("sa") =!= col("sb") && maskJaccard >= 0.8)
         .select(col("sa"), col("sb"))
       val star = bMasks.join(broadcast(reps), Seq("ma", "na"))
         .where(col("id") =!= col("sa"))
@@ -984,9 +908,7 @@ object TextDedup {
       val crossReps = cands
         .join(hb.select(col("id").as("sa"), col("sh").as("sha")), "sa")
         .join(st.sets.select(col("id").as("sid"), col("sh").as("shb")), "sid")
-        .withColumn("inter", size(array_intersect(col("sha"), col("shb"))))
-        .withColumn("jacc", col("inter").cast("double") /
-          (size(col("sha")) + size(col("shb")) - col("inter")).cast("double"))
+        .withColumn("jacc", setJaccard(col("sha"), col("shb")))
         .where(col("jacc") >= 0.8)
         .select(col("sa"), col("sid"), col("jacc"))
       NeardupPairStage(crossReps,
@@ -995,6 +917,43 @@ object TextDedup {
     }
   }
 
+  /** INCREMENTAL near-dedup — the operation a standing 100 TB corpus
+    * actually runs: each incoming crawl increment is deduped AGAINST the
+    * persisted corpus state instead of re-deduping the world. Standing state
+    * = [[NeardupState]]: the doc-level component labels, the corpus's
+    * collapsed HASHED token sets, and the minhash band table ([[bandTable]])
+    * over them; per increment the work is ∝ batch, never ∝ corpus
+    * re-pairing:
+    *
+    *  1. HASH the batch per-doc (map-only — no collapse shuffle; exact-dup
+    *     cliques are bounded by mask-group stars / banded stars in step 2).
+    *  2. PAIR only batch-incident edges, guarded by the full path's ≤64
+    *     vocabulary routing rule ([[neardupRoute]]: one bounded
+    *     [[vocabProbe]] over the hashed union vocabulary).
+    *     Union vocab ≤ 64: exact bitmask verification over hash-indexed
+    *     bits of mask-group representatives with the BATCH side broadcast
+    *     (one streaming pass over the standing hashed sets — no
+    *     corpus×corpus work), plus member→rep star edges. Open vocab: the
+    *     batch's band table equi-joins the STANDING corpus band table
+    *     (bipartite — candidates are co-bucketed batch×corpus pairs, then
+    *     exact-Jaccard verified), plus bandedVerifiedPairs within the batch.
+    *  3. CONTRACT each verified (batch, corpus) edge to the corpus side's
+    *     standing component label — corpus components become super-nodes, so
+    *     a batch doc bridging two standing clusters merges them exactly as a
+    *     full recompute would. Min-label propagation then runs over batch
+    *     sids ∪ touched labels only (O(batch) nodes, never O(corpus)).
+    *  4. EXPAND: corpus rows pass through with a broadcast LEFT join against
+    *     the relabel DELTA (super-nodes whose label changed — O(batch)-sized
+    *     by construction since untouched nodes keep label = node); batch
+    *     docs left-join the same delta directly on doc_id.
+    *
+    * Labels are EXACTLY the full-recompute labels (corpus labels are
+    * component minima; new edges are all batch-incident; contraction
+    * preserves connectivity and doc_id minima — corpus ids precede batch
+    * ids), so the DuckDB oracle is the identical whole-table recursive
+    * transitive closure as pipeline_neardup_full: the hash match PROVES
+    * incremental ≡ full at both SFs. IncrementalDedupSpec additionally
+    * forces the open-vocab band-table path on a 130-token fixture. */
   private[graft] def neardupIncrementalLabels(corpusDocs: DataFrame,
       batchDocs: DataFrame, standing: Option[NeardupState] = None)
       : (DataFrame, Int) = {
@@ -1011,14 +970,15 @@ object TextDedup {
     // recomputation); absent persisted state it is built from the corpus,
     // the first-increment bootstrap.
     val st = standing.getOrElse {
-      val hc = hashCollapsedSets(collapseSets(corpusDocs)._2).localCheckpoint(true)
-      NeardupState(neardupLabelsFromDocs(corpusDocs)._1.select("node", "label")
-        .localCheckpoint(true), hc, bandTable(hc))
+      val (docs, sets) = collapseSets(corpusDocs)
+      val hc = hashCollapsedSets(sets).localCheckpoint(true)
+      NeardupState(neardupLabelsFromSets(docs, sets, MaskSetCap)._1
+        .select("node", "label").localCheckpoint(true), hc, bandTable(hc))
     }
     val corpusLabels = st.labels
     // batch-incident verified pairs via the shared guarded stage
     // (sa = batch rep doc, sb = corpus sid OR batch doc)
-    val stage = neardupPairStage(hb, st)
+    val stage = neardupPairStage(hb, st, neardupRoute(hb, st, hb.count()))
     val pairs = stage.crossReps.select(col("sa"), col("sid").as("sb"))
       .unionByName(stage.internal)
     // CONTRACT: corpus endpoint → its standing component label (super-node);
@@ -1283,7 +1243,6 @@ object TextDedup {
     (labels, rounds)
   }
 
-  /** Embedding-cosine near-dup pairs on a bounded slice (vec_id < 200). */
   /** Unordered (va, vb) near-dup pairs on the bounded slice — reusable
     * core for the pair query and the semantic-dedup clustering. */
   private def embeddingCosinePairs(s: SparkSession, d: String): DataFrame = {
@@ -1295,6 +1254,7 @@ object TextDedup {
       .where(col("cos") >= 0.4)
   }
 
+  /** Embedding-cosine near-dup pairs on a bounded slice (vec_id < 200). */
   private val dedupEmbeddingCosine: Q = (s, d) =>
     embeddingCosinePairs(s, d)
       .select(col("va"), col("vb"), r4(col("cos")).as("cos"))

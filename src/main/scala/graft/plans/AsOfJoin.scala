@@ -130,9 +130,9 @@ case class AsOfJoinExec(left: SparkPlan, right: SparkPlan,
   * sitting above an AsOfJoin would block parquet pushdown. This rule moves
   * any filter that references only probe-side attributes below the join,
   * where the built-in rules carry it down to the scan (PushedFilters —
-  * asserted by AsOfPushdownSpec). Reference-side rows must NOT be filtered
-  * by probe predicates (they change which "last" row matches), so only the
-  * left side is eligible. */
+  * asserted on a parquet probe by ExtensionsSpec). Reference-side rows
+  * must NOT be filtered by probe predicates (they change which "last" row
+  * matches), so only the left side is eligible. */
 object PushProbeFilterThroughAsOfJoin
     extends org.apache.spark.sql.catalyst.rules.Rule[LogicalPlan] {
   import org.apache.spark.sql.catalyst.plans.logical.Filter

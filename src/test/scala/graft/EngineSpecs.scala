@@ -804,18 +804,14 @@ class NeardupFullSpec extends AnyFunSuite {
   * candidates. Labels are asserted identical to an exact all-pairs closure
   * computed independently in driver Scala, and the pairing plan is asserted
   * free of any all-pairs join shape. */
-class NeardupBandedSpec extends AnyFunSuite {
-  import TestSession._
-  import spark.implicits._
-  import org.apache.spark.sql.functions._
-
+object NeardupBandedSpec {
   // 25 clusters of 4 near-dup docs (pairwise Jaccard ≥ 0.9) over a sliding
   // 20-token window of a 130-token vocabulary (adjacent clusters overlap at
   // Jaccard 0.6 — below the 0.8 threshold), plus 10 singletons of far-apart
   // 5-token sets. Every doc is a distinct token set, so the collapse stage
   // is the identity and the banded pair stage sees all 110 sets.
-  private def vocabTok(i: Int) = s"w${((i % 130) + 130) % 130}"
-  private lazy val fixture: Seq[(Long, Seq[String])] = {
+  def vocabTok(i: Int) = s"w${((i % 130) + 130) % 130}"
+  lazy val fixture: Seq[(Long, Seq[String])] = {
     val clustered = (0 until 25).flatMap { c =>
       val base = (0 until 20).map(j => vocabTok(c * 5 + j))
       Seq(
@@ -829,6 +825,14 @@ class NeardupBandedSpec extends AnyFunSuite {
     }
     clustered ++ singletons
   }
+}
+
+class NeardupBandedSpec extends AnyFunSuite {
+  import TestSession._
+  import spark.implicits._
+  import org.apache.spark.sql.functions._
+  import NeardupBandedSpec.fixture
+
   private def docsDf = fixture
     .map { case (id, toks) => (id, toks.mkString(" ")) }
     .toDF("doc_id", "text")
@@ -919,6 +923,58 @@ class NeardupBandedSpec extends AnyFunSuite {
   }
 }
 
+/** The exact-truth side of both dedup audits (`jaccardTruthDups`) on both
+  * of its routes: NeardupBandedSpec's 130-token fixture takes the
+  * `array_intersect` all-pairs scan, its first eight clusters (56 tokens)
+  * the bitmask join. Exact duplicates (one reordered, with a repeated
+  * token) exercise the collapse. The truth doc ids must equal a driver-side
+  * brute force: a doc is a truth dup iff some smaller doc has string-token
+  * Jaccard ≥ 0.8 with it. */
+class JaccardTruthSpec extends AnyFunSuite {
+  import TestSession._
+  import spark.implicits._
+  import NeardupBandedSpec.{fixture, vocabTok}
+
+  private def bruteForce(fx: Seq[(Long, Seq[String])]): Set[Long] = {
+    val sets = fx.map { case (id, t) => id -> t.toSet }
+    sets.collect { case (j, b) if sets.exists { case (i, a) =>
+      val inter = a.intersect(b).size.toDouble
+      i < j && inter / (a.size + b.size - inter) >= 0.8
+    } => j }.toSet
+  }
+
+  private def check(fx: Seq[(Long, Seq[String])]): Unit = {
+    val want = bruteForce(fx)
+    val docs = fx.map { case (id, t) => (id, t.mkString(" ")) }.toDF("doc_id", "text")
+    val got = graft.ops.TextDedup.jaccardTruthDups(docs).collect()
+      .map(_.getLong(0)).toSeq
+    assert(got.distinct.size == got.size, "a truth dup was emitted twice")
+    assert(got.toSet == want)
+    assert(want.nonEmpty && want.size < fx.size)
+  }
+
+  // doc 200 copies a cluster member; 201 and 202 copy singleton 103 (202
+  // reordered with a repeated token), so both are dups by identity alone
+  private val copies: Seq[(Long, Seq[String])] = {
+    val byId = fixture.toMap
+    Seq(200L -> byId(5L), 201L -> byId(103L),
+      202L -> (byId(103L).reverse :+ byId(103L).head))
+  }
+
+  test("open-vocabulary truth (array_intersect route) equals brute force") {
+    val fx = fixture ++ copies
+    assert(fx.flatMap(_._2).distinct.size > 64)
+    check(fx)
+  }
+
+  test("≤64-token truth (bitmask route) equals brute force") {
+    val fx = fixture.filter(_._1 < 32) ++ copies
+    assert(fx.flatMap(_._2).distinct.size <= 64)
+    assert(fx.flatMap(_._2).toSet == (0 until 56).map(vocabTok).toSet)
+    check(fx)
+  }
+}
+
 /** Incremental near-dedup (round-6 verdict item 2): labels computed by
   * deduping a batch slice against standing corpus state must equal the
   * from-scratch whole-table labels — on the parquet corpus (bitmask pair
@@ -946,21 +1002,9 @@ class IncrementalDedupSpec extends AnyFunSuite {
   }
 
   test("open-vocab band-table path equals full recompute at several splits") {
-    // NeardupBandedSpec's fixture shape: 25 four-doc near-dup clusters over
-    // a sliding 20-token window of a 130-token vocabulary + 10 singletons.
-    def vocabTok(i: Int) = s"w${((i % 130) + 130) % 130}"
-    val fixture: Seq[(Long, Seq[String])] = {
-      val clustered = (0 until 25).flatMap { c =>
-        val base = (0 until 20).map(j => vocabTok(c * 5 + j))
-        Seq((c * 4 + 0).toLong -> base, (c * 4 + 1).toLong -> base.drop(1),
-          (c * 4 + 2).toLong -> base.dropRight(1),
-          (c * 4 + 3).toLong -> (base :+ vocabTok(c * 5 + 20)))
-      }
-      val singletons = (0 until 10).map { k =>
-        (100 + k).toLong -> (0 until 5).map(j => vocabTok(k * 13 + j * 2 + 1))
-      }
-      clustered ++ singletons
-    }
+    // NeardupBandedSpec's fixture: 25 four-doc near-dup clusters over a
+    // sliding 20-token window of a 130-token vocabulary + 10 singletons.
+    val fixture = NeardupBandedSpec.fixture
     assert(fixture.flatMap(_._2).distinct.size > 64) // forces the band path
     val docsDf = fixture.map { case (id, t) => (id, t.mkString(" ")) }
       .toDF("doc_id", "text")
@@ -1568,20 +1612,22 @@ class StreamingSpec extends AnyFunSuite {
     val sink = s"/tmp/graft_io/idem_spec_${System.nanoTime()}"
     def rows(df: org.apache.spark.sql.DataFrame) =
       df.collect().map(_.toSeq).toSet
-    val p1 = rows(graft.ops.Streaming.idempotentUpsertReplay(spark, sf, sink))
-    val p2 = rows(graft.ops.Streaming.idempotentUpsertReplay(spark, sf, sink))
-    assert(p1 == p2, "redelivery changed the sink")
-    import org.apache.spark.sql.functions._
-    import org.apache.spark.sql.expressions.Window
-    val w = Window.partitionBy("user_id").orderBy(desc("tsm"), desc("event_id"))
-    val batch = rows(graft.util.Canon.events(spark, sf)
-      .where(col("event_type") === "purchase")
-      .selectExpr("user_id", "event_id", "date_trunc('millisecond', ts) AS tsm",
-        "CAST(floor(value*100 + 0.5) AS BIGINT) AS cents")
-      .withColumn("rn", row_number().over(w)).where(col("rn") === 1)
-      .select(col("user_id"), col("event_id").as("last_event_id"),
-        col("cents").as("last_cents"), unix_millis(col("tsm")).as("last_ms")))
-    assert(p2 == batch, "sink diverged from the batch latest-per-key oracle")
+    try {
+      val p1 = rows(graft.ops.Streaming.idempotentUpsertReplay(spark, sf, sink))
+      val p2 = rows(graft.ops.Streaming.idempotentUpsertReplay(spark, sf, sink))
+      assert(p1 == p2, "redelivery changed the sink")
+      import org.apache.spark.sql.functions._
+      import org.apache.spark.sql.expressions.Window
+      val w = Window.partitionBy("user_id").orderBy(desc("tsm"), desc("event_id"))
+      val batch = rows(graft.util.Canon.events(spark, sf)
+        .where(col("event_type") === "purchase")
+        .selectExpr("user_id", "event_id", "date_trunc('millisecond', ts) AS tsm",
+          "CAST(floor(value*100 + 0.5) AS BIGINT) AS cents")
+        .withColumn("rn", row_number().over(w)).where(col("rn") === 1)
+        .select(col("user_id"), col("event_id").as("last_event_id"),
+          col("cents").as("last_cents"), unix_millis(col("tsm")).as("last_ms")))
+      assert(p2 == batch, "sink diverged from the batch latest-per-key oracle")
+    } finally graft.util.Canon.deleteTree(sink)
   }
 
   test("stateful sessionization equals batch islands") {

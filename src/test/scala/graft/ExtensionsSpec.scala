@@ -7,7 +7,8 @@ import org.scalatest.funsuite.AnyFunSuite
 /** The graft extensions come with the session: Spark loads
   * `graft.ext.GraftExtensions` for every session it builds, so a fresh
   * `newSession()` resolves every graft_* function and plans the as-of join
-  * without any set-up call, and building a query mutates no session. */
+  * without any set-up call, and building a query mutates no session. A
+  * parquet-backed probe's filter reaches the scan's PushedFilters. */
 class ExtensionsSpec extends AnyFunSuite {
   import TestSession._
 
@@ -85,26 +86,40 @@ class ExtensionsSpec extends AnyFunSuite {
   }
 
   test("an as-of join on a fresh newSession mutates no session state") {
-    import org.apache.spark.sql.execution.FilterExec
+    import org.apache.spark.sql.execution.{FilterExec, FormattedMode}
     import graft.plans.AsOfJoinExec
     val s2 = spark.newSession()
-    val probe = s2.range(0, 100).select((col("id") % 3).as("k"),
+    val ranged = s2.range(0, 100).select((col("id") % 3).as("k"),
       col("id").as("t"), (col("id") * 1.0).as("pv"))
     val ref = s2.range(0, 50).select((col("id") % 3).as("rk"),
       (col("id") * 2).as("rt"), (col("id") * 10.0).as("rv"))
-    val df = graft.plans.AsOfJoin.join(s2, probe, ref, "k", "t", "rk", "rt")
-      .where(col("pv") >= 50.0)
-    // every probe row survives an as-of (left) join, so the filter alone
-    // decides the count
-    assert(df.count() == 50L)
-    assert(s2.experimental.extraStrategies.isEmpty)
-    assert(s2.experimental.extraOptimizations.isEmpty)
-    df.collect()
-    val nodes = PlanNodes.all(df.queryExecution.executedPlan)
-    val joins = nodes.collect { case j: AsOfJoinExec => j }
-    assert(joins.size == 1, s"no AsOfJoinExec in:\n${df.queryExecution.executedPlan}")
-    val below = PlanNodes.all(joins.head.left).count(_.isInstanceOf[FilterExec])
-    assert(below >= 1 && below == nodes.count(_.isInstanceOf[FilterExec]),
-      s"the probe-side filter is not below the join:\n${df.queryExecution.executedPlan}")
+    // the same probe rows twice: computed, and read back from parquet, where
+    // the filter the rule moves below the join must reach the scan
+    val dir = java.nio.file.Files.createTempDirectory("asof_probe").toString
+    try {
+      ranged.write.mode("overwrite").parquet(dir)
+      for (probe <- Seq(ranged, s2.read.parquet(dir))) {
+        val df = graft.plans.AsOfJoin.join(s2, probe, ref, "k", "t", "rk", "rt")
+          .where(col("pv") >= 50.0)
+        // every probe row survives an as-of (left) join, so the filter alone
+        // decides the count
+        assert(df.count() == 50L)
+        assert(s2.experimental.extraStrategies.isEmpty)
+        assert(s2.experimental.extraOptimizations.isEmpty)
+        df.collect()
+        val nodes = PlanNodes.all(df.queryExecution.executedPlan)
+        val joins = nodes.collect { case j: AsOfJoinExec => j }
+        assert(joins.size == 1, s"no AsOfJoinExec in:\n${df.queryExecution.executedPlan}")
+        val below = PlanNodes.all(joins.head.left).count(_.isInstanceOf[FilterExec])
+        assert(below >= 1 && below == nodes.count(_.isInstanceOf[FilterExec]),
+          s"the probe-side filter is not below the join:\n${df.queryExecution.executedPlan}")
+        if (probe ne ranged) {
+          val formatted = df.queryExecution.explainString(FormattedMode)
+          val pushed = "(?s)PushedFilters: \\[[^\\]]*pv[^\\]]*\\]".r
+          assert(pushed.findFirstIn(formatted).isDefined,
+            s"the probe filter must reach the parquet scan's PushedFilters; plan:\n$formatted")
+        }
+      }
+    } finally graft.util.Canon.deleteTree(dir)
   }
 }
