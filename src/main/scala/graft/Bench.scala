@@ -56,26 +56,16 @@ object Bench {
     // Streaming warmup: MicroBatchExecution / state-store / streaming-agg
     // classloading+JIT otherwise lands on whichever stream_* query runs
     // first and inflates its median (the residual drift the 5-rep change
-    // didn't kill). One trivial rate-source batch absorbs it.
-    locally {
-      // explicit checkpoint via the same tmpfs root as the timed queries —
-      // an implicit location would leak a /tmp dir per bench run (ADVICE r5)
-      val ckpt = graft.ops.Streaming.ckptDir("bench_warmup")
-      graft.util.Canon.deleteTree(ckpt)
-      val q = spark.readStream.format("rate").option("numPartitions", "1")
+    // didn't kill). One trivial rate-source batch through the same bounded
+    // runner as the timed queries absorbs it; the runner drops the sink
+    // view and deletes the checkpoint.
+    graft.ops.Streaming.runToTable(spark,
+      spark.readStream.format("rate").option("numPartitions", "1")
         .option("rowsPerSecond", "1").load()
         .groupBy(org.apache.spark.sql.functions.window(
           org.apache.spark.sql.functions.col("timestamp"), "1 second"))
-        .count()
-        .writeStream.format("memory").queryName("graft_warmup")
-        .option("checkpointLocation", ckpt)
-        .outputMode("complete")
-        .trigger(org.apache.spark.sql.streaming.Trigger.Once())
-        .start()
-      q.awaitTermination(30000); if (q.isActive) q.stop()
-      spark.sql("DROP TABLE IF EXISTS graft_warmup")
-      graft.util.Canon.deleteTree(ckpt)
-    }
+        .count(),
+      "complete")
     // Round-6: failures must be VISIBLE in the artifact (round-5 verdict
     // item 3) — a query that throws used to record a healthy-looking wall
     // time and nothing else. Also kept: per-rep times for the same-code

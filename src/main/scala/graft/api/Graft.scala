@@ -136,10 +136,8 @@ object Graft {
       path: String): DataFrame = {
     val b = batch.select(col(id).cast("long").as("doc_id"),
       col(text).as("text"))
-    // corpus frame is only consulted on the bootstrap (no-standing) path;
-    // with persisted state it stays an unevaluated lazy plan
-    graft.ops.TextDedup.neardupIncrementalLabels(b.limit(0), b,
-        Some(graft.ops.TextDedup.neardupStateRead(batch.sparkSession, path)))
+    graft.ops.TextDedup.neardupIncrementalLabels(b,
+        graft.ops.TextDedup.neardupStateRead(batch.sparkSession, path))
       ._1.withColumnRenamed("node", id)
   }
 

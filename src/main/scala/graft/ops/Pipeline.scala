@@ -1052,8 +1052,7 @@ object Pipeline {
     val deltaSurv = delta
       .join(deltaMan.where(col("g")).select("doc_id"), "doc_id")
       .select(col("doc_id"), col("text"))
-    val (labels, _) = TextDedup.neardupIncrementalLabels(
-      delta.limit(0).select(col("doc_id"), col("text")), deltaSurv, Some(st))
+    val (labels, _) = TextDedup.neardupIncrementalLabels(deltaSurv, st)
     val f4 = baseMan.unionByName(deltaMan)
       .join(labels.select(col("node").as("doc_id"), col("is_keeper")),
         Seq("doc_id"), "left")

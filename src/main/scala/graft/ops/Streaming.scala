@@ -1,17 +1,23 @@
 package graft.ops
 
 import graft.util.Canon._
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{DataFrame, Dataset, Row, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.{GroupStateTimeout, OutputMode, StatefulProcessor, TTLConfig, TimeMode, TimerValues, Trigger, ValueState}
+import org.apache.spark.sql.streaming.{DataStreamWriter, GroupStateTimeout, OutputMode, StatefulProcessor, StreamingQuery, TTLConfig, TimeMode, TimerValues, Trigger, ValueState}
 
 /** Structured Streaming surface — SURVEY.md §2.10 + §2.1 source_stream_replay.
   *
   * Strategy: bounded replay. Every query runs `readStream` over the events
-  * parquet with `Trigger.AvailableNow`, lands in a memory sink, and the
+  * parquet under the AvailableNow trigger, lands in a memory sink, and the
   * FINISHED table is returned as a plain DataFrame — so Verify/Bench work
   * unchanged, and the DuckDB oracle is the same computation as batch SQL
   * (with AvailableNow on bounded input, stream ≡ batch).
+  *
+  * Every stream runs through one runner ([[withCheckpoint]], [[runBounded]],
+  * [[memorySink]], [[parquetSinkRun]]): when a query returns, whether it
+  * succeeded or threw, its checkpoint dir is deleted, its streaming query
+  * is no longer active and its memory-sink temp view is dropped (the
+  * returned frame keeps the sink's rows).
   *
   * Watermarks, multi-batch replay (maxFilesPerTrigger=1) and event-time
   * timeouts are exercised where semantics demand them (stream_watermark_late
@@ -66,7 +72,6 @@ object Streaming {
       "/dev/shm/graft_ckpt" else s"$ioTmp/ckpt"
     s"$base/p${ProcessHandle.current().pid()}"
   }
-  private[graft] def ckptDir(name: String): String = s"$ckptRoot/$name"
 
   private[graft] val ProviderKey = "spark.sql.streaming.stateStore.providerClass"
   private[graft] val RocksProvider =
@@ -125,28 +130,73 @@ object Streaming {
     withConfs(s, pins)(body)
   }
 
-  /** Run a streaming DataFrame to completion into a memory sink, return the
-    * finished table. State store: the session's provider, HDFS-backed by
-    * default. The r15 RocksDB pin (SCALING.md r15: all 14 stateful ids
-    * hash-identical under both providers) is gone: it asked `getOption`,
-    * which answers the key's registered default, so it never fired
-    * (SCALING.md, Streaming). Only `stream_transform_with_state`, which
-    * requires RocksDB, sets the provider. */
-  private def runToTable(s: SparkSession, df: DataFrame, mode: String)
-      : DataFrame = {
-    val name = s"graft_stream_${ctr.incrementAndGet()}"
-    val ckpt = ckptDir(name)
+  /** Run `body` with a fresh checkpoint dir named `name` under
+    * [[ckptRoot]], and delete the dir when it returns or throws. */
+  private def withCheckpoint[T](name: String)(body: String => T): T = {
+    val ckpt = s"$ckptRoot/$name"
     deleteTree(ckpt) // ADVICE r5: a stale dir from a crashed run would replay
     // the input as already-processed (empty complete-mode result) or abort
     // append mode — clear BEFORE start, not only after success
+    try body(ckpt) finally deleteTree(ckpt)
+  }
+
+  /** Start `writer` over checkpoint `ckpt` under the AvailableNow trigger
+    * and the stream confs, wait until it has drained the bounded input, and
+    * return the terminated query (its progress stays readable). A query
+    * still active when the wait ends (an interrupted wait) is stopped. */
+  private def runBounded(s: SparkSession, ckpt: String)(
+      writer: DataStreamWriter[Row]): StreamingQuery =
     withStreamConfs(s) {
-      val q = df.writeStream.format("memory").queryName(name)
-        .option("checkpointLocation", ckpt)
-        .outputMode(mode).trigger(Trigger.AvailableNow()).start()
-      q.awaitTermination()
+      val q = writer.option("checkpointLocation", ckpt)
+        .trigger(Trigger.AvailableNow()).start()
+      try { q.awaitTermination(); q } finally if (q.isActive) q.stop()
     }
-    deleteTree(ckpt) // completed; reclaim the tmpfs space before the next rep
-    s.table(name)
+
+  /** Drain `df` into the memory sink `name` over checkpoint `ckpt`; return
+    * the sink's rows and the terminated query. The sink's temp view is
+    * dropped before returning, failures included: the frame keeps the rows,
+    * because its plan holds the sink itself, not the view's name. */
+  private def memorySink(s: SparkSession, df: DataFrame, mode: String,
+      name: String, ckpt: String): (DataFrame, StreamingQuery) =
+    try {
+      val q = runBounded(s, ckpt)(
+        df.writeStream.format("memory").queryName(name).outputMode(mode))
+      (s.table(name), q)
+    } finally s.catalog.dropTempView(name)
+
+  /** Run a streaming DataFrame to completion into a memory sink, return the
+    * finished table; the view and the checkpoint are reclaimed before
+    * returning, failures included. State store: the session's provider,
+    * HDFS-backed by default. The r15 RocksDB pin (SCALING.md r15: all 14
+    * stateful ids hash-identical under both providers) is gone: it asked
+    * `getOption`, which answers the key's registered default, so it never
+    * fired (SCALING.md, Streaming). Only `stream_transform_with_state`,
+    * which requires RocksDB, sets the provider. */
+  private[graft] def runToTable(s: SparkSession, df: DataFrame, mode: String)
+      : DataFrame = {
+    val name = s"graft_stream_${ctr.incrementAndGet()}"
+    withCheckpoint(name)(memorySink(s, df, mode, name, _))._1
+  }
+
+  /** Drain `df` through `foreachBatch` into a per-call parquet dir under
+    * `/tmp/graft_io` (`<tag>_out_<dataset hash>_<n>`): each micro-batch
+    * lands as `perBatch(batch)`, batch 0 overwriting so a stale dir cannot
+    * leak in. The result is `finish` over the dir, snapshotted with
+    * `localCheckpoint`, so the dir and the checkpoint are deleted before
+    * returning, failures included. */
+  private[graft] def parquetSinkRun(s: SparkSession, d: String, tag: String,
+      df: DataFrame)(perBatch: DataFrame => DataFrame)(
+      finish: DataFrame => DataFrame): DataFrame = {
+    val n = ctr.incrementAndGet()
+    val out = s"$ioTmp/${tag}_out_${d.hashCode.toHexString}_$n"
+    try withCheckpoint(s"${tag}_$n") { ckpt =>
+      runBounded(s, ckpt)(df.writeStream.foreachBatch {
+        (batch: Dataset[Row], id: Long) =>
+          perBatch(batch.toDF())
+            .write.mode(if (id == 0) "overwrite" else "append").parquet(out)
+      })
+      finish(s.read.parquet(out)).localCheckpoint(true)
+    } finally deleteTree(out)
   }
 
   // ----------------------------------------------------------------- queries
@@ -259,19 +309,11 @@ object Streaming {
       .where(col("value") > 0)
       .select(col("event_id"))
     val name = s"graft_stream_obs_${ctr.incrementAndGet()}"
-    val ckpt = ckptDir(name)
-    deleteTree(ckpt)
-    val q = withStreamConfs(s) {
-      val q0 = src.writeStream.format("memory").queryName(name)
-        .option("checkpointLocation", ckpt)
-        .outputMode("append").trigger(Trigger.AvailableNow()).start()
-      q0.awaitTermination(); q0
-    }
+    val (kept, q) = withCheckpoint(name)(memorySink(s, src, "append", name, _))
     val mets = q.recentProgress.toSeq
       .flatMap(p => Option(p.observedMetrics.get("ingest_gate")))
-    deleteTree(ckpt)
     def tot(fld: String): Long = mets.map(_.getAs[Long](fld)).sum
-    val nKept = s.table(name).count()
+    val nKept = kept.count()
     import s.implicits._
     Seq(("cents_sum", tot("cents_sum")),
       ("n_bad_value", tot("n_bad_value")),
@@ -569,32 +611,14 @@ object Streaming {
     * aggregate is snapshotted with `localCheckpoint`, so the sink dir and
     * the checkpoint are reclaimed before returning, failures included. */
   private val streamForeachBatch: Q = (s, d) => {
-    val tag = ctr.incrementAndGet()
-    val out = s"$ioTmp/foreach_out_${d.hashCode.toHexString}_$tag"
-    val ckpt = ckptDir(s"foreach_$tag")
-    deleteTree(ckpt) // clear-before-start, same contract as runToTable
-    try {
-      withStreamConfs(s) {
-        val q = eventsStream(s, d)
-          .where(col("event_type") === "purchase")
-          .select("event_id", "user_id", "value")
-          .writeStream
-          .option("checkpointLocation", ckpt)
-          .foreachBatch { (batch: org.apache.spark.sql.Dataset[org.apache.spark.sql.Row],
-              id: Long) =>
-            // batch 0 overwrites so a stale dir from a previous run can't leak in
-            batch.write.mode(if (id == 0) "overwrite" else "append").parquet(out)
-          }
-          .trigger(Trigger.AvailableNow()).start()
-        q.awaitTermination()
-      }
-      s.read.parquet(out)
-        .groupBy(col("user_id"))
+    val purchases = eventsStream(s, d)
+      .where(col("event_type") === "purchase")
+      .select("event_id", "user_id", "value")
+    parquetSinkRun(s, d, "foreach", purchases)(identity)(
+      _.groupBy(col("user_id"))
         .agg(count(lit(1)).as("n_purchases"),
           (sum(cents(col("value"))) / 100.0).as("purchase_total"))
-        .orderBy("user_id")
-        .localCheckpoint(true)
-    } finally { deleteTree(ckpt); deleteTree(out) }
+        .orderBy("user_id"))
   }
 
   /** Latest-version-per-key MERGE of one micro-batch into a keyed parquet
@@ -633,22 +657,17 @@ object Streaming {
   private[graft] def idempotentUpsertReplay(s: SparkSession, d: String,
       sink: String): DataFrame = {
     val src = stagedEvents4Dir(s, d)
-    val ckpt = ckptDir(s"idem_${ctr.incrementAndGet()}")
-    deleteTree(ckpt)
-    withStreamConfs(s) {
-      val q = stagedStream(s, src)
+    withCheckpoint(s"idem_${ctr.incrementAndGet()}") { ckpt =>
+      runBounded(s, ckpt)(stagedStream(s, src)
         .option("maxFilesPerTrigger", "1").parquet(src)
         .where(col("event_type") === "purchase")
         .select(col("user_id"), col("event_id").as("last_event_id"),
           cents(col("value")).as("last_cents"),
           unix_millis(col("tsm")).as("last_ms"))
-        .writeStream.option("checkpointLocation", ckpt)
-        .foreachBatch { (batch: org.apache.spark.sql.Dataset[org.apache.spark.sql.Row],
-            _: Long) => upsertLatest(batch.toDF(), sink) }
-        .trigger(Trigger.AvailableNow()).start()
-      q.awaitTermination()
+        .writeStream
+        .foreachBatch { (batch: Dataset[Row], _: Long) =>
+          upsertLatest(batch.toDF(), sink) })
     }
-    deleteTree(ckpt)
     s.read.parquet(sink).orderBy("user_id")
   }
 
@@ -687,35 +706,39 @@ object Streaming {
       .orderBy("n_name")
   }
 
-  /** Stream-stream inner join with watermarks on BOTH sides + a time-range
-    * join condition — the state-bounding contract Structured Streaming
-    * requires for stream-stream joins (each side's state is purgeable once
-    * the watermark passes the range bound). Purchases ⋈ clicks of the same
-    * user within the preceding 15 minutes; on bounded AvailableNow replay the
-    * emitted matches equal the batch join → DuckDB-oracle-checkable. */
-  private val streamStreamJoin: Q = (s, d) => {
+  /** Purchases ⋈ clicks of the same user within the preceding 15
+    * minutes, with watermarks on BOTH sides + the time-range join condition
+    * — the state-bounding contract Structured Streaming requires for
+    * stream-stream joins (each side's state is purgeable once the watermark
+    * passes the range bound) — run to a memory sink as `joinType`. */
+  private def purchaseClickJoin(s: SparkSession, d: String, joinType: String)
+      : DataFrame = {
     val src = eventsStream(s, d)
-    val p = src.where(col("event_type") === "purchase")
-      .select(col("user_id").as("pu"), col("tsm").as("pts"))
-      .withWatermark("pts", "15 minutes")
-    val c = src.where(col("event_type") === "click")
-      .select(col("user_id").as("cu"), col("tsm").as("cts"))
-      .withWatermark("cts", "15 minutes")
-    val joined = p.join(c, col("pu") === col("cu") &&
-      col("cts") >= col("pts") - expr("INTERVAL 15 MINUTES") &&
-      col("cts") <= col("pts"))
+    def side(eventType: String, user: String, ts: String): DataFrame =
+      src.where(col("event_type") === eventType)
+        .select(col("user_id").as(user), col("tsm").as(ts))
+        .withWatermark(ts, "15 minutes")
+    val joined = side("purchase", "pu", "pts").join(side("click", "cu", "cts"),
+      col("pu") === col("cu") &&
+        col("cts") >= col("pts") - expr("INTERVAL 15 MINUTES") &&
+        col("cts") <= col("pts"), joinType)
     // stream-stream joins keep 4 state stores per shuffle partition; at this
     // volume 32 partitions are pure fixed cost (store init + commit per
     // batch), so pin a small stream parallelism for the query and restore.
     // At scale the same knob is sized to state volume, not CPU count.
-    val out = withConfs(s, Seq("spark.sql.shuffle.partitions" -> "4")) {
+    withConfs(s, Seq("spark.sql.shuffle.partitions" -> "4")) {
       runToTable(s, joined, "append")
     }
-    out
+  }
+
+  /** Stream-stream inner join ([[purchaseClickJoin]]); on bounded
+    * AvailableNow replay the emitted matches equal the batch join →
+    * DuckDB-oracle-checkable. */
+  private val streamStreamJoin: Q = (s, d) =>
+    purchaseClickJoin(s, d, "inner")
       .groupBy(col("pu").as("user_id"))
       .agg(count(lit(1)).as("n_pairs"))
       .orderBy("user_id")
-  }
 
   /** Stream-stream LEFT OUTER join (same watermark + time-range contract as
     * the inner variant): an unmatched purchase emits its null-click row only
@@ -726,21 +749,8 @@ object Streaming {
     * 15 min join range + 1 min slack) — inside that region eviction is
     * guaranteed, the emitted set is deterministic, and the DuckDB oracle is
     * the batch left join under the same cutoff. */
-  private val streamStreamOuterJoin: Q = (s, d) => streamStreamOuterJoinImpl(s, d)
-  private def streamStreamOuterJoinImpl(s: SparkSession, d: String): DataFrame = {
-    val src = eventsStream(s, d)
-    val p = src.where(col("event_type") === "purchase")
-      .select(col("user_id").as("pu"), col("tsm").as("pts"))
-      .withWatermark("pts", "15 minutes")
-    val c = src.where(col("event_type") === "click")
-      .select(col("user_id").as("cu"), col("tsm").as("cts"))
-      .withWatermark("cts", "15 minutes")
-    val joined = p.join(c, col("pu") === col("cu") &&
-      col("cts") >= col("pts") - expr("INTERVAL 15 MINUTES") &&
-      col("cts") <= col("pts"), "left_outer")
-    val out = withConfs(s, Seq("spark.sql.shuffle.partitions" -> "4")) {
-      runToTable(s, joined, "append")
-    }
+  private val streamStreamOuterJoin: Q = (s, d) => {
+    val out = purchaseClickJoin(s, d, "left_outer")
     val cutRow = tbl(s, d, "events").agg(least(
       max(when(col("event_type") === "purchase", tsMs(col("ts")))),
       max(when(col("event_type") === "click", tsMs(col("ts")))))).collect()(0)
@@ -749,15 +759,10 @@ object Streaming {
     // empty frame in the output schema (the house contract for degenerate
     // slices — mirror of sim_pq_ann's empty-table early return) instead of
     // NPE-ing on the null timestamp.
-    if (cutRow.isNullAt(0))
-      return out.limit(0)
-        .groupBy(col("pu").as("user_id"))
-        .agg(count(col("cts")).as("n_matched"),
-          sum(when(col("cts").isNull, 1L).otherwise(0L)).as("n_unmatched"))
-    val cut = new java.sql.Timestamp(
-      cutRow.getTimestamp(0).getTime - 31L * 60 * 1000)
-    out.where(col("pts") <= lit(cut))
-      .groupBy(col("pu").as("user_id"))
+    val evicted = if (cutRow.isNullAt(0)) out.limit(0)
+      else out.where(col("pts") <= lit(new java.sql.Timestamp(
+        cutRow.getTimestamp(0).getTime - 31L * 60 * 1000)))
+    evicted.groupBy(col("pu").as("user_id"))
       .agg(count(col("cts")).as("n_matched"),
         sum(when(col("cts").isNull, 1L).otherwise(0L)).as("n_unmatched"))
       .orderBy("user_id")
@@ -783,42 +788,26 @@ object Streaming {
     val srcDir = staged(d, "documents", "stream_nd")(
       tbl(s, d, "documents").where(col("doc_id") >= split)
         .repartition(4).write.mode("overwrite").parquet(_))
-    val tag = ctr.incrementAndGet()
-    val out = s"$ioTmp/stream_nd_out_${d.hashCode.toHexString}_$tag"
-    val ckpt = ckptDir(s"neardup_$tag")
-    deleteTree(ckpt) // clear-before-start, same contract as runToTable
     // routed ONCE over standing ∪ the full increment — every micro-batch's
     // vocabulary and set count are subsets, so routing and mask bits match
     // the batch path exactly without a per-trigger driver action
     val route = TextDedup.neardupRoute(
       TextDedup.hashedDocSets(s.read.parquet(srcDir)), st,
       s.read.parquet(srcDir).count()) // row count ≥ set count: conservative
-    try {
-      withStreamConfs(s) {
-        val q = stagedStream(s, srcDir)
-          .option("maxFilesPerTrigger", "1").parquet(srcDir)
-          .writeStream.option("checkpointLocation", ckpt)
-          .foreachBatch { (batch: org.apache.spark.sql.Dataset[org.apache.spark.sql.Row],
-              id: Long) =>
-            // no hb checkpoint: the bitmask path reads it once (into its own
-            // checkpointed mask frame) and a micro-batch re-derivation is one
-            // map-only pass — a per-trigger checkpoint job costs more
-            val stage = TextDedup.neardupPairStage(
-              TextDedup.hashedDocSets(batch.toDF()), st, route)
-            val matches = stage.memberMap.join(stage.crossReps, "sa")
-              .select(col("id").as("doc_id"), col("sid"), col("jacc"))
-            matches.write.mode(if (id == 0) "overwrite" else "append").parquet(out)
-          }
-          .trigger(Trigger.AvailableNow()).start()
-        q.awaitTermination()
-      }
-      s.read.parquet(out)
-        .groupBy(col("doc_id"))
-        .agg(count(lit(1)).as("n_matches"), min(col("sid")).as("min_sid"),
-          r4(max(col("jacc"))).as("best_jacc"))
-        .orderBy("doc_id")
-        .localCheckpoint(true)
-    } finally { deleteTree(ckpt); deleteTree(out) }
+    val docs = stagedStream(s, srcDir)
+      .option("maxFilesPerTrigger", "1").parquet(srcDir)
+    parquetSinkRun(s, d, "stream_nd", docs) { batch =>
+      // no hb checkpoint: the bitmask path reads it once (into its own
+      // checkpointed mask frame) and a micro-batch re-derivation is one
+      // map-only pass — a per-trigger checkpoint job costs more
+      val stage = TextDedup.neardupPairStage(
+        TextDedup.hashedDocSets(batch), st, route)
+      stage.memberMap.join(stage.crossReps, "sa")
+        .select(col("id").as("doc_id"), col("sid"), col("jacc"))
+    }(_.groupBy(col("doc_id"))
+      .agg(count(lit(1)).as("n_matches"), min(col("sid")).as("min_sid"),
+        r4(max(col("jacc"))).as("best_jacc"))
+      .orderBy("doc_id"))
   }
 
   /** Planned-restart recovery: the SAME checkpoint carries offsets AND
@@ -830,51 +819,43 @@ object Streaming {
     * whole input, because the agg state is recovered from the store,
     * not recomputed. Returns (phase-1 rows collected — bounded at one
     * row per event_type —, final table, rows actually read by run 2);
-    * phase-1 artifacts (temp view, staging dir, checkpoint) are
-    * reclaimed before returning so repeated bench reps don't accumulate
-    * them (review r15). At 100 TB this is THE property a daily restart
-    * relies on: recovery must neither drop nor double. */
+    * both runs' temp views, the staging dir and the checkpoint are
+    * reclaimed before returning, failures included, so repeated bench
+    * reps don't accumulate them (review r15). At 100 TB this is THE
+    * property a daily restart relies on: recovery must neither drop nor
+    * double. */
   private[graft] def checkpointResumeCore(s: SparkSession, d: String)
-      : (Array[org.apache.spark.sql.Row], DataFrame, Long) = {
+      : (Array[Row], DataFrame, Long) = {
     val tag = ctr.incrementAndGet()
     val dir = s"$ioTmp/stream_resume_${d.hashCode.toHexString}_$tag"
-    val ckpt = ckptDir(s"resume_$tag")
-    deleteTree(ckpt); deleteTree(dir)
     val ev = tbl(s, d, "events")
       .select(col("event_id"), col("event_type"), col("value"))
-    ev.where(col("event_id") % 2 === 0)
-      .coalesce(1).write.mode("overwrite").parquet(dir)
-    val schema = s.read.parquet(dir).schema
-    def runOnce(qn: String): (DataFrame, Long) = {
-      val read = withStreamConfs(s) {
-        val q = s.readStream.schema(schema).parquet(dir)
+    // one checkpoint scope around both runs: the restart is what is tested
+    try withCheckpoint(s"resume_$tag") { ckpt =>
+      ev.where(col("event_id") % 2 === 0)
+        .coalesce(1).write.mode("overwrite").parquet(dir)
+      val schema = s.read.parquet(dir).schema
+      def runOnce(name: String): (DataFrame, Long) = {
+        val (out, q) = memorySink(s, s.readStream.schema(schema).parquet(dir)
           .groupBy(col("event_type"))
           .agg(count(lit(1)).as("n"),
-            sum(cents(col("value"))).as("value_cents"))
-          .writeStream.format("memory").queryName(qn)
-          .option("checkpointLocation", ckpt)
-          .outputMode("complete").trigger(Trigger.AvailableNow()).start()
-        q.awaitTermination()
-        q.recentProgress.map(_.numInputRows).sum
+            sum(cents(col("value"))).as("value_cents")),
+          "complete", name, ckpt)
+        (out, q.recentProgress.map(_.numInputRows).sum)
       }
-      (s.table(qn), read)
-    }
-    val (first, _) = runOnce(s"graft_resume_a_$tag")
-    // memory-sink tables are static once their query terminates — a
-    // bounded collect snapshots phase 1, then its view is dropped
-    val firstRows = first.collect()
-    s.catalog.dropTempView(s"graft_resume_a_$tag")
-    ev.where(col("event_id") % 2 === 1)
-      .coalesce(1).write.mode("append").parquet(dir)
-    val (second, read2) = runOnce(s"graft_resume_b_$tag")
-    // both results are bounded (one row per event_type): snapshot into a
-    // local relation so the sink view, staging dir and exhausted
-    // checkpoint can all be reclaimed before returning
-    val out = s.createDataFrame(
-      java.util.Arrays.asList(second.collect(): _*), second.schema)
-    deleteTree(ckpt); deleteTree(dir)
-    s.catalog.dropTempView(s"graft_resume_b_$tag")
-    (firstRows, out, read2)
+      // memory-sink tables are static once their query terminates — a
+      // bounded collect snapshots phase 1
+      val firstRows = runOnce(s"graft_resume_a_$tag")._1.collect()
+      ev.where(col("event_id") % 2 === 1)
+        .coalesce(1).write.mode("append").parquet(dir)
+      val (second, read2) = runOnce(s"graft_resume_b_$tag")
+      // both results are bounded (one row per event_type): snapshot into a
+      // local relation so the staging dir and exhausted checkpoint can be
+      // reclaimed before returning
+      val out = s.createDataFrame(
+        java.util.Arrays.asList(second.collect(): _*), second.schema)
+      (firstRows, out, read2)
+    } finally deleteTree(dir)
   }
 
   private val streamCheckpointResume: Q = (s, d) =>

@@ -792,7 +792,7 @@ object TextDedup {
     val s = batchDocs.sparkSession
     val st = neardupStateRead(s, dir)
     val hb = hashedDocSets(batchDocs).localCheckpoint(true)
-    val full = neardupIncrementalLabels(batchDocs.limit(0), batchDocs, Some(st))
+    val full = neardupIncrementalLabels(batchDocs, st)
       ._1.localCheckpoint(true)
     val newSets = hb.groupBy(col("sh")).agg(min(col("id")).as("id"))
       .join(st.sets.select(col("sh")), Seq("sh"), "left_anti")
@@ -954,9 +954,8 @@ object TextDedup {
     * transitive closure as pipeline_neardup_full: the hash match PROVES
     * incremental ≡ full at both SFs. IncrementalDedupSpec additionally
     * forces the open-vocab band-table path on a 130-token fixture. */
-  private[graft] def neardupIncrementalLabels(corpusDocs: DataFrame,
-      batchDocs: DataFrame, standing: Option[NeardupState] = None)
-      : (DataFrame, Int) = {
+  private[graft] def neardupIncrementalLabels(batchDocs: DataFrame,
+      st: NeardupState): (DataFrame, Int) = {
     // Batch side stays PER-DOC: one map-only pass builds the hashed sets —
     // no collapse shuffle and no string-skey expand join (both measured as
     // the incremental path's overhead floor at sf0.1). Exact-duplicate
@@ -964,17 +963,9 @@ object TextDedup {
     // path pairs mask-group REPRESENTATIVES and stars members onto them,
     // and the open path's banded core already emits star + window edges.
     val hb = hashedDocSets(batchDocs).localCheckpoint(true)
-    // Standing state: production LOADS it from the persisted tables (the
-    // query wrapper stages them to parquet once per dataset and passes them
-    // in — the real between-increments shape with ZERO corpus-sized
-    // recomputation); absent persisted state it is built from the corpus,
-    // the first-increment bootstrap.
-    val st = standing.getOrElse {
-      val (docs, sets) = collapseSets(corpusDocs)
-      val hc = hashCollapsedSets(sets).localCheckpoint(true)
-      NeardupState(neardupLabelsFromSets(docs, sets, MaskSetCap)._1
-        .select("node", "label").localCheckpoint(true), hc, bandTable(hc))
-    }
+    // Standing state is LOADED from the persisted tables (staged once by
+    // [[neardupStateWrite]]) — the real between-increments shape with ZERO
+    // corpus-sized recomputation.
     val corpusLabels = st.labels
     // batch-incident verified pairs via the shared guarded stage
     // (sa = batch rep doc, sb = corpus sid OR batch doc)
@@ -1034,8 +1025,8 @@ object TextDedup {
     // ∝ batch; corpus docs are never re-collapsed, re-hashed, or re-banded.
     val docs = tbl(s, d, "documents")
     val (st, split) = stagedNeardupState(s, d)
-    neardupIncrementalLabels(docs.where(col("doc_id") < split),
-      docs.where(col("doc_id") >= split), Some(st))._1.orderBy("node")
+    neardupIncrementalLabels(docs.where(col("doc_id") >= split), st)
+      ._1.orderBy("node")
   }
 
   /** The refreshed SET TABLE a state fold produces (read-only twin of

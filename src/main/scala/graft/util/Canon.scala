@@ -345,24 +345,35 @@ object Canon {
   }
 
   /** Inferred parquet schemas, one entry per path: the [[schemaKey]] the
-    * schema was inferred under, and the schema. */
-  private val schemas =
-    new java.util.concurrent.ConcurrentHashMap[String, (Seq[String], StructType)]()
+    * schema was inferred under, and the schema (pending while the first
+    * caller infers it). */
+  private val schemas = new java.util.concurrent.ConcurrentHashMap[String,
+    (Seq[String], java.util.concurrent.CompletableFuture[StructType])]()
 
   /** `s.read.parquet(path)` that infers the schema once per (path, content,
     * inference confs): inference reads the footers in a Spark job of its
     * own, so a query that opens its tables again would otherwise pay one
-    * job per table. Later reads pass the remembered schema. */
+    * job per table. Later reads pass the remembered schema. A miss is
+    * single-flight, as in [[staged]]: concurrent callers for the same path
+    * and key wait for the first caller's inference instead of each running
+    * one; an inference that throws drops its entry and rethrows. */
   private[graft] def readParquet(s: SparkSession, path: String): DataFrame =
     schemaKey(s, path) match {
       case None => s.read.parquet(path)
-      case Some(key) => Option(schemas.get(path)) match {
-        case Some((k, schema)) if k == key => s.read.schema(schema).parquet(path)
-        case _ =>
+      case Some(key) =>
+        val mine = (key, new java.util.concurrent.CompletableFuture[StructType]())
+        val cur = schemas.merge(path, mine, (old, fresh) =>
+          if (old._1 == key) old else fresh)
+        if (cur ne mine) s.read.schema(cur._2.join()).parquet(path)
+        else try {
           val df = s.read.parquet(path)
-          schemas.put(path, (key, df.schema))
+          mine._2.complete(df.schema)
           df
-      }
+        } catch { case e: Throwable =>
+          schemas.remove(path, mine)
+          mine._2.completeExceptionally(e)
+          throw e
+        }
     }
 
   /** Run `body` with each session conf in `confs` set, then put every key

@@ -991,14 +991,27 @@ class IncrementalDedupSpec extends AnyFunSuite {
     df.select("node", "label").collect()
       .map(r => (r.getLong(0), r.getLong(1))).toMap
 
+  /** Label `batch` against the standing state of `corpus`, staged with
+    * `neardupStateWrite` into a temp dir that is deleted afterwards. */
+  private def incremental(corpus: org.apache.spark.sql.DataFrame,
+      batch: org.apache.spark.sql.DataFrame): (Map[Long, Long], Int) = {
+    val dir = java.nio.file.Files.createTempDirectory("graft-nd-state").toString
+    try {
+      TextDedup.neardupStateWrite(corpus, dir)
+      val (inc, rounds) = TextDedup.neardupIncrementalLabels(batch,
+        TextDedup.neardupStateRead(spark, dir))
+      (labelsOf(inc), rounds)
+    } finally graft.util.Canon.deleteTree(dir)
+  }
+
   test("incremental labels equal full recompute on the parquet corpus") {
     val docs = spark.read.parquet(s"$sf/documents.parquet")
     val full = labelsOf(TextDedup.neardupFullLabels(spark, sf)._1)
     val split = 375L // 3/4 of the 500-doc fixture — matches the query wrapper
-    val (inc, rounds) = TextDedup.neardupIncrementalLabels(
+    val (inc, rounds) = incremental(
       docs.where(col("doc_id") < split), docs.where(col("doc_id") >= split))
     assert(rounds < 20, s"incremental propagation hit the round cap ($rounds)")
-    assert(labelsOf(inc) == full, "incremental labels differ from full recompute")
+    assert(inc == full, "incremental labels differ from full recompute")
   }
 
   test("open-vocab band-table path equals full recompute at several splits") {
@@ -1012,10 +1025,10 @@ class IncrementalDedupSpec extends AnyFunSuite {
     // splits chosen so batches cut clusters mid-way (50: cluster 12 is half
     // corpus half batch; 99: only cluster 24's tail + singletons; 75 — mixed)
     for (split <- Seq(50L, 75L, 99L)) {
-      val (inc, rounds) = TextDedup.neardupIncrementalLabels(
+      val (inc, rounds) = incremental(
         docsDf.where(col("doc_id") < split), docsDf.where(col("doc_id") >= split))
       assert(rounds < 20, s"split $split hit the round cap ($rounds)")
-      assert(labelsOf(inc) == full, s"split $split labels differ from full")
+      assert(inc == full, s"split $split labels differ from full")
     }
   }
 

@@ -4,7 +4,8 @@ import graft.util.Canon
 import org.scalatest.funsuite.AnyFunSuite
 
 /** `Canon.tbl` infers a parquet table's schema once per (path, content,
-  * inference confs) and reads with that schema after. */
+  * inference confs), concurrent first opens included, and reads with that
+  * schema after. */
 class SchemaMemoSpec extends AnyFunSuite {
   import TestSession._
   import spark.implicits._
@@ -56,6 +57,25 @@ class SchemaMemoSpec extends AnyFunSuite {
       case Some(v) => spark.conf.set(conf, v)
       case None => spark.conf.unset(conf)
     }
+  }
+
+  test("concurrent first opens of one path infer its schema once") {
+    val path = tmpPath()
+    Seq(1, 2).toDF("a").write.parquet(path)
+    val go = new java.util.concurrent.CountDownLatch(1)
+    val pool = java.util.concurrent.Executors.newFixedThreadPool(4)
+    try {
+      val (got, jobs) = Jobs.count {
+        val opens = (1 to 4).map(_ => pool.submit(
+          new java.util.concurrent.Callable[org.apache.spark.sql.types.StructType] {
+            def call() = { go.await(); Canon.readParquet(spark, path).schema }
+          }))
+        go.countDown()
+        opens.map(_.get())
+      }
+      assert(jobs == 1, s"4 concurrent first opens ran $jobs inference jobs")
+      assert(got.distinct.size == 1 && got.head.fieldNames.toSeq == Seq("a"))
+    } finally pool.shutdownNow()
   }
 
   test("paths the content stamp cannot see are never memoized") {
