@@ -1,7 +1,8 @@
 package graft.ops
 
+import graft.util.Canon.scaled4
 import org.apache.spark.sql.{DataFrame, Encoders, SparkSession}
-import org.apache.spark.sql.functions.col
+import org.apache.spark.sql.functions.{col, max, min}
 import scala.reflect.runtime.universe.TypeTag
 
 /** The reference's flagship capability [B]: per-key additive time-series
@@ -132,7 +133,7 @@ object Forecast {
     val a = Array.fill(P)(new Array[Double](P))
     val b = new Array[Double](P)
     for (p <- sorted) {
-      val hr = p.bucket.getTime / 3600000L
+      val hr = hourOf(p)
       val x = features((hr - hr0) / span, hr, cfg)
       var i = 0
       while (i < P) {
@@ -150,8 +151,7 @@ object Forecast {
 
     var sse = 0.0
     for (p <- sorted) {
-      val e = p.v - predictAt(Model(beta, hr0, hrN, span, 0.0, cfg),
-        p.bucket.getTime / 3600000L)
+      val e = p.v - predictAt(Model(beta, hr0, hrN, span, 0.0, cfg), hourOf(p))
       sse += e * e
     }
     Some(Model(beta, hr0, hrN, span,
@@ -186,25 +186,31 @@ object Forecast {
     (tr, wk, dl, hol)
   }
 
+  /** Epoch hour of a point's bucket. */
+  private def hourOf(p: Point): Long = p.bucket.getTime / 3600000L
+
+  /** The `horizon` hourly slots after `m`'s last bucket, each emitted as
+    * `row(hour, bucket)`. */
+  private def ahead[U](m: Model, horizon: Int)(
+      row: (Long, java.sql.Timestamp) => U): Iterator[U] =
+    (1 to horizon).iterator.map { h =>
+      val hr = m.hrN + h
+      row(hr, new java.sql.Timestamp(hr * 3600000L))
+    }
+
   /** Fit one series and forecast `horizon` future hourly slots. */
   def fitPredict(key: Long, pts: Array[Point], horizon: Int,
       cfg: Config = DefaultConfig): Iterator[Fc] =
-    fit(pts, cfg) match {
-      case None => Iterator.empty
-      case Some(m) =>
-        (1 to horizon).iterator.map { h =>
-          val hr = m.hrN + h
-          val yh = predictAt(m, hr)
-          // Fc carries the three default components; configs with holidays
-          // forecast through fitPredictHolidays, whose row type adds the
-          // fourth block explicitly instead of silently folding it away
-          val (tr, wk, dl, _) = componentsAt(m, hr)
-          Fc(key, new java.sql.Timestamp(hr * 3600000L),
-            round4(yh), round4(yh - cfg.intervalZ * m.sigma),
-            round4(yh + cfg.intervalZ * m.sigma),
-            round4(tr), round4(wk), round4(dl))
-        }
-    }
+    fit(pts, cfg).iterator.flatMap(m => ahead(m, horizon) { (hr, ts) =>
+      val yh = predictAt(m, hr)
+      // Fc carries the three default components; configs with holidays
+      // forecast through fitPredictHolidays, whose row type adds the
+      // fourth block explicitly instead of silently folding it away
+      val (tr, wk, dl, _) = componentsAt(m, hr)
+      Fc(key, ts, round4(yh), round4(yh - cfg.intervalZ * m.sigma),
+        round4(yh + cfg.intervalZ * m.sigma),
+        round4(tr), round4(wk), round4(dl))
+    })
 
   final case class FcHol(user_id: Long, bucket: java.sql.Timestamp,
       yhat: Double, trend: Double, weekly: Double, daily: Double,
@@ -215,21 +221,40 @@ object Forecast {
     * holiday-decomposition output shape). */
   def fitPredictHolidays(key: Long, pts: Array[Point], horizon: Int,
       cfg: Config): Iterator[FcHol] =
-    fit(pts, cfg) match {
-      case None => Iterator.empty
-      case Some(m) =>
-        (1 to horizon).iterator.map { h =>
-          val hr = m.hrN + h
-          val (tr, wk, dl, hol) = componentsAt(m, hr)
-          FcHol(key, new java.sql.Timestamp(hr * 3600000L),
-            round4(tr + wk + dl + hol),
-            round4(tr), round4(wk), round4(dl), round4(hol))
-        }
-    }
+    fit(pts, cfg).iterator.flatMap(m => ahead(m, horizon) { (hr, ts) =>
+      val (tr, wk, dl, hol) = componentsAt(m, hr)
+      FcHol(key, ts, round4(tr + wk + dl + hol),
+        round4(tr), round4(wk), round4(dl), round4(hol))
+    })
 
   final case class FcCap(user_id: Long, bucket: java.sql.Timestamp,
       yhat: Double, yhat_lower: Double, yhat_upper: Double,
       cap: Double, trend: Double)
+
+  /** The logistic-growth fit: the series logit-transformed against
+    * capacity C = 1.1 · max(v), each value clamped to [εC, (1−ε)C]
+    * (ε = 10⁻⁶) so a zero hour cannot produce ±∞, and fitted by the
+    * additive core. Returns the model with C; None when max(v) is not
+    * positive or the series is too short. */
+  private def fitLogistic(pts: Array[Point], cfg: Config): Option[(Model, Double)] = {
+    if (pts.isEmpty) return None
+    val vmax = pts.map(_.v).max
+    if (!(vmax > 0.0)) return None
+    val cap = 1.1 * vmax
+    val eps = 1e-6 * cap
+    fit(pts.map { p =>
+      val c = math.min(math.max(p.v, eps), cap - eps)
+      p.copy(v = math.log(c / (cap - c)))
+    }, cfg).map((_, cap))
+  }
+
+  /** Maps a logit-space value back into (0, cap). */
+  private def sigmoid(cap: Double, z: Double): Double = cap / (1.0 + math.exp(-z))
+
+  /** The multiplicative fit: the additive core on ln(v), non-positive
+    * hours clamped to ε before the log. */
+  private def fitLog(pts: Array[Point], cfg: Config): Option[Model] =
+    fit(pts.map(p => p.copy(v = math.log(math.max(p.v, 1e-9)))), cfg)
 
   /** LOGISTIC-GROWTH mode — Prophet's capacity-saturating trend
     * (`growth='logistic'`), deterministic adaptation: the series is
@@ -240,35 +265,20 @@ object Forecast {
     * C·σ(z) — so the prediction and BOTH interval bounds saturate
     * strictly inside (0, C) by construction, which is the point of the
     * mode: a linear trend forecasts through the ceiling, this one cannot.
-    * Values clamp to [εC, (1−ε)C] before the logit so a zero hour cannot
-    * produce ±∞. Per-key work is the identical one-shuffle flatMapGroups
-    * fit; the capacity is derived inside the group (no extra pass). */
+    * Per-key work is the identical one-shuffle flatMapGroups fit; the
+    * capacity is derived inside the group (no extra pass). */
   def fitPredictLogistic(key: Long, pts: Array[Point], horizon: Int,
-      cfg: Config = DefaultConfig): Iterator[FcCap] = {
-    if (pts.isEmpty) return Iterator.empty
-    val vmax = pts.map(_.v).max
-    if (!(vmax > 0.0)) return Iterator.empty
-    val cap = 1.1 * vmax
-    val eps = 1e-6 * cap
-    def logit(v: Double): Double = {
-      val c = math.min(math.max(v, eps), cap - eps)
-      math.log(c / (cap - c))
+      cfg: Config = DefaultConfig): Iterator[FcCap] =
+    fitLogistic(pts, cfg).iterator.flatMap { case (m, cap) =>
+      ahead(m, horizon) { (hr, ts) =>
+        val zh = predictAt(m, hr)
+        val (tr, _, _, _) = componentsAt(m, hr)
+        FcCap(key, ts, round4(sigmoid(cap, zh)),
+          round4(sigmoid(cap, zh - cfg.intervalZ * m.sigma)),
+          round4(sigmoid(cap, zh + cfg.intervalZ * m.sigma)),
+          round4(cap), round4(sigmoid(cap, tr)))
+      }
     }
-    fit(pts.map(p => p.copy(v = logit(p.v))), cfg) match {
-      case None => Iterator.empty
-      case Some(m) =>
-        def sig(x: Double): Double = cap / (1.0 + math.exp(-x))
-        (1 to horizon).iterator.map { h =>
-          val hr = m.hrN + h
-          val zh = predictAt(m, hr)
-          val (tr, _, _, _) = componentsAt(m, hr)
-          FcCap(key, new java.sql.Timestamp(hr * 3600000L),
-            round4(sig(zh)), round4(sig(zh - cfg.intervalZ * m.sigma)),
-            round4(sig(zh + cfg.intervalZ * m.sigma)),
-            round4(cap), round4(sig(tr)))
-        }
-    }
-  }
 
   final case class FcMul(user_id: Long, bucket: java.sql.Timestamp,
       yhat: Double, trend: Double, seasonal_factor: Double)
@@ -279,44 +289,74 @@ object Forecast {
     * THE LEVEL instead of keeping constant amplitude (the right model for
     * traffic-like series whose weekend dip is a percentage, not a fixed
     * count). yhat ≡ trend · seasonal_factor by construction — the additive
-    * identity of the log-space components, exponentiated once.
-    * Non-positive hours clamp to ε before the log. */
+    * identity of the log-space components, exponentiated once. */
   def fitPredictMultiplicative(key: Long, pts: Array[Point], horizon: Int,
-      cfg: Config = DefaultConfig): Iterator[FcMul] = {
-    if (pts.isEmpty) return Iterator.empty
-    fit(pts.map(p => p.copy(v = math.log(math.max(p.v, 1e-9)))), cfg) match {
-      case None => Iterator.empty
-      case Some(m) =>
-        (1 to horizon).iterator.map { h =>
-          val hr = m.hrN + h
-          val (tr, wk, dl, hol) = componentsAt(m, hr)
-          FcMul(key, new java.sql.Timestamp(hr * 3600000L),
-            round4(math.exp(tr + wk + dl + hol)),
-            round4(math.exp(tr)), round4(math.exp(wk + dl + hol)))
-        }
+      cfg: Config = DefaultConfig): Iterator[FcMul] =
+    fitLog(pts, cfg).iterator.flatMap(m => ahead(m, horizon) { (hr, ts) =>
+      val (tr, wk, dl, hol) = componentsAt(m, hr)
+      FcMul(key, ts, round4(math.exp(tr + wk + dl + hol)),
+        round4(math.exp(tr)), round4(math.exp(wk + dl + hol)))
+    })
+
+  /** The integer 80/20 holdout every per-series evaluation below shares:
+    * the series sorted by bucket and cut at n·4/5 by exact integer
+    * arithmetic (never the double 0.8, whose truncation can flip on
+    * multiples of five). */
+  private final class Holdout(val series: Array[Point], val cut: Int) {
+    def nTest: Int = series.length - cut
+    def train: Array[Point] = series.take(cut)
+    def test: Array[Point] = series.drop(cut)
+
+    /** `f` at each test point's hour. */
+    def predict(f: Long => Double): Array[Double] = test.map(p => f(hourOf(p)))
+
+    /** Exact climatology SAE numerator Σ_test |vi·cut − Σ_train vi|
+      * (vi = v·10⁴ exact: hourly v is r4-rounded) in checked Long
+      * arithmetic: Math.*Exact fails LOUDLY on overflow instead of
+      * wrapping (r12 ADVICE — the DuckDB oracle sums in HUGEINT and its
+      * BIGINT cast errors, so a silent JVM wraparound would read as an
+      * engine/oracle divergence; at supported SFs the magnitudes sit
+      * |vi| ≤ ~1e10, cut ≤ ~600, n_test ≤ ~150 → peak ~1e15, three orders
+      * under the Long edge, and this makes that bound enforced, not
+      * assumed). */
+    def climatologyNum: Long = {
+      var sTrain = 0L
+      var i = 0
+      while (i < cut) { sTrain = Math.addExact(sTrain, scaled4(series(i).v)); i += 1 }
+      var num = 0L
+      while (i < series.length) {
+        num = Math.addExact(num, Math.abs(
+          Math.subtractExact(Math.multiplyExact(scaled4(series(i).v), cut.toLong), sTrain)))
+        i += 1
+      }
+      num
     }
+
+    /** Holdout SAE of the predictions `yh` in [[climatologyNum]]'s
+      * ×10⁴·cut scale, so a ratio verdict compares like with like. */
+    def scaledSae(yh: Array[Double]): Double = {
+      var sae = 0.0
+      var i = 0
+      while (i < yh.length) { sae += math.abs(series(cut + i).v - yh(i)); i += 1 }
+      sae * 10000.0 * cut
+    }
+
+    /** Test points inside `m`'s interval yhat ± z·sigma around `yh`. */
+    def covered(m: Model, yh: Array[Double]): Int =
+      yh.indices.count { i =>
+        val v = series(cut + i).v
+        v >= yh(i) - m.cfg.intervalZ * m.sigma && v <= yh(i) + m.cfg.intervalZ * m.sigma
+      }
   }
 
-  /** Exact climatology SAE numerator Σ_test |vi·cut − Σ_train vi| in
-    * checked Long arithmetic: Math.*Exact fails LOUDLY on overflow instead
-    * of wrapping (r12 ADVICE — the DuckDB oracle sums in HUGEINT and its
-    * BIGINT cast errors, so a silent JVM wraparound would read as an
-    * engine/oracle divergence; at supported SFs the magnitudes sit
-    * |vi| ≤ ~1e10, cut ≤ ~600, n_test ≤ ~150 → peak ~1e15, three orders
-    * under the Long edge, and this makes that bound enforced, not
-    * assumed). */
-  private def climatologyNum(vi: Array[Long], cut: Int): Long = {
-    var sTrain = 0L
-    var i = 0
-    while (i < cut) { sTrain = Math.addExact(sTrain, vi(i)); i += 1 }
-    var num = 0L
-    i = cut
-    while (i < vi.length) {
-      num = Math.addExact(num, Math.abs(
-        Math.subtractExact(Math.multiplyExact(vi(i), cut.toLong), sTrain)))
-      i += 1
-    }
-    num
+  /** The [[Holdout]] of a series, or None unless the train slice has at
+    * least `minTrain` points and the test slice is not empty — the
+    * validity rule the oracle SQL mirrors, which guarantees fit()
+    * succeeds on the train slice. */
+  private def holdout(pts: Array[Point], minTrain: Int): Option[Holdout] = {
+    val sorted = pts.sortBy(_.bucket.getTime)
+    val cut = sorted.length * 4 / 5
+    if (cut < minTrain || cut >= sorted.length) None else Some(new Holdout(sorted, cut))
   }
 
   final case class Bt(user_id: Long, n_train: Int, n_test: Int,
@@ -348,28 +388,15 @@ object Forecast {
     *
     * Validity rule (cut ≥ P+2 ∧ cut < n) is the skillCheck rule, mirrored
     * in the SQL from the same config constant. */
-  def backtestAudit(key: Long, pts: Array[Point]): Iterator[BtAudit] = {
-    val sorted = pts.sortBy(_.bucket.getTime)
-    val n = sorted.length
-    val cut = n * 4 / 5
-    if (cut < P + 2 || cut >= n) return Iterator.empty
-    val vi = sorted.map(p => math.floor(p.v * 10000 + 0.5).toLong)
-    val num = climatologyNum(vi, cut)
-    fit(sorted.take(cut)) match {
-      case None => Iterator.empty
-      case Some(m) =>
-        var sae = 0.0; var nin = 0
-        for (p <- sorted.drop(cut)) {
-          val yh = predictAt(m, p.bucket.getTime / 3600000L)
-          sae += math.abs(p.v - yh)
-          if (p.v >= yh - m.cfg.intervalZ * m.sigma &&
-              p.v <= yh + m.cfg.intervalZ * m.sigma) nin += 1
-        }
-        val nTest = n - cut
-        Iterator.single(BtAudit(key, cut, nTest, num,
-          sae * 10000.0 * cut <= 4.0 * num.toDouble, nin))
+  def backtestAudit(key: Long, pts: Array[Point]): Iterator[BtAudit] =
+    holdout(pts, P + 2).iterator.flatMap { h =>
+      val num = h.climatologyNum
+      fit(h.train).map { m =>
+        val yh = h.predict(predictAt(m, _))
+        BtAudit(key, h.cut, h.nTest, num,
+          h.scaledSae(yh) <= 4.0 * num.toDouble, h.covered(m, yh))
+      }
     }
-  }
 
   /** Widest regressor count across the four audited variant configs —
     * the variants audit's validity rule uses it so EVERY variant's fit()
@@ -382,90 +409,64 @@ object Forecast {
       sae_mul: Double, cov_cfg: Int)
 
   /** Shared measurement core of the VARIANTS backtest audit (r12 verdict
-    * item 2): one integer 80/20 split + exact BIGINT climatology numerator
-    * (identical to [[backtestAudit]]), then each of the four non-default
-    * model modes — WideConfig, holidays, logistic, multiplicative — fits
-    * the same train slice and scores holdout SAE in the same ×10⁴·cut
-    * scale as `naive_num`, so per-variant ratio verdicts stay exact-vs-
-    * float one-sided. `cov_cfg` counts holdout points inside WideConfig's
+    * item 2): the [[Holdout]] split and climatology numerator of
+    * [[backtestAudit]], then each of the four non-default model modes —
+    * WideConfig, holidays, logistic, multiplicative — fits the same train
+    * slice and scores holdout SAE in the same ×10⁴·cut scale as
+    * `naive_num`, so per-variant ratio verdicts stay exact-vs-float
+    * one-sided. `cov_cfg` counts holdout points inside WideConfig's
     * nominal-95% interval (corpus-level calibration, like backtestAudit's
     * 80% one). Validity: cut ≥ VariantsPMax+2, where VariantsPMax = 16
     * (default p 15; WideConfig 2+4+2·(2+3) = 16; holidays 15+1 = 16) —
     * every variant's fit() then succeeds — plus max train vi > 0 (the
     * logistic cap needs a positive level; exact, mirrored in SQL). */
   def backtestVariants(key: Long, pts: Array[Point],
-      holCfg: Config): Iterator[BtVar] = {
-    val sorted = pts.sortBy(_.bucket.getTime)
-    val n = sorted.length
-    val cut = n * 4 / 5
-    if (cut < VariantsPMax + 2 || cut >= n) return Iterator.empty
-    val vi = sorted.map(p => math.floor(p.v * 10000 + 0.5).toLong)
-    if (vi.take(cut).max <= 0L) return Iterator.empty // logistic needs cap>0
-    val num = climatologyNum(vi, cut)
-    val train = sorted.take(cut)
-    val test = sorted.drop(cut)
-    def sae(predict: Long => Double): Double = {
-      var s = 0.0
-      for (p <- test) s += math.abs(p.v - predict(p.bucket.getTime / 3600000L))
-      s * 10000.0 * cut
-    }
-    val (mCfgO, mHolO) = (fit(train, WideConfig), fit(train, holCfg))
-    if (mCfgO.isEmpty || mHolO.isEmpty) return Iterator.empty // cut rule makes this unreachable
-    val mCfg = mCfgO.get
-    val mHol = mHolO.get
-    // logistic: same transform as fitPredictLogistic, cap from the TRAIN slice
-    val vmax = train.map(_.v).max
-    val capL = 1.1 * vmax
-    val epsL = 1e-6 * capL
-    val mLog = fit(train.map { p =>
-      val c = math.min(math.max(p.v, epsL), capL - epsL)
-      p.copy(v = math.log(c / (capL - c)))
-    }).get
-    val mMul = fit(train.map(p => p.copy(v = math.log(math.max(p.v, 1e-9))))).get
-    var cov = 0
-    for (p <- test) {
-      val yh = predictAt(mCfg, p.bucket.getTime / 3600000L)
-      if (p.v >= yh - WideConfig.intervalZ * mCfg.sigma &&
-          p.v <= yh + WideConfig.intervalZ * mCfg.sigma) cov += 1
-    }
-    Iterator.single(BtVar(key, cut, n - cut, num,
-      sae(predictAt(mCfg, _)),
-      sae(predictAt(mHol, _)),
-      sae(hr => capL / (1.0 + math.exp(-predictAt(mLog, hr)))),
-      sae(hr => math.exp(predictAt(mMul, hr))),
-      cov))
-  }
+      holCfg: Config): Iterator[BtVar] =
+    holdout(pts, VariantsPMax + 2)
+      .filter(_.train.map(p => scaled4(p.v)).max > 0L) // logistic needs cap>0
+      .iterator.flatMap { h =>
+        val num = h.climatologyNum
+        val train = h.train
+        for {
+          mCfg <- fit(train, WideConfig)
+          mHol <- fit(train, holCfg)
+          (mLog, cap) <- fitLogistic(train, DefaultConfig) // cap from the TRAIN slice
+          mMul <- fitLog(train, DefaultConfig)
+        } yield {
+          val yCfg = h.predict(predictAt(mCfg, _))
+          BtVar(key, h.cut, h.nTest, num, h.scaledSae(yCfg),
+            h.scaledSae(h.predict(predictAt(mHol, _))),
+            h.scaledSae(h.predict(hr => sigmoid(cap, predictAt(mLog, hr)))),
+            h.scaledSae(h.predict(hr => math.exp(predictAt(mMul, hr)))),
+            h.covered(mCfg, yCfg))
+        }
+      }
 
   /** Rolling-origin backtest of the additive model: fit on the first 80% of
     * slots, score MAE/RMSE on the holdout — the reference pattern's standard
     * evaluation step, per key. */
-  def backtest(key: Long, pts: Array[Point]): Iterator[Bt] = {
-    val sorted = pts.sortBy(_.bucket.getTime)
-    val cut = (sorted.length * 0.8).toInt
-    if (cut < P + 2 || cut >= sorted.length) return Iterator.empty
-    fit(sorted.take(cut)) match {
-      case None => Iterator.empty
-      case Some(m) =>
-        val test = sorted.drop(cut)
+  def backtest(key: Long, pts: Array[Point]): Iterator[Bt] =
+    holdout(pts, P + 2).iterator.flatMap { h =>
+      fit(h.train).map { m =>
+        val test = h.test
         var sae = 0.0; var sse = 0.0
         for (p <- test) {
-          val e = p.v - predictAt(m, p.bucket.getTime / 3600000L)
+          val e = p.v - predictAt(m, hourOf(p))
           sae += math.abs(e); sse += e * e
         }
-        Iterator.single(Bt(key, cut, test.length,
-          round4(sae / test.length), round4(math.sqrt(sse / test.length))))
+        Bt(key, h.cut, test.length,
+          round4(sae / test.length), round4(math.sqrt(sse / test.length)))
+      }
     }
-  }
 
   final case class Skill(user_id: Long, n_train: Int, n_test: Int,
       naive_num: Long, naive_num_signal: Long, beats_signal: Boolean,
       noise_ratio4_ok: Boolean)
 
   /** Per-key CLIMATOLOGY SKILL check (the oracle-gated audit core): split
-    * each series 80/20 by EXACT integer arithmetic (cut = n·4/5 — never the
-    * double 0.8, whose truncation can flip on multiples of five) and score
-    * the model's holdout MAE against the train-mean (climatology) baseline
-    * on TWO versions of the series:
+    * each series by the integer [[Holdout]] and score the model's holdout
+    * MAE against the train-mean (climatology) baseline on TWO versions of
+    * the series:
     *
     *  - SIGNAL: v + 2·hd·(23−hd) (hd = UTC hour-of-day) — a deterministic
     *    integer daily pattern injected on top of the real data, std ≈ 80 vs
@@ -482,39 +483,26 @@ object Forecast {
     *    ≤ 4× climatology (measured max 3.61 at sf0.1).
     *
     * Both baseline errors ride as exact BIGINT numerators
-    * Σ_test |vi·n_train − Σ_train vi| (vi = v·10⁴ exact: hourly v is
-    * r4-rounded, the injection is integer), so the oracle replays them
-    * bit-for-bit; the model's own MAE is float and stays inside the
-    * verdicts. Validity rule (cut ≥ P+2 ∧ cut < n) is pure integer
-    * arithmetic, mirrored in SQL, and guarantees fit() succeeds — engine
-    * and oracle agree on WHICH series are audited. */
-  def skillCheck(key: Long, pts: Array[Point]): Iterator[Skill] = {
-    val sorted = pts.sortBy(_.bucket.getTime)
-    val n = sorted.length
-    val cut = n * 4 / 5
-    if (cut < P + 2 || cut >= n) return Iterator.empty
-    // (exact climatology numerator, model SAE in the same ×10⁴·n_train scale)
-    def eval(series: Array[Point]): Option[(Long, Double)] = {
-      val vi = series.map(p => math.floor(p.v * 10000 + 0.5).toLong)
-      val num = climatologyNum(vi, cut)
-      fit(series.take(cut)).map { m =>
-        var sae = 0.0
-        for (p <- series.drop(cut))
-          sae += math.abs(p.v - predictAt(m, p.bucket.getTime / 3600000L))
-        (num, sae * 10000.0 * cut)
+    * Σ_test |vi·n_train − Σ_train vi| (the injection is integer, so vi
+    * stays exact), so the oracle replays them bit-for-bit; the model's own
+    * MAE is float and stays inside the verdicts. Validity rule
+    * (cut ≥ P+2 ∧ cut < n) is pure integer arithmetic, mirrored in SQL —
+    * engine and oracle agree on WHICH series are audited. */
+  def skillCheck(key: Long, pts: Array[Point]): Iterator[Skill] =
+    holdout(pts, P + 2).iterator.flatMap { raw =>
+      // (exact climatology numerator, model SAE in the same ×10⁴·n_train scale)
+      def eval(h: Holdout): Option[(Long, Double)] = {
+        val num = h.climatologyNum
+        fit(h.train).map(m => (num, h.scaledSae(h.predict(predictAt(m, _)))))
       }
+      val sig = new Holdout(raw.series.map { p =>
+        val hd = hourOf(p) % 24
+        p.copy(v = p.v + 2.0 * hd * (23 - hd))
+      }, raw.cut)
+      for ((numR, saeR) <- eval(raw); (numS, saeS) <- eval(sig))
+        yield Skill(key, raw.cut, raw.nTest, numR, numS,
+          saeS <= numS.toDouble, saeR <= 4.0 * numR.toDouble)
     }
-    val sig = sorted.map { p =>
-      val hd = (p.bucket.getTime / 3600000L) % 24
-      p.copy(v = p.v + 2.0 * hd * (23 - hd))
-    }
-    (eval(sorted), eval(sig)) match {
-      case (Some((numR, saeR)), Some((numS, saeS))) =>
-        Iterator.single(Skill(key, cut, n - cut, numR, numS,
-          saeS <= numS.toDouble, saeR <= 4.0 * numR.toDouble))
-      case _ => Iterator.empty
-    }
-  }
 
   private def round4(x: Double): Double = math.floor(x * 10000 + 0.5) / 10000.0
 
@@ -564,22 +552,24 @@ object Forecast {
     fitEach(TimeSeries.hourly(s, d), Seq("user_id", "bucket"))(
       fitPredict(_, _, horizon = 48, WideConfig))
 
-  /** Holiday-effects variant (Prophet's holiday model, round-5): one named
-    * holiday whose occurrence list spans BOTH the training window (2nd day
+  /** The holiday variants' config (Prophet's holiday model, round-5): one
+    * named holiday whose occurrence list spans BOTH the training window (2nd day
     * of the dataset — fits the shared coefficient) and the forecast horizon
     * (the day after the last bucket — applies it), exactly how Prophet users
     * pass past+future occurrences together. The two anchor days derive from
     * one global min/max aggregate (deterministic; O(1) driver data); users
     * whose span misses the in-sample occurrence get a 0 coefficient from
     * the ridge — deterministic, not an error. */
-  private val forecastProphetHolidays: Q = (s, d) => {
-    val h = TimeSeries.hourly(s, d)
-    val span = h.agg(
-      org.apache.spark.sql.functions.min(col("bucket")),
-      org.apache.spark.sql.functions.max(col("bucket"))).collect()(0)
+  private[ops] def holidayConfig(h: DataFrame): Config = {
+    val span = h.agg(min(col("bucket")), max(col("bucket"))).collect()(0)
     val d0 = span.getTimestamp(0).getTime / 86400000L
     val dN = span.getTimestamp(1).getTime / 86400000L
-    val cfg = DefaultConfig.copy(holidays = Array(Array(d0 + 1, dN + 1)))
+    DefaultConfig.copy(holidays = Array(Array(d0 + 1, dN + 1)))
+  }
+
+  private val forecastProphetHolidays: Q = (s, d) => {
+    val h = TimeSeries.hourly(s, d)
+    val cfg = holidayConfig(h)
     fitEach(h, Seq("user_id", "bucket"))(fitPredictHolidays(_, _, horizon = 48, cfg))
   }
 

@@ -30,6 +30,15 @@ object Streaming {
 
   private val ctr = new java.util.concurrent.atomic.AtomicInteger
   private val ioTmp = "/tmp/graft_io"
+  private val pid = ProcessHandle.current().pid()
+
+  /** A per-call sink dir `/tmp/graft_io/<tag>_<dataset hash>_p<pid>_<n>`
+    * and its `n`. The pid keeps two JVMs that run one id on one dataset
+    * from writing into and deleting each other's sink. */
+  private def sinkDir(d: String, tag: String): (String, Int) = {
+    val n = ctr.incrementAndGet()
+    (s"$ioTmp/${tag}_${d.hashCode.toHexString}_p${pid}_$n", n)
+  }
 
   /** The file stream source needs a directory — stage events (ts already
     * rebuilt to µs + ms-truncated tsm, mirroring Canon.events) into one
@@ -66,11 +75,14 @@ object Streaming {
     * checkpoint from a crashed or concurrent run silently replay as "already
     * processed" (complete-mode memory sinks then return EMPTY) or abort an
     * append-mode query with a recovery error — reproduced on Spark 4.1.2.
-    * Bench logs this root so a disk fallback is visible in the artifact. */
+    * Bench logs this root so a disk fallback is visible in the artifact.
+    * The root is this JVM's alone, so it is deleted when the JVM exits. */
   private[graft] val ckptRoot: String = {
     val base = if (new java.io.File("/dev/shm").isDirectory)
       "/dev/shm/graft_ckpt" else s"$ioTmp/ckpt"
-    s"$base/p${ProcessHandle.current().pid()}"
+    val root = s"$base/p$pid"
+    sys.addShutdownHook(deleteTree(root))
+    root
   }
 
   private[graft] val ProviderKey = "spark.sql.streaming.stateStore.providerClass"
@@ -178,17 +190,15 @@ object Streaming {
     withCheckpoint(name)(memorySink(s, df, mode, name, _))._1
   }
 
-  /** Drain `df` through `foreachBatch` into a per-call parquet dir under
-    * `/tmp/graft_io` (`<tag>_out_<dataset hash>_<n>`): each micro-batch
-    * lands as `perBatch(batch)`, batch 0 overwriting so a stale dir cannot
-    * leak in. The result is `finish` over the dir, snapshotted with
-    * `localCheckpoint`, so the dir and the checkpoint are deleted before
-    * returning, failures included. */
+  /** Drain `df` through `foreachBatch` into a per-call [[sinkDir]]
+    * `<tag>_out_…`: each micro-batch lands as `perBatch(batch)`, batch 0
+    * overwriting so a stale dir cannot leak in. The result is `finish`
+    * over the dir, snapshotted with `localCheckpoint`, so the dir and the
+    * checkpoint are deleted before returning, failures included. */
   private[graft] def parquetSinkRun(s: SparkSession, d: String, tag: String,
       df: DataFrame)(perBatch: DataFrame => DataFrame)(
       finish: DataFrame => DataFrame): DataFrame = {
-    val n = ctr.incrementAndGet()
-    val out = s"$ioTmp/${tag}_out_${d.hashCode.toHexString}_$n"
+    val (out, n) = sinkDir(d, s"${tag}_out")
     try withCheckpoint(s"${tag}_$n") { ckpt =>
       runBounded(s, ckpt)(df.writeStream.foreachBatch {
         (batch: Dataset[Row], id: Long) =>
@@ -684,8 +694,7 @@ object Streaming {
     * The final table is snapshotted with `localCheckpoint` and the sink
     * reclaimed before returning. */
   private val streamIdempotentSink: Q = (s, d) => {
-    val sink =
-      s"$ioTmp/idem_sink_${d.hashCode.toHexString}_${ctr.incrementAndGet()}"
+    val (sink, _) = sinkDir(d, "idem_sink")
     deleteTree(sink) // fresh sink per invocation
     try {
       idempotentUpsertReplay(s, d, sink) // pass 1: normal run
@@ -826,8 +835,7 @@ object Streaming {
     * double. */
   private[graft] def checkpointResumeCore(s: SparkSession, d: String)
       : (Array[Row], DataFrame, Long) = {
-    val tag = ctr.incrementAndGet()
-    val dir = s"$ioTmp/stream_resume_${d.hashCode.toHexString}_$tag"
+    val (dir, tag) = sinkDir(d, "stream_resume")
     val ev = tbl(s, d, "events")
       .select(col("event_id"), col("event_type"), col("value"))
     // one checkpoint scope around both runs: the restart is what is tested

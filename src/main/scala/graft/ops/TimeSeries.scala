@@ -1,7 +1,7 @@
 package graft.ops
 
 import graft.util.Canon._
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
@@ -34,7 +34,7 @@ object TimeSeries {
       .repartition(s.conf.get("spark.sql.shuffle.partitions").toInt,
         col("user_id"))
       .groupBy(col("user_id"), window(col("ts"), "1 hour"))
-      .agg(r4(sum(cents(col("value"))) / 100.0 / count(lit(1))).as("v"))
+      .agg(r4(sumMoney(col("value")) / count(lit(1))).as("v"))
       .select(col("user_id"), col("window.start").as("bucket"), col("v"))
 
   /** Dense per-user grid with gaps materialized as NULL rows. */
@@ -47,19 +47,23 @@ object TimeSeries {
     grid.join(h, Seq("user_id", "bucket"), "left")
   }
 
-  /** Exact-integer OLS per key: slope/intercept from bigint sums of slot
-    * index t and v×10⁴ — one shuffle, bit-identical across engines. */
-  private def olsFit(h: DataFrame): DataFrame =
+  /** Each row's slot index `t` (hours since its series' first bucket
+    * `mn`) and exact v×10⁴ BIGINT `yi`: the inputs of [[olsBetas]]. */
+  private def slotted(h: DataFrame): DataFrame =
     h.withColumn("mn", min(unix_millis(col("bucket")))
         .over(Window.partitionBy("user_id")))
       .withColumn("t", expr("(unix_millis(bucket) - mn) div 3600000"))
-      .withColumn("yi", floor(col("v") * 10000 + 0.5).cast("long"))
-      .groupBy(col("user_id"))
-      .agg(count(lit(1)).as("n"), sum(col("t")).as("st"),
+      .withColumn("yi", scaled4(col("v")))
+
+  /** Exact-integer OLS of `yi` on `t` per group of `keys`: BIGINT sums n,
+    * st, stt, sy, sty (and the `extra` aggregates, in the same group-by),
+    * then slope and intercept by one fixed sequence of IEEE ops, so the
+    * betas are bit-identical across engines and partitionings. */
+  private def olsBetas(df: DataFrame, keys: Seq[String], extra: Column*): DataFrame =
+    df.groupBy(keys.map(col): _*)
+      .agg(count(lit(1)).as("n"), Seq(sum(col("t")).as("st"),
         sum(col("t") * col("t")).as("stt"),
-        sum(col("yi")).as("sy"), sum(col("t") * col("yi")).as("sty"),
-        max(col("t")).as("tmax"), max(col("bucket")).as("bmax"),
-        min(col("mn")).as("mnb"))
+        sum(col("yi")).as("sy"), sum(col("t") * col("yi")).as("sty")) ++ extra: _*)
       .withColumn("slope",
         ((col("n") * col("sty") - col("st") * col("sy")).cast("double") /
           (col("n") * col("stt") - col("st") * col("st")).cast("double")) / 10000.0)
@@ -67,12 +71,41 @@ object TimeSeries {
         col("sy").cast("double") / 10000.0 / col("n").cast("double") -
           col("slope") * (col("st").cast("double") / col("n").cast("double")))
 
+  /** Exact-integer OLS per key over the series' own slot index — one
+    * shuffle, bit-identical across engines. */
+  private def olsFit(h: DataFrame): DataFrame =
+    olsBetas(slotted(h), Seq("user_id"), max(col("t")).as("tmax"),
+      max(col("bucket")).as("bmax"), min(col("mn")).as("mnb"))
+
+  /** One row per hour h = 1..24 after the timestamp column `from`: the
+    * columns `keep`, `h` and that hour as `bucket`. */
+  private def hoursAhead(df: DataFrame, from: String, keep: Column*): DataFrame =
+    df.select(keep :+ explode(sequence(lit(1), lit(24))).as("h"): _*)
+      .withColumn("bucket", expr(s"$from + make_interval(0, 0, 0, 0, h, 0, 0)"))
+
+  /** MAE and RMSE of `err` over a group, folded as 1e6-scaled exact BIGINT
+    * sums so the order of summation cannot move them. */
+  private def maeRmse(err: Column): (Column, Column) = (
+    r4(sum(floor(abs(err) * 1000000 + 0.5).cast("long")) / 1000000.0
+      / count(lit(1))).as("mae"),
+    r4(sqrt(sum(floor(err * err * 1000000 + 0.5).cast("long")) / 1000000.0
+      / count(lit(1)))).as("rmse"))
+
+  /** Pearson r from the exact integer sums n, sx, sy, sxx, syy, sxy: each
+    * difference is formed in BIGINT and cast once, so both engines derive
+    * the same double. */
+  private val varXN = col("n") * col("sxx") - col("sx") * col("sx")
+  private val varYN = col("n") * col("syy") - col("sy") * col("sy")
+  private val pearson: Column =
+    (col("n") * col("sxy") - col("sx") * col("sy")).cast("double") /
+      sqrt(varXN.cast("double") * varYN.cast("double"))
+
   // ----------------------------------------------------------------- queries
   private val tsResample: Q = (s, d) =>
     tbl(s, d, "events")
       .groupBy(col("user_id"), window(col("ts"), "1 hour"))
-      .agg(r4(sum(cents(col("value"))) / 100.0 / count(lit(1))).as("v_avg"),
-        (sum(cents(col("value"))) / 100.0).as("v_sum"),
+      .agg(r4(sumMoney(col("value")) / count(lit(1))).as("v_avg"),
+        sumMoney(col("value")).as("v_sum"),
         min(col("value")).as("v_min"),
         max(col("value")).as("v_max"),
         count(lit(1)).as("n"))
@@ -121,7 +154,7 @@ object TimeSeries {
   private def rollStats(w: org.apache.spark.sql.expressions.WindowSpec)
       : (org.apache.spark.sql.Column, org.apache.spark.sql.Column,
          org.apache.spark.sql.Column) = {
-    val vi = floor(col("v") * 10000 + 0.5).cast("long")
+    val vi = scaled4(col("v"))
     val n = count(col("v")).over(w).cast("double")
     val svi = sum(vi).over(w).cast("double")
     val svi2 = sum(vi * vi).over(w).cast("double")
@@ -173,11 +206,9 @@ object TimeSeries {
   }
 
   private val forecastLinearTrend: Q = (s, d) =>
-    olsFit(hourly(s, d))
-      .select(col("user_id"), col("slope"), col("intercept"), col("tmax"),
-        col("bmax"), explode(sequence(lit(1), lit(24))).as("h"))
-      .select(col("user_id"),
-        expr("bmax + make_interval(0, 0, 0, 0, h, 0, 0)").as("bucket"),
+    hoursAhead(olsFit(hourly(s, d)), "bmax", col("user_id"), col("slope"),
+        col("intercept"), col("tmax"), col("bmax"))
+      .select(col("user_id"), col("bucket"),
         r4(col("intercept") + col("slope") *
           (col("tmax") + col("h")).cast("double")).as("yhat"))
       .orderBy("user_id", "bucket")
@@ -197,7 +228,7 @@ object TimeSeries {
     val w = Window.partitionBy("user_id").orderBy("bucket")
       .rowsBetween(-23, 0)
     hourly(s, d)
-      .withColumn("vi", floor(col("v") * 10000 + 0.5).cast("long"))
+      .withColumn("vi", scaled4(col("v")))
       .withColumn("n", count(lit(1)).over(w))
       .withColumn("med_scaled",
         element_at(sort_array(collect_list(col("vi")).over(w)),
@@ -232,30 +263,26 @@ object TimeSeries {
   private val forecastReconcileHierarchy: Q = (s, d) => {
     val hu = tbl(s, d, "events")
       .groupBy(col("user_id"), window(col("ts"), "1 hour"))
-      .agg((sum(cents(col("value"))) / 100.0).as("v"))
+      .agg(sumMoney(col("value")).as("v"))
       .select(col("user_id"), col("window.start").as("bucket"), col("v"))
     val top = tbl(s, d, "events")
       .groupBy(window(col("ts"), "1 hour"))
-      .agg((sum(cents(col("value"))) / 100.0).as("v"))
+      .agg(sumMoney(col("value")).as("v"))
       .select(lit(-1L).as("user_id"), col("window.start").as("bucket"), col("v"))
     val fits = olsFit(hu.unionByName(top)).localCheckpoint(true)
     val topFit = fits.where(col("user_id") === -1L)
       .select(col("bmax").as("gbmax"), col("mnb").as("gmnb"),
         col("slope").as("tslope"), col("intercept").as("tintercept"))
-    val base = fits.where(col("user_id") >= 0L)
-      .crossJoin(broadcast(topFit))
-      .select(col("user_id"), col("slope"), col("intercept"), col("mnb"),
-        col("gbmax"), col("gmnb"), col("tslope"), col("tintercept"),
-        explode(sequence(lit(1), lit(24))).as("h"))
-      .withColumn("bucket", expr("gbmax + make_interval(0, 0, 0, 0, h, 0, 0)"))
+    val base = hoursAhead(fits.where(col("user_id") >= 0L)
+        .crossJoin(broadcast(topFit)), "gbmax",
+        col("user_id"), col("slope"), col("intercept"), col("mnb"),
+        col("gbmax"), col("gmnb"), col("tslope"), col("tintercept"))
       .withColumn("tu", expr("(unix_millis(bucket) - mnb) div 3600000"))
       .withColumn("base_scaled",
-        floor((col("intercept") + col("slope") * col("tu").cast("double"))
-          * 10000 + 0.5).cast("long"))
+        scaled4(col("intercept") + col("slope") * col("tu").cast("double")))
       .withColumn("tt", expr("(unix_millis(bucket) - gmnb) div 3600000"))
       .withColumn("top_scaled",
-        floor((col("tintercept") + col("tslope") * col("tt").cast("double"))
-          * 10000 + 0.5).cast("long"))
+        scaled4(col("tintercept") + col("tslope") * col("tt").cast("double")))
     val sums = base.groupBy(col("h").as("hs"))
       .agg(sum(col("base_scaled")).as("sumb"))
     base.join(broadcast(sums), col("h") === col("hs"))
@@ -268,7 +295,6 @@ object TimeSeries {
       .orderBy("user_id", "bucket")
   }
 
-  /** Rolling-origin backtest: fit on first 80% of slots, score the holdout. */
   /** ORACLE-GATED skill audit for the Prophet-like forecaster (the
     * round-10 audit pattern applied to the flagship model, whose ridge fit
     * no SQL replays): one row pinning the exact climatology-baseline
@@ -292,6 +318,16 @@ object TimeSeries {
         (col("nb") * 100L >= col("ns") * 90L).as("signal_skill_ok"),
         (col("ng") === 1L).as("noise_guard_ok"))
 
+  /** `rows` with the corpus-level interval-calibration verdict `name`
+    * joined on: Σ `covered` within [lo%, hi%] of Σ n_test, by exact
+    * integer cross-multiplication (broadcast scalar-rejoin shape). */
+  private def withCoverageVerdict(rows: DataFrame, covered: String,
+      lo: Long, hi: Long, name: String): DataFrame = {
+    val cov = sum(col(covered).cast("long")) * 100L
+    val nTest = sum(col("n_test").cast("long"))
+    rows.crossJoin(broadcast(rows.agg((cov >= nTest * lo && cov <= nTest * hi).as(name))))
+  }
+
   /** PER-KEY Prophet backtest audit (r11 verdict item 6 — the per-series
     * graduation of the skill-audit pattern): exact columns replayed by
     * DuckDB (user_id, integer 80/20 split sizes, BIGINT climatology SAE
@@ -301,15 +337,9 @@ object TimeSeries {
   private val forecastProphetBacktestAudit: Q = (s, d) => {
     val rows = Forecast.fitEach(hourly(s, d), reused = true)(
       Forecast.backtestAudit)
-    // corpus-level interval-calibration verdict (see backtestAudit's
-    // rationale for why coverage is not per-key): exact integer
-    // cross-multiplication, broadcast scalar-rejoin shape
-    val cal = rows.agg(
-      (sum(col("cov_num").cast("long")) * 100L >=
-         sum(col("n_test").cast("long")) * 60L &&
-       sum(col("cov_num").cast("long")) * 100L <=
-         sum(col("n_test").cast("long")) * 95L).as("coverage_cal_ok"))
-    rows.crossJoin(broadcast(cal))
+    // corpus-level verdict: see backtestAudit's rationale for why coverage
+    // is not per-key
+    withCoverageVerdict(rows, "cov_num", 60L, 95L, "coverage_cal_ok")
       .select(col("user_id"), col("n_train").cast("long").as("n_train"),
         col("n_test").cast("long").as("n_test"), col("naive_num"),
         col("mae_ratio4_ok"), col("coverage_cal_ok"))
@@ -325,22 +355,13 @@ object TimeSeries {
     * Measurement core and margin rationale: [[Forecast.backtestVariants]]. */
   private val forecastVariantsBacktestAudit: Q = (s, d) => {
     val h = hourly(s, d)
-    val span = h.agg(min(col("bucket")), max(col("bucket"))).collect()(0)
-    val d0 = span.getTimestamp(0).getTime / 86400000L
-    val dN = span.getTimestamp(1).getTime / 86400000L
-    val holCfg = Forecast.DefaultConfig.copy(
-      holidays = Array(Array(d0 + 1, dN + 1)))
+    val holCfg = Forecast.holidayConfig(h)
     val rows = Forecast.fitEach(h, reused = true)(
       Forecast.backtestVariants(_, _, holCfg))
     // corpus 95%-interval coverage measured 93.4/91.3/91.1% at
     // sf0.001/0.01/0.1 → two-sided [80%, 99%] band (the upper bound
     // catches degenerate always-inside intervals)
-    val cal = rows.agg(
-      (sum(col("cov_cfg").cast("long")) * 100L >=
-        sum(col("n_test").cast("long")) * 80L &&
-       sum(col("cov_cfg").cast("long")) * 100L <=
-        sum(col("n_test").cast("long")) * 99L).as("coverage95_cal_ok"))
-    rows.crossJoin(broadcast(cal))
+    withCoverageVerdict(rows, "cov_cfg", 80L, 99L, "coverage95_cal_ok")
       .select(col("user_id"), col("n_train").cast("long").as("n_train"),
         col("n_test").cast("long").as("n_test"), col("naive_num"),
         // per-variant ratio verdicts; margins from the measured max ratio
@@ -360,18 +381,16 @@ object TimeSeries {
     val marked = hourly(s, d).withColumn("pr", percent_rank().over(w))
     val fit = olsFit(marked.where(col("pr") < 0.8).drop("pr"))
       .select(col("user_id").as("fu"), col("slope"), col("intercept"), col("mnb"))
+    val (mae, rmse) = maeRmse(col("err"))
     marked.where(col("pr") >= 0.8)
       .join(fit, col("user_id") === col("fu"))
       .withColumn("t", expr("(unix_millis(bucket) - mnb) div 3600000"))
       .withColumn("err",
         col("v") - (col("intercept") + col("slope") * col("t").cast("double")))
-      .withColumn("ei", floor(abs(col("err")) * 1000000 + 0.5).cast("long"))
-      .withColumn("e2i", floor(col("err") * col("err") * 1000000 + 0.5).cast("long"))
       .withColumn("ri", when(col("v") =!= 0.0,
         floor(abs(col("err")) / abs(col("v")) * 1000000 + 0.5).cast("long")))
       .groupBy(col("user_id"))
-      .agg(r4(sum(col("ei")) / 1000000.0 / count(lit(1))).as("mae"),
-        r4(sqrt(sum(col("e2i")) / 1000000.0 / count(lit(1)))).as("rmse"),
+      .agg(mae, rmse,
         r4(sum(col("ri")) / 1000000.0 / count(col("ri"))).as("mape"),
         count(lit(1)).as("n_test"))
       .orderBy("user_id")
@@ -390,38 +409,19 @@ object TimeSeries {
     * sums and 1e6-scaled error folds as forecast_backtest_metrics. */
   private val forecastBacktestCv: Q = (s, d) => {
     val w = Window.partitionBy("user_id").orderBy("bucket")
-    val marked = hourly(s, d)
-      .withColumn("pr", percent_rank().over(w))
-      .withColumn("mn", min(unix_millis(col("bucket")))
-        .over(Window.partitionBy("user_id")))
-      .withColumn("t", expr("(unix_millis(bucket) - mn) div 3600000"))
-      .withColumn("yi", floor(col("v") * 10000 + 0.5).cast("long"))
+    // t counts from the series-wide first bucket `mn` at every cutoff
+    val marked = slotted(hourly(s, d).withColumn("pr", percent_rank().over(w)))
       .withColumn("c", explode(array(lit(0.5), lit(0.6), lit(0.7))))
-    val fit = marked.where(col("pr") < col("c"))
-      .groupBy(col("user_id"), col("c"))
-      .agg(count(lit(1)).as("n"), sum(col("t")).as("st"),
-        sum(col("t") * col("t")).as("stt"), sum(col("yi")).as("sy"),
-        sum(col("t") * col("yi")).as("sty"))
-      .withColumn("slope",
-        ((col("n") * col("sty") - col("st") * col("sy")).cast("double") /
-          (col("n") * col("stt") - col("st") * col("st")).cast("double"))
-          / 10000.0)
-      .withColumn("intercept",
-        col("sy").cast("double") / 10000.0 / col("n").cast("double") -
-          col("slope") * (col("st").cast("double") / col("n").cast("double")))
+    val fit = olsBetas(marked.where(col("pr") < col("c")), Seq("user_id", "c"))
       .select(col("user_id").as("fu"), col("c").as("fc"),
         col("n").as("ntr"), col("slope"), col("intercept"))
+    val (mae, rmse) = maeRmse(col("err"))
     marked.join(fit, col("user_id") === col("fu") && col("c") === col("fc"))
       .where(col("pr") >= col("c") && col("pr") < col("c") + 0.1)
       .withColumn("err", col("v") -
         (col("intercept") + col("slope") * col("t").cast("double")))
-      .withColumn("ei", floor(abs(col("err")) * 1000000 + 0.5).cast("long"))
-      .withColumn("e2i",
-        floor(col("err") * col("err") * 1000000 + 0.5).cast("long"))
       .groupBy(col("user_id"), col("c"))
-      .agg(max(col("ntr")).as("n_train"), count(lit(1)).as("n_test"),
-        r4(sum(col("ei")) / 1000000.0 / count(lit(1))).as("mae"),
-        r4(sqrt(sum(col("e2i")) / 1000000.0 / count(lit(1)))).as("rmse"))
+      .agg(max(col("ntr")).as("n_train"), count(lit(1)).as("n_test"), mae, rmse)
       .select(col("user_id"), col("c").as("cutoff"), col("n_train"),
         col("n_test"), col("mae"), col("rmse"))
       .orderBy("user_id", "cutoff")
@@ -547,7 +547,7 @@ object TimeSeries {
     val wCum = wOrd.rowsBetween(Window.unboundedPreceding, 0)
     val wAll = Window.partitionBy("user_id")
     val scored = hourly(s, d)
-      .withColumn("vi", floor(col("v") * 10000 + 0.5).cast("long"))
+      .withColumn("vi", scaled4(col("v")))
       .withColumn("t", row_number().over(wOrd).cast("long"))
       .withColumn("cum", sum(col("vi")).over(wCum))
       .withColumn("n", count(lit(1)).over(wAll))
@@ -581,10 +581,8 @@ object TimeSeries {
       .localCheckpoint(true)
     // one row per user: (user_id, bucket) is the grid's key, and `<=>`
     // keeps the user whose only bucket is NULL, as the aggregate did
-    val fut = h.where(col("bucket") <=> col("bmax"))
-      .select(col("user_id"), col("bmax"),
-        explode(sequence(lit(1), lit(24))).as("h"))
-      .withColumn("bucket", expr("bmax + make_interval(0, 0, 0, 0, h, 0, 0)"))
+    val fut = hoursAhead(h.where(col("bucket") <=> col("bmax")), "bmax",
+        col("user_id"), col("bmax"))
       .withColumn("src_bucket", expr("bmax + make_interval(0, 0, 0, 0, h - 168, 0, 0)"))
     fut.join(h.select(col("user_id").as("hu"), col("bucket").as("hb"), col("v")),
         col("hu") === col("user_id") && col("hb") === col("src_bucket"), "left")
@@ -638,17 +636,14 @@ object TimeSeries {
   private val tsAutocorr: Q = (s, d) => {
     val w = Window.partitionBy("user_id").orderBy("bucket")
     val pairs = hourly(s, d)
-      .withColumn("vi", floor(col("v") * 10000 + 0.5).cast("long"))
+      .withColumn("vi", scaled4(col("v")))
       .withColumn("vl", lag(col("vi"), 1).over(w))
       .where(col("vl").isNotNull)
     pairs.groupBy(col("user_id"))
       .agg(count(lit(1)).as("n"), sum(col("vi")).as("sx"), sum(col("vl")).as("sy"),
         sum(col("vi") * col("vi")).as("sxx"), sum(col("vl") * col("vl")).as("syy"),
         sum(col("vi") * col("vl")).as("sxy"))
-      .withColumn("r", r4(
-        (col("n") * col("sxy") - col("sx") * col("sy")).cast("double") /
-          sqrt((col("n") * col("sxx") - col("sx") * col("sx")).cast("double") *
-            (col("n") * col("syy") - col("sy") * col("sy")).cast("double"))))
+      .withColumn("r", r4(pearson))
       .select("user_id", "n", "r")
       .orderBy("user_id")
   }
@@ -658,7 +653,7 @@ object TimeSeries {
   private val tsResampleComposite: Q = (s, d) =>
     tbl(s, d, "events")
       .groupBy(col("user_id"), col("event_type"), window(col("ts"), "6 hours"))
-      .agg(r4(sum(cents(col("value"))) / 100.0 / count(lit(1))).as("v_avg"),
+      .agg(r4(sumMoney(col("value")) / count(lit(1))).as("v_avg"),
         count(lit(1)).as("n"))
       .select(col("user_id"), col("event_type"), col("window.start").as("bucket"),
         col("v_avg"), col("n"))
@@ -703,10 +698,7 @@ object TimeSeries {
       .agg(count(lit(1)).as("n"), sum(col("x")).as("sx"), sum(col("y")).as("sy"),
         sum(col("x") * col("x")).as("sxx"), sum(col("y") * col("y")).as("syy"),
         sum(col("x") * col("y")).as("sxy"))
-      .withColumn("r", r4(
-        (col("n") * col("sxy") - col("sx") * col("sy")).cast("double") /
-          sqrt((col("n") * col("sxx") - col("sx") * col("sx")).cast("double") *
-            (col("n") * col("syy") - col("sy") * col("sy")).cast("double"))))
+      .withColumn("r", r4(pearson))
       .select("lag_h", "n", "r")
       .orderBy("lag_h")
   }
@@ -743,12 +735,7 @@ object TimeSeries {
         sum(col("y") * col("y")).over(w).as("syy"),
         sum(col("x") * col("y")).over(w).as("sxy"))
       .select(col("bh"), col("n").as("n_win"),
-        when(col("n") * col("sxx") - col("sx") * col("sx") > 0 &&
-            col("n") * col("syy") - col("sy") * col("sy") > 0,
-          r4((col("n") * col("sxy") - col("sx") * col("sy")).cast("double") /
-            sqrt((col("n") * col("sxx") - col("sx") * col("sx")).cast("double") *
-              (col("n") * col("syy") - col("sy") * col("sy")).cast("double"))))
-          .as("r"))
+        when(varXN > 0 && varYN > 0, r4(pearson)).as("r"))
       .orderBy("bh")
   }
 
@@ -805,7 +792,7 @@ object TimeSeries {
       .rangeBetween(-7200, 0)
     hourly(s, d)
       .withColumn("es", unix_timestamp(col("bucket")))
-      .withColumn("vi", floor(col("v") * 10000 + 0.5).cast("long"))
+      .withColumn("vi", scaled4(col("v")))
       .select(col("user_id"), col("bucket"),
         (sum(col("vi")).over(w) / 10000.0).as("roll_sum_3h"),
         count(lit(1)).over(w).as("n_3h"))
@@ -820,7 +807,7 @@ object TimeSeries {
     tbl(s, d, "events")
       .groupBy(col("user_id"),
         window(col("ts"), "1 hour", "1 hour", "30 minutes"))
-      .agg((sum(cents(col("value"))) / 100.0).as("v_sum"),
+      .agg(sumMoney(col("value")).as("v_sum"),
         count(lit(1)).as("n"))
       .select(col("user_id"), col("window.start").as("bucket"),
         col("v_sum"), col("n"))
@@ -893,7 +880,7 @@ object TimeSeries {
     val B = 16
     val h = hourly(s, d).select(col("user_id"),
       expr("unix_millis(bucket) div 3600000").as("x"),
-      floor(col("v") * 10000 + 0.5).cast("long").as("y"))
+      scaled4(col("v")).as("y"))
     val wU = Window.partitionBy("user_id").orderBy("x")
     val idx = h.withColumn("i", row_number().over(wU).cast("long") - 1)
       .withColumn("n", count(lit(1)).over(Window.partitionBy("user_id")))

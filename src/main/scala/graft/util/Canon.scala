@@ -33,6 +33,14 @@ object Canon {
   def cents(c: Column): Column = floor(c * 100 + 0.5).cast("long")
   def sumMoney(c: Column): Column = sum(cents(c)) / 100.0
 
+  /** The same exact-integer scale for an [[r4]]-rounded value: x·10⁴ as a
+    * BIGINT, so sums and products of 4-decimal series (OLS, rolling and
+    * climatology folds) are exact on both engines. The Double form is the
+    * per-series JVM code's copy of the same IEEE ops.
+    * DuckDB equivalent: `CAST(floor(x*10000 + 0.5) AS BIGINT)` */
+  def scaled4(c: Column): Column = floor(c * 10000 + 0.5).cast("long")
+  def scaled4(x: Double): Long = math.floor(x * 10000 + 0.5).toLong
+
   /** Portable 4-decimal rounding. NOT round(x,4): Spark's round rounds the
     * shortest decimal repr (BigDecimal HALF_UP) while DuckDB rounds the exact
     * binary value — they flip the 4th decimal on .xxxx5 boundaries (measured:

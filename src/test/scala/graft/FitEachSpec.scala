@@ -79,6 +79,16 @@ class FitEachSpec extends AnyFunSuite with AdaptiveSparkPlanHelper {
     assert(hashed.isEmpty, s"the checkpointed grid is shuffled again:\n$plan")
   }
 
+  test("forecast_linear_trend: one hash exchange, the grid's, in its executed plan") {
+    val df = SparkEntry.queries("forecast_linear_trend")(spark, sf)
+    assert(df.collect().nonEmpty)
+    val plan = df.queryExecution.executedPlan
+    val hashed = collect(plan) {
+      case e: ShuffleExchangeExec if e.outputPartitioning.isInstanceOf[HashPartitioning] => e
+    }
+    assert(hashed.length == 1, s"${hashed.length} hash exchanges:\n$plan")
+  }
+
   test("forecast_prophet_like: same rows at 1 shuffle partition as at 8") {
     def rows(parts: String): Seq[String] = {
       val prev = spark.conf.get("spark.sql.shuffle.partitions")

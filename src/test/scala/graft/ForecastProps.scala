@@ -97,6 +97,25 @@ object ForecastProps extends Properties("forecast") {
   // is an explicit DAILY-component recovery property: the existing synth
   // carries only weekly seasonality. This one plants a known 24h sinusoid
   // and asserts the fitted DAILY component (not just yhat) reproduces it.
+  property("backtest: integer 80/20 cut, holdout MAE/RMSE of the train fit") =
+    Prop.forAll(Gen.oneOf(Gen.choose(Forecast.P + 2, 800),
+        Gen.choose(4, 160).map(_ * 5)), Gen.choose(0L, 1000L)) { (n, seed) =>
+      val pts = synth(1.0, 20.0, 2.0, n, seed)
+      val shuffled = new scala.util.Random(seed).shuffle(pts.toSeq).toArray
+      val got = Forecast.backtest(7L, shuffled).toSeq
+      val nTrain = n * 4 / 5
+      if (nTrain < Forecast.P + 2) got.isEmpty
+      else {
+        val m = Forecast.fit(pts.take(nTrain)).get
+        val errs = pts.drop(nTrain).map(p =>
+          p.v - Forecast.predictAt(m, p.bucket.getTime / 3600000L))
+        def r4(x: Double) = math.floor(x * 10000 + 0.5) / 10000.0
+        got == Seq(Forecast.Bt(7L, nTrain, n - nTrain,
+          r4(errs.map(math.abs).sum / errs.length),
+          r4(math.sqrt(errs.map(e => e * e).sum / errs.length))))
+      }
+    }
+
   property("daily seasonality is recovered into the daily component") =
     Prop.forAll(Gen.choose(0.5, 3.0), Gen.choose(5.0, 40.0),
       Gen.choose(0.5, 2.5)) { (a, b, cd) =>

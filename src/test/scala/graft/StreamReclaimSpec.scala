@@ -45,6 +45,28 @@ class StreamReclaimSpec extends AnyFunSuite {
       assertReclaimed(id, before)
     }
 
+  test("every per-call sink dir carries this JVM's pid") {
+    val root = java.nio.file.Paths.get("/tmp/graft_io")
+    java.nio.file.Files.createDirectories(root)
+    val watch = root.getFileSystem.newWatchService()
+    try {
+      root.register(watch, java.nio.file.StandardWatchEventKinds.ENTRY_CREATE)
+      for (id <- Seq("stream_checkpoint_resume", "stream_foreach_batch",
+          "stream_idempotent_sink", "stream_neardup"))
+        SparkEntry.queries(id)(spark, sf).collect()
+      val created = Iterator.continually(watch.poll()).takeWhile(_ != null)
+        .flatMap { k => val es = k.pollEvents(); k.reset(); es.toArray.toSeq }
+        .map(_.asInstanceOf[java.nio.file.WatchEvent[java.nio.file.Path]].context.toString)
+        .filter(n => sinks.exists(n.startsWith)).toSeq
+      // one sink per call: foreach, stream_nd, idem_sink and stream_resume
+      assert(sinks.count(p => created.exists(_.startsWith(p))) == 4, created)
+      val pid = ProcessHandle.current().pid()
+      for (n <- created)
+        assert(sinks.exists(p => n.startsWith(s"${p}p${pid}_")),
+          s"$n is not keyed by pid $pid")
+    } finally watch.close()
+  }
+
   /** A three-row file stream over a temp dir, deleted afterwards. */
   private def withTinyStream(body: DataFrame => Unit): Unit = {
     val dir = java.nio.file.Files.createTempDirectory("graft-reclaim").toString
