@@ -296,6 +296,20 @@ object Graft {
         df.select(col(id).cast("long").as("doc_id"), col(text).as("text")), k)
       .withColumnRenamed("doc_id", id)
 
+  /** A caller's edge columns renamed to the (a, b) the graph cores read;
+    * each core casts them to BIGINT itself. */
+  private def graphEdges(edges: DataFrame, a: String, b: String): DataFrame =
+    edges.select(col(a).as("a"), col(b).as("b"))
+
+  /** An edge list as BIGINT (src, dst) rows, closed over both orientations
+    * when `undirected`. */
+  private def directedEdges(edges: DataFrame, src: String, dst: String,
+      undirected: Boolean): DataFrame = {
+    val e = graft.ops.Graph.longEdges(edges, src, dst)
+    if (undirected) graft.ops.Graph.bothWays(e, "src", "dst")
+    else e.select(col("a").as("src"), col("b").as("dst"))
+  }
+
   /** Damped PageRank over an edge frame, ENTIRELY in exact scaled-integer
     * arithmetic (10^12 total mass, integer-division contributions and
     * damping) — results are bit-identical at any partitioning/executor
@@ -304,22 +318,16 @@ object Graft {
     * directed edges every node must have out-degree ≥ 1 (no dangling-mass
     * redistribution is applied). Returns (node, pr_scaled) descending. */
   def pagerank(edges: DataFrame, src: String, dst: String,
-      iters: Int = 5, undirected: Boolean = true): DataFrame = {
-    val e = edges.select(col(src).cast("long").as("src"),
-      col(dst).cast("long").as("dst"))
-    val dir = if (undirected)
-      e.unionAll(e.select(col("dst").as("src"), col("src").as("dst")))
-    else e
-    graft.ops.Graph.pagerankCore(dir.distinct(), iters)
+      iters: Int = 5, undirected: Boolean = true): DataFrame =
+    graft.ops.Graph.pagerankCore(
+        directedEdges(edges, src, dst, undirected).distinct(), iters)
       .orderBy(desc("pr"), asc("node"))
       .select(col("node"), col("pr").as("pr_scaled"))
-  }
 
   /** Triangle census of an undirected graph given as (a, b) edges with
     * a < b: nodes, edges, wedges, triangles, global clustering. */
   def triangleCensus(edges: DataFrame, a: String, b: String): DataFrame =
-    graft.ops.Graph.triangleCensusCore(
-      edges.select(col(a).cast("long").as("a"), col(b).cast("long").as("b")))
+    graft.ops.Graph.triangleCensusCore(graphEdges(edges, a, b))
 
   /** Bounded-hop BFS distances from `source` over an edge frame (frontier-
     * only expansion — per-round work ∝ frontier edges, the distributed-BFS
@@ -327,15 +335,22 @@ object Graft {
     * unreached nodes are omitted, never materialized as ∞. */
   def shortestPaths(edges: DataFrame, src: String, dst: String,
       source: Long, hops: Int = 8, undirected: Boolean = true): DataFrame = {
-    val e = edges.select(col(src).cast("long").as("src"),
-      col(dst).cast("long").as("dst"))
-    val dir = if (undirected)
-      e.unionAll(e.select(col("dst").as("src"), col("src").as("dst")))
-    else e
     val s = edges.sparkSession
     import s.implicits._
-    graft.ops.Graph.bfsCore(dir, Seq(source).toDF("node"), hops)
+    graft.ops.Graph.bfsCore(directedEdges(edges, src, dst, undirected),
+        Seq(source).toDF("node"), hops)
       .orderBy("node").select(col("node"), col("d").as("dist"))
+  }
+
+  /** Connected components of an undirected (a, b) edge frame: label =
+    * component-minimum node id via the adaptive min-label core (driver
+    * union-find under the edge cap, distributed min-label loop above).
+    * Returns (node, component) for every edge endpoint. */
+  def connectedComponents(edges: DataFrame, a: String, b: String): DataFrame = {
+    val e = graft.ops.Graph.longEdges(edges, a, b).localCheckpoint(true)
+    graft.ops.TextDedup.componentLabels(
+        graft.ops.Graph.bothWays(e, "src", "dst"), maxRounds = 20)._1
+      .select(col("node"), col("label").as("component")).orderBy("node")
   }
 
   /** Synchronous label-propagation communities (Raghavan et al. 2007) over
@@ -343,24 +358,9 @@ object Graft {
     * iterations, most-frequent neighbor label per node, ties to the
     * smallest label — fully deterministic (integer seeds, no rand), so the
     * result is partition-invariant. Returns (node, community). */
-  /** Connected components of an undirected (a, b) edge frame: label =
-    * component-minimum node id via the adaptive min-label core (driver
-    * union-find under the edge cap, distributed min-label loop above).
-    * Returns (node, component) for every edge endpoint. */
-  def connectedComponents(edges: DataFrame, a: String, b: String): DataFrame = {
-    val e = edges.select(col(a).cast("long").as("a"),
-      col(b).cast("long").as("b")).localCheckpoint(true)
-    val dir = e.select(col("a").as("src"), col("b").as("dst"))
-      .unionAll(e.select(col("b").as("src"), col("a").as("dst")))
-    graft.ops.TextDedup.componentLabels(dir, maxRounds = 20)._1
-      .select(col("node"), col("label").as("component")).orderBy("node")
-  }
-
   def labelPropagation(edges: DataFrame, a: String, b: String,
       rounds: Int = 3): DataFrame =
-    graft.ops.Graph.lpaCore(
-        edges.select(col(a).cast("long").as("a"), col(b).cast("long").as("b")),
-        rounds)
+    graft.ops.Graph.lpaCore(graphEdges(edges, a, b), rounds)
       .orderBy("node").select(col("node"), col("lbl").as("community"))
 
   /** Resource-allocation link prediction (Zhou, Lü & Zhang 2009) over an
@@ -370,10 +370,8 @@ object Graft {
     * common-neighbor count, unranked — compose with topkPerGroup or a
     * TakeOrdered for serving. */
   def resourceAllocation(edges: DataFrame, a: String, b: String): DataFrame =
-    graft.ops.Graph.raCore(
-        edges.select(col(a).cast("long").as("a"), col(b).cast("long").as("b")))
-      .select(col("x").as("node_a"), col("y").as("node_b"),
-        col("ra_scaled"), col("n_common"))
+    graft.ops.Graph.pairsAs(graft.ops.Graph.raCore(graphEdges(edges, a, b)),
+      "node_a", "node_b")
 
   /** Adamic–Adar link prediction (Adamic & Adar 2003) over an undirected
     * (a, b) edge frame: for each non-adjacent pair, Σ 1/ln(deg) over
@@ -382,10 +380,8 @@ object Graft {
     * between commonNeighbors' none and resourceAllocation's 1/deg.
     * Unranked, like resourceAllocation — compose with a TakeOrdered. */
   def adamicAdar(edges: DataFrame, a: String, b: String): DataFrame =
-    graft.ops.Graph.aaCore(
-        edges.select(col(a).cast("long").as("a"), col(b).cast("long").as("b")))
-      .select(col("x").as("node_a"), col("y").as("node_b"),
-        col("aa_scaled"), col("n_common"))
+    graft.ops.Graph.pairsAs(graft.ops.Graph.aaCore(graphEdges(edges, a, b)),
+      "node_a", "node_b")
 
   /** CCNet-style perplexity terciles (Wenzek et al. 2020): head / middle /
     * tail split of each language's documents by unigram mean surprisal,
@@ -414,10 +410,9 @@ object Graft {
     * an exact integer rational (1e6-scaled) — no ln, no float, bit-exact
     * ranking. Unranked; compose with a TakeOrdered. */
   def jaccardLinkpred(edges: DataFrame, a: String, b: String): DataFrame =
-    graft.ops.Graph.jaccardLpCore(
-        edges.select(col(a).cast("long").as("a"), col(b).cast("long").as("b")))
-      .select(col("x").as("node_a"), col("y").as("node_b"),
-        col("j_scaled"), col("n_common"))
+    graft.ops.Graph.pairsAs(
+      graft.ops.Graph.jaccardLpCore(graphEdges(edges, a, b)),
+      "node_a", "node_b")
 
   /** MMR diversity re-ranking (Carbonell & Goldstein 1998): for each query
     * row, greedily pick `k` of its top-`poolK` cosine candidates maximizing
@@ -557,9 +552,7 @@ object Graft {
     * semi-joins over a monotonically shrinking edge set. */
   def kcore(edges: DataFrame, a: String, b: String, k: Int = 2,
       rounds: Int = 5): DataFrame =
-    graft.ops.Graph.kcoreCore(
-      edges.select(col(a).cast("long").as("a"), col(b).cast("long").as("b")),
-      k, rounds)
+    graft.ops.Graph.kcoreCore(graphEdges(edges, a, b), k, rounds)
       .select(col("n").as("node"), col("deg")).orderBy("node")
 
   /** Shannon entropy + Pielou evenness (H / ln K) of the row-count
@@ -692,10 +685,8 @@ object Graft {
     * (n_communities, n_edges, intra_edges, modularity). */
   def modularity(edges: DataFrame, a: String, b: String,
       labels: DataFrame, node: String, label: String): DataFrame =
-    graft.ops.Graph.modularityCore(
-      edges.select(col(a).cast("long").as("a"), col(b).cast("long").as("b")),
-      labels.select(col(node).cast("long").as("node"),
-        col(label).as("lbl")))
+    graft.ops.Graph.modularityCore(graphEdges(edges, a, b),
+      labels.select(col(node).as("node"), col(label).as("lbl")))
 
   /** Per-node Watts–Strogatz local clustering coefficient for the topK
     * highest-degree nodes of an undirected edge frame — the node-level
@@ -703,9 +694,7 @@ object Graft {
     * Returns (node, deg, n_triangles, lcc). */
   def localClustering(edges: DataFrame, a: String, b: String,
       topK: Int = 20): DataFrame =
-    graft.ops.Graph.localClusteringCore(
-      edges.select(col(a).cast("long").as("a"), col(b).cast("long").as("b")),
-      topK)
+    graft.ops.Graph.localClusteringCore(graphEdges(edges, a, b), topK)
 
   /** Embedding dataset-health card per `group`: row count, observed
     * dimension min/max (ragged = broken encoder), mean L2 norm from exact
@@ -722,8 +711,7 @@ object Graft {
     * hub-mixing fingerprint read before choosing graph-join skew
     * mitigations. One row (n_nodes, n_edges, assortativity). */
   def assortativity(edges: DataFrame, a: String, b: String): DataFrame =
-    graft.ops.Graph.assortativityCore(
-      edges.select(col(a).cast("long").as("a"), col(b).cast("long").as("b")))
+    graft.ops.Graph.assortativityCore(graphEdges(edges, a, b))
 
   /** Largest-remainder (Hamilton) apportionment of `budget` sample slots
     * across the values of `group`, proportional to row counts — Σ alloc ==

@@ -1,6 +1,6 @@
 package graft.ops
 
-import graft.util.Canon.scaled4
+import graft.util.Canon.{r4, scaled4}
 import org.apache.spark.sql.{DataFrame, Encoders, SparkSession}
 import org.apache.spark.sql.functions.{col, max, min}
 import scala.reflect.runtime.universe.TypeTag
@@ -207,9 +207,9 @@ object Forecast {
       // forecast through fitPredictHolidays, whose row type adds the
       // fourth block explicitly instead of silently folding it away
       val (tr, wk, dl, _) = componentsAt(m, hr)
-      Fc(key, ts, round4(yh), round4(yh - cfg.intervalZ * m.sigma),
-        round4(yh + cfg.intervalZ * m.sigma),
-        round4(tr), round4(wk), round4(dl))
+      Fc(key, ts, r4(yh), r4(yh - cfg.intervalZ * m.sigma),
+        r4(yh + cfg.intervalZ * m.sigma),
+        r4(tr), r4(wk), r4(dl))
     })
 
   final case class FcHol(user_id: Long, bucket: java.sql.Timestamp,
@@ -223,8 +223,8 @@ object Forecast {
       cfg: Config): Iterator[FcHol] =
     fit(pts, cfg).iterator.flatMap(m => ahead(m, horizon) { (hr, ts) =>
       val (tr, wk, dl, hol) = componentsAt(m, hr)
-      FcHol(key, ts, round4(tr + wk + dl + hol),
-        round4(tr), round4(wk), round4(dl), round4(hol))
+      FcHol(key, ts, r4(tr + wk + dl + hol),
+        r4(tr), r4(wk), r4(dl), r4(hol))
     })
 
   final case class FcCap(user_id: Long, bucket: java.sql.Timestamp,
@@ -273,10 +273,10 @@ object Forecast {
       ahead(m, horizon) { (hr, ts) =>
         val zh = predictAt(m, hr)
         val (tr, _, _, _) = componentsAt(m, hr)
-        FcCap(key, ts, round4(sigmoid(cap, zh)),
-          round4(sigmoid(cap, zh - cfg.intervalZ * m.sigma)),
-          round4(sigmoid(cap, zh + cfg.intervalZ * m.sigma)),
-          round4(cap), round4(sigmoid(cap, tr)))
+        FcCap(key, ts, r4(sigmoid(cap, zh)),
+          r4(sigmoid(cap, zh - cfg.intervalZ * m.sigma)),
+          r4(sigmoid(cap, zh + cfg.intervalZ * m.sigma)),
+          r4(cap), r4(sigmoid(cap, tr)))
       }
     }
 
@@ -294,8 +294,8 @@ object Forecast {
       cfg: Config = DefaultConfig): Iterator[FcMul] =
     fitLog(pts, cfg).iterator.flatMap(m => ahead(m, horizon) { (hr, ts) =>
       val (tr, wk, dl, hol) = componentsAt(m, hr)
-      FcMul(key, ts, round4(math.exp(tr + wk + dl + hol)),
-        round4(math.exp(tr)), round4(math.exp(wk + dl + hol)))
+      FcMul(key, ts, r4(math.exp(tr + wk + dl + hol)),
+        r4(math.exp(tr)), r4(math.exp(wk + dl + hol)))
     })
 
   /** The integer 80/20 holdout every per-series evaluation below shares:
@@ -455,7 +455,7 @@ object Forecast {
           sae += math.abs(e); sse += e * e
         }
         Bt(key, h.cut, test.length,
-          round4(sae / test.length), round4(math.sqrt(sse / test.length)))
+          r4(sae / test.length), r4(math.sqrt(sse / test.length)))
       }
     }
 
@@ -503,8 +503,6 @@ object Forecast {
         yield Skill(key, raw.cut, raw.nTest, numR, numS,
           saeS <= numS.toDouble, saeR <= 4.0 * numR.toDouble)
     }
-
-  private def round4(x: Double): Double = math.floor(x * 10000 + 0.5) / 10000.0
 
   /** One model per series: `f` gets each `user_id` group of a
     * (user_id, bucket, v) frame as one array. Grouping on the column (not

@@ -64,6 +64,53 @@ object Graph {
         (col("o_custkey").cast("long") * 2 + 1).as("b"))
       .distinct()
 
+  /** An undirected edge frame as (a, b) BIGINT endpoints, read from any
+    * caller's two columns: the one edge cast of the cores and facades. */
+  private[graft] def longEdges(edges: DataFrame, a: String,
+      b: String): DataFrame =
+    edges.select(col(a).cast("long").as("a"), col(b).cast("long").as("b"))
+
+  /** Both orientations of every (a, b) edge as (x, y) rows: the directed
+    * closure PageRank, BFS and components run on as (src, dst), and the
+    * symmetric neighbor list (node, neighbor) the degree, wedge and
+    * label-propagation shapes read. */
+  private[graft] def bothWays(e: DataFrame, x: String, y: String): DataFrame =
+    e.select(col("a").as(x), col("b").as(y))
+      .unionAll(e.select(col("b").as(x), col("a").as(y)))
+
+  /** Endpoint degrees (n, deg) of an (a, b) edge frame: one count per edge
+    * end, folded over the neighbor list. */
+  private def degrees(e: DataFrame): DataFrame =
+    bothWays(e, "n", "m").groupBy(col("n")).agg(count(lit(1)).as("deg"))
+
+  /** Shared-neighbor wedges: every pair x < y of neighbors around one
+    * center c of a (c, x, …) frame; its other columns ride along from x. */
+  private def wedges(byC: DataFrame): DataFrame =
+    byC.join(byC.select(col("c"), col("x").as("y")), "c")
+      .where(col("x") < col("y"))
+
+  /** Unweighted shared-neighbor counts (x, y, n_common) over x < y. */
+  private def commonNeighbors(e: DataFrame): DataFrame =
+    wedges(bothWays(e, "x", "c"))
+      .groupBy(col("x"), col("y")).agg(count(lit(1)).as("n_common"))
+
+  /** The (x, y) pairs that are (`how` = "left_semi") or are not
+    * ("left_anti") an edge of the canonical a < b edge frame `e`. */
+  private def probeEdges(pairs: DataFrame, e: DataFrame,
+      how: String): DataFrame =
+    pairs.join(e, pairs("x") === e("a") && pairs("y") === e("b"), how)
+
+  /** A scored (x, y, …) pair frame with its endpoints named `a` and `b`. */
+  private[graft] def pairsAs(pairs: DataFrame, a: String,
+      b: String): DataFrame =
+    pairs.withColumnRenamed("x", a).withColumnRenamed("y", b)
+
+  /** The link predictors' emission: the 20 pairs with the highest `score`,
+    * ties by (x, y), as (user_a, user_b, …) — a TakeOrdered, no sort. */
+  private def top20(pairs: DataFrame, score: String): DataFrame =
+    pairsAs(pairs.orderBy(desc(score), asc("x"), asc("y")).limit(20),
+      "user_a", "user_b")
+
   /** Directed-edge budget of the bounded driver-local graph solves
     * (PageRank here, min-label propagation in [[TextDedup]]): 2^19 (src,
     * dst) long pairs ≈ 8 MB collected — a bounded, documented driver
@@ -239,14 +286,11 @@ object Graph {
     * integers (see object doc). Output: node kind + original key, the
     * EXACT scaled mass (pr_scaled, the oracle-compared value), ranked. */
   private val graphPagerank: Q = (s, d) => {
-    // no checkpoint of its own: pagerankCore materializes `dir` once, and
+    // no checkpoint of its own: pagerankCore materializes the closure once, and
     // the union's two bizEdges branches share their exchanges in that one
     // plan (ten paired graph-bench runs: a separate checkpoint here did not
     // pay — pagerank median 1.19 s with it, 1.12 s without)
-    val e = bizEdges(s, d)
-    val dir = e.select(col("a").as("src"), col("b").as("dst"))
-      .unionAll(e.select(col("b").as("src"), col("a").as("dst")))
-    pagerankCore(dir)
+    pagerankCore(bothWays(bizEdges(s, d), "src", "dst"))
       .orderBy(desc("pr"), asc("node"))
       .select(
         when(col("node") % 2 === 0, lit("supplier")).otherwise(lit("customer"))
@@ -356,10 +400,8 @@ object Graph {
     * keeps the id-order census for the equivalence property in GraphSpec. */
   private[graft] def triangleCensusCore(edges: DataFrame,
       byDegree: Boolean = true): DataFrame = {
-    val e = edges.select(col("a").cast("long").as("a"),
-      col("b").cast("long").as("b")).localCheckpoint(true)
-    val deg = e.select(col("a").as("n")).unionAll(e.select(col("b").as("n")))
-      .groupBy(col("n")).agg(count(lit(1)).as("deg"))
+    val e = longEdges(edges, "a", "b").localCheckpoint(true)
+    val deg = degrees(e)
     // coalesce: an EMPTY graph (no two users share a cell — true at
     // sf0.001) must yield a 0-row census, not NULLs
     val stats = deg.agg(count(lit(1)).as("n_nodes"),
@@ -393,13 +435,10 @@ object Graph {
   /** Degree distribution of the co-occurrence graph — the first sanity
     * check on any derived graph (a power-law tail vs the near-uniform
     * synthetic shape here). degree → node count, exact integers. */
-  private val graphDegreeDistribution: Q = (s, d) => {
-    val e = coocEdges(s, d)
-    e.select(col("a").as("n")).unionAll(e.select(col("b").as("n")))
-      .groupBy(col("n")).agg(count(lit(1)).as("deg"))
+  private val graphDegreeDistribution: Q = (s, d) =>
+    degrees(coocEdges(s, d))
       .groupBy(col("deg")).agg(count(lit(1)).as("n_nodes"))
       .orderBy("deg")
-  }
 
   /** Common-neighbors link prediction over the co-occurrence graph: for
     * user pairs NOT currently connected, count shared neighbors and rank —
@@ -408,18 +447,26 @@ object Graph {
     * edge set; top-20 by (count desc, pair) is a TakeOrdered, no full
     * sort. */
   private val graphCommonNeighbors: Q = (s, d) => {
+    // its own checkpoint, not lpPrep's: cooc edges are already distinct
+    // a < b rows, and lpPrep's distinct would add an exchange
     val e = coocEdges(s, d).localCheckpoint(true)
-    // symmetric neighbor list: (node, neighbor) both ways
-    val nbr = e.select(col("a").as("n"), col("b").as("m"))
-      .unionAll(e.select(col("b").as("n"), col("a").as("m")))
-    val wedges = nbr.select(col("m").as("c"), col("n").as("x"))
-      .join(nbr.select(col("m").as("c"), col("n").as("y")), "c")
-      .where(col("x") < col("y"))
-      .groupBy(col("x"), col("y")).agg(count(lit(1)).as("n_common"))
-    wedges.join(e, wedges("x") === e("a") && wedges("y") === e("b"),
-        "left_anti")
-      .orderBy(desc("n_common"), asc("x"), asc("y")).limit(20)
-      .select(col("x").as("user_a"), col("y").as("user_b"), col("n_common"))
+    top20(probeEdges(commonNeighbors(e), e, "left_anti"), "n_common")
+  }
+
+  /** Shared link-prediction preamble: canonicalize an undirected edge
+    * frame to DISTINCT a < b rows (the wedge pairs are emitted x < y, so
+    * the existing-edge anti-join silently misses any edge stored
+    * reversed; and a caller passing the symmetric both-directions
+    * representation must not double every degree and quadruple every
+    * wedge count — distinct() collapses it), checkpoint it, and derive
+    * the symmetric neighbor list (x, c) — node x beside its neighbor c,
+    * the wedge center — and the degree table all three predictors share. */
+  private def lpPrep(edges: DataFrame): (DataFrame, DataFrame, DataFrame) = {
+    val e = edges.select(
+        least(col("a").cast("long"), col("b").cast("long")).as("a"),
+        greatest(col("a").cast("long"), col("b").cast("long")).as("b"))
+      .distinct().localCheckpoint(true)
+    (e, bothWays(e, "x", "c"), degrees(e))
   }
 
   /** Resource-allocation link prediction (Zhou, Lü & Zhang 2009): for each
@@ -434,45 +481,19 @@ object Graph {
     * equi-join), the wedge join shuffles on the shared-neighbor key, the
     * anti-join removes existing edges, and top-20 is a TakeOrdered — no
     * global sort, nothing driver-sized. */
-  /** Shared link-prediction preamble: canonicalize an undirected edge
-    * frame to DISTINCT a < b rows (the wedge pairs are emitted x < y, so
-    * the existing-edge anti-join silently misses any edge stored
-    * reversed; and a caller passing the symmetric both-directions
-    * representation must not double every degree and quadruple every
-    * wedge count — distinct() collapses it), checkpoint it, and derive
-    * the symmetric neighbor list + degree table all three predictors
-    * share. */
-  private def lpPrep(edges: DataFrame): (DataFrame, DataFrame, DataFrame) = {
-    val e = edges.select(least(col("a"), col("b")).cast("long").as("a"),
-        greatest(col("a"), col("b")).cast("long").as("b"))
-      .distinct().localCheckpoint(true)
-    val nbr = e.select(col("a").as("n"), col("b").as("m"))
-      .unionAll(e.select(col("b").as("n"), col("a").as("m")))
-    val deg = nbr.groupBy(col("n")).agg(count(lit(1)).as("deg"))
-    (e, nbr, deg)
-  }
-
   private[graft] def raCore(edges: DataFrame): DataFrame = {
-    val (e, nbr, deg) = lpPrep(edges)
+    val (e, byC, deg) = lpPrep(edges)
     // attach each wedge-center's weight before the wedge join so the pair
     // aggregate is a single pass (center key c = the shared neighbor)
-    val byC = nbr.select(col("m").as("c"), col("n").as("x"))
-      .join(deg.select(col("n").as("c"), expr("1000000000 div deg").as("w")),
-        "c")
-    val wedges = byC
-      .join(byC.select(col("c"), col("x").as("y")), "c")
-      .where(col("x") < col("y"))
+    val pairs = wedges(byC.join(
+        deg.select(col("n").as("c"), expr("1000000000 div deg").as("w")), "c"))
       .groupBy(col("x"), col("y"))
       .agg(sum(col("w")).as("ra_scaled"), count(lit(1)).as("n_common"))
-    wedges.join(e, wedges("x") === e("a") && wedges("y") === e("b"),
-      "left_anti")
+    probeEdges(pairs, e, "left_anti")
   }
 
   private val graphResourceAllocation: Q = (s, d) =>
-    raCore(coocEdges(s, d))
-      .orderBy(desc("ra_scaled"), asc("x"), asc("y")).limit(20)
-      .select(col("x").as("user_a"), col("y").as("user_b"),
-        col("ra_scaled"), col("n_common"))
+    top20(raCore(coocEdges(s, d)), "ra_scaled")
 
   /** Adamic–Adar link prediction (Adamic & Adar 2003) — the third member of
     * the classic trio next to common-neighbors and resource-allocation:
@@ -487,26 +508,19 @@ object Graph {
     * wedge equi-join on the shared-neighbor key, one anti-join, TakeOrdered
     * top-20 — no global sort, nothing driver-sized. */
   private[graft] def aaCore(edges: DataFrame): DataFrame = {
-    val (e, nbr, deg) = lpPrep(edges)
+    val (e, byC, deg) = lpPrep(edges)
     val wdeg = deg.where(col("deg") >= 2)
       .withColumn("li",
         floor(log(col("deg").cast("double")) * 1e6 + 0.5).cast("long"))
       .select(col("n").as("c"), expr("1000000000000 div li").as("w"))
-    val byC = nbr.select(col("m").as("c"), col("n").as("x")).join(wdeg, "c")
-    val wedges = byC
-      .join(byC.select(col("c"), col("x").as("y")), "c")
-      .where(col("x") < col("y"))
+    val pairs = wedges(byC.join(wdeg, "c"))
       .groupBy(col("x"), col("y"))
       .agg(sum(col("w")).as("aa_scaled"), count(lit(1)).as("n_common"))
-    wedges.join(e, wedges("x") === e("a") && wedges("y") === e("b"),
-      "left_anti")
+    probeEdges(pairs, e, "left_anti")
   }
 
   private val graphAdamicAdar: Q = (s, d) =>
-    aaCore(coocEdges(s, d))
-      .orderBy(desc("aa_scaled"), asc("x"), asc("y")).limit(20)
-      .select(col("x").as("user_a"), col("y").as("user_b"),
-        col("aa_scaled"), col("n_common"))
+    top20(aaCore(coocEdges(s, d)), "aa_scaled")
 
   /** Jaccard-coefficient link prediction — the fourth classic predictor
     * (Liben-Nowell & Kleinberg's survey): J(x,y) = |Γx∩Γy| / |Γx∪Γy| =
@@ -516,27 +530,19 @@ object Graph {
     * Same plan as commonNeighbors plus two broadcast-sized degree joins;
     * top-20 TakeOrdered. */
   private[graft] def jaccardLpCore(edges: DataFrame): DataFrame = {
-    val (e, nbr, deg) = lpPrep(edges)
-    val byC = nbr.select(col("m").as("c"), col("n").as("x"))
-    val wedges = byC
-      .join(byC.select(col("c"), col("x").as("y")), "c")
-      .where(col("x") < col("y"))
-      .groupBy(col("x"), col("y")).agg(count(lit(1)).as("n_common"))
-    wedges
+    val (e, _, deg) = lpPrep(edges)
+    val scored = commonNeighbors(e)
       .join(deg.select(col("n").as("x"), col("deg").as("dx")), "x")
       .join(deg.select(col("n").as("y"), col("deg").as("dy")), "y")
       .withColumn("j_scaled",
         expr("1000000 * n_common div (dx + dy - n_common)"))
-      .join(e, wedges("x") === e("a") && wedges("y") === e("b"), "left_anti")
+    probeEdges(scored, e, "left_anti")
       // the USING-joins above reorder columns (y, x, …) — fix the contract
       .select(col("x"), col("y"), col("j_scaled"), col("n_common"))
   }
 
   private val graphJaccardLinkpred: Q = (s, d) =>
-    jaccardLpCore(coocEdges(s, d))
-      .orderBy(desc("j_scaled"), asc("x"), asc("y")).limit(20)
-      .select(col("x").as("user_a"), col("y").as("user_b"),
-        col("j_scaled"), col("n_common"))
+    top20(jaccardLpCore(coocEdges(s, d)), "j_scaled")
 
   /** Bounded-hop BFS shortest paths from the lowest-id user over the
     * co-occurrence graph (hop limit 8 ≳ the fixture diameter 7): the
@@ -571,11 +577,9 @@ object Graph {
   private val graphShortestPaths: Q = (s, d) => {
     // checkpoint once: both the adjacency and the source-pick read e0
     val e0 = coocEdges(s, d).localCheckpoint(true)
-    val dir = e0.select(col("a").as("src"), col("b").as("dst"))
-      .unionAll(e0.select(col("b").as("src"), col("a").as("dst")))
     // empty-graph guard (sf0.001): no edges → no source → empty output
     val src = e0.agg(min(col("a")).as("node")).where(col("node").isNotNull)
-    bfsCore(dir, src, hops = 8)
+    bfsCore(bothWays(e0, "src", "dst"), src, hops = 8)
       .orderBy("node").select(col("node").as("user_id"), col("d").as("dist"))
   }
 
@@ -591,14 +595,11 @@ object Graph {
     * oracle's edge-endpoint node set. No checkpoint of its own: the two
     * directions read one reused exchange (coocEdges ends in a `distinct`)
     * inside the core's one edge checkpoint. */
-  private val graphConnectedComponents: Q = (s, d) => {
-    val e = coocEdges(s, d)
-    val edges = e.select(col("a").as("src"), col("b").as("dst"))
-      .unionAll(e.select(col("b").as("src"), col("a").as("dst")))
-    TextDedup.componentLabels(edges, maxRounds = 20)._1
+  private val graphConnectedComponents: Q = (s, d) =>
+    TextDedup.componentLabels(bothWays(coocEdges(s, d), "src", "dst"),
+        maxRounds = 20)._1
       .select(col("node").as("user_id"), col("label").as("component"))
       .orderBy("user_id")
-  }
 
   /** Synchronous label-propagation community detection (Raghavan et al.
     * 2007) over the co-occurrence graph, T=3 unrolled rounds: every node
@@ -614,11 +615,8 @@ object Graph {
     * driver-sized. T is fixed (bounded rounds, the production guard against
     * LPA's known oscillation) rather than run-to-convergence. */
   private[graft] def lpaCore(edges: DataFrame, rounds: Int): DataFrame = {
-    val e = edges.select(col("a").cast("long").as("a"),
-      col("b").cast("long").as("b")).localCheckpoint(true)
-    val nbr = e.select(col("a").as("node"), col("b").as("m"))
-      .unionAll(e.select(col("b").as("node"), col("a").as("m")))
-      .localCheckpoint(true)
+    val e = longEdges(edges, "a", "b").localCheckpoint(true)
+    val nbr = bothWays(e, "node", "m").localCheckpoint(true)
     val byVotes = Window.partitionBy("node").orderBy(desc("c"), asc("lbl"))
     // (r18: removing the per-round checkpoint was measured and DECLINED —
     // see pagerankLoop; the unrolled single-job form benched 1.69→2.66 s.)
@@ -656,18 +654,14 @@ object Graph {
     * every graft propagation shares). */
   private[graft] def kcoreCore(edges: DataFrame, k: Int = 2,
       rounds: Int = 5): DataFrame = {
-    var e = edges.select(col("a").cast("long").as("a"),
-      col("b").cast("long").as("b")).localCheckpoint(true)
+    var e = longEdges(edges, "a", "b").localCheckpoint(true)
     for (_ <- 1 to rounds) {
-      val keep = e.select(col("a").as("n")).unionAll(e.select(col("b").as("n")))
-        .groupBy(col("n")).agg(count(lit(1)).as("deg"))
-        .where(col("deg") >= k).select(col("n"))
+      val keep = degrees(e).where(col("deg") >= k).select(col("n"))
       e = e.join(keep.withColumnRenamed("n", "a"), Seq("a"), "left_semi")
         .join(keep.withColumnRenamed("n", "b"), Seq("b"), "left_semi")
         .select(col("a"), col("b")).localCheckpoint(true)
     }
-    e.select(col("a").as("n")).unionAll(e.select(col("b").as("n")))
-      .groupBy(col("n")).agg(count(lit(1)).as("deg"))
+    degrees(e)
   }
 
   private val graphKcore: Q = (s, d) =>
@@ -692,17 +686,15 @@ object Graph {
     * table from one edge-end rollup, two broadcast-sized joins back onto
     * the edge frame, one global agg — shuffle ∝ edges, no window. */
   private[graft] def assortativityCore(edges: DataFrame): DataFrame = {
-    // checkpoint: the edge frame is referenced by sym (twice via the
-    // union), deg, the xy double-join, and ne — without this an expensive
-    // upstream derivation (the co-occurrence self-join) would re-expand
-    // per reference, like the sibling lpaCore/kcoreCore guards
-    val e = edges.select(col("a").cast("long").as("a"),
-      col("b").cast("long").as("b")).localCheckpoint(true)
-    val sym = e.unionAll(e.select(col("b").as("a"), col("a").as("b")))
-    val deg = sym.groupBy(col("a").as("n")).agg(count(lit(1)).as("deg"))
-    val xy = sym
-      .join(deg.select(col("n").as("a"), col("deg").as("x")), Seq("a"))
-      .join(deg.select(col("n").as("b"), col("deg").as("y")), Seq("b"))
+    // checkpoint: the edge frame is referenced by the neighbor list (twice
+    // via the union), deg, the xy double-join, and ne — without this an
+    // expensive upstream derivation (the co-occurrence self-join) would
+    // re-expand per reference, like the sibling lpaCore/kcoreCore guards
+    val e = longEdges(edges, "a", "b").localCheckpoint(true)
+    val deg = degrees(e)
+    val xy = bothWays(e, "n", "m")
+      .join(deg.select(col("n"), col("deg").as("x")), Seq("n"))
+      .join(deg.select(col("n").as("m"), col("deg").as("y")), Seq("m"))
     val mom = xy.agg(count(lit(1)).as("m"),
       sum(col("x")).as("sx"), sum(col("y")).as("sy"),
       sum(decw(col("x")) * col("y")).as("sxy"),
@@ -742,8 +734,7 @@ object Graph {
     // naive shape drops unlabeled mass from e_c and d_c but not from m,
     // biasing Q upward (the registry's LPA labels every node, so this
     // only matters for facade callers)
-    val e = edges.select(col("a").cast("long").as("a"),
-      col("b").cast("long").as("b"))
+    val e = longEdges(edges, "a", "b")
       .join(lab.select(col("node").as("a")), Seq("a"), "left_semi")
       .join(lab.select(col("node").as("b")), Seq("b"), "left_semi")
       .select(col("a"), col("b")).localCheckpoint(true)
@@ -753,10 +744,7 @@ object Graph {
       .join(lab.select(col("node").as("b"), col("lbl").as("lb")), Seq("b"))
       .agg(coalesce(sum(when(col("la") === col("lb"), 1L).otherwise(0L)),
         lit(0L)).as("intra_edges"))
-    val deg = e.select(col("a").as("node"))
-      .unionAll(e.select(col("b").as("node")))
-      .groupBy("node").agg(count(lit(1)).as("deg"))
-    val s2 = deg.join(lab, Seq("node"))
+    val s2 = degrees(e).withColumnRenamed("n", "node").join(lab, Seq("node"))
       .groupBy("lbl").agg(sum(col("deg")).as("d_c"))
       .agg(count(lit(1)).as("n_communities"),
         coalesce(sum(decw(col("d_c")) * col("d_c")),
@@ -796,17 +784,11 @@ object Graph {
         least(col("a").cast("long"), col("b").cast("long")).as("a"),
         greatest(col("a").cast("long"), col("b").cast("long")).as("b"))
       .where(col("a") < col("b")).distinct().localCheckpoint(true)
-    val nbr = e.select(col("a").as("v"), col("b").as("u"))
-      .unionAll(e.select(col("b").as("v"), col("a").as("u")))
-    val deg = nbr.groupBy(col("v")).agg(count(lit(1)).as("deg"))
-    val wedges = nbr
-      .join(nbr.select(col("v"), col("u").as("w")), "v")
-      .where(col("u") < col("w"))
-    val closed = wedges
-      .join(e, wedges("u") === e("a") && wedges("w") === e("b"), "left_semi")
-      .groupBy(col("v")).agg(count(lit(1)).as("tri"))
-    deg.join(closed, Seq("v"), "left")
-      .select(col("v").as("node"), col("deg"),
+    // wedges x < y around each center c, closed by an x–y edge
+    val closed = probeEdges(wedges(bothWays(e, "c", "x")), e, "left_semi")
+      .groupBy(col("c").as("n")).agg(count(lit(1)).as("tri"))
+    degrees(e).join(closed, Seq("n"), "left")
+      .select(col("n").as("node"), col("deg"),
         coalesce(col("tri"), lit(0L)).as("n_triangles"),
         r4(when(col("deg") > 1,
           (lit(2L) * coalesce(col("tri"), lit(0L))).cast("double") /
@@ -853,6 +835,18 @@ object Graph {
     "graph_local_clustering" -> graphLocalClustering,
   )
 
+  /** The co-occurrence CTEs every cooc oracle opens with: `b`, the
+    * distinct (user, event_type, minute) cells, and edge CTE %1$s, the
+    * distinct a < b user pairs sharing a cell; %2$s is "" or
+    * " MATERIALIZED". */
+  private val cooc =
+    """b AS%2$s (
+         SELECT DISTINCT user_id AS u, event_type,
+                date_trunc('minute', ts) AS w FROM events),
+       %1$s AS%2$s (SELECT DISTINCT a.u AS a, b2.u AS b
+         FROM b a JOIN b b2 ON a.event_type = b2.event_type AND a.w = b2.w
+         WHERE a.u < b2.u)"""
+
   /** One k=2 peel round: survivors of the degree filter over edge set %s. */
   private val peelKeep =
     """SELECT n FROM (SELECT a AS n FROM %s UNION ALL SELECT b FROM %s)
@@ -898,13 +892,7 @@ object Graph {
                 CAST(2016 AS BIGINT) AS pairs_bound_per_cell
          FROM cells""",
     "graph_local_clustering" ->
-      s"""WITH b AS (
-            SELECT DISTINCT user_id AS u, event_type,
-                   date_trunc('minute', ts) AS w FROM events),
-          e AS (SELECT DISTINCT a.u AS a, b2.u AS b
-                FROM b a JOIN b b2
-                  ON a.event_type = b2.event_type AND a.w = b2.w
-                WHERE a.u < b2.u),
+      s"""WITH ${cooc.format("e", "")},
           nbr AS (SELECT a AS v, b AS u FROM e
                   UNION ALL SELECT b, a FROM e),
           deg AS (SELECT v, count(*) AS deg FROM nbr GROUP BY 1),
@@ -923,13 +911,7 @@ object Graph {
           FROM deg LEFT JOIN closed ON deg.v = closed.v
           ORDER BY deg DESC, node LIMIT 20""",
     "graph_modularity" ->
-      s"""WITH b AS (
-            SELECT DISTINCT user_id AS u, event_type,
-                   date_trunc('minute', ts) AS w FROM events),
-          e AS (SELECT DISTINCT a.u AS a, b2.u AS b
-                FROM b a JOIN b b2
-                  ON a.event_type = b2.event_type AND a.w = b2.w
-                WHERE a.u < b2.u),
+      s"""WITH ${cooc.format("e", "")},
           nbr AS (SELECT a AS node, b AS m FROM e
                   UNION ALL SELECT b, a FROM e),
           l0 AS (SELECT DISTINCT node, node AS lbl FROM nbr),
@@ -955,13 +937,7 @@ object Graph {
                    / 10000.0 AS modularity
           FROM ein CROSS JOIN mm CROSS JOIN s2""",
     "graph_assortativity" ->
-      s"""WITH b AS (
-            SELECT DISTINCT user_id AS u, event_type,
-                   date_trunc('minute', ts) AS w FROM events),
-          e AS (SELECT DISTINCT a.u AS a, b2.u AS b
-                FROM b a JOIN b b2
-                  ON a.event_type = b2.event_type AND a.w = b2.w
-                WHERE a.u < b2.u),
+      s"""WITH ${cooc.format("e", "")},
           sym AS (SELECT a, b FROM e UNION ALL SELECT b, a FROM e),
           deg AS (SELECT a AS n, count(*) AS deg FROM sym GROUP BY 1),
           xy AS (SELECT da.deg AS x, db.deg AS y
@@ -989,13 +965,7 @@ object Graph {
       // predecessor three times (twice in the degree union, once in the
       // edge restriction), so the default inlining re-evaluates the base
       // co-occurrence self-join ~3^5 times and the oracle never finishes
-      s"""WITH b AS MATERIALIZED (
-            SELECT DISTINCT user_id AS u, event_type,
-                   date_trunc('minute', ts) AS w FROM events),
-          e0 AS MATERIALIZED (SELECT DISTINCT a.u AS a, b2.u AS b
-                 FROM b a JOIN b b2
-                   ON a.event_type = b2.event_type AND a.w = b2.w
-                 WHERE a.u < b2.u),
+      s"""WITH ${cooc.format("e0", " MATERIALIZED")},
           k1 AS MATERIALIZED (${peelKeep.format("e0", "e0")}),
           e1 AS MATERIALIZED (${peelEdge.format("e0", "k1", "k1")}),
           k2 AS MATERIALIZED (${peelKeep.format("e1", "e1")}),
@@ -1010,13 +980,7 @@ object Graph {
           FROM (SELECT a AS n FROM e5 UNION ALL SELECT b FROM e5)
           GROUP BY n ORDER BY n""",
     "graph_label_propagation" ->
-      s"""WITH b AS (
-            SELECT DISTINCT user_id AS u, event_type,
-                   date_trunc('minute', ts) AS w FROM events),
-          e AS (SELECT DISTINCT a.u AS a, b2.u AS b
-                FROM b a JOIN b b2
-                  ON a.event_type = b2.event_type AND a.w = b2.w
-                WHERE a.u < b2.u),
+      s"""WITH ${cooc.format("e", "")},
           nbr AS (SELECT a AS node, b AS m FROM e
                   UNION ALL SELECT b, a FROM e),
           l0 AS (SELECT DISTINCT node, node AS lbl FROM nbr),
@@ -1043,13 +1007,7 @@ object Graph {
                  node // 2 AS key, CAST(pr AS BIGINT) AS pr_scaled
           FROM p5 ORDER BY pr_scaled DESC, node""",
     "graph_triangle_count" ->
-      s"""WITH b AS (
-            SELECT DISTINCT user_id AS u, event_type,
-                   date_trunc('minute', ts) AS w FROM events),
-          e AS (SELECT DISTINCT a.u AS a, b2.u AS b
-                FROM b a JOIN b b2
-                  ON a.event_type = b2.event_type AND a.w = b2.w
-                WHERE a.u < b2.u),
+      s"""WITH ${cooc.format("e", "")},
           deg AS (SELECT n, count(*) AS deg FROM (
                     SELECT a AS n FROM e UNION ALL SELECT b FROM e)
                   GROUP BY 1),
@@ -1069,26 +1027,14 @@ object Graph {
                  END AS clustering
           FROM s, ne, tri""",
     "graph_degree_distribution" ->
-      s"""WITH b AS (
-            SELECT DISTINCT user_id AS u, event_type,
-                   date_trunc('minute', ts) AS w FROM events),
-          e AS (SELECT DISTINCT a.u AS a, b2.u AS b
-                FROM b a JOIN b b2
-                  ON a.event_type = b2.event_type AND a.w = b2.w
-                WHERE a.u < b2.u),
+      s"""WITH ${cooc.format("e", "")},
           deg AS (SELECT n, count(*) AS deg FROM (
                     SELECT a AS n FROM e UNION ALL SELECT b FROM e)
                   GROUP BY 1)
           SELECT deg, count(*) AS n_nodes FROM deg
           GROUP BY deg ORDER BY deg""",
     "graph_connected_components" ->
-      s"""WITH RECURSIVE b AS (
-            SELECT DISTINCT user_id AS u, event_type,
-                   date_trunc('minute', ts) AS w FROM events),
-          e0 AS (SELECT DISTINCT a.u AS a, b2.u AS b
-                 FROM b a JOIN b b2
-                   ON a.event_type = b2.event_type AND a.w = b2.w
-                 WHERE a.u < b2.u),
+      s"""WITH RECURSIVE ${cooc.format("e0", "")},
           e AS (SELECT a AS s, b AS t FROM e0 UNION ALL SELECT b, a FROM e0),
           nodes AS (SELECT DISTINCT s AS node FROM e),
           reach(node, r) AS (
@@ -1098,13 +1044,7 @@ object Graph {
           SELECT node AS user_id, CAST(min(r) AS BIGINT) AS component
           FROM reach GROUP BY node ORDER BY user_id""",
     "graph_shortest_paths" ->
-      s"""WITH RECURSIVE b AS (
-            SELECT DISTINCT user_id AS u, event_type,
-                   date_trunc('minute', ts) AS w FROM events),
-          e0 AS (SELECT DISTINCT a.u AS a, b2.u AS b
-                 FROM b a JOIN b b2
-                   ON a.event_type = b2.event_type AND a.w = b2.w
-                 WHERE a.u < b2.u),
+      s"""WITH RECURSIVE ${cooc.format("e0", "")},
           e AS (SELECT a AS s, b AS t FROM e0 UNION ALL SELECT b, a FROM e0),
           src AS (SELECT min(a) AS m FROM e0),
           reach(node, d) AS (
@@ -1115,13 +1055,7 @@ object Graph {
           SELECT node AS user_id, CAST(min(d) AS INT) AS dist
           FROM reach GROUP BY node ORDER BY node""",
     "graph_resource_allocation" ->
-      s"""WITH b AS (
-            SELECT DISTINCT user_id AS u, event_type,
-                   date_trunc('minute', ts) AS w FROM events),
-          e AS (SELECT DISTINCT a.u AS a, b2.u AS b
-                FROM b a JOIN b b2
-                  ON a.event_type = b2.event_type AND a.w = b2.w
-                WHERE a.u < b2.u),
+      s"""WITH ${cooc.format("e", "")},
           nbr AS (SELECT a AS n, b AS m FROM e
                   UNION ALL SELECT b, a FROM e),
           deg AS (SELECT n, count(*) AS deg FROM nbr GROUP BY 1),
@@ -1139,13 +1073,7 @@ object Graph {
           SELECT x AS user_a, y AS user_b, ra_scaled, n_common
           FROM miss ORDER BY ra_scaled DESC, x, y LIMIT 20""",
     "graph_adamic_adar" ->
-      s"""WITH b AS (
-            SELECT DISTINCT user_id AS u, event_type,
-                   date_trunc('minute', ts) AS w FROM events),
-          e AS (SELECT DISTINCT a.u AS a, b2.u AS b
-                FROM b a JOIN b b2
-                  ON a.event_type = b2.event_type AND a.w = b2.w
-                WHERE a.u < b2.u),
+      s"""WITH ${cooc.format("e", "")},
           nbr AS (SELECT a AS n, b AS m FROM e
                   UNION ALL SELECT b, a FROM e),
           deg AS (SELECT n, count(*) AS deg FROM nbr GROUP BY 1),
@@ -1167,13 +1095,7 @@ object Graph {
           SELECT x AS user_a, y AS user_b, aa_scaled, n_common
           FROM miss ORDER BY aa_scaled DESC, x, y LIMIT 20""",
     "graph_jaccard_linkpred" ->
-      s"""WITH b AS (
-            SELECT DISTINCT user_id AS u, event_type,
-                   date_trunc('minute', ts) AS w FROM events),
-          e AS (SELECT DISTINCT a.u AS a, b2.u AS b
-                FROM b a JOIN b b2
-                  ON a.event_type = b2.event_type AND a.w = b2.w
-                WHERE a.u < b2.u),
+      s"""WITH ${cooc.format("e", "")},
           nbr AS (SELECT a AS n, b AS m FROM e
                   UNION ALL SELECT b, a FROM e),
           deg AS (SELECT n, count(*) AS deg FROM nbr GROUP BY 1),
@@ -1191,13 +1113,7 @@ object Graph {
           SELECT x AS user_a, y AS user_b, j_scaled, n_common
           FROM miss ORDER BY j_scaled DESC, x, y LIMIT 20""",
     "graph_common_neighbors" ->
-      s"""WITH b AS (
-            SELECT DISTINCT user_id AS u, event_type,
-                   date_trunc('minute', ts) AS w FROM events),
-          e AS (SELECT DISTINCT a.u AS a, b2.u AS b
-                FROM b a JOIN b b2
-                  ON a.event_type = b2.event_type AND a.w = b2.w
-                WHERE a.u < b2.u),
+      s"""WITH ${cooc.format("e", "")},
           nbr AS (SELECT a AS n, b AS m FROM e
                   UNION ALL SELECT b, a FROM e),
           w AS (SELECT n1.n AS x, n2.n AS y, count(*) AS n_common

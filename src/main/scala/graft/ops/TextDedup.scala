@@ -1147,91 +1147,96 @@ object TextDedup {
     // labels are recomputed from scratch as component minima here).
     val Graph.MaterializedEdges(edgesC, nEdges, local) =
       Graph.materializeEdges(edges, localSolveCap)
-    if (local.isDefined) {
-      val (src, dst) = local.get
-      val parent = scala.collection.mutable.LongMap.empty[Long]
-      def find(x: Long): Long = {
-        var r = x
-        while (parent.getOrElse(r, r) != r) r = parent.getOrElse(r, r)
-        var c = x
-        while (parent.getOrElse(c, c) != c) { val n = parent(c); parent(c) = r; c = n }
-        r
-      }
-      val seen = scala.collection.mutable.LongMap.empty[Unit]
-      for (i <- src.indices) {
-        val (a, b) = (src(i), dst(i))
-        seen(a) = (); seen(b) = ()
-        val (ra, rb) = (find(a), find(b))
-        // larger root attaches under smaller ⇒ every root IS its
-        // component's min node id, so find() returns the label directly
-        if (ra != rb) parent(math.max(ra, rb)) = math.min(ra, rb)
-      }
-      val touched = seen.keys.toArray.map(n => n -> find(n))
-      val spark = edges.sparkSession
-      import spark.implicits._
-      // one partition either way: a caller's global sort then needs no
-      // range exchange (the node frames callers pass are bounded slices,
-      // or set tables whose labels they broadcast anyway)
-      val out = init match {
-        case None => touched.toSeq.toDF("node", "label")
-        case Some(nodes) => nodes
-          .join(broadcast(touched.toSeq.toDF("tn", "tl")),
-            col("node") === col("tn"), "left")
-          .select(col("node"), coalesce(col("tl"), col("label")).as("label"))
-      }
-      return (out.coalesce(1), 0)
+    local match {
+      case Some((src, dst)) =>
+        val parent = scala.collection.mutable.LongMap.empty[Long]
+        def find(x: Long): Long = {
+          var r = x
+          while (parent.getOrElse(r, r) != r) r = parent.getOrElse(r, r)
+          var c = x
+          while (parent.getOrElse(c, c) != c) {
+            val n = parent(c); parent(c) = r; c = n
+          }
+          r
+        }
+        val seen = scala.collection.mutable.LongMap.empty[Unit]
+        for (i <- src.indices) {
+          val (a, b) = (src(i), dst(i))
+          seen(a) = (); seen(b) = ()
+          val (ra, rb) = (find(a), find(b))
+          // larger root attaches under smaller ⇒ every root IS its
+          // component's min node id, so find() returns the label directly
+          if (ra != rb) parent(math.max(ra, rb)) = math.min(ra, rb)
+        }
+        val touched = seen.keys.toArray.map(n => n -> find(n))
+        val spark = edges.sparkSession
+        import spark.implicits._
+        // one partition either way: a caller's global sort then needs no
+        // range exchange (the node frames callers pass are bounded slices,
+        // or set tables whose labels they broadcast anyway)
+        val out = init match {
+          case None => touched.toSeq.toDF("node", "label")
+          case Some(nodes) => nodes
+            .join(broadcast(touched.toSeq.toDF("tn", "tl")),
+              col("node") === col("tn"), "left")
+            .select(col("node"), coalesce(col("tl"), col("label")).as("label"))
+        }
+        (out.coalesce(1), 0)
+      case None =>
+        val seed = init.getOrElse {
+          val ends = edgesC.select(col("src").as("node"))
+            .unionAll(edgesC.select(col("dst").as("node"))).distinct()
+          ends.select(col("node"), col("node").as("label"))
+        }
+        var labels = seed.localCheckpoint(true)
+        var rounds = 0
+        var converged = false
+        while (!converged && rounds < maxRounds) {
+          val prop = edgesC.join(labels, col("src") === col("node"))
+            .select(col("dst").as("node"), col("label"))
+          val relaxed = labels.unionByName(prop).groupBy("node")
+            .agg(min(col("label")).as("label"))
+          // shortcut: replace each label by that label-node's own label. Labels
+          // always name a node of the same component, so the hop stays inside
+          // the component and only ever decreases toward its min. LEFT join +
+          // coalesce: a label can name a node the relax step hasn't surfaced.
+          // (df-qualified column refs: the self-join on `relaxed` otherwise
+          // trips the analyzer's attribute dedup on the iterative plan)
+          val jump = relaxed.select(col("node").as("ln"), col("label").as("ll"))
+          val shortcut = relaxed
+            .join(jump, relaxed("label") === jump("ln"), "left")
+            .select(relaxed("node").as("node"),
+              least(relaxed("label"), coalesce(jump("ll"), relaxed("label")))
+                .as("label"))
+          // Fold the convergence test into the SAME materialized pass instead
+          // of a separate join job per round: each checkpointed row carries a
+          // changed bit, and the post-checkpoint aggregate scans already-
+          // materialized partitions. LEFT join from shortcut: a node first
+          // appearing this round (edges can mention nodes absent from init) has
+          // no old label and must count as a change, or the loop would declare
+          // convergence prematurely.
+          val next = shortcut.as("n")
+            .join(labels.as("o"), Seq("node"), "left")
+            .select(col("node"), col("n.label").as("label"),
+              (col("o.label").isNull || col("n.label") =!= col("o.label"))
+                .as("chg"))
+            .localCheckpoint(true)
+          converged = next.where(col("chg")).isEmpty
+          labels = next.select("node", "label")
+          rounds += 1
+        }
+        // fail loudly instead of returning silently wrong labels: a
+        // pathological high-diameter graph that exhausts maxRounds without
+        // the changed-bit scan coming back empty has NOT reached the
+        // component-minimum fixpoint (ADVICE r14 — previously the convergence
+        // signal was discarded by callers). The label-jump shortcut halves the
+        // distance-to-min each round, so 20 rounds cover diameters ~2^20;
+        // hitting this means the graph needs a higher maxRounds, not a rerun.
+        if (!converged) throw new IllegalStateException(
+          s"propagateMinLabels did not converge within $maxRounds rounds " +
+            s"($nEdges directed edges) — raise maxRounds")
+        (labels, rounds)
     }
-    val seed = init.getOrElse {
-      val ends = edgesC.select(col("src").as("node"))
-        .unionAll(edgesC.select(col("dst").as("node"))).distinct()
-      ends.select(col("node"), col("node").as("label"))
-    }
-    var labels = seed.localCheckpoint(true)
-    var rounds = 0
-    var converged = false
-    while (!converged && rounds < maxRounds) {
-      val prop = edgesC.join(labels, col("src") === col("node"))
-        .select(col("dst").as("node"), col("label"))
-      val relaxed = labels.unionByName(prop).groupBy("node")
-        .agg(min(col("label")).as("label"))
-      // shortcut: replace each label by that label-node's own label. Labels
-      // always name a node of the same component, so the hop stays inside
-      // the component and only ever decreases toward its min. LEFT join +
-      // coalesce: a label can name a node the relax step hasn't surfaced.
-      // (df-qualified column refs: the self-join on `relaxed` otherwise
-      // trips the analyzer's attribute dedup on the iterative plan)
-      val jump = relaxed.select(col("node").as("ln"), col("label").as("ll"))
-      val shortcut = relaxed
-        .join(jump, relaxed("label") === jump("ln"), "left")
-        .select(relaxed("node").as("node"),
-          least(relaxed("label"), coalesce(jump("ll"), relaxed("label"))).as("label"))
-      // Fold the convergence test into the SAME materialized pass instead of
-      // a separate join job per round: each checkpointed row carries a
-      // changed bit, and the post-checkpoint aggregate scans already-
-      // materialized partitions. LEFT join from shortcut: a node first
-      // appearing this round (edges can mention nodes absent from init) has
-      // no old label and must count as a change, or the loop would declare
-      // convergence prematurely.
-      val next = shortcut.as("n")
-        .join(labels.as("o"), Seq("node"), "left")
-        .select(col("node"), col("n.label").as("label"),
-          (col("o.label").isNull || col("n.label") =!= col("o.label")).as("chg"))
-        .localCheckpoint(true)
-      converged = next.where(col("chg")).isEmpty
-      labels = next.select("node", "label")
-      rounds += 1
-    }
-    // fail loudly instead of returning silently wrong labels: a
-    // pathological high-diameter graph that exhausts maxRounds without
-    // the changed-bit scan coming back empty has NOT reached the
-    // component-minimum fixpoint (ADVICE r14 — previously the convergence
-    // signal was discarded by callers). The label-jump shortcut halves the
-    // distance-to-min each round, so 20 rounds cover diameters ~2^20;
-    // hitting this means the graph needs a higher maxRounds, not a rerun.
-    if (!converged) throw new IllegalStateException(
-      s"propagateMinLabels did not converge within $maxRounds rounds " +
-        s"($nEdges directed edges) — raise maxRounds")
-    (labels, rounds)
   }
 
   /** Unordered (va, vb) near-dup pairs on the bounded slice — reusable
@@ -2841,7 +2846,7 @@ object TextDedup {
     var i = 0
     while (i < bin.length) { h = 31 * h + bin(i); i += 1 }
     val feat = Array.tabulate(4)(k =>
-      math.floor(((h >>> (k * 8)) & 0xFF).toDouble / 255.0 * 10000 + 0.5) / 10000.0)
+      r4(((h >>> (k * 8)) & 0xFF).toDouble / 255.0))
     MMDecoded(id, 64 + ((h >>> 32) & 0x3FF).toInt, 64 + ((h >>> 42) & 0x3FF).toInt,
       if ((h & 1) == 0) "png" else "jpeg", feat(0), feat(1), feat(2), feat(3))
   }

@@ -483,7 +483,7 @@ object TimeSeries {
         var e = Double.NaN
         pts.sortBy(_.bucket.getTime).iterator.map { p =>
           e = if (e.isNaN) p.v else 0.3 * p.v + 0.7 * e
-          (k, p.bucket, math.floor(e * 10000 + 0.5) / 10000.0)
+          (k, p.bucket, r4(e))
         }
       }
       .toDF("user_id", "bucket", "ewma")
@@ -528,7 +528,7 @@ object TimeSeries {
             val lastMs = pts.last.bucket.getTime
             fc.iterator.zipWithIndex.map { case (yh, h) =>
               (k, new java.sql.Timestamp(lastMs + (h + 1) * 3600000L),
-                math.floor(yh * 10000 + 0.5) / 10000.0)
+                r4(yh))
             }
         }
       }

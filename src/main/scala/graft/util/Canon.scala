@@ -46,8 +46,10 @@ object Canon {
     * binary value — they flip the 4th decimal on .xxxx5 boundaries (measured:
     * 168/105k rows on interpolation output). floor(x*1e4 + 0.5)/1e4 is pure
     * IEEE arithmetic, identical on both engines.
+    * The Double form is the JVM code's copy of the same IEEE ops.
     * DuckDB equivalent: floor(x*10000 + 0.5)/10000.0 */
   def r4(c: Column): Column = floor(c * 10000 + 0.5) / 10000.0
+  def r4(x: Double): Double = math.floor(x * 10000 + 0.5) / 10000.0
   def tsMs(c: Column): Column = date_trunc("millisecond", c)
 
   /** Serialize a list-valued result column to a canonical comma-joined

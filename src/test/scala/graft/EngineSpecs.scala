@@ -1484,14 +1484,24 @@ class PagerankArmsSpec extends AnyFunSuite {
   }
 }
 
-/** The graph ids' job budget: with the edge checkpoint, the arm choice and
-  * the collect in one job and the driver-local results in one partition,
-  * a warm build + action of each runs at most this many Spark jobs at
-  * sf0.001 (the first run fills the parquet schema memo). */
+/** The graph ids' job budget: a warm build + action of each runs at most
+  * this many Spark jobs at sf0.001 (the first run fills the parquet schema
+  * memo). PageRank and components hold 4 with the edge checkpoint, the arm
+  * choice and the collect in one job and the driver-local results in one
+  * partition; every other budget is the count its id read when pinned, so a
+  * change to any graph id's checkpoint or job shape shows here. */
 class GraphJobBudgetSpec extends AnyFunSuite {
   import TestSession._
 
-  for ((id, budget) <- Seq("graph_pagerank" -> 4, "graph_connected_components" -> 4))
+  for ((id, budget) <- Seq(
+      "graph_pagerank" -> 4, "graph_connected_components" -> 4,
+      "graph_adamic_adar" -> 4, "graph_assortativity" -> 5,
+      "graph_common_neighbors" -> 5, "graph_cooc_cap_audit" -> 4,
+      "graph_degree_distribution" -> 3, "graph_jaccard_linkpred" -> 5,
+      "graph_kcore" -> 3, "graph_label_propagation" -> 10,
+      "graph_local_clustering" -> 5, "graph_modularity" -> 14,
+      "graph_resource_allocation" -> 4, "graph_shortest_paths" -> 24,
+      "graph_triangle_count" -> 8))
     test(s"$id runs at most $budget Spark jobs") {
       def run(): Unit = SparkEntry.queries(id)(spark, sf)
         .write.format("noop").mode("overwrite").save()
