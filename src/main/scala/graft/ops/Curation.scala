@@ -784,17 +784,10 @@ object Curation {
     * against. Same plan as sim_cosine_topk (broadcast queries, bounded
     * WindowGroupLimit) plus one O(#queries) agg. */
   private val simEvalLabelPrecision: Q = (s, d) => {
-    import org.apache.spark.sql.expressions.Window
+    import TextDedup.{asQueries, bruteForce, cosQ, queryBatch, topkOf}
     val e = tbl(s, d, "embeddings")
-    val q = e.where(col("vec_id") < 10)
-      .select(col("vec_id").as("qid"), col("embedding").as("qe"),
-        col("label").as("qlabel"))
-    val w = Window.partitionBy("qid").orderBy(desc("cos_raw"), asc("vec_id"))
-    e.crossJoin(broadcast(q))
-      .where(col("vec_id") =!= col("qid"))
-      .withColumn("cos_raw", TextDedup.cosineGen(col("embedding"), col("qe")))
-      .withColumn("rank", row_number().over(w))
-      .where(col("rank") <= 5)
+    topkOf(bruteForce(e, asQueries(queryBatch(e), col("label").as("qlabel"))),
+        cosQ, 5)
       .groupBy(col("qid"), col("qlabel"))
       .agg(sum(when(col("label") === col("qlabel"), 1L).otherwise(0L))
         .as("n_match"))
@@ -886,14 +879,8 @@ object Curation {
     * is deterministic at any partitioning; ties break to the lower id. */
   private[graft] def mmrCore(s: SparkSession, corpus: DataFrame,
       queries: DataFrame, poolK: Int, k: Int, lambda: Double): DataFrame = {
-    import org.apache.spark.sql.expressions.Window
-    val q = queries.select(col("vec_id").as("qid"), col("embedding").as("qe"))
-    val w = Window.partitionBy("qid").orderBy(desc("cos_raw"), asc("vec_id"))
-    val pool = corpus.crossJoin(broadcast(q))
-      .where(col("vec_id") =!= col("qid"))
-      .withColumn("cos_raw", TextDedup.cosineGen(col("embedding"), col("qe")))
-      .withColumn("rank", row_number().over(w))
-      .where(col("rank") <= poolK)
+    import TextDedup.{asQueries, bruteForce, cosQ, topkOf}
+    val pool = topkOf(bruteForce(corpus, asQueries(queries)), cosQ, poolK)
     val agg = pool.groupBy(col("qid"), col("qe"))
       .agg(sort_array(collect_list(struct(col("vec_id"), col("embedding"))))
         .as("cands"))
@@ -1220,18 +1207,8 @@ object Curation {
                    + 0.5) / 10000.0 AS boost
           FROM ws, wt ORDER BY source""",
     "sim_eval_label_precision" ->
-      s"""WITH q AS (SELECT vec_id AS qid, embedding AS qe, label AS qlabel
-                     FROM embeddings WHERE vec_id < 10),
-          scored AS (
-            SELECT q.qid, q.qlabel, e.vec_id, e.label,
-                   ${TextDedup.cosineSql("e.embedding", "q.qe")} AS cos_raw
-            FROM embeddings e CROSS JOIN q WHERE e.vec_id <> q.qid),
-          ranked AS (
-            SELECT qid, qlabel, label,
-                   row_number() OVER (PARTITION BY qid
-                                      ORDER BY cos_raw DESC, vec_id ASC)
-                     AS rank
-            FROM scored)
+      s"""${TextDedup.exactTopkSql(", label AS qlabel", ", q.qlabel, e.label",
+            "CROSS JOIN q WHERE e.vec_id <> q.qid")}
           SELECT qid, qlabel,
                  CAST(sum(CASE WHEN label = qlabel THEN 1 ELSE 0 END)
                    AS BIGINT) AS n_match,

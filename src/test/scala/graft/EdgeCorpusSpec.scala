@@ -101,4 +101,59 @@ class EdgeCorpusSpec extends AnyFunSuite {
       .collect().map(_.toString).toSeq
     assert(grown == oneShot)
   }
+
+  /** Write an embeddings-only testdata dir holding the given slice. */
+  private def embeddingsDir(tag: String)(slice: org.apache.spark.sql.DataFrame
+      => org.apache.spark.sql.DataFrame): String = {
+    val dir = s"${System.getProperty("java.io.tmpdir")}/graft_edge_$tag"
+    slice(spark.read.parquet(s"$sf/embeddings.parquet"))
+      .write.mode("overwrite").parquet(s"$dir/embeddings.parquet")
+    dir
+  }
+
+  // every id behind the seeded-Lloyd quantizer, whose K seeds are the K
+  // lowest vec_ids: a corpus with fewer than K vectors must train fewer
+  // lists, not index past the seeds
+  private val ivfTopk = Seq("sim_ivf_ann", "sim_ivf_scaled", "sim_ann_filtered",
+    "sim_ivfpq_ann", "sim_ivfpq_served", "sim_ann_append")
+
+  test("IVF ids and Graft.annIndex on an EMPTY embeddings corpus: no rows") {
+    val d = embeddingsDir("emb_empty")(_.where(lit(false)))
+    for (id <- ivfTopk :+ "embed_kmeans")
+      assert(SparkEntry.queries(id)(spark, d).collect().isEmpty, id)
+    assert(graft.api.Graft.annIndex(
+      spark.read.parquet(s"$d/embeddings.parquet")).isEmpty)
+  }
+
+  test("IVF ids and Graft.annIndex on a 3-vector corpus (fewer vectors " +
+      "than lists): well-formed top-k rows") {
+    val d = embeddingsDir("emb_three")(_.where(col("vec_id") < 3))
+    def checkTopk(id: String, rows: Array[org.apache.spark.sql.Row]): Unit = {
+      val byQ = rows.map(r => (r.getAs[Long]("qid"), r.getAs[Int]("rank"),
+        r.getAs[Long]("vec_id"))).groupBy(_._1)
+      assert(byQ.keySet.subsetOf(Set(0L, 1L, 2L)), id)
+      for ((q, rs) <- byQ) {
+        assert(rs.map(_._2).sorted.toSeq == (1 to rs.length), s"$id ranks of $q")
+        assert(rs.forall(r => r._3 != q && r._3 >= 0L && r._3 < 3L), s"$id ids of $q")
+      }
+    }
+    for (id <- ivfTopk) {
+      val rows = SparkEntry.queries(id)(spark, d).collect()
+      checkTopk(id, rows)
+      // these probe every list a 3-vector corpus trains: each query
+      // ranks both other vectors
+      if (Set("sim_ivf_ann", "sim_ivfpq_ann", "sim_ivfpq_served",
+          "sim_ann_append")(id)) assert(rows.length == 6, id)
+    }
+    val km = SparkEntry.queries("embed_kmeans")(spark, d).collect()
+    assert(km.nonEmpty && km.length <= 3 && km.map(_.getLong(1)).sum == 3L)
+    val audit = SparkEntry.queries("sim_ann_recall_audit")(spark, d).collect()
+    assert(audit.length == 1 && audit(0).getLong(0) == 6L &&
+      audit(0).getLong(1) == 6L)
+    val e = spark.read.parquet(s"$d/embeddings.parquet")
+    val idx = graft.api.Graft.annIndex(e).get
+    val nbrs = idx.topk(e, e).collect()
+    checkTopk("AnnIndex.topk", nbrs)
+    assert(nbrs.length == 6)
+  }
 }

@@ -114,7 +114,11 @@ class PartitionInvarianceSpec extends AnyFunSuite {
     // round 15: SQ8 — scales are exact per-dim maxima (order-free), codes
     // deterministic rounding, scores per-row sequential folds (unlike the
     // IVF/PQ audit, NO float training accumulation exists to exclude)
-    "sim_sq8_ann", "sim_sq8_recall_audit")
+    "sim_sq8_ann", "sim_sq8_recall_audit",
+    // the shared exact top-k (cosine desc, ties to the lower vec_id) over
+    // deterministic candidates: broadcast queries, seeded LSH planes, and
+    // PQ codebooks fit on the driver over a vec_id-sorted sample
+    "sim_cosine_topk", "sim_filtered_topk", "sim_lsh_ann", "sim_pq_ann")
 
   private def runAt(name: String, parts: String): Array[String] = {
     val prev = spark.conf.get("spark.sql.shuffle.partitions")

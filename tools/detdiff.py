@@ -24,7 +24,8 @@ ndiff = 0
 for n in names:
     ra, rb = canon(a, n), canon(b, n)
     if ra is None or rb is None:
-        print(f"MISSING {n}: a={'ok' if ra else 'none'} b={'ok' if rb else 'none'}")
+        print(f"MISSING {n}: a={'none' if ra is None else 'ok'} "
+              f"b={'none' if rb is None else 'ok'}")
         ndiff += 1
     elif ra != rb:
         first = next(i for i, (x, y) in enumerate(zip(ra, rb)) if x != y) \
