@@ -31,8 +31,7 @@ import org.apache.spark.sql.functions._
 object Bpe {
   type Q = (SparkSession, String) => DataFrame
 
-  private val normText = regexp_replace(lower(trim(col("text"))), "\\s+", " ")
-  private val normSql = "regexp_replace(lower(trim(text)), '\\s+', ' ', 'g')"
+  import TextDedup.{normText, normSql, toks}
 
   private val SymL = "\u0002"
   private val SymR = "\u0003"
@@ -106,7 +105,7 @@ object Bpe {
   private val textTokenCountBpe: Q = (s, d) =>
     tbl(s, d, "documents")
       .select(col("doc_id"),
-        size(split(normText, " ")).cast("long").as("n_words"),
+        size(toks(normText)).cast("long").as("n_words"),
         bpeTokens(normText).as("n_bpe"),
         length(normText).cast("long").as("n_norm_chars"))
       .orderBy("doc_id")
@@ -188,7 +187,7 @@ object Bpe {
     import s.implicits._
     val K = mergeCount
     var dict = docs
-      .select(explode(split(normText, " ")).as("w"))
+      .select(explode(toks(normText)).as("w"))
       .where(length(col("w")) > 0)
       .groupBy("w").agg(count(lit(1)).as("wc"))
       .select(split(col("w"), "").as("sym"), col("wc"))

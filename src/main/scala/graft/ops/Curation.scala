@@ -43,11 +43,7 @@ object Curation {
   type Q = (SparkSession, String) => DataFrame
   import TextDedup.{normText, normSql, toks}
 
-  /** 1e6-scaled natural log of a positive value — exact-integer carrier
-    * for log-linear scores (same accepted ln last-ulp risk as
-    * text_unigram_logprob; PLANS.md). */
-  private def li(c: Column): Column =
-    floor(log(c.cast("double")) * 1e6 + 0.5).cast("long")
+  /** The oracle twin of `Canon.ln6`. */
   private def liSql(x: String): String =
     s"CAST(floor(ln(CAST($x AS DOUBLE)) * 1000000 + 0.5) AS BIGINT)"
 
@@ -102,9 +98,8 @@ object Curation {
       .withColumn("avgdl",
         col("n_tokens").cast("double") / col("n_docs").cast("double"))
       .withColumn("idf_s",
-        floor(log((col("n_docs").cast("double") - col("df").cast("double") + lit(0.5))
-            / (col("df").cast("double") + lit(0.5)) + lit(1.0)) * 1e6 + 0.5)
-          .cast("long"))
+        ln6((col("n_docs").cast("double") - col("df").cast("double") + lit(0.5))
+          / (col("df").cast("double") + lit(0.5)) + lit(1.0)))
       .withColumn("frac",
         (col("tf").cast("double") * lit(2.2)) /
           (col("tf").cast("double") + lit(1.2) *
@@ -406,13 +401,13 @@ object Curation {
     val tgt = dtoks.where(col("lang") === targetLang)
       .groupBy(col("b")).agg(count(lit(1)).as("ct"))
     // raw is a superset of every bucket any document populates; a bucket
-    // the target never hits smooths to ct = 0 (add-1 ⇒ li(1) = 0)
+    // the target never hits smooths to ct = 0 (add-1 ⇒ ln6(1) = 0)
     val model = raw.join(tgt, Seq("b"), "left")
-      .withColumn("wt", li(coalesce(col("ct"), lit(0L)) + 1) - li(col("cr") + 1))
+      .withColumn("wt", ln6(coalesce(col("ct"), lit(0L)) + 1) - ln6(col("cr") + 1))
       .select(col("b"), col("wt"))
     val norms = raw.agg(sum(col("cr")).as("nr"))
       .crossJoin(tgt.agg(sum(col("ct")).as("nt")))
-      .select((li(col("nr") + B) - li(col("nt") + B)).as("kadj"))
+      .select((ln6(col("nr") + B) - ln6(col("nt") + B)).as("kadj"))
     per.join(broadcast(model), "b")
       .groupBy(col("doc_id"))
       .agg(sum(col("n_db") * col("wt")).as("wsum"))
@@ -450,8 +445,8 @@ object Curation {
         floor(exp((col("logw_scaled") - col("mx")).cast("double") / 1e6)
           * 1e6 + 0.5).cast("long"))
     w.agg(count(lit(1)).as("n_docs"),
-        sum(col("wi").cast("decimal(38,0)")).as("sw"),
-        sum((col("wi") * col("wi")).cast("decimal(38,0)")).as("sw2"))
+        sum(dec38(col("wi"))).as("sw"),
+        sum(dec38(col("wi") * col("wi"))).as("sw2"))
       .withColumn("ess",
         (col("sw").cast("double") * col("sw").cast("double"))
           / col("sw2").cast("double"))

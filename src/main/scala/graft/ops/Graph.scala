@@ -45,13 +45,6 @@ import org.apache.spark.sql.functions._
   * oracle's simpler id-ordered replay still matches bit-for-bit
   * (GraphSpec also proves degree-order ≡ id-order census directly). */
 object Graph {
-  /** Widen to DECIMAL(38,0) before products whose magnitude scales
-    * superlinearly with graph size (degree-moment and m-squared folds
-    * cross 2^63 on ~1e9-edge graphs under ANSI — see SCALING.md round-10d
-    * overflow audit). Exact 128-bit sums, value-identical where the
-    * BIGINT fold survived. */
-  private def decw(c: Column): Column = c.cast("decimal(38,0)")
-
   type Q = (SparkSession, String) => DataFrame
 
   /** Undirected bipartite business edges, encoded on one BIGINT node axis:
@@ -499,7 +492,7 @@ object Graph {
     * the classic trio next to common-neighbors and resource-allocation:
     * AA(x,y) = Σ_{z ∈ Γ(x)∩Γ(y)} 1/ln(deg z), damping shared hubs
     * LOGARITHMICALLY (between CN's no-damping and RA's 1/deg). The weight
-    * runs as 10^12 div li(deg) where li = floor(ln(deg)·1e6+0.5) — one
+    * runs as 10^12 div ln6(deg), the 1e6-scaled ln (Canon.ln6) — one
     * scaled-ln step then exact integer sums, the text_pmi_bigrams posture
     * (accepted last-ulp risk, PLANS.md). Centers with deg = 1 are filtered
     * BEFORE the wedge join: they cannot center a wedge anyway, and ln(1)=0
@@ -510,8 +503,7 @@ object Graph {
   private[graft] def aaCore(edges: DataFrame): DataFrame = {
     val (e, byC, deg) = lpPrep(edges)
     val wdeg = deg.where(col("deg") >= 2)
-      .withColumn("li",
-        floor(log(col("deg").cast("double")) * 1e6 + 0.5).cast("long"))
+      .withColumn("li", ln6(col("deg")))
       .select(col("n").as("c"), expr("1000000000000 div li").as("w"))
     val pairs = wedges(byC.join(wdeg, "c"))
       .groupBy(col("x"), col("y"))
@@ -692,22 +684,25 @@ object Graph {
     // re-expand per reference, like the sibling lpaCore/kcoreCore guards
     val e = longEdges(edges, "a", "b").localCheckpoint(true)
     val deg = degrees(e)
-    val xy = bothWays(e, "n", "m")
-      .join(deg.select(col("n"), col("deg").as("x")), Seq("n"))
-      .join(deg.select(col("n").as("m"), col("deg").as("y")), Seq("m"))
+    // one (node, deg) frame joined at both ends, so the two identical
+    // build sides share one broadcast exchange
+    val xy = bothWays(e, "n", "m").as("w")
+      .join(deg.as("dx"), col("w.n") === col("dx.n"))
+      .join(deg.as("dy"), col("w.m") === col("dy.n"))
+      .select(col("dx.deg").as("x"), col("dy.deg").as("y"))
     val mom = xy.agg(count(lit(1)).as("m"),
       sum(col("x")).as("sx"), sum(col("y")).as("sy"),
-      sum(decw(col("x")) * col("y")).as("sxy"),
-      sum(decw(col("x")) * col("x")).as("sxx"),
-      sum(decw(col("y")) * col("y")).as("syy"))
+      sum(dec38(col("x")) * col("y")).as("sxy"),
+      sum(dec38(col("x")) * col("x")).as("sxx"),
+      sum(dec38(col("y")) * col("y")).as("syy"))
     val nn = deg.agg(count(lit(1)).as("n_nodes"))
     val ne = e.agg(count(lit(1)).as("n_edges"))
-    val vx = decw(col("m")) * col("sxx") - decw(col("sx")) * col("sx")
-    val vy = decw(col("m")) * col("syy") - decw(col("sy")) * col("sy")
+    val vx = dec38(col("m")) * col("sxx") - dec38(col("sx")) * col("sx")
+    val vy = dec38(col("m")) * col("syy") - dec38(col("sy")) * col("sy")
     mom.crossJoin(broadcast(nn)).crossJoin(broadcast(ne))
       .select(col("n_nodes"), col("n_edges"),
         r4(when(vx > 0 && vy > 0,
-          (decw(col("m")) * col("sxy") - decw(col("sx")) * col("sy"))
+          (dec38(col("m")) * col("sxy") - dec38(col("sx")) * col("sy"))
             .cast("double") /
             sqrt(vx.cast("double") * vy.cast("double"))))
           .as("assortativity"))
@@ -747,15 +742,15 @@ object Graph {
     val s2 = degrees(e).withColumnRenamed("n", "node").join(lab, Seq("node"))
       .groupBy("lbl").agg(sum(col("deg")).as("d_c"))
       .agg(count(lit(1)).as("n_communities"),
-        coalesce(sum(decw(col("d_c")) * col("d_c")),
-          lit(0L).cast("decimal(38,0)")).as("sd2"))
+        coalesce(sum(dec38(col("d_c")) * col("d_c")),
+          dec38(lit(0L))).as("sd2"))
     ein.crossJoin(broadcast(mF)).crossJoin(broadcast(s2))
       .select(col("n_communities"), col("m").as("n_edges"),
         col("intra_edges"),
         r4(when(col("m") > 0,
-          (lit(4L) * decw(col("m")) * col("intra_edges") - col("sd2"))
+          (lit(4L) * dec38(col("m")) * col("intra_edges") - col("sd2"))
             .cast("double") /
-            (lit(4L) * decw(col("m")) * col("m")).cast("double")))
+            (lit(4L) * dec38(col("m")) * col("m")).cast("double")))
           .as("modularity"))
   }
 

@@ -409,29 +409,18 @@ object Lifecycle {
     * DECOMPOSES additively across subgroups, which is why corpus audits
     * report it). T = (Σ x·ln x)/S − ln(S/n), computed with per-row ln as
     * 1e6-scaled integers so the cross-row sum is exact; the two global ln
-    * terms apply once per group. ln rides the accepted last-ulp posture
-    * (PLANS.md, text_entropy precedent). One scan + #sources-ary agg. */
-  private def li6(c: org.apache.spark.sql.Column): org.apache.spark.sql.Column =
-    floor(log(c.cast("double")) * 1e6 + 0.5).cast("long")
-
-  /** Widen to DECIMAL(38,0) before any product whose magnitude scales
-    * superlinearly with corpus size (count² × scaled-ln terms cross 2^63
-    * at only ~5·10⁵ rows — the ANSI-overflow class the ×64 corpus probe
-    * exposed in the rank tests). Exact 128-bit integer arithmetic:
-    * associative and partition-invariant like BIGINT, value-identical at
-    * any scale the old fold survived, ANSI-checked at 10^38. */
-  private def dec(c: org.apache.spark.sql.Column) = c.cast("decimal(38,0)")
-
-  /** Generic core over a (source, x: positive BIGINT mass) frame. */
+    * terms apply once per group (`Canon.ln6`, `Canon.dec38`). One scan +
+    * #sources-ary agg. Generic core over a (source, x: positive BIGINT
+    * mass) frame. */
   private[graft] def theilCore(t: DataFrame): DataFrame =
     t.where(col("x") > 0)
-      .withColumn("xl", dec(col("x")) * li6(col("x")))
+      .withColumn("xl", dec38(col("x")) * ln6(col("x")))
       .groupBy("source")
       .agg(count(lit(1)).as("n"), sum(col("x")).as("sx"),
         sum(col("xl")).as("sxl"))
       .select(col("source"), col("n"), col("sx").as("total_chars"),
         r4(col("sxl").cast("double") / col("sx").cast("double") / 1e6
-          - (li6(col("sx")) - li6(col("n"))).cast("double") / 1e6)
+          - (ln6(col("sx")) - ln6(col("n"))).cast("double") / 1e6)
           .as("theil"))
       .orderBy("source")
 
@@ -471,9 +460,9 @@ object Lifecycle {
     val used = col("nr") > 0 && col("nc") > 0
     c.crossJoin(broadcast(t))
       .select(col("tr"), col("tc"), col("n_dropped"),
-        when(used, (dec(col("nr")) * col("tc") - dec(col("nc")) * col("tr")) *
-          li6((dec(col("nr")) * col("tc")).cast("double") /
-            (dec(col("nc")) * col("tr")).cast("double")))
+        when(used, (dec38(col("nr")) * col("tc") - dec38(col("nc")) * col("tr")) *
+          ln6((dec38(col("nr")) * col("tc")).cast("double") /
+            (dec38(col("nc")) * col("tr")).cast("double")))
           .otherwise(lit(0L)).as("term"),
         when(used, 1L).otherwise(0L).as("u"))
       .groupBy("tr", "tc", "n_dropped")
@@ -482,7 +471,7 @@ object Lifecycle {
         col("n_buckets"), col("n_dropped"),
         when(col("n_buckets") > 0,
           r4(col("s").cast("double") /
-            (dec(col("tr")) * col("tc")).cast("double") / 1e6)).as("psi"))
+            (dec38(col("tr")) * col("tc")).cast("double") / 1e6)).as("psi"))
   }
 
   private val psiDrift: Q = (s, d) =>
@@ -517,7 +506,7 @@ object Lifecycle {
     * (JSD ∈ [0, ln 2]; defined even when a category exists on only one
     * side, exactly where PSI's buckets drop out). JSD = H(m) − (H(p) +
     * H(q))/2 with m the midpoint mix. All three entropies fold as exact
-    * integer sums of count·li6(exact-integer ratio): m's numerator is
+    * integer sums of count·ln6(exact-integer ratio): m's numerator is
     * a·B + b·A over the common denominator 2AB, so no per-row division
     * ever crosses engines. One scan, #langs-ary agg, one-row rollup. */
   private[graft] def jsDivergenceCore(f: DataFrame): DataFrame = {
@@ -529,17 +518,17 @@ object Lifecycle {
     c.crossJoin(broadcast(t))
       .select(col("ta"), col("tb"),
         when(col("a") > 0,
-          dec(col("a")) *
-            li6(col("a").cast("double") / col("ta").cast("double")))
+          dec38(col("a")) *
+            ln6(col("a").cast("double") / col("ta").cast("double")))
           .otherwise(0L).as("sp"),
         when(col("b") > 0,
-          dec(col("b")) *
-            li6(col("b").cast("double") / col("tb").cast("double")))
+          dec38(col("b")) *
+            ln6(col("b").cast("double") / col("tb").cast("double")))
           .otherwise(0L).as("sq"),
-        ((dec(col("a")) * col("tb") + dec(col("b")) * col("ta")) *
-          li6((dec(col("a")) * col("tb") + dec(col("b")) * col("ta"))
+        ((dec38(col("a")) * col("tb") + dec38(col("b")) * col("ta")) *
+          ln6((dec38(col("a")) * col("tb") + dec38(col("b")) * col("ta"))
               .cast("double") /
-            (lit(2L) * dec(col("ta")) * col("tb")).cast("double"))).as("sm"))
+            (lit(2L) * dec38(col("ta")) * col("tb")).cast("double"))).as("sm"))
       .groupBy("ta", "tb")
       .agg(count(lit(1)).as("k"), sum(col("sp")).as("sp"),
         sum(col("sq")).as("sq"), sum(col("sm")).as("sm"))
@@ -547,7 +536,7 @@ object Lifecycle {
         col("k").as("k_categories"),
         r4(
           (-col("sm").cast("double") /
-            (lit(2L) * dec(col("ta")) * col("tb")).cast("double") / 1e6) -
+            (lit(2L) * dec38(col("ta")) * col("tb")).cast("double") / 1e6) -
           ((-col("sp").cast("double") / col("ta").cast("double") / 1e6) +
             (-col("sq").cast("double") / col("tb").cast("double") / 1e6))
             / 2.0).as("jsd"))
@@ -695,7 +684,7 @@ object Lifecycle {
     c.agg(
         sum(col("na")).as("n1"),
         sum(col("nt") - col("na")).as("n2"),
-        sum(dec(col("na")) * (lit(2L) * col("cum") - col("nt") + 1))
+        sum(dec38(col("na")) * (lit(2L) * col("cum") - col("nt") + 1))
           .cast("long").as("r1x2"),
         // tie term in DECIMAL(38,0): t³ overflows BIGINT once a single
         // value ties ≳2^21 rows (a small-domain metric at corpus scale

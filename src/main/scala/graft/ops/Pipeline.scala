@@ -22,8 +22,7 @@ import org.apache.spark.sql.functions._
 object Pipeline {
   type Q = (SparkSession, String) => DataFrame
 
-  private val normText = regexp_replace(lower(trim(col("text"))), "\\s+", " ")
-  private val normSql = "regexp_replace(lower(trim(text)), '\\s+', ' ', 'g')"
+  import TextDedup.{normText, normSql, toks}
 
   /** Deterministic uniform bucket in [0, m) from an integer key. Pure BIGINT
     * arithmetic, overflow-free (product < 1e6 * 2.7e9 < 2^63), identical on
@@ -96,10 +95,7 @@ object Pipeline {
     * total tiebreak. One window over a shuffle keyed by the stratum; at
     * 100 TB this is sample_fixed_k's plan with a weighted key.
     *
-    * Accepted cross-engine risk (ADVICE r6): ln itself is not correctly
-    * rounded in either libm, so floor(ln(x)·1e6 + 0.5) could flip by one
-    * scaled unit if a value ever landed within an ulp of a half-boundary —
-    * same accepted last-ulp posture as text_entropy's log2. The final
+    * The scaled ln is `Canon.ln6` (accepted last-ulp risk). The final
     * li/n_chars double also assumes weights stay ≪ 2^26 (n_chars tops out
     * ~1e4 here) so the quotient is exact enough that ties resolve by the
     * explicit doc_id tiebreak, not rounding.
@@ -117,9 +113,8 @@ object Pipeline {
     // two-phase rank (Canon.chunkedTopK), identical to the single window
     chunkedTopK(
       tbl(s, d, "documents")
-        .withColumn("li", floor(
-          log((hbucket(col("doc_id"), 1000000) + 1L).cast("double") / 1000000.0)
-            * 1e6 + 0.5).cast("long"))
+        .withColumn("li",
+          ln6((hbucket(col("doc_id"), 1000000) + 1L).cast("double") / 1000000.0))
         .withColumn("key",
           col("li").cast("double") / col("n_chars").cast("double")),
       Seq("lang"), Seq(desc("key"), col("doc_id")), col("doc_id"),
@@ -162,7 +157,7 @@ object Pipeline {
     // per-language ceiling at scale
     chunkedCumSum(
       tbl(s, d, "documents")
-        .withColumn("tok", size(split(normText, " ")).cast("long")),
+        .withColumn("tok", size(toks(normText)).cast("long")),
       Seq("lang"), "doc_id", "tok", "cum")
       .withColumn("pack_id", floor((col("cum") - col("tok")) / 512.0).cast("long"))
       .groupBy(col("lang"), col("pack_id"))
@@ -193,7 +188,7 @@ object Pipeline {
     *    alongside so the trade is visible, not hidden. */
   private val packSequencesBfd: Q = (s, d) => {
     val toked = tbl(s, d, "documents")
-      .withColumn("tok", size(split(normText, " ")).cast("long"))
+      .withColumn("tok", size(toks(normText)).cast("long"))
       .select(col("lang"), col("doc_id"), col("tok"))
     val contigPacks = chunkedCumSum(toked,
         Seq("lang"), "doc_id", "tok", "cum")
@@ -236,7 +231,7 @@ object Pipeline {
     * codegen — no UDF, no shuffle; output cardinality ≈ n_tokens/stride. */
   private val chunkDocuments: Q = (s, d) =>
     tbl(s, d, "documents")
-      .withColumn("tk", split(normText, " "))
+      .withColumn("tk", toks(normText))
       .withColumn("start",
         explode(sequence(lit(1), size(col("tk")), lit(40))))
       .select(col("doc_id"), col("start").cast("long").as("start"),
@@ -371,7 +366,7 @@ object Pipeline {
     * is realized by per-stage partitioned writes, never a corpus sort. */
   private val pipelineCurriculum: Q = (s, d) => {
     val t = tbl(s, d, "documents")
-      .select(col("doc_id"), col("n_chars"), split(normText, " ").as("tk"))
+      .select(col("doc_id"), col("n_chars"), toks(normText).as("tk"))
       .select(col("doc_id"), col("n_chars"),
         size(col("tk")).cast("long").as("nt"),
         size(array_distinct(col("tk"))).cast("long").as("nd"))
@@ -452,7 +447,7 @@ object Pipeline {
   /** Per-document rule audit. A document with null text has no words to
     * audit and gets no row — the oracle's `unnest` drops it the same way. */
   private[graft] def gopherRulesCore(docs: DataFrame): DataFrame =
-    docs.select(col("doc_id"), split(normText, " ").as("tk"))
+    docs.select(col("doc_id"), toks(normText).as("tk"))
       .where(col("tk").isNotNull)
       .select(col("doc_id"), gopherMeasures(col("tk")).as("gm"))
       .select(col("doc_id"),
@@ -477,24 +472,11 @@ object Pipeline {
     * cascade runs before any neural scorer (too-low surprisal = boilerplate
     * of only corpus-common tokens; too-high = gibberish/OCR noise — the
     * CCNet/Gopher perplexity-band idea with the engine's own unigram LM).
-    * Reuses text_unigram_logprob's exact-integer surprisal: each ln(N/c)
-    * rides as a 1e6-scaled BIGINT, and the band check cross-multiplies
-    * (`si >= 3_395_000 * n_tokens`) so the verdict never touches a float.
-    * Shape at 100 TB: per-doc term counts equi-join the global term table
-    * on the token key; corpus total N broadcasts as one row. */
-  private[graft] def perplexityGateCore(docs: DataFrame): DataFrame = {
-    val tok = docs
-      .select(col("doc_id"), explode(split(normText, " ")).as("t"))
-    val dc = tok.groupBy(col("doc_id"), col("t")).agg(count(lit(1)).as("dc"))
-    val cnt = tok.groupBy(col("t")).agg(count(lit(1)).as("c"))
-    val tot = cnt.agg(sum(col("c")).as("nn"))
-    dc.join(cnt, "t")
-      .crossJoin(broadcast(tot))
-      .withColumn("li", floor(
-        log(col("nn").cast("double") / col("c").cast("double")) * 1e6 + 0.5)
-        .cast("long"))
-      .groupBy(col("doc_id"))
-      .agg(sum(col("dc")).as("n_tokens"), sum(col("dc") * col("li")).as("si"))
+    * Reads the exact-integer surprisal of [[TextDedup.unigramSurprisal]]
+    * (text_unigram_logprob's plan), and the band check cross-multiplies
+    * (`si >= 3_395_000 * n_tokens`) so the verdict never touches a float. */
+  private[graft] def perplexityGateCore(docs: DataFrame): DataFrame =
+    TextDedup.unigramSurprisal(docs)
       .select(col("doc_id"), col("n_tokens"),
         r4(col("si").cast("double") / col("n_tokens").cast("double") / 1e6)
           .as("mean_surprisal"),
@@ -502,7 +484,6 @@ object Pipeline {
         (col("si") <= lit(3410000L) * col("n_tokens")).as("r_not_gibberish"))
       .withColumn("keep", col("r_not_boilerplate") && col("r_not_gibberish"))
       .orderBy("doc_id")
-  }
   private val pipelinePerplexityGate: Q = (s, d) =>
     perplexityGateCore(tbl(s, d, "documents"))
 
@@ -514,23 +495,11 @@ object Pipeline {
     * division of exact ints, identical on both engines; doc_id tiebreak),
     * so ntile edges cannot drift. Output is the bounded per-(lang, bucket)
     * accounting: doc/token counts and the surprisal band edges.
-    * Scale shape: the per-doc surprisal frame is the perplexity gate's own
-    * two-pass agg; the tercile window shuffles once on the language key;
-    * the final agg is O(#langs·3). */
+    * Scale shape: the per-doc surprisal frame is
+    * [[TextDedup.unigramSurprisal]] carrying lang; the tercile window
+    * shuffles once on the language key; the final agg is O(#langs·3). */
   private[graft] def ccnetBucketCore(docs: DataFrame): DataFrame = {
-    val tok = docs
-      .select(col("doc_id"), col("lang"), explode(split(normText, " ")).as("t"))
-    val dc = tok.groupBy(col("doc_id"), col("lang"), col("t"))
-      .agg(count(lit(1)).as("dc"))
-    val cnt = tok.groupBy(col("t")).agg(count(lit(1)).as("c"))
-    val tot = cnt.agg(sum(col("c")).as("nn"))
-    val per = dc.join(cnt, "t")
-      .crossJoin(broadcast(tot))
-      .withColumn("li", floor(
-        log(col("nn").cast("double") / col("c").cast("double")) * 1e6 + 0.5)
-        .cast("long"))
-      .groupBy(col("doc_id"), col("lang"))
-      .agg(sum(col("dc")).as("n_tokens"), sum(col("dc") * col("li")).as("si"))
+    val per = TextDedup.unigramSurprisal(docs, "lang")
       .withColumn("ms", col("si").cast("double") / col("n_tokens"))
     // ntile(3) without the one-task-per-language window
     // (Canon.chunkedNtile: distributed rank + SQL-standard ntile
@@ -631,7 +600,7 @@ object Pipeline {
            ${97 * c}) % 1001) - 500))""")
   private val pipelineDomainClassifier: Q = (s, d) => {
     val scored = tbl(s, d, "documents")
-      .select(col("doc_id"), split(normText, " ").as("tk"))
+      .select(col("doc_id"), toks(normText).as("tk"))
       .select(col("doc_id") +:
         classifierClasses.indices.map(c => classScore(c).as(s"s$c")): _*)
     val best = greatest(classifierClasses.indices.map(c => col(s"s$c")): _*)
@@ -665,7 +634,7 @@ object Pipeline {
     // one-task-per-language ceiling
     chunkedCumSumBy(
       docs.select(col("lang"), col("doc_id"), col("n_chars"),
-        size(split(normText, " ")).cast("long").as("tok")),
+        size(toks(normText)).cast("long").as("tok")),
       Seq("lang"), floor(-col("n_chars").cast("double") / 64).cast("long"),
       Seq(desc("n_chars"), asc("doc_id")), "tok", "cum_tok")
       .where(col("cum_tok") <= budget)
@@ -741,7 +710,7 @@ object Pipeline {
   private def buildReleaseFlagManifest(s: SparkSession, d: String): DataFrame = {
     val docs = tbl(s, d, "documents")
       .select(col("doc_id"), col("lang"), col("source"), col("text"),
-        split(normText, " ").as("tk"))
+        toks(normText).as("tk"))
       .withColumn("tok", size(col("tk")).cast("long"))
     // k1 — gopher rule cascade (stage 1), folded into the document
     // projection row-locally (r18: no explode subtree, no doc_id join —
@@ -793,7 +762,7 @@ object Pipeline {
     val cont = surv.join(f2.where(col("k2")).select("doc_id"), "doc_id")
       .where(col("doc_id") >= 5)
       .select(col("doc_id"),
-        explode(array_distinct(split(normText, " "))).as("t"))
+        explode(array_distinct(toks(normText))).as("t"))
       .join(broadcast(btok), "t")
       .groupBy(col("doc_id"), col("bench_id")).agg(count(lit(1)).as("ns"))
       .join(broadcast(bsz), "bench_id")
@@ -886,7 +855,7 @@ object Pipeline {
   private def releaseBenchSets(docs: DataFrame): DataFrame =
     docs.where(col("doc_id") < 5)
       .select(col("doc_id").as("bench_id"),
-        array_distinct(split(normText, " ")).as("bst"))
+        array_distinct(toks(normText)).as("bst"))
 
   /** Per-doc INTRINSIC release verdicts over any (doc_id, lang, source,
     * text) slice — the columns of the persisted release manifest: g (gopher
@@ -912,7 +881,7 @@ object Pipeline {
     // cannot matter) makes it evaluate once: bootstrap 30.6→18.0 s at
     // 64×, neutral at 1×, persisted manifests identical.
     val d0 = docsIn.select(col("doc_id"), col("lang"), col("source"),
-        split(normText, " ").as("tk"))
+        toks(normText).as("tk"))
       .withColumn("tok", size(col("tk")).cast("long"))
     val tg = when(size(col("tk")) >= 3, expr(
       "transform(sequence(0, size(tk)-3), i -> concat_ws(' ', tk[i], tk[i+1], tk[i+2]))"))

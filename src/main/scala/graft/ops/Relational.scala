@@ -14,14 +14,6 @@ import org.apache.spark.sql.types._
   * ANSI-SQL oracle in [[oracle]] with identical column names.
   */
 object Relational {
-  /** Widen to DECIMAL(38,0) before products whose magnitude scales
-    * superlinearly with corpus size (count-product x scaled-ln / squared-
-    * cents folds cross 2^63 between ~5e5 and ~1e7 rows under ANSI — the
-    * overflow class the x64 corpus probe exposed). Exact 128-bit sums:
-    * associative, partition-invariant, value-identical where the BIGINT
-    * fold survived, ANSI-checked at 10^38. */
-  private def decw(c: Column): Column = c.cast("decimal(38,0)")
-
   type Q = (SparkSession, String) => DataFrame
 
   private val ioTmp = "/tmp/graft_io"
@@ -438,11 +430,11 @@ object Relational {
     val a = ev.agg(
       sum(when(col("arm"), 1L).otherwise(0L)).as("n1"),
       sum(when(col("arm"), col("c")).otherwise(0L)).as("s1"),
-      sum(when(col("arm"), decw(col("c")) * col("c")).otherwise(0L))
+      sum(when(col("arm"), dec38(col("c")) * col("c")).otherwise(0L))
         .as("q1"),
       sum(when(!col("arm"), 1L).otherwise(0L)).as("n2"),
       sum(when(!col("arm"), col("c")).otherwise(0L)).as("s2"),
-      sum(when(!col("arm"), decw(col("c")) * col("c")).otherwise(0L))
+      sum(when(!col("arm"), dec38(col("c")) * col("c")).otherwise(0L))
         .as("q2"))
     val m1 = col("s1").cast("double") / col("n1")
     val m2 = col("s2").cast("double") / col("n2")
@@ -546,11 +538,11 @@ object Relational {
         coalesce(col("o"), lit(0L)).as("o"))
     cells
       .select(col("lang"), col("source"), col("n"),
-        ((decw(col("n")) * col("o") - decw(col("rt")) * col("ct"))
+        ((dec38(col("n")) * col("o") - dec38(col("rt")) * col("ct"))
             .cast("double") *
-          (decw(col("n")) * col("o") - decw(col("rt")) * col("ct"))
+          (dec38(col("n")) * col("o") - dec38(col("rt")) * col("ct"))
             .cast("double") /
-          (decw(col("n")) * col("rt") * col("ct")).cast("double") * 1e6)
+          (dec38(col("n")) * col("rt") * col("ct")).cast("double") * 1e6)
           .as("term"))
       .agg(max(col("n")).as("n_docs"),
         ((countDistinct(col("lang")) - 1) *
@@ -588,16 +580,16 @@ object Relational {
       .groupBy(col("source"))
       .agg(count(lit(1)).as("n_docs"),
         sum(col("n_chars")).as("total_chars"),
-        (lit(2L) * sum(decw(col("i")) * col("n_chars"))).as("a2"))
+        (lit(2L) * sum(dec38(col("i")) * col("n_chars"))).as("a2"))
       .select(col("source"), col("n_docs"), col("total_chars"),
-        (col("a2") - decw(col("n_docs") + 1) * col("total_chars"))
+        (col("a2") - dec38(col("n_docs") + 1) * col("total_chars"))
           .as("gini_num"))
       .select(col("source"), col("n_docs"), col("total_chars"),
         expr("""(1000000 * gini_num)
               div (CAST(n_docs AS DECIMAL(38,0)) * total_chars)""")
           .cast("long").as("gini_scaled"),
         r4(col("gini_num").cast("double") /
-          (decw(col("n_docs")) * col("total_chars")).cast("double"))
+          (dec38(col("n_docs")) * col("total_chars")).cast("double"))
           .as("gini"))
       .orderBy("source")
   }
@@ -629,18 +621,15 @@ object Relational {
     val n = obs.agg(sum(col("o")).as("n"))
     val cells = obs.join(rt, Seq("lang")).join(ct, Seq("source"))
       .crossJoin(broadcast(n))
+    // the marginals fold against the shared total n: entropyFold would
+    // total each marginal itself, two more broadcasts (14 → 18 jobs)
     def ent(marg: DataFrame, cnt: String): DataFrame =
-      marg.crossJoin(broadcast(n))
-        .select((decw(col(cnt)) * floor(
-          log(col("n").cast("double") / col(cnt).cast("double")) * 1e6 + 0.5)
-          .cast("long")).as("t"))
-        .agg(sum(col("t")).as(s"h_$cnt"))
+      marg.crossJoin(broadcast(n)).select(col(cnt).as("c"), col("n"))
+        .agg(entropySi).select(col("si").as(s"h_$cnt"))
     val mi = cells
-      .select(col("n"), (decw(col("o")) * floor(
-        log((decw(col("n")) * col("o")).cast("double") /
-          (decw(col("rt")) * col("ct")).cast("double")) * 1e6 + 0.5)
-        .cast("long"))
-        .as("t"))
+      .select(col("n"), (dec38(col("o")) * ln6(
+        (dec38(col("n")) * col("o")).cast("double") /
+          (dec38(col("rt")) * col("ct")).cast("double"))).as("t"))
       .agg(max(col("n")).as("n_docs"), sum(col("t")).as("si"))
     mi.crossJoin(broadcast(ent(rt, "rt"))).crossJoin(broadcast(ent(ct, "ct")))
       .select(col("n_docs"),
@@ -682,23 +671,43 @@ object Relational {
       label: String): DataFrame =
     entropyFromCounts(vals.groupBy(col("v")).agg(count(lit(1)).as("c")),
       label)
-  /** Entropy/evenness over a pre-counted (v, c) marginal frame. */
-  private[graft] def entropyFromCounts(cnt: DataFrame,
-      label: String): DataFrame = {
-    val tot = cnt.agg(sum(col("c")).as("n"), count(lit(1)).as("k"))
-    cnt.crossJoin(broadcast(tot))
-      .withColumn("li", floor(
-        log(col("n").cast("double") / col("c").cast("double")) * 1e6 + 0.5)
-        .cast("long"))
-      .agg(max(col("n")).as("n_docs"), max(col("k")).as("k"),
-        sum(decw(col("c")) * col("li")).as("si"))
-      .select(lit(label).as("axis"), col("n_docs"), col("k"),
-        r4(col("si").cast("double") / col("n_docs").cast("double") / 1e6)
-          .as("entropy"),
-        when(col("k") > 1,
-          r4(col("si").cast("double") / col("n_docs").cast("double") /
-            floor(log(col("k").cast("double")) * 1e6 + 0.5))).as("evenness"))
+  private def entropyFromCounts(cnt: DataFrame, label: String): DataFrame =
+    entropyFold(cnt).select(lit(label).as("axis"), col("n").as("n_docs"),
+      col("k"), col("entropy"), col("evenness"))
+
+  /** The one Shannon entropy fold over a pre-counted (keys…, c) frame, one
+    * distribution per key group (a single one when no key is given): the
+    * group total n = Σc and value count k join back on the keys (a one-row
+    * broadcast cross join without keys), the group folds to
+    * [[entropySi]], then [[entropyEmit]]. Returns (keys…, n, k, si,
+    * entropy, evenness). */
+  private[graft] def entropyFold(cnt: DataFrame, keys: String*): DataFrame = {
+    val by = keys.map(col)
+    val tot = cnt.groupBy(by: _*)
+      .agg(sum(col("c")).as("n"), count(lit(1)).as("k"))
+    entropyEmit(
+      (if (keys.isEmpty) cnt.crossJoin(broadcast(tot)) else cnt.join(tot, keys))
+        .groupBy(by: _*)
+        .agg(max(col("n")).as("n"), max(col("k")).as("k"), entropySi))
   }
+
+  /** si = Σ c·ln6(n/c) over (c, n) rows, n the group total: the entropy's
+    * exact 1e6-scaled numerator, summed as DECIMAL(38,0) so it is
+    * partition-order-free and cannot overflow. */
+  private[graft] def entropySi: Column =
+    sum(dec38(col("c")) * ln6(col("n") / col("c"))).as("si")
+
+  /** Entropy and Pielou evenness of a folded (n, k, si) frame:
+    * entropy = si/n/1e6 and evenness = H/ln k, each two divisions in the
+    * same IEEE operand order as the oracle, then r4. k = 1 emits NULL
+    * evenness (ln 1 = 0). */
+  private[graft] def entropyEmit(folded: DataFrame): DataFrame =
+    folded
+      .withColumn("entropy",
+        r4(col("si").cast("double") / col("n").cast("double") / 1e6))
+      .withColumn("evenness", when(col("k") > 1,
+        r4(col("si").cast("double") / col("n").cast("double") /
+          ln6(col("k")))))
 
   /** Pairwise Pearson correlation matrix over the four lineitem measures in
     * ONE aggregate pass — the feature-screening readout (agg_stats does one
@@ -716,10 +725,9 @@ object Relational {
       .select(ms.map { case (n, c) => cents(c).as(n) }: _*)
     val pairs = for { i <- ms.indices; j <- i until ms.length }
       yield (ms(i)._1, ms(j)._1)
-    def dec(c: Column) = c.cast("decimal(38,0)")
     val a = cented.agg(count(lit(1)).as("n"),
-      ms.map { case (n, _) => sum(dec(col(n))).as(s"s_$n") } ++
-        pairs.map { case (x, y) => sum(dec(col(x) * col(y))).as(s"q_${x}_$y") }: _*)
+      ms.map { case (n, _) => sum(dec38(col(n))).as(s"s_$n") } ++
+        pairs.map { case (x, y) => sum(dec38(col(x) * col(y))).as(s"q_${x}_$y") }: _*)
     def dbl(c: Column) = c.cast("double")
     // Zero-variance guard (ADVICE r6): a constant measure makes
     // n·qxx − sx² = 0 and corr 0/0 → NaN silently on both engines; nullif

@@ -394,22 +394,9 @@ object Streaming {
         .agg(count(lit(1)).as("c")),
       "complete")
       .select(col("window.start").as("w_start"), col("c"))
-    val tot = sink.groupBy(col("w_start"))
-      .agg(sum(col("c")).as("n"), count(lit(1)).as("k"))
-    sink.join(tot, "w_start")
-      .withColumn("li", floor(
-        log(col("n").cast("double") / col("c").cast("double")) * 1e6 + 0.5)
-        .cast("long"))
-      .groupBy(col("w_start"))
-      .agg(max(col("n")).as("n_events"), max(col("k")).as("k_types"),
-        sum(col("c") * col("li")).as("si"))
-      .select(col("w_start"), col("n_events"), col("k_types"),
-        r4(col("si").cast("double") / col("n_events").cast("double") / 1e6)
-          .as("entropy"),
-        when(col("k_types") > 1,
-          r4(col("si").cast("double") / col("n_events").cast("double") /
-            floor(log(col("k_types").cast("double")) * 1e6 + 0.5)))
-          .as("evenness"))
+    Relational.entropyFold(sink, "w_start")
+      .select(col("w_start"), col("n").as("n_events"), col("k").as("k_types"),
+        col("entropy"), col("evenness"))
       .orderBy("w_start")
   }
 

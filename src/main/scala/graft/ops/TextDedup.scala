@@ -1915,7 +1915,7 @@ object TextDedup {
     * re-ranked exactly. Self-verified (overlap with exact top-5). */
   private val simMllibLsh: Q = (s, d) => {
     import org.apache.spark.ml.feature.BucketedRandomProjectionLSH
-    import org.apache.spark.ml.linalg.Vectors
+    import org.apache.spark.ml.linalg.{Vector, Vectors}
     // L2-normalize the feature vectors: the Euclidean-LSH candidate radius
     // maps to a cosine bound (dist² = 2(1−cos)) ONLY on the unit sphere —
     // unnormalized inputs would silently change what dist ≤ 1.5 means.
@@ -1927,7 +1927,12 @@ object TextDedup {
     val lsh = new BucketedRandomProjectionLSH()
       .setBucketLength(1.0).setNumHashTables(4).setSeed(42)
       .setInputCol("features").setOutputCol("hashes")
-    val model = lsh.fit(e)
+    // fit reads one row only, to size its seeded planes: read it here and
+    // fit on that local row, so an empty corpus (width-1 planes, never
+    // applied) returns no rows instead of throwing `head of empty array`
+    val probe = e.select(col("features")).head(1).map(_.getAs[Vector](0))
+      .headOption.getOrElse(Vectors.dense(0.0))
+    val model = lsh.fit(s.createDataFrame(Seq(Tuple1(probe))).toDF("features"))
     val joined = model
       .approxSimilarityJoin(asQueries(queryBatch(e), col("features")), e, 1.5, "dist")
       .select(col("datasetA.qid").as("qid"), col("datasetA.qe").as("qe"),
@@ -2234,8 +2239,8 @@ object TextDedup {
       .orderBy(desc("f"), asc("tok")).limit(100)
     val w = Window.orderBy(desc("f"), asc("tok"))
     val sc = freq.withColumn("rank", row_number().over(w))
-      .withColumn("x", floor(log(col("rank").cast("double")) * 1000000 + 0.5).cast("long"))
-      .withColumn("y", floor(log(col("f").cast("double")) * 1000000 + 0.5).cast("long"))
+      .withColumn("x", ln6(col("rank")))
+      .withColumn("y", ln6(col("f")))
     sc.agg(count(lit(1)).as("n"), sum(col("x")).as("sx"), sum(col("y")).as("sy"),
         sum(col("x") * col("y")).as("sxy"), sum(col("x") * col("x")).as("sxx"))
       .select(col("n"),
@@ -2606,55 +2611,59 @@ object TextDedup {
   /** Per-document unigram entropy — the information-diversity filter signal
     * (low-entropy documents are repetitive junk; complements
     * text_repetition_score's surface-form check). entropy = (1/n)·Σ c·ln(n/c)
-    * over token counts; each ln rides as a 1e6-scaled INTEGER
-    * (floor(ln·1e6+0.5), the text_zipf_fit trick) so the per-doc sum is
-    * exact and partition-order-independent, with one division at the end. */
-  private val textEntropy: Q = (s, d) => {
-    val w = org.apache.spark.sql.expressions.Window.partitionBy("doc_id")
-    tbl(s, d, "documents")
-      .select(col("doc_id"), explode(toks(normText)).as("t"))
-      .groupBy(col("doc_id"), col("t"))
-      .agg(count(lit(1)).as("c"))
-      .withColumn("n", sum(col("c")).over(w))
-      .withColumn("li", floor(
-        log(col("n").cast("double") / col("c").cast("double")) * 1e6 + 0.5)
-        .cast("long"))
-      .groupBy(col("doc_id"))
-      .agg(max(col("n")).as("n"), count(lit(1)).as("n_unique"),
-        sum(col("c") * col("li")).as("si"))
-      .select(col("doc_id"), col("n"), col("n_unique"),
-        r4(col("si").cast("double") / col("n").cast("double") / 1e6).as("entropy"))
+    * over token counts, the agg_entropy_balance arithmetic
+    * (`Relational.entropySi` / `entropyEmit`): an exact per-doc sum of
+    * 1e6-scaled ln terms and one division at the end. */
+  private val textEntropy: Q = (s, d) =>
+    // the per-doc total rides a window, not entropyFold's join-back: the
+    // join costs one more shuffle of the (doc, token) counts (paired runs
+    // at sf0.1 measured it slower)
+    Relational.entropyEmit(
+      tbl(s, d, "documents")
+        .select(col("doc_id"), explode(toks(normText)).as("t"))
+        .groupBy(col("doc_id"), col("t"))
+        .agg(count(lit(1)).as("c"))
+        .withColumn("n", sum(col("c")).over(Window.partitionBy("doc_id")))
+        .groupBy(col("doc_id"))
+        .agg(max(col("n")).as("n"), count(lit(1)).as("k"),
+          Relational.entropySi))
+      .select(col("doc_id"), col("n"), col("k").as("n_unique"), col("entropy"))
       .orderBy("doc_id")
+
+  /** The one unigram-surprisal plan: (doc_id, keys…, n_tokens, si) with
+    * si = Σ dc·ln6(N/c) over each document's token counts dc, c the
+    * corpus count of the token and N the corpus token total — the
+    * document's total surprisal under the corpus unigram LM as an exact
+    * 1e6-scaled BIGINT, so the per-doc sum is partition-order-free and
+    * every consumer divides (or cross-multiplies) once. `keys` are
+    * per-document columns carried through (e.g. lang). Shape at 100 TB:
+    * per-doc term counts (partial+final agg) equi-join the global
+    * term-count table on the token — both sides shuffle once on the term
+    * key, never on raw occurrences; N rides as a broadcast 1-row frame. */
+  private[graft] def unigramSurprisal(docs: DataFrame, keys: String*): DataFrame = {
+    val by = col("doc_id") +: keys.map(col)
+    val tok = docs.select(by :+ explode(toks(normText)).as("t"): _*)
+    val dc = tok.groupBy(by :+ col("t"): _*).agg(count(lit(1)).as("dc"))
+    val cnt = tok.groupBy(col("t")).agg(count(lit(1)).as("c"))
+    val tot = cnt.agg(sum(col("c")).as("nn"))
+    dc.join(cnt, "t")
+      .crossJoin(broadcast(tot))
+      .groupBy(by: _*)
+      .agg(sum(col("dc")).as("n_tokens"),
+        sum(col("dc") * ln6(col("nn") / col("c"))).as("si"))
   }
 
   /** Per-document mean token surprisal under the corpus unigram LM — the
     * cheapest perplexity proxy a quality-filter cascade runs before any
     * neural scorer (docs dominated by corpus-rare tokens score high =
-    * gibberish or OCR noise; docs of only stop-words score low = boilerplate).
-    * Shape at 100 TB: per-doc term counts (partial+final agg) equi-join the
-    * global term-count table on the token — both sides shuffle once on the
-    * term key, never on raw occurrences; the corpus total N rides as a
-    * broadcast 1-row frame. Each ln(N/c) is a 1e6-scaled INTEGER (the
-    * text_entropy trick) so the per-doc weighted sum is exact and
-    * partition-order-independent, with one division at the end. */
-  private val textUnigramLogprob: Q = (s, d) => {
-    val tok = tbl(s, d, "documents")
-      .select(col("doc_id"), explode(toks(normText)).as("t"))
-    val dc = tok.groupBy(col("doc_id"), col("t")).agg(count(lit(1)).as("dc"))
-    val cnt = tok.groupBy(col("t")).agg(count(lit(1)).as("c"))
-    val tot = cnt.agg(sum(col("c")).as("nn"))
-    dc.join(cnt, "t")
-      .crossJoin(broadcast(tot))
-      .withColumn("li", floor(
-        log(col("nn").cast("double") / col("c").cast("double")) * 1e6 + 0.5)
-        .cast("long"))
-      .groupBy(col("doc_id"))
-      .agg(sum(col("dc")).as("n_tokens"), sum(col("dc") * col("li")).as("si"))
+    * gibberish or OCR noise; docs of only stop-words score low =
+    * boilerplate): [[unigramSurprisal]] divided once. */
+  private val textUnigramLogprob: Q = (s, d) =>
+    unigramSurprisal(tbl(s, d, "documents"))
       .select(col("doc_id"), col("n_tokens"),
         r4(col("si").cast("double") / col("n_tokens").cast("double") / 1e6)
           .as("mean_surprisal"))
       .orderBy("doc_id")
-  }
 
   /** Collocation extraction: top-15 bigrams by pointwise mutual information,
     * PMI = ln(p(xy) / (p(x)·p(y))) — the phrase-mining pass that feeds
@@ -2672,10 +2681,6 @@ object TextDedup {
       .groupBy(col("ngram")).agg(count(lit(1)).as("cb"))
     val nu = uni.agg(sum(col("c")).as("nu"))
     val nb = bi.agg(sum(col("cb")).as("nb"))
-    // ln is not correctly rounded in either libm — a value within an ulp of
-    // a half-boundary could flip the scaled integer by 1 (ADVICE r6;
-    // accepted last-ulp risk, same posture as text_entropy — see PLANS.md)
-    def li(c: Column) = floor(log(c.cast("double")) * 1e6 + 0.5).cast("long")
     bi.where(col("cb") >= 5)
       .withColumn("t1", split(col("ngram"), " ").getItem(0))
       .withColumn("t2", split(col("ngram"), " ").getItem(1))
@@ -2683,8 +2688,8 @@ object TextDedup {
       .join(uni.select(col("t").as("t2"), col("c").as("c2")), "t2")
       .crossJoin(broadcast(nu)).crossJoin(broadcast(nb))
       .withColumn("lv",
-        li(col("cb")) - li(col("nb")) - li(col("c1")) - li(col("c2")) +
-          lit(2L) * li(col("nu")))
+        ln6(col("cb")) - ln6(col("nb")) - ln6(col("c1")) - ln6(col("c2")) +
+          lit(2L) * ln6(col("nu")))
       .orderBy(desc("lv"), asc("ngram")).limit(15)
       .select(col("ngram"), col("cb").as("n_pair"),
         r4(col("lv").cast("double") / 1e6).as("pmi"))

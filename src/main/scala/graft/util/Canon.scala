@@ -50,6 +50,23 @@ object Canon {
     * DuckDB equivalent: floor(x*10000 + 0.5)/10000.0 */
   def r4(c: Column): Column = floor(c * 10000 + 0.5) / 10000.0
   def r4(x: Double): Double = math.floor(x * 10000 + 0.5) / 10000.0
+
+  /** 1e6-scaled natural log of a positive value as a BIGINT — the one
+    * exact-integer carrier of every log-linear statistic (entropy, MI,
+    * surprisal, PMI, Theil, PSI, BM25 idf, Adamic–Adar), so their sums are
+    * exact and partition-order-free. ln is not correctly rounded in either
+    * libm: a value within an ulp of a half-boundary could flip the scaled
+    * integer by one (accepted last-ulp risk, PLANS.md).
+    * DuckDB equivalent: `CAST(floor(ln(CAST(x AS DOUBLE))*1000000 + 0.5) AS BIGINT)` */
+  def ln6(c: Column): Column = floor(log(c.cast("double")) * 1e6 + 0.5).cast("long")
+
+  /** Widen to DECIMAL(38,0) before a product or sum whose magnitude scales
+    * superlinearly with input size (count × scaled-ln terms, degree and
+    * m² moments, squared weights cross 2^63 long before the data does).
+    * Exact 128-bit integer arithmetic: associative and partition-invariant
+    * like BIGINT, value-identical wherever the BIGINT fold survived.
+    * DuckDB equivalent: its `sum(BIGINT)` is already HUGEINT. */
+  def dec38(c: Column): Column = c.cast("decimal(38,0)")
   def tsMs(c: Column): Column = date_trunc("millisecond", c)
 
   /** Serialize a list-valued result column to a canonical comma-joined

@@ -2,10 +2,12 @@ package graft
 
 import org.scalacheck.{Gen, Prop, Properties}
 
-/** Randomized semantics checks for the round-9 drift/vote cores — the
-  * fixture recomputes in LifecycleSpec pin one dataset; these sweep random
-  * shapes (one-sided buckets, absent categories, tie votes) against
-  * independent plain-Scala recomputation of the SAME published formulas.
+/** Randomized semantics checks for the round-9 drift/vote cores and the
+  * exact-information folds (entropy, unigram surprisal) — the fixture
+  * recomputes in LifecycleSpec pin one dataset; these sweep random shapes
+  * (one-sided buckets, absent categories, tie votes, single-value groups,
+  * one-token docs) against independent plain-Scala recomputation of the
+  * SAME published formulas.
   */
 object DriftProps extends Properties("drift") {
 
@@ -71,6 +73,61 @@ object DriftProps extends Properties("drift") {
       got.getLong(0) == ta && got.getLong(1) == tb &&
         got.getDouble(3) == want &&
         want >= -1e-4 && want <= math.log(2.0) + 1e-4
+    }
+
+  // (key 0..3, count) rows, one per distinct value: single-value groups
+  // (evenness NULL) occur regularly
+  private val countsGen: Gen[List[(Long, Long)]] =
+    Gen.nonEmptyListOf(Gen.zip(Gen.choose(0L, 3L), Gen.choose(1L, 40L)))
+
+  property("entropyFold ≡ plain-Scala recompute, keyed and unkeyed") =
+    Prop.forAll(countsGen) { rows =>
+      val spark = TestSession.spark
+      import spark.implicits._
+      // (n, k, si, entropy, evenness) of one count distribution
+      def want(cs: Seq[Long]) = {
+        val n = cs.sum
+        val si = cs.map(c => c * li6(n.toDouble / c.toDouble)).sum
+        (n, cs.length.toLong, BigDecimal(si),
+          r4(si.toDouble / n.toDouble / 1e6),
+          if (cs.length > 1) Some(r4(si.toDouble / n.toDouble / li6(cs.length)))
+          else None)
+      }
+      def read(r: org.apache.spark.sql.Row, i: Int) =
+        (r.getLong(i), r.getLong(i + 1), BigDecimal(r.getDecimal(i + 2)),
+          r.getDouble(i + 3),
+          if (r.isNullAt(i + 4)) None else Some(r.getDouble(i + 4)))
+      val df = rows.zipWithIndex
+        .map { case ((k, c), v) => (k, v.toLong, c) }.toDF("key", "v", "c")
+      val keyed = ops.Relational.entropyFold(df, "key").collect()
+        .map(r => r.getLong(0) -> read(r, 1)).toMap
+      val whole = ops.Relational.entropyFold(df.drop("key")).collect()
+      keyed == rows.groupBy(_._1).view.mapValues(g => want(g.map(_._2))).toMap &&
+        whole.length == 1 && read(whole.head, 0) == want(rows.map(_._2))
+    }
+
+  // docs of 1–6 tokens over a 5-word vocabulary, in one of two langs
+  private val docsGen: Gen[List[(String, List[String])]] =
+    Gen.nonEmptyListOf(Gen.zip(Gen.oneOf("en", "de"),
+      Gen.choose(1, 6).flatMap(Gen.listOfN(_, Gen.oneOf("a", "b", "c", "d", "e")))))
+
+  property("unigramSurprisal ≡ plain-Scala recompute on random token docs") =
+    Prop.forAll(docsGen) { docs =>
+      val spark = TestSession.spark
+      import spark.implicits._
+      val got = ops.TextDedup.unigramSurprisal(
+        docs.zipWithIndex.map { case ((lang, ts), i) =>
+          (i.toLong, lang, ts.mkString(" ")) }.toDF("doc_id", "lang", "text"),
+        "lang").collect()
+        .map(r => r.getLong(0) -> (r.getString(1), r.getLong(2), r.getLong(3)))
+        .toMap
+      val c = docs.flatMap(_._2).groupBy(identity).view.mapValues(_.length.toLong).toMap
+      val nn = c.values.sum
+      got == docs.zipWithIndex.map { case ((lang, ts), i) =>
+        i.toLong -> (lang, ts.length.toLong,
+          ts.groupBy(identity).map { case (t, o) =>
+            o.length.toLong * li6(nn.toDouble / c(t).toDouble) }.sum)
+      }.toMap
     }
 
   property("labelVoteCore ≡ recompute for random k-labeler matrices") =

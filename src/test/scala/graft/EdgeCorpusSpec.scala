@@ -119,8 +119,14 @@ class EdgeCorpusSpec extends AnyFunSuite {
 
   test("IVF ids and Graft.annIndex on an EMPTY embeddings corpus: no rows") {
     val d = embeddingsDir("emb_empty")(_.where(lit(false)))
-    for (id <- ivfTopk :+ "embed_kmeans")
+    for (id <- ivfTopk :+ "embed_kmeans" :+ "sim_mllib_lsh")
       assert(SparkEntry.queries(id)(spark, d).collect().isEmpty, id)
+    // the whole-family audit reads an empty exact reference: zero rows,
+    // no id checksum, and every member's 0 hits meet 0 · pct
+    val audit = SparkEntry.queries("sim_ann_recall_audit")(spark, d).collect()
+    assert(audit.length == 1, audit.mkString)
+    assert(audit(0).getLong(0) == 0L && audit(0).isNullAt(1))
+    assert((2 until audit(0).length).forall(audit(0).getBoolean))
     assert(graft.api.Graft.annIndex(
       spark.read.parquet(s"$d/embeddings.parquet")).isEmpty)
   }

@@ -118,7 +118,11 @@ class PartitionInvarianceSpec extends AnyFunSuite {
     // the shared exact top-k (cosine desc, ties to the lower vec_id) over
     // deterministic candidates: broadcast queries, seeded LSH planes, and
     // PQ codebooks fit on the driver over a vec_id-sorted sample
-    "sim_cosine_topk", "sim_filtered_topk", "sim_lsh_ann", "sim_pq_ann")
+    "sim_cosine_topk", "sim_filtered_topk", "sim_lsh_ann", "sim_pq_ann",
+    // Canon.ln6 exact-integer sums: entropy, surprisal, PMI and Zipf folds,
+    // the A-ES sampling key, the streaming mix entropy
+    "text_entropy", "text_unigram_logprob", "text_pmi_bigrams",
+    "text_zipf_fit", "sample_reservoir_weighted", "stream_mix_monitor")
 
   private def runAt(name: String, parts: String): Array[String] = {
     val prev = spark.conf.get("spark.sql.shuffle.partitions")
